@@ -62,11 +62,13 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from entity_linking_spark import runtime
 from entity_linking_spark.plans import queries as Q
 
 SF0001 = "/root/testdata/sf0.001"
 
 
+@Q.released
 def _doc_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> DataFrame:
     """Near-dup document clustering over the driver corpus: fused
     tokenize/bands/embedding (ONE Python pass) -> MinHash-LSH band
@@ -75,10 +77,8 @@ def _doc_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> D
     from entity_linking_spark.functions.vectors import cosine_udf
     from entity_linking_spark.operators import blocking, cluster, extract
 
-    Q._release_live_caches()  # drop the previous query's pinned caches
-    # spread the single-split bench scan before the fused Python pass
-    # (pipeline._extract's guarded pattern; no-op at real corpus scale)
-    docs = Q._spread(
+    # spread the bench scan before the fused Python pass (runtime.spread)
+    docs = runtime.spread(
         spark.read.parquet(f"{sf_dir}/documents.parquet")
     ).select(F.col("doc_id").cast("string").alias("url"), "text")
     # feats feeds three consumers (blocking keys + both sides of the
@@ -120,22 +120,23 @@ def _docs_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_linking_spark.functions.normalize import tokenize_udf
 
     return (
-        Q._spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+        runtime.spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
         .select(F.col("doc_id").cast("string").alias("url"), "text")
         .withColumn("tokens", tokenize_udf(F.col("text")))
     )
 
 
+@Q.released
 def _dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_linking_spark.operators import dedup
 
     return dedup.simhash_near_dup_pairs(_docs_tokens(spark, sf_dir), max_hamming=8)
 
 
+@Q.released
 def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_linking_spark.operators import ann
 
-    Q._release_live_caches()  # drop the previous query's pinned caches
     # NOT spread: lsh/ivf consume the embeddings subtree several times
     # (corpus side, query side, bucket stats), so a repartition here is
     # re-paid per consumption while the per-row hashing is light —
@@ -145,28 +146,17 @@ def _ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), "embedding"
     )
     # planes sized to corpus density: ~log2(n/32) (500-50k vecs -> 4-10).
-    # n comes from parquet FOOTER metadata (driver-side, no Spark job) —
-    # the same metadata-only trick as stage lineage; a count() action
-    # here would scan the corpus once per call just to pick a constant.
-    import os
-
-    import pyarrow.parquet as pq
-
-    path = f"{sf_dir}/embeddings.parquet"
-    n = sum(
-        pq.ParquetFile(os.path.join(dp, f)).metadata.num_rows
-        for dp, _dirs, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    ) if os.path.isdir(path) else pq.ParquetFile(path).metadata.num_rows
+    # n comes from parquet footers (runtime.input_rows, no Spark job); a
+    # count() here would scan the corpus once per call to pick a constant
+    n = runtime.input_rows(emb)
     n_planes = max(2, min(16, (max(n, 64) // 32).bit_length()))
     return ann.lsh_topk(emb, queries_df, k=5, n_planes=n_planes)
 
 
+@Q.released
 def _ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_linking_spark.operators import ann
 
-    Q._release_live_caches()  # drop the previous query's pinned caches
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")  # see _ann_lsh
     queries_df = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -184,6 +174,7 @@ def _ann_lsh_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lsh.unionByName(ivf)
 
 
+@Q.released
 def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rows-only gate row for the WARC container (round-4 verdict #2):
     documents -> distributed write_warc (per-record gzip members,
@@ -222,6 +213,7 @@ def _warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("url")
 
 
+@Q.released
 def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate row for the multimodal decode plumbing — exercises ALL FOUR
     codec paths through the same mapInPandas stage via codec='auto'
@@ -283,10 +275,11 @@ def _multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@Q.released
 def _rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_linking_spark.functions.text import rolling_hash_udf
 
-    d = Q._spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    d = runtime.spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     return d.select("doc_id", rolling_hash_udf(F.col("text")).alias("rh")).orderBy(
         "doc_id"
     )
@@ -295,29 +288,21 @@ def _rolling_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Oracle-backed operator queries first (plans/queries.py + the
     flagship, rolling-fingerprint, and simhash), then the three
-    rows-only custom vectorized operators."""
-    def _with_release(fn):
-        # same cache-release contract as the decorated plans/queries.py
-        # entries: entering a new query drops the previous query's pins
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            Q._release_live_caches()
-            return fn(spark, sf_dir)
-
-        return wrapped
-
+    rows-only custom vectorized operators. Every entry releases the
+    previous query's pinned caches when it is built (``Q.released``)."""
     out = Q.all_queries()
     out["minhash_near_dup_clusters"] = _doc_clusters
-    out["rolling_fingerprint"] = _with_release(_rolling_fingerprint)
+    out["rolling_fingerprint"] = _rolling_fingerprint
     # oracle-backed since round 3: the DuckDB twin replays crc32 with a
     # table-driven fold and reproduces the simhash bit votes exactly
-    out["dedup_simhash_pairs"] = _with_release(_dedup_simhash)
+    out["dedup_simhash_pairs"] = _dedup_simhash
     # non-SQL-expressible: rows-only checks (custom vectorized operators,
     # each pytest-verified; kept LAST so the oracle-gated window is full).
     # Round 5: the two ANN entries merged into one slot (method-tagged
     # union) to make room for the WARC container roundtrip.
     out["ann_lsh_ivf_topk"] = _ann_lsh_ivf
-    out["multimodal_decode_features"] = _with_release(_multimodal_features)
-    out["warc_roundtrip"] = _with_release(_warc_roundtrip)
+    out["multimodal_decode_features"] = _multimodal_features
+    out["warc_roundtrip"] = _warc_roundtrip
     return out
 
 

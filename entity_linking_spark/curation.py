@@ -55,6 +55,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from entity_linking_spark import runtime
 from entity_linking_spark.functions.text import redact_pii
 from entity_linking_spark.functions.web import url_dedup
 from entity_linking_spark.operators.dedup import (
@@ -227,7 +228,7 @@ def curate_corpus(
                 F.split(F.lower(F.col(text_col)), " ")
             ).alias("embedding"),
         )
-        sem_caches: list = []
+        sem_caches = runtime.CacheScope()
         sem_victims = (
             semantic_dedup(
                 emb,
@@ -243,13 +244,11 @@ def curate_corpus(
         if with_stats:
             # the stage boundary above is persisted+counted, so the
             # operator's internal assignment cache has served its
-            # purpose — release it (blocking.py cache_registry
-            # convention). On the lazy path the cache must outlive this
-            # call (the returned frame still references it): the
-            # documented chain-wide spark.catalog.clearCache() releases
-            # it with the rest.
-            for c in sem_caches:
-                c.unpersist()
+            # purpose — release it. On the lazy path the cache must
+            # outlive this call (the returned frame still references
+            # it): the documented chain-wide spark.catalog.clearCache()
+            # releases it with the rest.
+            sem_caches.release()
     if benchmark is not None:
         step(
             "decontaminate",

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from entity_linking_spark import runtime
 from entity_linking_spark.functions.minhash import minhash_bands_udf
 from entity_linking_spark.functions.normalize import normalize_text
 
@@ -197,41 +198,11 @@ def detect_mentions(
     return docs.select(url_col, in_col).mapInPandas(run, schema=MENTIONS_SCHEMA)
 
 
-def footer_row_estimate(df: DataFrame) -> int | None:
-    """Parquet-footer row-count estimate WITHOUT a scan job (the same
-    metadata-only trick as the LSH plane sizing and stage lineage).
-    Returns None when the plan doesn't read local parquet files
-    (createDataFrame, remote storage, derived plans) — callers decide
-    whether unknown means "small fixture" (prefilter gate) or "pay a
-    count()" (alias_row_estimate)."""
-    try:
-        files = [f for f in df.inputFiles() if f.endswith(".parquet")]
-    except Exception:  # non-file-based plan (e.g. createDataFrame)
-        return None
-    if not files:
-        return None
-    from urllib.parse import urlparse
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    for f in files:
-        parsed = urlparse(f)
-        if parsed.scheme not in ("", "file"):
-            # remote storage (hdfs://, s3a://, ...): the driver-side
-            # pyarrow open can't reuse the executor URI, and stripping
-            # the scheme would probe a bogus local path
-            return None
-        path = parsed.path if parsed.scheme == "file" else f
-        total += pq.ParquetFile(path).metadata.num_rows
-    return total
-
-
 def alias_row_estimate(aliases: DataFrame) -> int:
-    """Row-count estimate for the alias table: parquet footer metadata
-    when available, else a count() — acceptable for in-memory fixture
-    tables, which are small by construction."""
-    est = footer_row_estimate(aliases)
+    """Row-count estimate for the alias table: parquet footer rows
+    (``runtime.input_rows``) when available, else a count() — acceptable
+    for in-memory fixture tables, which are small by construction."""
+    est = runtime.input_rows(aliases)
     return aliases.count() if est is None else est
 
 
@@ -243,7 +214,7 @@ def detect_mentions_join(
     tokens_col: str | None = None,
     alias_col: str = "alias",
     pre_normalized: bool = False,
-    cache_registry: list | None = None,
+    cache_registry: runtime.CacheScope | None = None,
     anchor_prefilter: bool | str = "auto",
 ) -> DataFrame:
     """Beyond-broadcast mention detection: pure-join path, byte-identical
@@ -290,8 +261,8 @@ def detect_mentions_join(
 
     ``cache_registry``: when given, every DataFrame this call persists is
     appended to it so a repeated caller (the streaming micro-batch loop)
-    can unpersist after its action instead of leaking one storage entry
-    per invocation.
+    can release them after its action instead of leaking one storage
+    entry per invocation.
 
     ``anchor_prefilter``: both corpus-token streams below (the df agg
     input and the anchor-join probe side) carry EVERY corpus token, yet
@@ -345,15 +316,8 @@ def detect_mentions_join(
         if cache_registry is not None:
             cache_registry.append(alias_norm)
     if tokens_col is None:
-        # spread the corpus before the Python stage, but ONLY when the
-        # scan yields fewer splits than cores (pipeline._extract's
-        # pattern — a small parquet input arrives as 1-2 splits and
-        # would tokenize on one core; measured 3.9 s -> sub-second on
-        # the sf0.1 corpus)
-        src = docs
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        if docs.rdd.getNumPartitions() < par:
-            src = docs.repartition(par)
+        # spread a small corpus scan before the Python stage (runtime.spread)
+        src = runtime.spread(docs)
         # tokens feed TWO subtrees (anchors + the verify join): without a
         # persist the tokenizer UDF would run twice over the whole corpus
         toks = src.select(
@@ -378,7 +342,7 @@ def detect_mentions_join(
         # small: the prefilter is a pure optimization, and every
         # unknown-size caller here (tests, micro-batches) IS small; a
         # large-corpus caller that knows better passes True.
-        n_docs_est = footer_row_estimate(docs)
+        n_docs_est = runtime.input_rows(docs)
         if n_docs_est is None or n_docs_est < PREFILTER_MIN_DOC_ROWS:
             anchor_prefilter = False
         else:
@@ -483,7 +447,7 @@ def candidate_entities(
     max_ambiguity: int = 16,
     pre_normalized: bool = False,
     broadcast_hint: bool | None = None,
-    cache_registry: list | None = None,
+    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """J1: equi hash join mention -> candidate subject_ids, with per-alias
     ambiguity (how many entities share the alias — the disambiguation
@@ -626,7 +590,7 @@ def candidate_pairs(
     cache_keys: bool = True,
     overflow: str = "drop",
     split_max: int = 4096,
-    cache_registry: list | None = None,
+    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """Within-block pair generation with stop-key removal.
 

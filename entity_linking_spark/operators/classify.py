@@ -52,6 +52,8 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from entity_linking_spark import runtime
+
 UNK = "<unk>"
 
 
@@ -120,9 +122,7 @@ def train_nb_quality(
     from pyspark import StorageLevel
 
     if materialize == "auto":
-        from entity_linking_spark.operators.blocking import footer_row_estimate
-
-        est = footer_row_estimate(docs)
+        est = runtime.input_rows(docs)
         materialize = est is not None and est >= 250_000
 
     base = docs.where(

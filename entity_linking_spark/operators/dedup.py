@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
+from entity_linking_spark import runtime
 from entity_linking_spark.functions.minhash import (
     N_PERM,
     _token_hashes,
@@ -174,7 +175,7 @@ def minhash_near_dup_pairs(
     max_block_size: int = 64,
     n_bands: int | None = None,
     verify: str = "est",
-    cache_registry: list | None = None,
+    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup: band-join candidates, then verify.
 
@@ -589,7 +590,7 @@ def semantic_dedup(
     min_cosine: float = 0.38,
     max_cluster_size: int = 4096,
     arrow_path: bool | None = None,
-    cache_registry: list | None = None,
+    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the embedding space, then inside each
@@ -769,7 +770,7 @@ def semantic_dedup(
     # the cap join, and the pair stage — plus the output join on the
     # gate path): persist so the assignment pass runs once, not 3-4x
     # (the dedup_minhash_pairs persist-once convention). cache_registry
-    # follows blocking.py: callers that run many batches can unpersist
+    # (runtime.CacheScope) lets callers that run many batches release it
     # after their action.
     from pyspark import StorageLevel
 

@@ -52,6 +52,8 @@ from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from entity_linking_spark import runtime
+
 UNK = "<unk>"
 
 
@@ -348,7 +350,7 @@ def perplexity_buckets(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_partitions: int | None = None,
-    cache_registry: list | None = None,
+    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """(id, n_toks, ppl, bucket): CCNet's actual gate shape — rank every
     document by perplexity and split the corpus into 'head' (lowest-ppl
@@ -372,7 +374,7 @@ def perplexity_buckets(
     whole scoring plan (explode + broadcast probes over the corpus)
     once more per action — with the cache, scoring executes exactly
     once per call. ``cache_registry``: when given, both pinned
-    projections are appended so the caller can unpersist after its
+    projections are appended so the caller can release them after its
     action (otherwise release is left to the ContextCleaner, as
     before)."""
     if not (0.0 <= head_frac and 0.0 <= middle_frac

@@ -24,7 +24,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from entity_linking_spark import schema as S
+from entity_linking_spark import runtime, schema as S
 from entity_linking_spark.metrics import pairwise_prf
 from entity_linking_spark.operators import blocking, cluster, extract, scoring
 from entity_linking_spark.session import get_spark
@@ -50,34 +50,16 @@ def run_pipeline(
     with the broadcast trie; larger KBs take the join-based
     ``detect_mentions_join`` path — identical output, no driver collect,
     so a beyond-broadcast KB no longer kills the job at s2."""
-    # per-stage cache registry: every stage materializes to its snapshot,
-    # so any DataFrame an operator pinned while BUILDING a stage is dead
-    # weight the moment that stage's write commits — downstream stages
-    # read the snapshot files, not the lineage. Without the release the
-    # pins (e.g. candidate_entities' normalized alias table) stay in
-    # executor storage for the rest of the session.
-    stage_caches: list = []
-
-    def _release_stage_caches() -> None:
-        while stage_caches:
-            try:
-                stage_caches.pop().unpersist(False)
-            except Exception:  # noqa: BLE001 — release is best-effort
-                pass
+    # frames an operator pinned while BUILDING a stage are dead weight
+    # once that stage's snapshot write commits (downstream stages read
+    # the snapshot files, not the lineage), so they are released per stage
+    caches = runtime.CacheScope()
 
     def _extract() -> DataFrame:
-        # spread the corpus across all cores before the Python stage —
-        # but ONLY when the scan yields fewer splits than cores (a small
-        # parquet input may arrive as 1-2 splits); when the scan already
-        # parallelizes, an unconditional repartition would shuffle the
-        # whole html corpus for nothing. Extraction and tokenization are
-        # FUSED into one mapInPandas (html never crosses JVM<->Python
-        # twice — see extract.extract_and_tokenize).
-        par = spark.sparkContext.defaultParallelism
-        src = documents
-        if documents.rdd.getNumPartitions() < par:
-            src = documents.repartition(par)
-        return extract.extract_and_tokenize(src)
+        # Extraction and tokenization are FUSED into one mapInPandas over
+        # the spread corpus (html never crosses JVM<->Python twice — see
+        # extract.extract_and_tokenize)
+        return extract.extract_and_tokenize(runtime.spread(documents))
 
     # the alias-dictionary collect only depends on the INPUT aliases table,
     # not on s1 — submit it from a second thread so the (serial,
@@ -138,20 +120,20 @@ def run_pipeline(
     def _mentions() -> DataFrame:
         if alias_list is None:  # beyond-broadcast KB: distributed join path
             return blocking.detect_mentions_join(
-                docs, aliases, tokens_col="tokens", cache_registry=stage_caches
+                docs, aliases, tokens_col="tokens", cache_registry=caches
             )
         return blocking.detect_mentions(docs, alias_list, tokens_col="tokens")
 
     mentions = io.run_stage(spark, workdir, "s2_mentions", _mentions, force)
-    _release_stage_caches()
+    caches.release()
 
     def _candidates() -> DataFrame:
         return blocking.candidate_entities(
-            mentions, aliases, cache_registry=stage_caches
+            mentions, aliases, cache_registry=caches
         )
 
     candidates = io.run_stage(spark, workdir, "s3_candidates", _candidates, force)
-    _release_stage_caches()
+    caches.release()
 
     def _pairs() -> DataFrame:
         keys = blocking.blocking_keys(docs, candidates)
@@ -187,7 +169,7 @@ def run_pipeline(
         return cluster.connected_components(edges, docs.select("url"))
 
     out = io.run_stage(spark, workdir, "s6_clusters", _clusters, force)
-    _release_stage_caches()
+    caches.release()
     return out
 
 

@@ -17,10 +17,13 @@ Each function cites the reference operator it re-expresses (SURVEY §2 ids).
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
+
+from entity_linking_spark import runtime
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -32,54 +35,30 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Caches pinned by the CURRENT query (operators append via their
-# cache_registry parameter, query fns append directly). Released when
-# the NEXT query starts building: a persist can only be dropped after
-# its query's action has run, and the query functions never see the
-# action (the caller counts/writes the returned frame) — so the
-# earliest safe release point is the next query invocation. Without
-# this, a bench/gate session accumulates every query's MEMORY_AND_DISK
-# pins (the mention-detection token table, the perplexity projections,
-# the flagship features) until driver GC + ContextCleaner catch up,
-# and the measured effect on the queries that follow the heavy ones is
-# multi-second (executor storage pressure + JVM GC).
-_LIVE_CACHES: list = []
+# Caches pinned by the CURRENT query (operators take it as their
+# cache_registry, query fns append directly). Released when the NEXT
+# query starts building: the query functions never see the action (the
+# caller counts/writes the returned frame), so the next invocation is
+# the earliest safe release point (runtime.CacheScope).
+_LIVE_CACHES = runtime.CacheScope()
+_release_live_caches = _LIVE_CACHES.release
 
 
-def _release_live_caches() -> None:
-    while _LIVE_CACHES:
-        df = _LIVE_CACHES.pop()
-        try:
-            df.unpersist(False)
-        except Exception:
-            pass
+def released(fn: QueryFn) -> QueryFn:
+    """Wrap a query fn so that building it first releases the previous
+    query's pinned caches (every registered query gets this)."""
 
+    @functools.wraps(fn)
+    def wrapped(spark: SparkSession, sf_dir: str, *args, **kwargs) -> DataFrame:
+        _LIVE_CACHES.release()
+        return fn(spark, sf_dir, *args, **kwargs)
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a scan to the session parallelism ONLY when it
-    arrives in fewer splits (a small parquet input is one ~128 MB split
-    — every expression downstream would run on one core; measured: the
-    URL-canonicalization regexes burned 8.8 s of single-task CPU on a
-    0.6 MB corpus). At real corpus scale the scan already yields more
-    splits than cores and this is a no-op — the same guarded pattern as
-    pipeline._extract. Only ever applied to per-ROW computations
-    upstream of aggregations, so results are partitioning-independent
-    (doc-level float sums stay within their row)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
+    return wrapped
 
 
 def query(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
-        import functools
-
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            _release_live_caches()
-            return fn(spark, sf_dir)
-
+        wrapped = released(fn)
         _QUERIES[name] = wrapped
         if oracle is not None:
             _ORACLES[name] = oracle
@@ -275,7 +254,7 @@ def semantic_dedup_query(spark, sf_dir):
 
     # spread the single-split embeddings scan: the k-way literal cosine
     # folds and the within-cluster pair verify otherwise run on one core
-    e = _spread(_t(spark, sf_dir, "embeddings"))
+    e = runtime.spread(_t(spark, sf_dir, "embeddings"))
     out = semantic_dedup(
         e, id_col="vec_id", vec_col="embedding",
         k=8, min_cosine=0.38, max_cluster_size=4096,
@@ -1083,7 +1062,7 @@ def decontaminate_ngram(spark, sf_dir):
     benchmark hash set — never shuffled."""
     from entity_linking_spark.operators.quality import decontaminate
 
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     bench = d.where(F.col("doc_id") % 41 == 0).select("text")
     return (
         decontaminate(d, bench, window=_DECON_WINDOW)
@@ -1102,7 +1081,7 @@ def gopher_repetition_signals(spark, sf_dir):
     emits the derived fractions (single divisions, engine-neutral)."""
     from entity_linking_spark.operators.quality import repetition_signals
 
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return (
         repetition_signals(d, top_ns=(2, 3), dup_n=5)
         .select(
@@ -1192,7 +1171,7 @@ def gopher_quality_signals_gate(spark, sf_dir):
     def plant(cond, s):
         return F.when(cond, F.lit("\n" + s)).otherwise(F.lit(""))
 
-    d = _spread(_t(spark, sf_dir, "documents")).select(
+    d = runtime.spread(_t(spark, sf_dir, "documents")).select(
         "doc_id",
         F.concat(
             F.col("text"),
@@ -1284,7 +1263,7 @@ def url_canonicalize_dedup(spark, sf_dir):
     # regexp ops + array filter/sort per row) otherwise runs on ONE core
     # (measured 8.8 s single-task CPU); no-op once the scan has >= cores
     # splits
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id")).select(
+    d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id")).select(
         "doc_id", url.alias("url")
     )
     return (
@@ -1379,7 +1358,7 @@ def c4_line_clean_gate(spark, sf_dir):
         plant(did % 17 == 0, "Lorem Ipsum dolor sit amet boilerplate."),
         plant(did % 23 == 0, "function() { return 1; }"),
     )
-    d = _spread(_t(spark, sf_dir, "documents")).select(
+    d = runtime.spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.array_join(lines, "\n").alias("text")
     )
     return (
@@ -1474,7 +1453,7 @@ def lm_perplexity(spark, sf_dir):
         train_bigram_lm,
     )
 
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     lm = train_bigram_lm(d, vocab_size=512, bigram_size=2048, k=1.0, lam=0.75)
     return perplexity_buckets(
         d, lm, head_frac=0.25, middle_frac=0.5, cache_registry=_LIVE_CACHES
@@ -1578,7 +1557,7 @@ def ann_cosine_topk(spark, sf_dir):
     between the cosine-bearing gate rows."""
     from entity_linking_spark.functions.vectors import cosine_col
 
-    e = _spread(_t(spark, sf_dir, "embeddings"))
+    e = runtime.spread(_t(spark, sf_dir, "embeddings"))
     q = e.where(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     cand = e.where(F.col("vec_id") != 0)
     return (
@@ -1911,7 +1890,7 @@ def duplicated_span_removal(spark, sf_dir):
     first principles."""
     from entity_linking_spark.operators import dedup
 
-    d = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     spans = dedup.duplicated_spans(
         d,
         id_col="doc_id",
@@ -2265,7 +2244,7 @@ def dedup_minhash_pairs(spark, sf_dir):
     corpus' planted near-dups sit at j~0.99)."""
     from entity_linking_spark.operators import dedup
 
-    base = _spread(_t(spark, sf_dir, "documents")).select(
+    base = runtime.spread(_t(spark, sf_dir, "documents")).select(
         "doc_id", F.split("text", " ").alias("tokens")
     )
     return (

@@ -108,11 +108,13 @@ def _warm_python_workers(spark: SparkSession) -> None:
     boundary first (the per-query timings then charge a session-scoped
     infrastructure cost to an arbitrary operator). One trivial
     vectorized-UDF pass over <cores> rows at session build pays it
-    up front; reused sessions skip via the marker conf."""
+    up front; reused sessions skip via the marker conf, which is set
+    even when the warm-up fails, so a failing warm-up is tried once per
+    session, not once per get_spark call."""
     marker = "spark.entity_linking.workersWarmed"
+    if spark.conf.get(marker, "") == "1":
+        return
     try:
-        if spark.conf.get(marker, "") == "1":
-            return
         from pyspark.sql.functions import col, pandas_udf
 
         n = spark.sparkContext.defaultParallelism
@@ -128,6 +130,7 @@ def _warm_python_workers(spark: SparkSession) -> None:
             .mode("overwrite")
             .save()
         )
-        spark.conf.set(marker, "1")
     except Exception:  # noqa: BLE001 — warmup is best-effort, never fatal
         pass
+    finally:
+        spark.conf.set(marker, "1")

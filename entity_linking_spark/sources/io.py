@@ -27,6 +27,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from entity_linking_spark import runtime
+
 _META = "_STAGE.json"
 
 
@@ -92,45 +94,6 @@ def stage_complete(root: str, name: str) -> bool:
     return _exists(os.path.join(stage_path(root, name), _META))
 
 
-def _parquet_lineage(path: str) -> dict[str, int]:
-    """Per-file row counts from parquet FOOTERS — metadata-only, no scan.
-
-    A footer read is O(files), not O(rows): at 3k docs it replaced a full
-    Spark read-back job per stage (~0.5-1 s of pure fixed cost x 6
-    stages), and at 100 TB it reads a few KB per file instead of
-    re-scanning the stage output. Remote stage paths (s3://, hdfs://)
-    go through pyarrow.fs.FileSystem.from_uri — same footer-only reads,
-    remote listing instead of os.walk; if the footer read fails (e.g.
-    missing credentials) we fall back to a Spark count so the sidecar is
-    never silently wrong.
-    """
-    import pyarrow.parquet as pq
-
-    out: dict[str, int] = {}
-    if "://" in path:
-        from pyarrow import fs as pafs
-
-        filesystem, fs_path = pafs.FileSystem.from_uri(path)
-        infos = filesystem.get_file_info(pafs.FileSelector(fs_path, recursive=True))
-        for info in sorted(infos, key=lambda i: i.path):
-            if info.is_file and info.path.endswith(".parquet"):
-                rel = os.path.relpath(info.path, fs_path)
-                with filesystem.open_input_file(info.path) as f:
-                    out[rel] = pq.ParquetFile(f).metadata.num_rows
-    else:
-        # walk: partitionBy layouts nest files under key=value/ dirs
-        for dirpath, _dirs, files in sorted(os.walk(path)):
-            for entry in sorted(files):
-                if entry.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(dirpath, entry), path)
-                    out[rel] = pq.ParquetFile(
-                        os.path.join(dirpath, entry)
-                    ).metadata.num_rows
-    if not out:
-        raise FileNotFoundError(f"no parquet files under {path}")
-    return out
-
-
 def write_stage(df: DataFrame, root: str, name: str, partition_by: list[str] | None = None) -> dict:
     """Materialize a stage snapshot + lineage metrics sidecar."""
     path = stage_path(root, name)
@@ -142,7 +105,8 @@ def write_stage(df: DataFrame, root: str, name: str, partition_by: list[str] | N
     writer.save(path)
     spark = df.sparkSession
     try:
-        per_partition = _parquet_lineage(path)
+        # per-file rows from the parquet footers, no Spark job
+        per_partition = runtime.parquet_rows(path)
     except Exception:  # noqa: BLE001 — non-parquet format, or remote FS
         # format-agnostic fallback: one Spark read-back job (orc/iceberg
         # snapshots, or parquet on a filesystem pyarrow lacks creds for)

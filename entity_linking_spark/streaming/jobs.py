@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from entity_linking_spark import runtime
+
 
 def streaming_mention_counts(
     events: DataFrame,
@@ -218,10 +220,10 @@ def streaming_link_microbatch(
     )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        batch_caches: list[DataFrame] = []
+        batch_caches = runtime.CacheScope()
         try:
             if alias_list is None:  # beyond-broadcast KB: join path per batch
-                batch_est = blocking.footer_row_estimate(batch_df)
+                batch_est = runtime.input_rows(batch_df)
                 mentions = blocking.detect_mentions_join(
                     batch_df, alias_norm, pre_normalized=True,
                     cache_registry=batch_caches,
@@ -242,8 +244,7 @@ def streaming_link_microbatch(
             # release the batch-scoped token cache eagerly: a long-running
             # stream must not accumulate one executor storage entry per
             # micro-batch while waiting on driver GC
-            for df in batch_caches:
-                df.unpersist()
+            batch_caches.release()
 
     return (
         new_docs_stream.writeStream.foreachBatch(handle)

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import Row, functions as F
 
+from entity_linking_spark import runtime
 from entity_linking_spark.operators import blocking
 
 
@@ -194,8 +195,8 @@ def test_alias_row_estimate_parquet_footer(spark, tmp_path):
     assert blocking.alias_row_estimate(_aliases(spark, [("x", "e1")])) == 1
     # metadata-only variant: exact on parquet, None (NO count job) on
     # in-memory plans — the prefilter auto-gate's "unknown means small"
-    assert blocking.footer_row_estimate(spark.read.parquet(p)) == 37
-    assert blocking.footer_row_estimate(_aliases(spark, [("x", "e1")])) is None
+    assert runtime.input_rows(spark.read.parquet(p)) == 37
+    assert runtime.input_rows(_aliases(spark, [("x", "e1")])) is None
 
 
 def test_detect_mentions_join_randomized_equivalence(spark):

@@ -1,21 +1,29 @@
 """SINGLE-JOB multi-executor scaling evidence via local-cluster mode.
 
-The replication model (tools/multi_executor_bench.py — 4 independent
-pipeline processes) omits cross-executor shuffle by construction; the
-thread model (tools/scaling_bench.py — local[N] vs local[4N]) shares one
-heap/GC, a contention a real cluster does not have. The honest middle is
-Spark's ``local-cluster[W, coresPerWorker, memMB]`` master: ONE job,
-W separate executor JVMs, real serialized inter-executor shuffle over
-netty — exactly the N -> 4N executor scale-up the north rule names,
-minus only the network hop (executors are co-located on this host, as
-co-located cluster executors share a node).
+Replicating independent pipeline processes omits cross-executor shuffle
+by construction, and local[N] vs local[4N] threads share one heap/GC, a
+contention a real cluster does not have. The honest middle is Spark's
+``local-cluster[W, coresPerWorker, memMB]`` master: ONE job, W separate
+executor JVMs, real serialized inter-executor shuffle over netty —
+exactly the N -> 4N executor scale-up the north rule names, minus only
+the network hop (executors are co-located on this host, as co-located
+cluster executors share a node).
 
 Per-executor resources are held constant across configs (1 core +
 12 GiB + single-threaded BLAS per executor JVM; ActiveProcessorCount
 pins the JVM's GC/JIT view), so 4N brings 4x cores AND 4x memory, like
 adding real executors does.
 
-Usage: python tools/cluster_scaling_bench.py [n_docs] [n_workers] [reps] [base_workers]
+``--job`` picks the measured job:
+  el        ``python -m entity_linking_spark.pipeline`` over synthetic
+            documents + KB aliases (default);
+  curation  ``python -m entity_linking_spark.curation --stats`` over the
+            forged corpus of tools/curation_bench.py (same plants, same
+            derivable attrition; --stats because the stage-boundary
+            persist is the documented fast mode at >= 1M docs).
+
+Usage: python tools/cluster_scaling_bench.py [n_docs] [n_workers] [reps]
+       [base_workers] [--job {el,curation}]
 (reps alternate base-worker / n-worker runs; min per config — the host
 throttles in bursts, see BENCH/BASELINE.md. base_workers defaults to 1;
 pass e.g. 2 with n_workers=8 to measure N=2 -> 4N=8 with BOTH configs in
@@ -25,6 +33,7 @@ whose serial and parallel throughput degrade differently.)
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -35,9 +44,78 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 MEM_MB = 12288
 
 
-def run_at(workers: int, docs_path: str, aliases_path: str, base: str) -> dict:
-    workdir = f"{base}/lc_run_w{workers}"
-    shutil.rmtree(workdir, ignore_errors=True)
+def prep_input(n_docs: int, base: str) -> tuple[str, str]:
+    """Synthetic EL documents + KB aliases as parquet (reused if present)."""
+    sys.path.insert(0, REPO)
+    from entity_linking_spark import schema as S
+    from entity_linking_spark.session import get_spark
+
+    docs_path, aliases_path = f"{base}/docs", f"{base}/aliases"
+    if os.path.exists(docs_path) and os.path.exists(aliases_path):
+        return docs_path, aliases_path
+    spark = get_spark("scaling-prep", cores=16)
+    n_entities = max(100, n_docs // 10)
+    S.synth_documents_spark(spark, n_docs, n_entities).write.mode(
+        "overwrite"
+    ).parquet(docs_path)
+    kb = S.synth_kb(n_entities)
+    spark.createDataFrame(S.kb_to_aliases(kb), schema=S.ALIASES_SCHEMA).write.mode(
+        "overwrite"
+    ).parquet(aliases_path)
+    spark.stop()
+    return docs_path, aliases_path
+
+
+def prep_curation(n_docs: int, base: str) -> tuple[str, str]:
+    """The forged curation corpus + decontamination benchmark (reused)."""
+    sys.path.insert(0, REPO)
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from curation_bench import forge_corpus
+
+    from entity_linking_spark.session import get_spark
+
+    if not os.path.exists(f"{base}/docs"):
+        spark = get_spark("curation-forge", cores=16)
+        forge_corpus(spark, n_docs, base)
+        spark.stop()
+    return f"{base}/docs", f"{base}/bench"
+
+
+def el_cmd(inputs: tuple[str, str], out: str) -> list[str]:
+    docs_path, aliases_path = inputs
+    return [
+        "-m", "entity_linking_spark.pipeline",
+        "--workdir", out,
+        "--input-docs", docs_path,
+        "--input-aliases", aliases_path,
+        "--force",
+    ]
+
+
+def curation_cmd(inputs: tuple[str, str], out: str) -> list[str]:
+    docs_path, bench_path = inputs
+    return [
+        "-m", "entity_linking_spark.curation",
+        "--input", docs_path,
+        "--output", out,
+        "--url-col", "url",
+        "--benchmark", bench_path,
+        "--min-words", "20",
+        "--stats",
+    ]
+
+
+# job -> (base dir prefix, input prep, command builder, key of the
+# output row count in the job's JSON summary)
+JOBS = {
+    "el": ("/tmp/el_scaling", prep_input, el_cmd, "docs"),
+    "curation": ("/tmp/el_curation_scaling", prep_curation, curation_cmd, "n_out"),
+}
+
+
+def run_at(job: str, workers: int, inputs: tuple[str, str], base: str) -> dict:
+    out_path = f"{base}/lc_run_w{workers}"
+    shutil.rmtree(out_path, ignore_errors=True)
     import pyspark
 
     env = dict(os.environ)
@@ -67,52 +145,41 @@ def run_at(workers: int, docs_path: str, aliases_path: str, base: str) -> dict:
             "MKL_NUM_THREADS": "1",
         }
     )
-    cmd = [
-        sys.executable,
-        "-m",
-        "entity_linking_spark.pipeline",
-        "--workdir",
-        workdir,
-        "--input-docs",
-        docs_path,
-        "--input-aliases",
-        aliases_path,
-        # --cores only sizes shuffle partitions here (the master override
-        # decides real parallelism); keep it IDENTICAL across configs so
-        # both runs execute the same physical plan
-        "--cores",
-        "4",
-        "--force",
-    ]
+    # --cores only sizes shuffle partitions here (the master override
+    # decides real parallelism); keep it IDENTICAL across configs so both
+    # runs execute the same physical plan
+    cmd = [sys.executable, *JOBS[job][2](inputs, out_path), "--cores", "4"]
     out = subprocess.run(
         cmd, cwd=REPO, capture_output=True, text=True, timeout=5400, env=env
     )
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if not lines:
         sys.stderr.write(out.stdout[-2000:] + "\n" + out.stderr[-4000:] + "\n")
-        raise RuntimeError(f"pipeline produced no JSON at W={workers}")
+        raise RuntimeError(f"{job} job produced no JSON at W={workers}")
     return json.loads(lines[-1])
 
 
 def main() -> None:
-    n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 1000000
-    n_workers = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    reps = int(sys.argv[3]) if len(sys.argv) > 3 else 2
-    base_workers = int(sys.argv[4]) if len(sys.argv) > 4 else 1
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("n_docs", type=int, nargs="?", default=1000000)
+    ap.add_argument("n_workers", type=int, nargs="?", default=4)
+    ap.add_argument("reps", type=int, nargs="?", default=2)
+    ap.add_argument("base_workers", type=int, nargs="?", default=1)
+    ap.add_argument("--job", choices=sorted(JOBS), default="el")
+    args = ap.parse_args()
+    n_workers, base_workers = args.n_workers, args.base_workers
     assert (
         n_workers % base_workers == 0 and n_workers > base_workers
     ), "n_workers must be a strict multiple of base_workers"
     factor = n_workers // base_workers
-    base = f"/tmp/el_scaling_{n_docs}"
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from scaling_bench import prep_input
-
-    docs_path, aliases_path = prep_input(n_docs, base)
+    prefix, prep, _cmd, rows_key = JOBS[args.job]
+    base = f"{prefix}_{args.n_docs}"
+    inputs = prep(args.n_docs, base)
 
     runs_1, runs_w = [], []
-    for rep in range(reps):
-        r1 = run_at(base_workers, docs_path, aliases_path, base)
-        rw = run_at(n_workers, docs_path, aliases_path, base)
+    for rep in range(args.reps):
+        r1 = run_at(args.job, base_workers, inputs, base)
+        rw = run_at(args.job, n_workers, inputs, base)
         runs_1.append(r1)
         runs_w.append(rw)
         print(
@@ -121,25 +188,28 @@ def main() -> None:
                     "rep": rep,
                     f"W{base_workers}": r1["seconds"],
                     f"W{n_workers}": rw["seconds"],
+                    "rows_equal": r1[rows_key] == rw[rows_key],
                 }
             ),
             flush=True,
         )
     r1 = min(runs_1, key=lambda r: r["seconds"])
     rw = min(runs_w, key=lambda r: r["seconds"])
-    eff = (rw["docs_per_sec"] / r1["docs_per_sec"]) / factor
+    # both widths process the same rows, so the throughput ratio is the
+    # inverse wall-time ratio
+    eff = (r1["seconds"] / rw["seconds"]) / factor
     print(
         json.dumps(
             {
                 "model": "single-job local-cluster (separate executor JVMs)",
-                "n_docs": n_docs,
+                "job": args.job,
+                "n_docs": args.n_docs,
                 "workers_N": base_workers,
                 "workers_scaled": n_workers,
                 "scale_factor": factor,
                 "seconds_N": r1["seconds"],
                 "seconds_scaled": rw["seconds"],
-                "throughput_N": r1["docs_per_sec"],
-                "throughput_scaled": rw["docs_per_sec"],
+                "rows_out": r1[rows_key],
                 "scaling_efficiency": round(eff, 3),
                 "meets_0.8": eff >= 0.8,
             }

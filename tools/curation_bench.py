@@ -38,7 +38,7 @@ sys.path.insert(0, REPO)
 def forge_corpus(spark, n_docs: int, base: str = "/tmp/el_curation_bench"):
     """Write the planted-work corpus + the C4-cleaned decontamination
     benchmark slice as parquet; returns (docs_path, bench_path). Shared
-    by this bench and tools/curation_cluster_bench.py."""
+    by this bench and tools/cluster_scaling_bench.py --job curation."""
     from pyspark.sql import functions as F
 
     docs = spark.range(n_docs).withColumnRenamed("id", "doc_id")

@@ -1,5 +1,7 @@
 """Isolated per-query timing (guide §1.4): noop-sink each named query in
 a fresh session, N reps, print JSON. Optionally dump explain('formatted').
+Each rep's pinned caches are released after its action, outside the
+timed region.
 
 Usage: python tools/time_query.py q1 q2 ... [--reps 2] [--plans DIR]
        [--count]  (use the bench's count() action instead of noop)
@@ -26,6 +28,7 @@ def main() -> None:
     args = ap.parse_args()
 
     import __spark_entry__ as entry_mod
+    from entity_linking_spark.plans import queries as Q
     from entity_linking_spark.session import get_spark
 
     spark = get_spark("time_query")
@@ -43,6 +46,8 @@ def main() -> None:
             else:
                 df.write.format("noop").mode("overwrite").save()
             out[name].append(round(time.time() - t0, 3))
+            # untimed: the next rep must not pay this rep's unpersist
+            Q._release_live_caches()
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             df = fn(spark, args.sf)
@@ -51,6 +56,7 @@ def main() -> None:
             )
             with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
                 f.write(plan)
+            Q._release_live_caches()  # the plan-only build pins too
         spark.sparkContext.setJobDescription(None)
     print(json.dumps(out))
     spark.stop()
