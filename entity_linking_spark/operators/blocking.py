@@ -22,15 +22,21 @@ Skew handling (the reference has none — SURVEY §4 "hot-key behavior"):
     first capped, so the join's per-key fan-out is bounded by
     max_block_size², and AQE skew-join splitting handles residual skew.
 
+One alias dictionary: ``AliasDictionary`` is the only code that
+normalizes the KB alias table, sizes it and routes it to the trie or the
+join mention path; s2 and s3 of a pipeline run share one.
+
 Scale notes (100 TB): mention detection is a narrow map over the corpus;
 the alias table is broadcast (reference KBs are ~10^6 rows of short
-strings ⇒ low-MB compressed — beyond broadcast size you bucket both
-sides on alias instead). The only wide exchanges are the key-explode
+strings ⇒ low-MB compressed); beyond ALIAS_BROADCAST_MAX_ROWS the join
+path keeps it distributed. The only wide exchanges are the key-explode
 repartition and the within-block self-join, both bounded by the cap.
 """
 
 from __future__ import annotations
 
+import functools
+import threading
 from collections.abc import Iterator
 
 import pandas as pd
@@ -48,8 +54,9 @@ from entity_linking_spark.functions.normalize import normalize_text
 
 MAX_BLOCK_SIZE = 64
 MAX_ALIAS_AMBIGUITY = 8  # aliases shared by more entities don't emit ent: keys
-# Above this alias-table size the pipeline flips from the broadcast trie
-# matcher to the join-based path (detect_mentions_join): ~4M short
+# Above this alias-table size AliasDictionary routes mention detection
+# from the broadcast trie matcher to the join-based path
+# (detect_mentions_join) and never collects the aliases: ~4M short
 # aliases is ~100s of MB as a python trie on the driver+executors — the
 # measured comfortable ceiling; the reference's 5.9M-entity KB
 # (main_dense.py:119) lands just past it, so it takes the join path.
@@ -72,8 +79,8 @@ ALIAS_TOKEN_BROADCAST_MAX = 4_000_000
 # benefit scales with the CORPUS (the streams it thins). Measured A/B,
 # alternating warm reps: 100k docs x 98k aliases 2.6 s -> 4.8 s (a ~2 s
 # net LOSS), 1M docs x 4.9M aliases 105.5 s -> 47-51 s (2.2x win). So
-# "auto" also gates on corpus size via footer metadata (no scan job);
-# below this many docs the prefilter stays off.
+# it also gates on corpus size via footer metadata (no scan job); below
+# this many docs the prefilter stays off.
 PREFILTER_MIN_DOC_ROWS = 250_000
 
 MENTIONS_SCHEMA = StructType(
@@ -206,16 +213,111 @@ def alias_row_estimate(aliases: DataFrame) -> int:
     return aliases.count() if est is None else est
 
 
+def _once(compute):
+    """A lazy AliasDictionary member, computed at most once even when
+    several driver threads ask (the instance lock)."""
+
+    @functools.wraps(compute)
+    def member(self):
+        with self._lock:
+            if compute.__name__ not in self._memo:
+                self._memo[compute.__name__] = compute(self)
+            return self._memo[compute.__name__]
+
+    return property(member)
+
+
+class AliasDictionary:
+    """The KB alias table (alias, subject_id), prepared once for mention
+    detection and the candidate join (the reference builds its alias
+    dict once per service start, el_process.py:19-43). Members are lazy
+    and computed at most once; the size gates read the module constants
+    then, and building the object runs no Spark job. ``cache_registry``
+    gets the pinned ``table``: release it after the dictionary's last
+    consumer."""
+
+    def __init__(
+        self, aliases: DataFrame, cache_registry: runtime.CacheScope | None = None
+    ) -> None:
+        self._aliases = aliases
+        self._cache_registry = cache_registry
+        self._lock = threading.RLock()
+        self._memo: dict[str, object] = {}
+
+    @_once
+    def table(self) -> DataFrame:
+        """Normalized (alias, subject_id) rows, empty aliases dropped,
+        pinned: unpinned, the empty-string filter re-evaluates the
+        normalize UDF under each consumer (2x stacked ArrowEvalPython per
+        candidate-join branch; s3 9-16 s -> 3.0 s at 3k docs)."""
+        from pyspark import StorageLevel
+
+        from entity_linking_spark.functions.normalize import normalize_udf
+
+        table = (
+            self._aliases.select(
+                normalize_udf(F.col("alias")).alias("alias"), F.col("subject_id")
+            )
+            .where(F.col("alias") != "")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        if self._cache_registry is not None:
+            self._cache_registry.append(table)
+        return table
+
+    @_once
+    def rows(self) -> int:
+        """Row estimate of the raw alias table (``alias_row_estimate``)."""
+        return alias_row_estimate(self._aliases)
+
+    @_once
+    def alias_list(self) -> list[str] | None:
+        """Raw distinct aliases collected for the broadcast trie, or None
+        above ALIAS_BROADCAST_MAX_ROWS: a beyond-broadcast KB is never
+        collected, and mention detection takes the join path."""
+        if self.rows > ALIAS_BROADCAST_MAX_ROWS:
+            return None
+        return [r["alias"] for r in self._aliases.select("alias").distinct().collect()]
+
+    @_once
+    def broadcast(self) -> bool:
+        """Whether the candidate join hints the alias side onto the
+        broadcast build side (rows <= CANDIDATE_BROADCAST_MAX_ROWS)."""
+        return self.rows <= CANDIDATE_BROADCAST_MAX_ROWS
+
+    @_once
+    def token_vocab_fits(self) -> bool:
+        """Whether the distinct alias-token vocabulary fits a broadcast
+        (<= ALIAS_TOKEN_BROADCAST_MAX): one dimension-side aggregate job."""
+        n_tokens = (
+            self.table.select(F.explode(F.split("alias", " ")).alias("tok"))
+            .distinct()
+            .count()
+        )
+        return n_tokens <= ALIAS_TOKEN_BROADCAST_MAX
+
+    def mentions(
+        self,
+        docs: DataFrame,
+        tokens_col: str | None = None,
+        cache_registry: runtime.CacheScope | None = None,
+    ) -> DataFrame:
+        """Mention rows of ``docs`` by the path this dictionary's size
+        takes: the broadcast trie, or the join path beyond it."""
+        if self.alias_list is None:
+            return detect_mentions_join(
+                docs, self, tokens_col=tokens_col, cache_registry=cache_registry
+            )
+        return detect_mentions(docs, self.alias_list, tokens_col=tokens_col)
+
+
 def detect_mentions_join(
     docs: DataFrame,
-    aliases: DataFrame,
+    dictionary: AliasDictionary,
     text_col: str = "text",
     url_col: str = "url",
     tokens_col: str | None = None,
-    alias_col: str = "alias",
-    pre_normalized: bool = False,
     cache_registry: runtime.CacheScope | None = None,
-    anchor_prefilter: bool | str = "auto",
 ) -> DataFrame:
     """Beyond-broadcast mention detection: pure-join path, byte-identical
     output to ``detect_mentions`` (pytest-pinned), with NO driver-side
@@ -228,7 +330,7 @@ def detect_mentions_join(
     contract (the reference's dict IS a join input, el_process.py:37-43)
     as relational ops:
 
-      1. normalize + dedup the alias table distributively (same frozen
+      1. dedup the dictionary's normalized alias table (same frozen
          normalizer as the mention text, so variants join);
       2. RARE-TOKEN ANCHORING (prefix-filter trick from the
          set-similarity-join literature): one map-side-combined corpus
@@ -259,12 +361,13 @@ def detect_mentions_join(
     (url, selected span), identical as a SET to the trie path (row
     order differs — both are unordered DataFrames).
 
-    ``cache_registry``: when given, every DataFrame this call persists is
-    appended to it so a repeated caller (the streaming micro-batch loop)
-    can release them after its action instead of leaking one storage
-    entry per invocation.
+    ``cache_registry``: when given, the corpus-token table this call
+    persists is appended to it so a repeated caller (the streaming
+    micro-batch loop) can release it after its action instead of leaking
+    one storage entry per invocation. The alias side is the dictionary's
+    own, pinned once for all calls.
 
-    ``anchor_prefilter``: both corpus-token streams below (the df agg
+    Alias-token prefilter: both corpus-token streams below (the df agg
     input and the anchor-join probe side) carry EVERY corpus token, yet
     only tokens appearing in some alias can influence the output —
     foreign df rows never join an alias token, foreign anchor rows never
@@ -276,45 +379,20 @@ def detect_mentions_join(
     positions instead of the whole exploded corpus. The cost is
     alias-side and fixed, so it only nets out on large corpora
     (measured: -2 s at 100k docs, ~2.2x at 1M docs x 4.9M aliases).
-    "auto" gates on corpus size first (footer metadata, no job,
-    PREFILTER_MIN_DOC_ROWS) and only then pays one distinct-count
-    aggregate on the alias side (the dimension table — cheap next to
-    any corpus pass; a repeated caller should decide once and pass a
-    bool), enabling the filter under ALIAS_TOKEN_BROADCAST_MAX.
-    Output is identical in all settings (identity pytest runs both)."""
+    So it is on only when the corpus is known to be large (footer
+    metadata, no job, >= PREFILTER_MIN_DOC_ROWS) and the dictionary's
+    token vocabulary fits a broadcast (counted once per dictionary).
+    Output is identical either way (identity pytest runs both)."""
     from pyspark import StorageLevel
 
-    from entity_linking_spark.functions.normalize import normalize_udf, tokenize_udf
+    from entity_linking_spark.functions.normalize import tokenize_udf
 
-    if pre_normalized:
-        # caller already normalized (and persisted) the alias table —
-        # the streaming micro-batch loop's contract, same as
-        # candidate_entities: re-persisting per batch would pin a fresh
-        # copy of the full alias table every micro-batch
-        alias_norm = (
-            aliases.select(F.col(alias_col).alias("alias"))
-            .distinct()
-            .withColumn("_atoks", F.split("alias", " "))
-            .select("alias", "_atoks", F.size("_atoks").alias("n"))
-        )
-    else:
-        alias_norm = (
-            aliases.select(normalize_udf(F.col(alias_col)).alias("alias"))
-            .where(F.col("alias") != "")
-            .distinct()
-            .withColumn("_atoks", F.split("alias", " "))
-            .select("alias", "_atoks", F.size("_atoks").alias("n"))
-            # persist: the empty-string filter re-evaluates the normalize
-            # UDF under the projection (verified in the physical plan:
-            # stacked ArrowEvalPython) — same Catalyst behavior
-            # candidate_entities documents. The alias table is the
-            # dimension side (GBs at open-web KB scale, storable across
-            # executors; MEMORY_AND_DISK spills), so pinning it to run
-            # the UDF once per row is the right trade.
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        if cache_registry is not None:
-            cache_registry.append(alias_norm)
+    alias_norm = (
+        dictionary.table.select("alias")
+        .distinct()
+        .withColumn("_atoks", F.split("alias", " "))
+        .select("alias", "_atoks", F.size("_atoks").alias("n"))
+    )
     if tokens_col is None:
         # spread a small corpus scan before the Python stage (runtime.spread)
         src = runtime.spread(docs)
@@ -335,24 +413,11 @@ def detect_mentions_join(
         # corpus-sized token table to executor storage would cost more
         toks = docs.select(F.col(url_col).alias("url"), F.col(tokens_col).alias("tokens"))
 
+    # corpus gate first (footer metadata, no job). Unknown size counts as
+    # small: every unknown-size caller here (tests, micro-batches) IS small
+    n_docs_est = runtime.input_rows(docs) or 0
     alias_tok_set = None
-    if anchor_prefilter == "auto":
-        # corpus gate first — footer metadata only, NO job. Unknown size
-        # (in-memory fixture, derived plan, remote storage) counts as
-        # small: the prefilter is a pure optimization, and every
-        # unknown-size caller here (tests, micro-batches) IS small; a
-        # large-corpus caller that knows better passes True.
-        n_docs_est = runtime.input_rows(docs)
-        if n_docs_est is None or n_docs_est < PREFILTER_MIN_DOC_ROWS:
-            anchor_prefilter = False
-        else:
-            # only now pay the alias-token vocabulary count (one
-            # dimension-side aggregate job)
-            n_alias_toks = (
-                alias_norm.select(F.explode("_atoks").alias("tok")).distinct().count()
-            )
-            anchor_prefilter = n_alias_toks <= ALIAS_TOKEN_BROADCAST_MAX
-    if anchor_prefilter:
+    if n_docs_est >= PREFILTER_MIN_DOC_ROWS and dictionary.token_vocab_fits:
         alias_tok_set = alias_norm.select(F.explode("_atoks").alias("tok")).distinct()
 
     # per-token document frequency (map-side-combined: one partial row
@@ -443,11 +508,8 @@ def detect_mentions_join(
 
 def candidate_entities(
     mentions: DataFrame,
-    aliases: DataFrame,
+    dictionary: AliasDictionary,
     max_ambiguity: int = 16,
-    pre_normalized: bool = False,
-    broadcast_hint: bool | None = None,
-    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """J1: equi hash join mention -> candidate subject_ids, with per-alias
     ambiguity (how many entities share the alias — the disambiguation
@@ -458,37 +520,11 @@ def candidate_entities(
     weight (support 1/n_ids), and at corpus scale a stop-word-like alias
     would multiply the candidate table by its entity count (the
     reference's 南京南站-style hot keys, SURVEY §4)."""
-    # normalize the alias side with the SAME frozen normalizer that
-    # produced the mention strings, or hyphen/punct variants never join.
-    #
-    # ``pre_normalized``: callers that invoke this repeatedly against ONE
-    # alias table (the streaming micro-batch loop) normalize + persist it
-    # themselves ONCE and pass True — otherwise every call would pin a
-    # fresh cached copy of the full alias table (persist below) until
-    # driver GC collects the dropped reference.
-    if pre_normalized:
-        alias_norm = aliases
-    else:
-        from pyspark import StorageLevel
-
-        from entity_linking_spark.functions.normalize import normalize_udf
-
-        alias_norm = aliases.select(
-            normalize_udf(F.col("alias")).alias("alias"), F.col("subject_id")
-        ).where(F.col("alias") != "")
-        # persist: without it Catalyst evaluates the normalize UDF FOUR
-        # times in this plan (the empty-string filter re-evaluates it
-        # under the projection, on BOTH the join branch and the ambiguity
-        # branch — verified in the physical plan: 2x stacked
-        # ArrowEvalPython per branch). The alias table is the bounded
-        # small dimension (aliases x entities, ~GBs at full KB scale), so
-        # caching it is the intended design; the UDF runs once per alias
-        # row total. The cache is released when the returned plan's
-        # references are GC'd (ContextCleaner) — single-shot pipelines
-        # call this once, so nothing accumulates.
-        alias_norm = alias_norm.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_registry is not None:
-            cache_registry.append(alias_norm)
+    # the dictionary's table is normalized with the SAME frozen
+    # normalizer that produced the mention strings (else hyphen/punct
+    # variants never join) and pinned, so the normalize UDF runs once per
+    # alias row although this plan reads the table on two branches
+    alias_norm = dictionary.table
     ambiguity = alias_norm.groupBy("alias").agg(
         F.countDistinct("subject_id").alias("n_ids")
     )
@@ -498,22 +534,14 @@ def candidate_entities(
     # the 1M-doc local-cluster W4 runs ~10% — the static planner cannot
     # size the filtered-alias join output (agg estimates) nor the
     # Python-stage mentions side, so the build-side choice is a coin flip
-    # AQE only corrects after shuffle-writing the mentions table. The gate
-    # uses the same footer row estimate the trie-vs-join selector trusts
-    # (no scan job on parquet-backed KBs): provably-small alias tables are
-    # hinted onto the build side; beyond the gate AQE decides, which is
-    # the only plan that works there anyway.
-    # ``broadcast_hint``: callers that invoke this repeatedly against ONE
-    # alias table (the streaming micro-batch loop) resolve the gate ONCE
-    # outside their loop and pass a bool — with None, every call pays the
-    # footer reads (or a count() job for non-parquet alias plans), which
-    # would sit on every micro-batch's latency.
-    if broadcast_hint is None:
-        broadcast_hint = alias_row_estimate(aliases) <= CANDIDATE_BROADCAST_MAX_ROWS
+    # AQE only corrects after shuffle-writing the mentions table.
+    # Provably-small alias tables (AliasDictionary.broadcast) are hinted
+    # onto the build side; beyond the gate AQE decides, which is the only
+    # plan that works there anyway.
     joined = alias_norm.join(
         ambiguity.where(F.col("n_ids") <= max_ambiguity), "alias"
     )
-    alias_b = F.broadcast(joined) if broadcast_hint else joined
+    alias_b = F.broadcast(joined) if dictionary.broadcast else joined
     return (
         mentions.join(alias_b, mentions.mention == alias_b["alias"])
         .select("url", "mention", "subject_id", "n_ids")

@@ -83,13 +83,14 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
-    max_iterations: int = MAX_ITERATIONS,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """(url, cluster_id) for every vertex; cluster_id = component min url.
 
     ``edges``: (url_a, url_b) match pairs. ``vertices``: (url) all docs —
     isolated docs become singleton clusters (cluster_id = own url).
+    Raises RuntimeError when MAX_ITERATIONS rounds end without a
+    fixpoint, instead of returning partial clusters.
 
     ``checkpoint_dir``: when set, per-iteration lineage truncation uses
     RELIABLE checkpoints (written to this fault-tolerant path via
@@ -137,7 +138,7 @@ def connected_components(
         # instead of two before the fixpoint starts
         e = e.localCheckpoint(eager=False)
     prev_sig = None
-    for _ in range(max_iterations):
+    for _ in range(MAX_ITERATIONS):
         e = _large_star(e)
         e = _small_star(e)
         # lazy checkpoint: the signature action right after materializes
@@ -147,6 +148,10 @@ def connected_components(
         if sig == prev_sig:
             break
         prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {MAX_ITERATIONS} rounds"
+        )
 
     # fixpoint edges are (member_vid, root_vid); roots map to themselves
     member = e.select(F.col("src").alias("vid"), F.col("dst").alias("root"))

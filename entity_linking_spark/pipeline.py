@@ -39,21 +39,22 @@ def run_pipeline(
     force: bool = False,
     max_block_size: int = blocking.MAX_BLOCK_SIZE,
     threshold: float = scoring.MATCH_THRESHOLD,
-    alias_broadcast_max_rows: int = blocking.ALIAS_BROADCAST_MAX_ROWS,
     salt_factor: int | str | None = "auto",
     salt_hot_threshold: int | None = None,
 ) -> DataFrame:
     """Full linkage run; returns (url, cluster_id). Checkpoints each stage.
 
-    ``alias_broadcast_max_rows``: alias tables at/below this (row count
-    read from parquet footers, no scan job) are collected and matched
-    with the broadcast trie; larger KBs take the join-based
-    ``detect_mentions_join`` path — identical output, no driver collect,
-    so a beyond-broadcast KB no longer kills the job at s2."""
+    s2 and s3 share one ``blocking.AliasDictionary``: the KB is
+    normalized once per run, and its size picks the mention path (the
+    broadcast trie, or the join path that never collects a
+    beyond-broadcast KB to the driver — identical output)."""
     # frames an operator pinned while BUILDING a stage are dead weight
     # once that stage's snapshot write commits (downstream stages read
-    # the snapshot files, not the lineage), so they are released per stage
+    # the snapshot files, not the lineage). The dictionary's table is
+    # read by s2 and s3, so the scope is released after s3; s4-s6 pin
+    # nothing in it.
     caches = runtime.CacheScope()
+    dictionary = blocking.AliasDictionary(aliases, caches)
 
     def _extract() -> DataFrame:
         # Extraction and tokenization are FUSED into one mapInPandas over
@@ -72,15 +73,7 @@ def run_pipeline(
 
     def _collect_aliases() -> None:
         try:
-            # footer-metadata row estimate first: a beyond-broadcast KB
-            # must never be collected at all (the estimate itself costs
-            # no scan job for parquet-backed alias tables)
-            if blocking.alias_row_estimate(aliases) > alias_broadcast_max_rows:
-                alias_box["list"] = None  # s2 takes the join-based path
-            else:
-                alias_box["list"] = [
-                    r["alias"] for r in aliases.select("alias").distinct().collect()
-                ]
+            dictionary.alias_list  # noqa: B018 — computed (and memoized) here
         except BaseException as e:  # noqa: BLE001 — re-raised on the main thread
             alias_box["err"] = e
 
@@ -115,22 +108,14 @@ def run_pipeline(
     alias_thread.join()
     if "err" in alias_box:
         raise alias_box["err"]
-    alias_list = alias_box["list"]
 
     def _mentions() -> DataFrame:
-        if alias_list is None:  # beyond-broadcast KB: distributed join path
-            return blocking.detect_mentions_join(
-                docs, aliases, tokens_col="tokens", cache_registry=caches
-            )
-        return blocking.detect_mentions(docs, alias_list, tokens_col="tokens")
+        return dictionary.mentions(docs, tokens_col="tokens", cache_registry=caches)
 
     mentions = io.run_stage(spark, workdir, "s2_mentions", _mentions, force)
-    caches.release()
 
     def _candidates() -> DataFrame:
-        return blocking.candidate_entities(
-            mentions, aliases, cache_registry=caches
-        )
+        return blocking.candidate_entities(mentions, dictionary)
 
     candidates = io.run_stage(spark, workdir, "s3_candidates", _candidates, force)
     caches.release()
@@ -168,9 +153,7 @@ def run_pipeline(
         edges = scoring.match_edges(scores, threshold)
         return cluster.connected_components(edges, docs.select("url"))
 
-    out = io.run_stage(spark, workdir, "s6_clusters", _clusters, force)
-    caches.release()
-    return out
+    return io.run_stage(spark, workdir, "s6_clusters", _clusters, force)
 
 
 def main() -> None:

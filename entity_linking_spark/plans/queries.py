@@ -2496,7 +2496,7 @@ def mention_detect_greedy(spark, sf_dir):
 
     Reference contract: jieba user-dict cut + longest-alias-wins
     ordering, entity_sort/el_process.py:37-43,65."""
-    from entity_linking_spark.operators.blocking import detect_mentions_join
+    from entity_linking_spark.operators.blocking import AliasDictionary, detect_mentions_join
 
     docs = _t(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("string").alias("url"), "text"
@@ -2505,9 +2505,10 @@ def mention_detect_greedy(spark, sf_dir):
         [(a, f"e{i}") for i, a in enumerate(_MENTION_ALIASES)],
         "alias string, subject_id string",
     )
-    # cache_registry: the corpus-token and alias persists are released
-    # when the NEXT query starts (they can't be dropped before this
-    # query's action, which the caller owns)
+    # the corpus-token and alias persists are released when the NEXT
+    # query starts (they can't be dropped before this query's action,
+    # which the caller owns)
+    dictionary = AliasDictionary(aliases, _LIVE_CACHES)
     return detect_mentions_join(
-        docs, aliases, cache_registry=_LIVE_CACHES
+        docs, dictionary, cache_registry=_LIVE_CACHES
     ).orderBy("url", "start_pos")

@@ -71,19 +71,34 @@ def parquet_rows(path: str) -> dict[str, int]:
     return out
 
 
+def _input_files(df: DataFrame) -> set[str]:
+    """Files of the file relations in ``df``'s ANALYZED plan. Not
+    ``df.inputFiles()``: it walks the optimized plan, where a persisted
+    frame's cached data has replaced them (0 files for a cached read)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files: set[str] = set()
+    for leaf in (leaves.apply(i) for i in range(leaves.size())):
+        if leaf.getClass().getSimpleName() == "LogicalRelation":
+            relation = leaf.relation()
+            if relation.getClass().getSimpleName() == "HadoopFsRelation":
+                files.update(relation.inputFiles())
+    return files
+
+
 def input_rows(df: DataFrame) -> int | None:
-    """The summed footer row counts of every parquet file ``df`` reads
-    (``df.inputFiles()``), without a Spark job.
+    """The summed footer row counts of every parquet file ``df`` reads,
+    without a Spark job.
 
     The count is taken BEFORE any filter, join or aggregate in the plan:
     ``A.where(...)`` gives A's file rows, ``A.join(B)`` gives A's plus
-    B's. So it sizes the inputs of a plan, not its output. Returns None
-    only when the plan reads no local parquet file (``createDataFrame``,
-    other formats) or reads one on remote storage; callers decide
-    whether unknown means "small" or "pay a count()"."""
+    B's, and a persisted ``A`` still gives A's. So it sizes the inputs of
+    a plan, not its output. Returns None only when the plan reads no
+    local parquet file (``createDataFrame``, other formats) or reads one
+    on remote storage; callers decide whether unknown means "small" or
+    "pay a count()"."""
     try:
-        files = [f for f in df.inputFiles() if f.endswith(".parquet")]
-    except Exception:  # noqa: BLE001 — non-file-based plan
+        files = [f for f in _input_files(df) if f.endswith(".parquet")]
+    except Exception:  # noqa: BLE001 — plan not walkable
         return None
     if not files:
         return None

@@ -18,6 +18,13 @@ DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS = 10_000
 
 
+def _default_heap() -> str:
+    """Half of physical memory, capped at 48g: a heap past the host's
+    memory lets the kernel OOM killer, not the JVM, end a run."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(half_mb, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "entity-linking-spark",
     cores: int | None = None,
@@ -59,7 +66,7 @@ def get_spark(
         # with concurrent tasks or GC dominates (measured: 4x anti-scaling
         # at local[32] with an 8g heap). On a real cluster this maps to
         # spark.executor.memory per executor instead.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or _default_heap())
         # default 1g killed a legitimate mid-size broadcast build at the
         # 10M-doc scale point; 4g gives dimension-table headroom while
         # still failing fast on a genuinely unbounded collect

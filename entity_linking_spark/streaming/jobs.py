@@ -169,7 +169,6 @@ def streaming_link_microbatch(
     spark: SparkSession,
     new_docs_stream: DataFrame,
     aliases: DataFrame,
-    alias_list: list[str] | None,
     sink_path: str,
     checkpoint_path: str,
 ) -> StreamingQuery:
@@ -178,65 +177,21 @@ def streaming_link_microbatch(
     candidate table (reference service loop, service_main.py:93-175,
     re-expressed as micro-batches).
 
-    ``alias_list=None`` selects the beyond-broadcast JOIN mention path
-    per batch (blocking.detect_mentions_join) — the streaming service
-    keeps working when the KB no longer fits a driver collect; output is
-    identical (stream-batch parity pytest covers both modes).
-
-    The alias table is normalized + persisted ONCE here, outside the
-    batch loop (pre_normalized=True below): calling candidate_entities's
-    default path per micro-batch would pin a fresh cached copy of the
-    full alias table every batch until driver GC catches up."""
-    from pyspark import StorageLevel
-
-    from entity_linking_spark.functions.normalize import normalize_udf
+    One ``blocking.AliasDictionary`` serves the stream's lifetime: the
+    alias table is normalized and pinned once, outside the batch loop,
+    and its size gates are decided once. A beyond-broadcast KB takes the
+    join mention path per batch, so the streaming service keeps working
+    when the KB no longer fits a driver collect; output is identical
+    (stream-batch parity pytest covers both paths)."""
     from entity_linking_spark.operators import blocking
 
-    alias_norm = (
-        aliases.select(normalize_udf(F.col("alias")).alias("alias"), "subject_id")
-        .where(F.col("alias") != "")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # decide the alias-token vocabulary half of the prefilter gate ONCE
-    # for the stream's lifetime — "auto" inside the batch loop would
-    # re-count the alias token vocabulary every micro-batch. The corpus
-    # half is per-batch below: a normal micro-batch is far too small for
-    # the prefilter to net out (its cost is alias-side and fixed), but a
-    # file-source backfill batch can be huge, and its size is free to
-    # read from parquet footers.
-    prefilter_vocab_ok = (
-        alias_norm.select(F.explode(F.split("alias", " ")).alias("t"))
-        .distinct()
-        .count()
-        <= blocking.ALIAS_TOKEN_BROADCAST_MAX
-    )
-    # same once-outside-the-loop treatment for the candidate-join
-    # broadcast gate: the alias table is fixed for the stream's lifetime,
-    # so resolve the size gate here instead of paying a row-estimate
-    # (possibly a count() job) on every micro-batch
-    alias_broadcast_ok = (
-        blocking.alias_row_estimate(aliases)
-        <= blocking.CANDIDATE_BROADCAST_MAX_ROWS
-    )
+    dictionary = blocking.AliasDictionary(aliases)
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         batch_caches = runtime.CacheScope()
         try:
-            if alias_list is None:  # beyond-broadcast KB: join path per batch
-                batch_est = runtime.input_rows(batch_df)
-                mentions = blocking.detect_mentions_join(
-                    batch_df, alias_norm, pre_normalized=True,
-                    cache_registry=batch_caches,
-                    anchor_prefilter=prefilter_vocab_ok
-                    and batch_est is not None
-                    and batch_est >= blocking.PREFILTER_MIN_DOC_ROWS,
-                )
-            else:
-                mentions = blocking.detect_mentions(batch_df, alias_list)
-            cands = blocking.candidate_entities(
-                mentions, alias_norm, pre_normalized=True,
-                broadcast_hint=alias_broadcast_ok,
-            )
+            mentions = dictionary.mentions(batch_df, cache_registry=batch_caches)
+            cands = blocking.candidate_entities(mentions, dictionary)
             cands.withColumn("batch_id", F.lit(batch_id)).write.mode(
                 "append"
             ).parquet(sink_path)

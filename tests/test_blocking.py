@@ -48,7 +48,9 @@ def test_candidate_entities_ambiguity(spark):
         [Row(alias="foo", subject_id="e1"), Row(alias="foo", subject_id="e2"),
          Row(alias="bar", subject_id="e3")]
     )
-    out = blocking.candidate_entities(mentions, aliases).collect()
+    out = blocking.candidate_entities(
+        mentions, blocking.AliasDictionary(aliases)
+    ).collect()
     assert sorted((r.subject_id, r.n_ids) for r in out) == [("e1", 2), ("e2", 2)]
 
 
@@ -113,7 +115,7 @@ def _aliases(spark, pairs):
     )
 
 
-def test_detect_mentions_join_identical_to_trie(spark):
+def test_detect_mentions_join_identical_to_trie(spark, tmp_path, monkeypatch):
     """The beyond-broadcast join path must reproduce the trie path's
     output byte-identically (same rows; row ORDER is unspecified on both
     sides) — including longest-match-wins, greedy non-overlap jumps,
@@ -147,22 +149,25 @@ def test_detect_mentions_join_identical_to_trie(spark):
         ],
     )
     alias_list = [r.alias for r in aliases.select("alias").collect()]
+    dictionary = blocking.AliasDictionary(aliases)
     trie = sorted(map(tuple, blocking.detect_mentions(docs, alias_list).collect()))
-    join = sorted(map(tuple, blocking.detect_mentions_join(docs, aliases).collect()))
+    join = sorted(map(tuple, blocking.detect_mentions_join(docs, dictionary).collect()))
     assert trie == join
     assert len(trie) > 10  # corpus actually exercises the matcher
     # the alias-token broadcast prefilter is a pure plan optimization:
-    # both settings must emit the identical row set
-    for pf in (True, False):
-        got = sorted(
-            map(
-                tuple,
-                blocking.detect_mentions_join(
-                    docs, aliases, anchor_prefilter=pf
-                ).collect(),
-            )
+    # on (a parquet corpus past the row gate, the vocabulary fits) and
+    # off (the vocabulary does not fit) must emit the identical row set
+    p = str(tmp_path / "docs_pq")
+    docs.write.parquet(p)
+    monkeypatch.setattr(blocking, "PREFILTER_MIN_DOC_ROWS", 0)
+    for vocab_max, on in ((blocking.ALIAS_TOKEN_BROADCAST_MAX, True), (0, False)):
+        monkeypatch.setattr(blocking, "ALIAS_TOKEN_BROADCAST_MAX", vocab_max)
+        out = blocking.detect_mentions_join(
+            spark.read.parquet(p), blocking.AliasDictionary(aliases)
         )
-        assert got == trie, pf
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("LeftSemi" in plan) == on, on
+        assert sorted(map(tuple, out.collect())) == trie, on
 
 
 def test_detect_mentions_join_precomputed_tokens(spark):
@@ -175,7 +180,9 @@ def test_detect_mentions_join_precomputed_tokens(spark):
     out = sorted(
         map(
             tuple,
-            blocking.detect_mentions_join(toked, aliases, tokens_col="tokens").collect(),
+            blocking.detect_mentions_join(
+                toked, blocking.AliasDictionary(aliases), tokens_col="tokens"
+            ).collect(),
         )
     )
     trie = sorted(
@@ -194,9 +201,74 @@ def test_alias_row_estimate_parquet_footer(spark, tmp_path):
     # in-memory fallback
     assert blocking.alias_row_estimate(_aliases(spark, [("x", "e1")])) == 1
     # metadata-only variant: exact on parquet, None (NO count job) on
-    # in-memory plans — the prefilter auto-gate's "unknown means small"
+    # in-memory plans — the prefilter gate's "unknown means small"
     assert runtime.input_rows(spark.read.parquet(p)) == 37
     assert runtime.input_rows(_aliases(spark, [("x", "e1")])) is None
+
+
+def test_alias_dictionary_lazy_and_once(spark, monkeypatch):
+    """Building an AliasDictionary runs no Spark job; every member is
+    computed at most once; the size gates read the module constants
+    when first asked."""
+    estimate = blocking.alias_row_estimate
+    calls = []
+    monkeypatch.setattr(
+        blocking, "alias_row_estimate", lambda a: calls.append(a) or estimate(a)
+    )
+    aliases = _aliases(spark, [("Acme Corp", "e1"), ("acme", "e2"), ("", "e3")])
+    sc = spark.sparkContext
+    sc.setJobGroup("alias_dictionary_build", "build only")
+    try:
+        d = blocking.AliasDictionary(aliases)
+        assert list(sc.statusTracker().getJobIdsForGroup("alias_dictionary_build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sorted(d.alias_list) == ["", "Acme Corp", "acme"]
+    assert d.rows == 3 and d.broadcast and d.token_vocab_fits
+    assert d.alias_list is d.alias_list and d.table is d.table
+    assert len(calls) == 1
+    assert sorted(map(tuple, d.table.collect())) == [("acme", "e2"), ("acme corp", "e1")]
+    monkeypatch.setattr(blocking, "ALIAS_BROADCAST_MAX_ROWS", 2)
+    monkeypatch.setattr(blocking, "CANDIDATE_BROADCAST_MAX_ROWS", 2)
+    assert d.alias_list is not None  # decided once, not re-read
+    big = blocking.AliasDictionary(aliases)
+    assert big.alias_list is None and not big.broadcast
+    d.table.unpersist()
+
+
+def test_alias_dictionary_members_once_across_threads(monkeypatch):
+    """The pipeline asks for the dictionary from two driver threads: a
+    member asked for concurrently is still computed exactly once."""
+    import sys
+    import threading
+    import time
+
+    calls = []
+
+    def slow_estimate(aliases):
+        calls.append(aliases)
+        time.sleep(0.05)  # widen the check-then-compute window
+        return 7
+
+    monkeypatch.setattr(blocking, "alias_row_estimate", slow_estimate)
+    d = blocking.AliasDictionary(aliases=object())
+    seen = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=lambda: seen.append((d.rows, d.broadcast)))
+            for _ in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == [(7, True)] * 16
+    assert len(calls) == 1
 
 
 def test_detect_mentions_join_randomized_equivalence(spark):
@@ -227,7 +299,12 @@ def test_detect_mentions_join_randomized_equivalence(spark):
             map(tuple, blocking.detect_mentions(docs, sorted(alias_set)).collect())
         )
         join = sorted(
-            map(tuple, blocking.detect_mentions_join(docs, aliases).collect())
+            map(
+                tuple,
+                blocking.detect_mentions_join(
+                    docs, blocking.AliasDictionary(aliases)
+                ).collect(),
+            )
         )
         assert trie == join, f"trial {trial}: {len(trie)} vs {len(join)}"
         assert len(trie) > 0

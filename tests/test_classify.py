@@ -214,3 +214,19 @@ def test_model_roundtrips_through_parquet(spark, tmp_path):
     a = {(r.doc_id, r.log_odds) for r in nb_log_odds(df, model).collect()}
     b = {(r.doc_id, r.log_odds) for r in nb_log_odds(df, reloaded).collect()}
     assert a == b
+
+
+def test_materialize_matches_lazy(spark):
+    # materialize only changes how the model tables are held (collected
+    # local tables vs training lineage), never their contents
+    rows = [(i, f"tok{i % 7} tok{i % 3} common w{i % 11}", i % 2 == 0) for i in range(60)]
+    rows += [(100, "<unk> rare", True), (101, "common common", False)]
+    df = _docs(spark, rows)
+    lazy = train_nb_quality(df, vocab_size=8, materialize=False)
+    mat = train_nb_quality(df, vocab_size=8, materialize=True)
+    for table in ("vocab", "likelihoods", "totals"):
+        got = sorted(map(tuple, getattr(mat, table).collect()))
+        assert got == sorted(map(tuple, getattr(lazy, table).collect())), table
+    assert sorted(map(tuple, nb_log_odds(df, mat).collect())) == sorted(
+        map(tuple, nb_log_odds(df, lazy).collect())
+    )

@@ -45,3 +45,16 @@ def test_no_edges(spark):
 def test_star_already(spark):
     got = _run(spark, [("a", "b"), ("a", "c"), ("a", "d")], ["a", "b", "c", "d"])
     assert set(got.values()) == {"a"}
+
+
+def test_no_fixpoint_raises(spark, monkeypatch):
+    # a round budget too small for the path must fail loudly, never
+    # return the partial clusters of the last round
+    import pytest
+
+    from entity_linking_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "MAX_ITERATIONS", 1)
+    vs = [f"v{i:03d}" for i in range(40)]
+    with pytest.raises(RuntimeError, match="no fixpoint after 1 rounds"):
+        _run(spark, [(vs[i], vs[i + 1]) for i in range(39)], vs)

@@ -193,24 +193,21 @@ def test_stage_io_scheme_qualified_workdir(spark, tmp_path):
     assert calls["n"] == 1 and again.count() == 40  # remote resume works
 
 
-def test_pipeline_join_mention_path_identical(spark, fixtures, workdir):
+def test_pipeline_join_mention_path_identical(spark, fixtures, workdir, monkeypatch):
     """Force the beyond-broadcast join-based mention path
-    (alias_broadcast_max_rows=0) in a FRESH workdir: the s2 mentions
+    (ALIAS_BROADCAST_MAX_ROWS=0) in a FRESH workdir: the s2 mentions
     stage and the final clustering must be byte-identical to the trie
     path's (the `workdir` fixture ran the trie path), and F1 stays at
     the acceptance bar — proving pipeline.py no longer NEEDS the
     driver-side alias collect."""
     import tempfile
 
+    from entity_linking_spark.operators import blocking
+
+    monkeypatch.setattr(blocking, "ALIAS_BROADCAST_MAX_ROWS", 0)
     jd = tempfile.mkdtemp(prefix="el_joinpath_")
     try:
-        clusters = run_pipeline(
-            spark,
-            fixtures["documents"],
-            fixtures["aliases"],
-            jd,
-            alias_broadcast_max_rows=0,
-        )
+        clusters = run_pipeline(spark, fixtures["documents"], fixtures["aliases"], jd)
         m_trie = {
             tuple(r) for r in io.read_stage(spark, workdir, "s2_mentions").collect()
         }
@@ -230,7 +227,7 @@ def test_pipeline_join_mention_path_identical(spark, fixtures, workdir):
 
 def test_pipeline_auto_flips_to_join_path(spark, fixtures, monkeypatch):
     """With a parquet-backed alias table whose FOOTER row count exceeds
-    alias_broadcast_max_rows, the pipeline must take the join path
+    ALIAS_BROADCAST_MAX_ROWS, the pipeline must take the join path
     without ever touching the trie matcher or collecting aliases —
     asserted by making the trie entrypoint explode if called."""
     import tempfile
@@ -241,18 +238,13 @@ def test_pipeline_auto_flips_to_join_path(spark, fixtures, monkeypatch):
         raise AssertionError("trie path used despite beyond-broadcast aliases")
 
     monkeypatch.setattr(blocking, "detect_mentions", _boom)
+    monkeypatch.setattr(blocking, "ALIAS_BROADCAST_MAX_ROWS", 10)  # footer estimate is far larger
     jd = tempfile.mkdtemp(prefix="el_autoflip_")
     ad = tempfile.mkdtemp(prefix="el_autoflip_aliases_")
     try:
         fixtures["aliases"].write.mode("overwrite").parquet(ad)
         aliases_pq = spark.read.parquet(ad)
-        clusters = run_pipeline(
-            spark,
-            fixtures["documents"],
-            aliases_pq,
-            jd,
-            alias_broadcast_max_rows=10,  # footer estimate is far larger
-        )
+        clusters = run_pipeline(spark, fixtures["documents"], aliases_pq, jd)
         prf = pairwise_prf(clusters, fixtures["labeled_pairs"])
         assert prf["f1"] >= 0.99, prf
     finally:

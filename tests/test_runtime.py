@@ -37,6 +37,15 @@ def test_input_rows_filters_joins_partitions(spark, tmp_path):
     q = str(tmp_path / "other_pq")
     _aliases(spark, [(f"other {i}", f"o{i}") for i in range(11)]).write.parquet(q)
     assert runtime.input_rows(a.join(spark.read.parquet(q), "alias")) == 48
+    # a persisted plan still reads its files, before and after the cache fills
+    cached = a.where("subject_id < 'e5'").persist()
+    try:
+        assert runtime.input_rows(cached) == 37
+        cached.count()
+        assert runtime.input_rows(cached) == 37
+        assert runtime.input_rows(cached.select("alias")) == 37
+    finally:
+        cached.unpersist()
     # partitionBy nests files under key=value/ directories
     r = str(tmp_path / "partitioned_pq")
     _aliases(spark, [(f"a{i}", f"e{i % 3}") for i in range(20)]).write.partitionBy(

@@ -63,7 +63,7 @@ def test_foreachbatch_incremental_linkage(spark, tmp_path):
         .option("maxFilesPerTrigger", "2")
         .parquet(src)
     )
-    q = jobs.streaming_link_microbatch(spark, stream, aliases, alias_list, sink, ckpt)
+    q = jobs.streaming_link_microbatch(spark, stream, aliases, sink, ckpt)
     q.awaitTermination(180)
 
     got = spark.read.parquet(sink)
@@ -74,7 +74,7 @@ def test_foreachbatch_incremental_linkage(spark, tmp_path):
 
     docs = spark.createDataFrame(fx_docs, schema=S.DOCUMENTS_SCHEMA)
     batch_cands = blocking.candidate_entities(
-        blocking.detect_mentions(docs, alias_list), aliases
+        blocking.detect_mentions(docs, alias_list), blocking.AliasDictionary(aliases)
     )
     stream_set = {
         (r.url, r.mention, r.subject_id)
@@ -220,8 +220,8 @@ def test_watermark_drops_late_data(spark, tmp_path):
     assert len([r for r in rows if r.window_start == "2024-01-01 10:00"]) == 1
 
 
-def test_foreachbatch_linkage_join_path_parity(spark, tmp_path):
-    """alias_list=None (beyond-broadcast join mention path) through the
+def test_foreachbatch_linkage_join_path_parity(spark, tmp_path, monkeypatch):
+    """ALIAS_BROADCAST_MAX_ROWS=0 (beyond-broadcast join mention path) through the
     REAL streaming engine must produce the same candidate set as the
     batch trie path over the same corpus — S11 keeps serving when the
     KB outgrows any driver collect."""
@@ -245,7 +245,8 @@ def test_foreachbatch_linkage_join_path_parity(spark, tmp_path):
         .parquet(src)
     )
     cached_before = len(spark.sparkContext._jsc.getPersistentRDDs())
-    q = jobs.streaming_link_microbatch(spark, stream, aliases, None, sink, ckpt)
+    monkeypatch.setattr(blocking, "ALIAS_BROADCAST_MAX_ROWS", 0)
+    q = jobs.streaming_link_microbatch(spark, stream, aliases, sink, ckpt)
     q.awaitTermination(180)
 
     # the batch-scoped token caches must be released per micro-batch; only
@@ -257,7 +258,7 @@ def test_foreachbatch_linkage_join_path_parity(spark, tmp_path):
     got = spark.read.parquet(sink)
     docs = spark.createDataFrame(fx_docs, schema=S.DOCUMENTS_SCHEMA)
     batch_cands = blocking.candidate_entities(
-        blocking.detect_mentions(docs, alias_list), aliases
+        blocking.detect_mentions(docs, alias_list), blocking.AliasDictionary(aliases)
     )
     stream_set = {
         (r.url, r.mention, r.subject_id)

@@ -75,17 +75,21 @@ def main() -> None:
             cores
         ).write.mode("overwrite").parquet(aliases_path)
     aliases = spark.read.parquet(aliases_path)
-    n_aliases = blocking.alias_row_estimate(aliases)
     docs = spark.read.parquet(s1_path)
+    # one dictionary for both arms, as in the pipeline: the trie arm
+    # times its alias collect, the join arm the KB normalization it pays
+    # instead
+    dictionary = blocking.AliasDictionary(aliases)
+    n_aliases = dictionary.rows
 
     out = {"n_docs": n_docs, "cores": cores, "n_alias_rows": n_aliases}
 
     if not join_only:
         # --- trie arm: collect (timed — it's the cost under test) + match
         t0 = time.time()
-        alias_list = [
-            r["alias"] for r in aliases.select("alias").distinct().collect()
-        ]
+        alias_list = dictionary.alias_list
+        if alias_list is None:
+            sys.exit("alias table is past ALIAS_BROADCAST_MAX_ROWS: pass joinonly")
         t_collect = time.time() - t0
         m_trie = blocking.detect_mentions(docs, alias_list, tokens_col="tokens")
         n_trie = m_trie.count()
@@ -98,7 +102,7 @@ def main() -> None:
     # decade) for the price of one extra tiny shuffle of <= n_partitions
     # rows.
     t0 = time.time()
-    m_join = blocking.detect_mentions_join(docs, aliases, tokens_col="tokens")
+    m_join = blocking.detect_mentions_join(docs, dictionary, tokens_col="tokens")
     sizes = (
         m_join.groupBy(F.spark_partition_id().alias("pid"))
         .count()

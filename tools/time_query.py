@@ -1,7 +1,9 @@
 """Isolated per-query timing (guide §1.4): noop-sink each named query in
-a fresh session, N reps, print JSON. Optionally dump explain('formatted').
-Each rep's pinned caches are released after its action, outside the
-timed region.
+a fresh session, N reps, print JSON. ``--plans DIR`` writes the
+explain('formatted') plan of the last timed rep's own DataFrame, after
+its action, so the plan is the one that was measured (the query is not
+built a second time). Each rep's pinned caches are released after its
+action, outside the timed region.
 
 Usage: python tools/time_query.py q1 q2 ... [--reps 2] [--plans DIR]
        [--count]  (use the bench's count() action instead of noop)
@@ -46,17 +48,15 @@ def main() -> None:
             else:
                 df.write.format("noop").mode("overwrite").save()
             out[name].append(round(time.time() - t0, 3))
+            if args.plans and rep == args.reps - 1:
+                os.makedirs(args.plans, exist_ok=True)
+                plan = df._sc._jvm.PythonSQLUtils.explainString(
+                    df._jdf.queryExecution(), "formatted"
+                )
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                    f.write(plan)
             # untimed: the next rep must not pay this rep's unpersist
             Q._release_live_caches()
-        if args.plans:
-            os.makedirs(args.plans, exist_ok=True)
-            df = fn(spark, args.sf)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
-                f.write(plan)
-            Q._release_live_caches()  # the plan-only build pins too
         spark.sparkContext.setJobDescription(None)
     print(json.dumps(out))
     spark.stop()
