@@ -555,14 +555,13 @@ def blocking_keys(
     use_host: bool = True,
     use_entity: bool = True,
     use_minhash: bool = True,
-    max_alias_ambiguity: int = MAX_ALIAS_AMBIGUITY,
 ) -> DataFrame:
     """Union of blocking keys: (url, key) rows.
 
     key spaces are prefixed (host:/ent:/mh:<band>) so they never collide.
 
     ent: keys are emitted only for candidates supported by a low-ambiguity
-    alias (n_ids <= max_alias_ambiguity). A hot alias shared by dozens of
+    alias (n_ids <= MAX_ALIAS_AMBIGUITY). A hot alias shared by dozens of
     entities (the reference's stop-word problem, el_main.py:534-537) would
     otherwise inject every doc mentioning it into every one of those
     entities' blocks, blowing them past the size cap and destroying the
@@ -586,7 +585,7 @@ def blocking_keys(
         )
     if use_entity:
         parts.append(
-            candidates.where(F.col("n_ids") <= max_alias_ambiguity)
+            candidates.where(F.col("n_ids") <= MAX_ALIAS_AMBIGUITY)
             .select("url", F.concat(F.lit("ent:"), F.col("subject_id")).alias("key"))
             .distinct()
         )

@@ -11,7 +11,7 @@ sources are repeated for multiple epochs, big crawls are subsampled).
 Never rand(): the fractional keep decision is a pure function of
 (id, seed) via xxhash64 — re-running the job, at any parallelism, on
 any partitioning, emits the SAME mixed corpus (the module-wide
-determinism rule; operators/skew.py:33 documents the same stance).
+determinism rule; the operators/skew.py docstring states the same stance).
 One narrow scan, no shuffle: the weight lookup is a literal CASE chain
 compiled from the (small, by construction) domain->weight dict, the
 keep test is one hash compare, and upsampled copies come from a

@@ -22,10 +22,11 @@ Arrow-batched pandas UDFs:
   fused = max(ent_score, cos when cos >= dup_threshold, ...) — see
   ``score_pairs``. A pair is an edge when fused >= threshold.
 
-Shuffle inventory: two hash joins (pair -> per-doc features) on url —
-both shuffle on the pair key, which is uniform by construction. Feature
-tables are small projections (url, entity supports / embedding) so the
-join input is pruned to exactly the needed columns.
+Shuffle inventory: two hash joins (pair -> per-doc features) on url,
+each salted for the urls the key-frequency pass finds hot
+(operators/skew.py), plus that pass's small count shuffle per side.
+Feature tables are small projections (url, entity supports / embedding)
+so the join input is pruned to exactly the needed columns.
 """
 
 from __future__ import annotations
@@ -40,6 +41,7 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 
 from entity_linking_spark.functions.strings import jaro_winkler
 from entity_linking_spark.functions.vectors import hash_embed_udf
+from entity_linking_spark.operators import skew
 
 _PAIR_SCORES_T = StructType(
     [
@@ -165,26 +167,15 @@ def score_pairs(
     supports: DataFrame,
     embeddings: DataFrame,
     top_mention: DataFrame,
-    salt_factor: int | str | None = None,
-    hot_threshold: int | None = None,
 ) -> DataFrame:
     """Fused pair scores: (url_a, url_b, ent_score, cos_score, name_score,
     score).
 
-    ``salt_factor``: when a viral page appears in a disproportionate share
-    of candidate pairs (hot url key), the pair->feature joins can run
-    salted (operators/skew.py) so the hot key spreads over many reducers.
-      None (default)  — plain joins; blocking's stop-key caps bound the
-                        per-key fan-out and AQE skew-join splits residue.
-      "auto"          — adaptive_salted_join: an exact key-frequency pass
-                        finds keys hotter than ``hot_threshold`` and
-                        salts ONLY those (uniform corpora pay ~nothing;
-                        the frequency agg is map-side-combined so its
-                        shuffle is #hot-ish keys, not #pairs).
-      int N           — unconditional N-way salting of the whole join
-                        (the round-2 escape hatch; kept for callers that
-                        already know their skew profile).
-    """
+    When a viral page appears in a disproportionate share of candidate
+    pairs (hot url key), the pair->feature joins salt that url so it
+    spreads over many reducers (``skew.adaptive_salted_join``); urls
+    under ``skew.HOT_THRESHOLD`` join as in a plain equi join, so uniform
+    corpora pay only the map-side-combined key-frequency pass."""
     # merge ALL per-url features once (small joins on the 1:1 url key), so
     # the big pair table is joined exactly twice (a-side, b-side). The
     # shared-entity evidence is a JVM map intersection over the two
@@ -202,37 +193,16 @@ def score_pairs(
         F.col("url").alias("url_b"), F.col("vec").alias("vec_b"),
         F.col("mention").alias("m_b"), F.col("smap").alias("smap_b"),
     )
-
-    if salt_factor == "auto":
-        from entity_linking_spark.operators import skew
-
-        ht = hot_threshold if hot_threshold is not None else skew.DEFAULT_HOT_THRESHOLD
-        # both hot sets come from the RAW pair table: the feature joins
-        # are 1:1 per url, so url_b multiplicity after the first join
-        # equals its multiplicity in pairs — computing the second hot
-        # set there would re-evaluate the first join just to count keys
-        feat = skew.adaptive_salted_join(
-            skew.adaptive_salted_join(
-                pairs, fa, "url_a", salt_cols=["url_b"], hot_threshold=ht, how="left"
-            ),
-            fb, "url_b", salt_cols=["url_a"], hot_threshold=ht, how="left",
-            hot_keys_df=skew.hot_keys(pairs, "url_b", ht),
-        )
-    elif salt_factor:
-        from entity_linking_spark.operators.skew import salted_join
-
-        feat = salted_join(
-            salted_join(
-                pairs, fa, "url_a", salt_cols=["url_b"], n_salts=salt_factor,
-                how="left",
-            ),
-            fb, "url_b", salt_cols=["url_a"], n_salts=salt_factor, how="left",
-        )
-    else:
-        feat = (
-            pairs.join(fa.hint("shuffle_hash"), "url_a", "left")
-            .join(fb.hint("shuffle_hash"), "url_b", "left")
-        )
+    # both hot sets come from the RAW pair table: the feature joins are
+    # 1:1 per url, so url_b multiplicity after the first join equals its
+    # multiplicity in pairs — counting there would re-evaluate the first
+    # join just to count keys
+    feat = skew.adaptive_salted_join(
+        skew.adaptive_salted_join(
+            pairs, fa, "url_a", ["url_b"], skew.hot_keys(pairs, "url_a"), how="left"
+        ),
+        fb, "url_b", ["url_a"], skew.hot_keys(pairs, "url_b"), how="left",
+    )
 
     # ent_score = max over shared candidate entities of min(support_a,
     # support_b) — pure Column expressions (map_filter + try_element_at),
@@ -284,7 +254,8 @@ def score_pairs(
     )
 
 
-def match_edges(scored: DataFrame, threshold: float = MATCH_THRESHOLD) -> DataFrame:
-    """Edges of the linkage graph (reference analog: candidates whose
-    pair-classifier prob clears the decision, service_main.py:170-172)."""
-    return scored.where(F.col("score") >= threshold).select("url_a", "url_b")
+def match_edges(scored: DataFrame) -> DataFrame:
+    """Edges of the linkage graph: pairs scoring >= ``MATCH_THRESHOLD``
+    (reference analog: candidates whose pair-classifier prob clears the
+    decision, service_main.py:170-172)."""
+    return scored.where(F.col("score") >= MATCH_THRESHOLD).select("url_a", "url_b")

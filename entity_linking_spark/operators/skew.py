@@ -1,30 +1,35 @@
-"""Explicit skew handling: salted repartition + salted join.
+"""Explicit skew handling: the adaptive salted join.
 
-The north rule requires hot-key skew broken by salted repartitioning
-(the reference has NO skew handling — its hot aliases simply fan out and
-its ThreadPool chunks are uneven, SURVEY §4). Three tiers in this repo:
+The north rule requires hot-key skew broken by salting (the reference
+has NO skew handling — its hot aliases simply fan out and its ThreadPool
+chunks are uneven, SURVEY §4). Three tiers in this repo:
 
   1. stop-key removal   non-discriminative keys dropped (blocking.py)
   2. THIS MODULE        salting for keys that are hot but must be kept
   3. AQE skew-join      runtime splitting for the residue (session.py)
 
-``salted_join`` implements the classic replicate-small/salt-large
-pattern: the skewed side gets a deterministic salt in [0, S), the small
-side is replicated S times, and the equi join runs on (key, salt) — a
-hot key's rows now land in S different reduce partitions instead of one
-straggler. Deterministic (crc-style hash, never rand()) per the
-FIXTURES.md seeding rules.
+``adaptive_salted_join`` is the one salted construction: ``hot_keys``
+finds the keys over ``HOT_THRESHOLD`` with an exact frequency pass, and
+only those are salted on the probe side and replicated on the build
+side. Cold keys join exactly as in a plain equi join. Deterministic
+(the salt is a hash of row content, never rand()) per the FIXTURES.md
+seeding rules. Both constants are read at call time; tests and tools
+override them by monkeypatching the module.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-DEFAULT_SALT = 8
+N_SALTS = 8
+# A key owning more rows than this on the probe side is treated as hot:
+# at the default 32-200 shuffle partitions, ~100k rows in ONE reduce
+# partition is straggler territory while everything else finishes.
+HOT_THRESHOLD = 100_000
 
 # the salted-join construction is output-identical to the plain join
 # only when every BUILD-side replica a probe row can't hash to is
-# droppable: with how='right'/'full' a hot build key whose n_salts
+# droppable: with how='right'/'full' a hot build key whose N_SALTS
 # replicas include salts no probe row lands on would emit one spurious
 # unmatched row per uncovered salt
 _SALTED_JOIN_MODES = ("inner", "left", "leftsemi", "leftanti", "semi", "anti")
@@ -41,56 +46,10 @@ def _check_join_mode(how: str) -> None:
         )
 
 
-def with_salt(
-    df: DataFrame, cols: list[str], n_salts: int = DEFAULT_SALT, out: str = "_salt"
-) -> DataFrame:
-    """Deterministic salt in [0, n_salts) derived from the row's OTHER
-    columns (so equal keys spread, but reruns are byte-identical)."""
-    return df.withColumn(out, F.pmod(F.xxhash64(*cols), F.lit(n_salts)).cast("int"))
+def hot_keys(df: DataFrame, key: str | list[str]) -> DataFrame:
+    """Keys owning more than ``HOT_THRESHOLD`` rows of ``df``.
 
-
-def replicate(
-    df: DataFrame, n_salts: int = DEFAULT_SALT, out: str = "_salt"
-) -> DataFrame:
-    """Cross the (small) build side with every salt value."""
-    salts = F.array(*[F.lit(i) for i in range(n_salts)])
-    return df.withColumn(out, F.explode(salts))
-
-
-def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    key: str | list[str],
-    salt_cols: list[str],
-    n_salts: int = DEFAULT_SALT,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi join on (key..., salt): ``large`` is salted by hashing
-    ``salt_cols`` (columns NOT in the key — e.g. the other id of a pair),
-    ``small`` is replicated n_salts times. A key owning p% of the rows is
-    split across n_salts reducers instead of one.
-
-    Use when the build side is too big to broadcast but small enough to
-    replicate n_salts x (supports/feature tables per url), and the probe
-    side has hot keys (a viral page appearing in millions of candidate
-    pairs).
-    """
-    _check_join_mode(how)
-    keys = [key] if isinstance(key, str) else list(key)
-    lg = with_salt(large, salt_cols, n_salts)
-    sm = replicate(small, n_salts)
-    out = lg.join(sm.hint("shuffle_hash"), [*keys, "_salt"], how)
-    return out.drop("_salt")
-
-
-# A key owning more rows than this on the probe side is treated as hot:
-# at the default 32-200 shuffle partitions, ~100k rows in ONE reduce
-# partition is straggler territory while everything else finishes.
-DEFAULT_HOT_THRESHOLD = 100_000
-
-
-def hot_keys(df: DataFrame, key: str | list[str], hot_threshold: int) -> DataFrame:
-    """Exact per-key frequency via two-phase groupBy().count(): map-side
+    Exact per-key frequency via two-phase groupBy().count(): map-side
     partial aggregation collapses even a 10^8-row hot key to one partial
     row per task, so finding hot keys costs a tiny count shuffle — the
     same pattern (and argument) as blocking.candidate_pairs' stop list.
@@ -101,7 +60,7 @@ def hot_keys(df: DataFrame, key: str | list[str], hot_threshold: int) -> DataFra
     return (
         df.groupBy(*keys)
         .agg(F.count("*").alias("_cnt"))
-        .where(F.col("_cnt") > hot_threshold)
+        .where(F.col("_cnt") > HOT_THRESHOLD)
         .select(*keys)
     )
 
@@ -111,59 +70,49 @@ def adaptive_salted_join(
     small: DataFrame,
     key: str | list[str],
     salt_cols: list[str],
-    n_salts: int = DEFAULT_SALT,
-    hot_threshold: int = DEFAULT_HOT_THRESHOLD,
+    hot: DataFrame,
     how: str = "inner",
-    hot_keys_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Salt ONLY the keys that are actually hot — auto-selected from an
-    exact key-frequency pass over the probe side, so uniform workloads
-    pay no replication and skewed ones get no straggler.
+    """Equi join of ``large`` (probe) and ``small`` (build) on ``key``
+    that salts ONLY the keys in ``hot`` — uniform workloads pay no
+    replication and skewed ones get no straggler.
 
-    ``hot_keys_df``: precomputed hot-key set (columns = the join keys).
-    Pass it when ``large`` is itself an expensive subtree whose key
-    multiplicities equal some cheaper table's (e.g. after a 1:1 feature
-    join, the pair table's) — otherwise the frequency pass would
-    re-evaluate that subtree.
+    ``hot`` is the hot-key set (columns = the join keys), normally
+    ``hot_keys`` of the probe side. The caller builds it so it can count
+    a cheaper table with the same key multiplicities (e.g. the raw pair
+    table instead of the pair table after a 1:1 feature join, which the
+    frequency pass would otherwise re-evaluate).
 
     Mechanics: the (tiny by construction: <= rows/threshold keys) hot
     set broadcasts onto both sides as a map-side flag. Hot probe rows
-    get a deterministic salt in [0, n_salts); cold rows get salt 0. The
-    build side is replicated n_salts x for hot keys ONLY (explode of a
-    conditional salt array) and kept single for cold keys. One equi join
-    on (key..., salt) then serves both populations — identical output to
-    the unsalted join (pytest-pinned), one plan, no union of split
-    branches, and the hot key's rows land in n_salts reduce partitions
-    instead of one."""
+    get a deterministic salt in [0, N_SALTS) hashed from ``salt_cols``
+    (columns NOT in the key, e.g. the other id of a pair); cold rows get
+    salt 0. The build side is replicated N_SALTS x for hot keys ONLY
+    (explode of a conditional salt array) and kept single for cold keys.
+    One equi join on (key..., salt) then serves both populations —
+    identical output to the unsalted join (pytest-pinned), one plan, no
+    union of split branches, and the hot key's rows land in N_SALTS
+    reduce partitions instead of one."""
     _check_join_mode(how)
     keys = [key] if isinstance(key, str) else list(key)
-    base_hot = hot_keys_df if hot_keys_df is not None else hot_keys(large, keys, hot_threshold)
-    hot = F.broadcast(base_hot.withColumn("_hot", F.lit(True)))
+    flag = F.broadcast(hot.withColumn("_hot", F.lit(True)))
     lg = (
-        large.join(hot, keys, "left")
+        large.join(flag, keys, "left")
         .withColumn(
             "_salt",
             F.when(
                 F.col("_hot"),
-                F.pmod(F.xxhash64(*salt_cols), F.lit(n_salts)).cast("int"),
+                F.pmod(F.xxhash64(*salt_cols), F.lit(N_SALTS)).cast("int"),
             ).otherwise(F.lit(0)),
         )
         .drop("_hot")
     )
-    salts = F.array(*[F.lit(i) for i in range(n_salts)])
+    salts = F.array(*[F.lit(i) for i in range(N_SALTS)])
     sm = (
-        small.join(hot, keys, "left")
+        small.join(flag, keys, "left")
         .withColumn(
             "_salt", F.explode(F.when(F.col("_hot"), salts).otherwise(F.array(F.lit(0))))
         )
         .drop("_hot")
     )
     return lg.join(sm.hint("shuffle_hash"), [*keys, "_salt"], how).drop("_salt")
-
-
-# (salted_repartition was removed in round 5: it was unused by the
-# pipeline and its monotonically_increasing_id salt made PARTITIONING
-# vary across reruns, contradicting this module's never-rand()
-# determinism contract. The supported spread-a-hot-key paths are
-# with_salt + repartition on (key, _salt) — deterministic, derived from
-# row content — or the salted joins above.)

@@ -7,8 +7,9 @@ Stage inventory and their shuffle profile:
   mentions  narrow dictionary UDTF                       no shuffle
   blocking  key explode + stop-key cap                   1 shuffle (groupBy key)
   pairs     within-block self-join + distinct            1-2 shuffles
-  scoring   2 hash joins pair->features (ent evidence    shuffles on url (uniform)
-            is a JVM map intersection, not a join)
+  scoring   2 hash joins pair->features, each salted     shuffles on url, + 1 small
+            for hot urls (ent evidence is a JVM map      count shuffle per side
+            intersection, not a join)
   cluster   large-star/small-star to fixpoint            2 shuffles/round, O(log n) rounds
 
 Run as a job:  python -m entity_linking_spark.pipeline --workdir /tmp/el \
@@ -21,8 +22,10 @@ from __future__ import annotations
 import argparse
 import json
 import time
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import InheritableThread
+from pyspark.sql import DataFrame, SparkSession
 
 from entity_linking_spark import runtime, schema as S
 from entity_linking_spark.metrics import pairwise_prf
@@ -31,18 +34,40 @@ from entity_linking_spark.session import get_spark
 from entity_linking_spark.sources import io
 
 
+def _in_thread(fn: Callable[[], object]) -> Callable[[], object]:
+    """Run ``fn`` on an ``InheritableThread``, which keeps the caller's
+    Spark job group; the returned join gives its result or re-raises."""
+    box: dict[str, object] = {}
+
+    def run() -> None:
+        try:
+            box["out"] = fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised by join
+            box["err"] = e
+
+    thread = InheritableThread(target=run, daemon=True)
+    thread.start()
+
+    def join() -> object:
+        thread.join()
+        if "err" in box:
+            raise box["err"]
+        return box["out"]
+
+    return join
+
+
 def run_pipeline(
     spark: SparkSession,
     documents: DataFrame,
     aliases: DataFrame,
     workdir: str,
     force: bool = False,
-    max_block_size: int = blocking.MAX_BLOCK_SIZE,
-    threshold: float = scoring.MATCH_THRESHOLD,
-    salt_factor: int | str | None = "auto",
-    salt_hot_threshold: int | None = None,
 ) -> DataFrame:
     """Full linkage run; returns (url, cluster_id). Checkpoints each stage.
+
+    Stage parameters are module constants read at call time
+    (``blocking.MAX_BLOCK_SIZE``, ``skew.HOT_THRESHOLD``, ...).
 
     s2 and s3 share one ``blocking.AliasDictionary``: the KB is
     normalized once per run, and its size picks the mention path (the
@@ -67,18 +92,7 @@ def run_pipeline(
     # latency-bound) broadcast prep overlaps the extract stage instead of
     # sitting between s1 and s2 on the critical path. Spark schedules jobs
     # from concurrent driver threads independently (FIFO pools).
-    import threading
-
-    alias_box: dict[str, object] = {}
-
-    def _collect_aliases() -> None:
-        try:
-            dictionary.alias_list  # noqa: B018 — computed (and memoized) here
-        except BaseException as e:  # noqa: BLE001 — re-raised on the main thread
-            alias_box["err"] = e
-
-    alias_thread = threading.Thread(target=_collect_aliases, daemon=True)
-    alias_thread.start()
+    join_aliases = _in_thread(lambda: dictionary.alias_list)
 
     docs = io.run_stage(spark, workdir, "s1_extract", _extract, force)
 
@@ -88,26 +102,16 @@ def run_pipeline(
     # caches entity encodings the same way, eval_biencoder_.py:305-341).
     # The fused s1 pass already computed vec, so building it is a pure
     # projection. s1b depends ONLY on s1, so it runs on a SECOND driver
-    # thread concurrently with the s2 -> s4 chain (Spark schedules jobs
-    # from concurrent driver threads independently) — DAG parallelism a
+    # thread concurrently with the s2 -> s4 chain — DAG parallelism a
     # cluster scheduler would exploit; serially it sat on the critical
     # path between s4 and s5 for no reason.
-    emb_box: dict[str, object] = {}
+    join_embeddings = _in_thread(
+        lambda: io.run_stage(
+            spark, workdir, "s1b_embeddings", lambda: docs.select("url", "vec"), force
+        )
+    )
 
-    def _embeddings_stage() -> None:
-        try:
-            emb_box["df"] = io.run_stage(
-                spark, workdir, "s1b_embeddings", lambda: docs.select("url", "vec"), force
-            )
-        except BaseException as e:  # noqa: BLE001 — re-raised on the main thread
-            emb_box["err"] = e
-
-    emb_thread = threading.Thread(target=_embeddings_stage, daemon=True)
-    emb_thread.start()
-
-    alias_thread.join()
-    if "err" in alias_box:
-        raise alias_box["err"]
+    join_aliases()
 
     def _mentions() -> DataFrame:
         return dictionary.mentions(docs, tokens_col="tokens", cache_registry=caches)
@@ -126,31 +130,22 @@ def run_pipeline(
         # snapshots, so the two scans of the keys subtree are cheap
         # columnar re-reads — no Python stage to protect, and no reason
         # to pin a corpus-sized key table to executor storage
-        return blocking.candidate_pairs(keys, max_block_size, cache_keys=False)
+        return blocking.candidate_pairs(keys, blocking.MAX_BLOCK_SIZE, cache_keys=False)
 
     pairs = io.run_stage(spark, workdir, "s4_pairs", _pairs, force)
 
-    emb_thread.join()
-    if "err" in emb_box:
-        raise emb_box["err"]
-    embeddings = emb_box["df"]
+    embeddings = join_embeddings()
 
     def _scores() -> DataFrame:
         supports, emb, top_mention = scoring.doc_features(
             docs, candidates, embeddings=embeddings
         )
-        # salt_factor="auto" (default): scoring joins flip hot urls to
-        # the salted path from an exact key-frequency pass — uniform
-        # corpora pay only the map-side-combined count, skewed ones
-        # (viral page in millions of pairs) lose the straggler
-        return scoring.score_pairs(
-            pairs, supports, emb, top_mention, salt_factor, salt_hot_threshold
-        )
+        return scoring.score_pairs(pairs, supports, emb, top_mention)
 
     scores = io.run_stage(spark, workdir, "s5_scores", _scores, force)
 
     def _clusters() -> DataFrame:
-        edges = scoring.match_edges(scores, threshold)
+        edges = scoring.match_edges(scores)
         return cluster.connected_components(edges, docs.select("url"))
 
     return io.run_stage(spark, workdir, "s6_clusters", _clusters, force)

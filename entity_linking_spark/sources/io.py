@@ -158,18 +158,17 @@ def run_stage(
     force: bool = False,
     partition_by: list[str] | None = None,
 ) -> DataFrame:
-    """Skip-if-exists stage runner (the resume-from-checkpoint primitive)."""
-    verbose = os.environ.get("EL_VERBOSE") == "1"
-    t0 = time.time()
+    """Skip-if-exists stage runner (the resume-from-checkpoint primitive).
+    The sidecar also records ``build_seconds``: the ``build()`` call,
+    eager jobs such as the CC fixpoint included."""
     if not force and stage_complete(root, name):
-        out = read_stage(spark, root, name)
-        if verbose:
-            print(f"[stage {name}] skipped (checkpoint), {time.time()-t0:.2f}s")
-        return out
+        return read_stage(spark, root, name)
+    t0 = time.time()
     df = build()
-    if verbose:
-        print(f"[stage {name}] plan built at +{time.time()-t0:.2f}s", flush=True)
-    write_stage(df, root, name, partition_by)
-    if verbose:
-        print(f"[stage {name}] written at +{time.time()-t0:.2f}s", flush=True)
+    build_seconds = round(time.time() - t0, 3)
+    meta = write_stage(df, root, name, partition_by)
+    _sidecar_write(
+        os.path.join(stage_path(root, name), _META),
+        {**meta, "build_seconds": build_seconds},
+    )
     return read_stage(spark, root, name)

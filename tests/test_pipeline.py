@@ -48,6 +48,30 @@ def test_stage_metadata_lineage(workdir):
     assert meta["rows"] > 0
     assert meta["partitions"]  # per-partition lineage recorded
     assert "url" in meta["schema"]
+    # build time is recorded next to the write time; s6 builds eagerly
+    # (the CC fixpoint runs jobs inside build())
+    assert io.stage_meta(workdir, "s6_clusters")["build_seconds"] > 0
+
+
+def test_pipeline_jobs_keep_callers_job_group(spark, fixtures, tmp_path):
+    """Every job of a run, those of the alias-collect and s1b helper
+    threads included, belongs to the job group the caller set."""
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+    first = int(jvm_sc.dagScheduler().nextJobId())
+    sc.setJobGroup("el-run", "el-run")
+    try:
+        run_pipeline(
+            spark, fixtures["documents"], fixtures["aliases"], str(tmp_path), force=True
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jvm_sc.listenerBus().waitUntilEmpty()
+    run_jobs = set(range(first, int(jvm_sc.dagScheduler().nextJobId())))
+    in_group = set(sc.statusTracker().getJobIdsForGroup("el-run"))
+    assert run_jobs
+    assert sorted(run_jobs - in_group) == []
 
 
 def test_resume_from_checkpoint(spark, fixtures, workdir):

@@ -1,7 +1,8 @@
-"""Salted join: correctness equivalence + partition-spread evidence."""
+"""Adaptive salted join: correctness equivalence + partition-spread evidence."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from entity_linking_spark.operators import skew
@@ -18,66 +19,64 @@ def _skewed(spark):
     return large, small
 
 
-def test_salted_join_equals_plain_join(spark):
+@pytest.fixture
+def hot_over_100(monkeypatch):
+    """The 900-row key is hot, the 1-row keys are not."""
+    monkeypatch.setattr(skew, "HOT_THRESHOLD", 100)
+
+
+@pytest.fixture
+def static_shuffle(spark):
+    """AQE off and 8 shuffle partitions, so the join's reduce partitions
+    are the plain hash placement of (key, salt)."""
+    conf = {"spark.sql.adaptive.enabled": "false", "spark.sql.shuffle.partitions": "8"}
+    saved = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    yield
+    for k, v in saved.items():
+        spark.conf.set(k, v)
+
+
+def _hot_rows_per_partition(spark) -> list[int]:
+    """Rows of the hot key in each reduce partition of the salted join."""
     large, small = _skewed(spark)
-    plain = large.join(small, "key").select("key", "other", "v", "label")
-    salted = skew.salted_join(large, small, "key", salt_cols=["other"]).select(
-        "key", "other", "v", "label"
+    out = skew.adaptive_salted_join(
+        large, small, "key", ["other"], skew.hot_keys(large, "key")
     )
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
-
-
-def test_salt_spreads_hot_key(spark):
-    large, _ = _skewed(spark)
-    salted = skew.with_salt(large.where("key = 'hot'"), ["other"], n_salts=8)
-    spread = salted.groupBy("_salt").count().collect()
-    assert len(spread) == 8  # hot key occupies all salt buckets
-    assert max(r["count"] for r in spread) < 900  # no single straggler bucket
-
-
-def test_salted_join_left(spark):
-    large, small = _skewed(spark)
-    some = small.where("key <> 'hot'")
-    out = skew.salted_join(large, some, "key", salt_cols=["other"], how="left")
-    assert out.count() == large.count()  # left semantics preserved
-    assert out.where("label IS NULL").count() == 900  # hot rows unmatched
-
-
-def test_deterministic_salted_repartition_spreads(spark):
-    """The supported hot-key spread path (salted_repartition was removed
-    in round 5 — its monotonically_increasing_id salt varied across
-    reruns): with_salt derives the salt from row content, so the same
-    input always lands the same way AND the hot key splits."""
-    large, _ = _skewed(spark)
-    rep = skew.with_salt(large, ["other"], n_salts=8).repartition(
-        8, F.col("key"), F.col("_salt")
-    )
-    sizes = rep.groupBy(F.spark_partition_id().alias("p")).count().collect()
-    assert max(r["count"] for r in sizes) < 900  # hot key split across partitions
-    salts_a = [r["_salt"] for r in rep.orderBy("key", "other").collect()]
-    salts_b = [
-        r["_salt"]
-        for r in skew.with_salt(large, ["other"], n_salts=8)
-        .orderBy("key", "other")
+    rows = (
+        out.select("key", F.spark_partition_id().alias("p"))
+        .where(F.col("key") == "hot")
+        .groupBy("p")
+        .count()
         .collect()
-    ]
-    assert salts_a == salts_b  # byte-identical across reruns
+    )
+    return [c for _, c in sorted((r["p"], r["count"]) for r in rows)]
+
+
+def test_salt_spreads_hot_key(spark, hot_over_100, static_shuffle):
+    counts = _hot_rows_per_partition(spark)
+    assert sum(counts) == 900
+    assert len(counts) > 1  # the hot key spans several reduce partitions
+    assert max(counts) < 900  # no single straggler partition
+
+
+def test_deterministic_salted_repartition_spreads(spark, hot_over_100, static_shuffle):
+    """The salt is a hash of row content (never rand() or a row id), so
+    a rerun places every hot row in the same reduce partition."""
+    first = _hot_rows_per_partition(spark)
+    assert len(first) > 1
+    assert _hot_rows_per_partition(spark) == first
 
 
 def test_salted_joins_reject_right_and_full(spark):
     """how='right'/'full' would emit spurious unmatched build-side rows
-    for uncovered salt replicas (round-4 advice): both joins refuse."""
-    import pytest
-
+    for uncovered salt replicas (round-4 advice): the join refuses."""
     large, small = _skewed(spark)
+    hot = skew.hot_keys(large, "key")
     for how in ("right", "full", "full_outer", "rightouter"):
         with pytest.raises(ValueError, match="salted joins support"):
-            skew.salted_join(large, small, "key", salt_cols=["other"], how=how)
-        with pytest.raises(ValueError, match="salted joins support"):
-            skew.adaptive_salted_join(
-                large, small, "key", salt_cols=["other"], how=how
-            )
+            skew.adaptive_salted_join(large, small, "key", ["other"], hot, how=how)
     # every safe Spark spelling passes the guard (incl. the
     # no-underscore aliases PySpark accepts everywhere)
     for how in ("inner", "left", "leftouter", "left_outer",
@@ -86,47 +85,44 @@ def test_salted_joins_reject_right_and_full(spark):
         skew._check_join_mode(how)
 
 
-def test_adaptive_salted_join_equals_plain(spark):
+def test_adaptive_salted_join_equals_plain(spark, hot_over_100):
     large, small = _skewed(spark)
     plain = large.join(small, "key").select("key", "other", "v", "label")
     adaptive = skew.adaptive_salted_join(
-        large, small, "key", salt_cols=["other"], hot_threshold=100
+        large, small, "key", ["other"], skew.hot_keys(large, "key")
     ).select("key", "other", "v", "label")
     assert plain.exceptAll(adaptive).count() == 0
     assert adaptive.exceptAll(plain).count() == 0
 
 
-def test_adaptive_salted_join_left_semantics(spark):
+def test_adaptive_salted_join_left_semantics(spark, hot_over_100):
     large, small = _skewed(spark)
     some = small.where("key <> 'hot'")
     out = skew.adaptive_salted_join(
-        large, some, "key", salt_cols=["other"], hot_threshold=100, how="left"
+        large, some, "key", ["other"], skew.hot_keys(large, "key"), how="left"
     )
     assert out.count() == large.count()
     assert out.where("label IS NULL").count() == 900
 
 
-def test_adaptive_salts_only_hot_keys(spark):
+def test_adaptive_salts_only_hot_keys(spark, hot_over_100):
     """Cold keys must not be replicated: build-side fan-out equals
-    n_small + (n_salts-1) * n_hot, not n_small * n_salts."""
+    n_small + (N_SALTS-1) * n_hot, not n_small * N_SALTS."""
     large, small = _skewed(spark)
-    hot = skew.hot_keys(large, "key", hot_threshold=100)
+    hot = skew.hot_keys(large, "key")
     assert [r["key"] for r in hot.collect()] == ["hot"]
-    n_salts = skew.DEFAULT_SALT
     hot_b = F.broadcast(hot.withColumn("_hot", F.lit(True)))
-    salts = F.array(*[F.lit(i) for i in range(n_salts)])
+    salts = F.array(*[F.lit(i) for i in range(skew.N_SALTS)])
     sm = small.join(hot_b, "key", "left").withColumn(
         "_salt", F.explode(F.when(F.col("_hot"), salts).otherwise(F.array(F.lit(0))))
     )
-    assert sm.count() == small.count() + (n_salts - 1) * 1
+    assert sm.count() == small.count() + (skew.N_SALTS - 1) * 1
 
 
-def test_score_pairs_auto_salting_identical_output(spark):
-    """scoring.score_pairs(salt_factor='auto') must be row-identical to
-    the unsalted plan on a skewed pair table (one viral url in most
-    pairs)."""
-    from pyspark.sql import Row
-
+def test_score_pairs_auto_salting_identical_output(spark, monkeypatch):
+    """scoring.score_pairs with a salted viral url must be row-identical
+    to the same call with no url hot, on a skewed pair table (one viral
+    url in most pairs)."""
     from entity_linking_spark.operators import scoring
 
     pairs = spark.createDataFrame(
@@ -148,10 +144,11 @@ def test_score_pairs_auto_salting_identical_output(spark):
     emb = feats.select("url", "vec")
     tm = feats.select("url", "mention")
     sup = feats.select("url", "smap")
-    base = scoring.score_pairs(pairs, sup, emb, tm)
-    auto = scoring.score_pairs(
-        pairs, sup, emb, tm, salt_factor="auto", hot_threshold=20
-    )
-    cols = base.columns
-    assert base.select(cols).exceptAll(auto.select(cols)).count() == 0
-    assert auto.select(cols).exceptAll(base.select(cols)).count() == 0
+    cols = ["url_a", "url_b", "ent_score", "cos_score", "name_score", "score"]
+
+    monkeypatch.setattr(skew, "HOT_THRESHOLD", pairs.count())
+    base = scoring.score_pairs(pairs, sup, emb, tm).select(cols).collect()
+    monkeypatch.setattr(skew, "HOT_THRESHOLD", 20)
+    assert skew.hot_keys(pairs, "url_a").count() > 0  # the salted path runs
+    salted = scoring.score_pairs(pairs, sup, emb, tm).select(cols).collect()
+    assert sorted(base) == sorted(salted)

@@ -9,12 +9,15 @@ reference's hot-alias shape (el_process.py:40-43, SURVEY §4 hot-key
 row) made adversarial.
 
 Arms (one per invocation, so host-variance A/B protocol applies):
-  capped    production config: max_block_size=64 stop-key drop + auto
-            salting. Runtime must stay bounded and flat-ish per doc.
-  uncapped  max_block_size=10^9 (cap disabled): the hot keys reach the
-            self-join; auto salting with a low hot_threshold is the only
-            defense. Demonstrates the pair explosion the cap prevents —
-            run it at SMALL n_docs only.
+  capped    production config (module defaults): MAX_BLOCK_SIZE=64
+            stop-key drop + adaptive salting. Runtime must stay bounded
+            and flat-ish per doc.
+  uncapped  blocking.MAX_BLOCK_SIZE=10^9 (cap disabled): the hot keys
+            reach the self-join; salting at skew.HOT_THRESHOLD=2000 is
+            the only defense. Demonstrates the pair explosion the cap
+            prevents — run it at SMALL n_docs only.
+  uncapped_nosalt  the uncapped arm with HOT_THRESHOLD above every key
+            count, so no url is salted: salting isolated.
 
 Reported per arm: wall time, docs/sec, s4 candidate-pair count, block
 stats (top-5 block sizes, #blocks over 64, max KEPT block size), max
@@ -24,7 +27,7 @@ recall counts blocking misses; negatives = same-block pairs with
 differing truth) — the cap's recall cost is F1_capped vs F1_uncapped
 on the SAME corpus.
 
-Usage: python tools/skew_bench.py N_DOCS CORES {capped|uncapped}
+Usage: python tools/skew_bench.py N_DOCS CORES {capped|uncapped|uncapped_nosalt}
 Prints one JSON line.
 """
 
@@ -53,7 +56,7 @@ def main() -> None:
 
     from entity_linking_spark import schema as S
     from entity_linking_spark.metrics import pairwise_prf
-    from entity_linking_spark.operators import blocking
+    from entity_linking_spark.operators import blocking, skew
     from entity_linking_spark.pipeline import run_pipeline
     from entity_linking_spark.session import get_spark
     from entity_linking_spark.sources import io
@@ -76,19 +79,13 @@ def main() -> None:
 
     workdir = f"{base}/run_{arm}"
     shutil.rmtree(workdir, ignore_errors=True)
-    cfg = {
-        "capped": dict(max_block_size=CAP, salt_factor="auto"),
-        "uncapped": dict(
-            max_block_size=10**9, salt_factor="auto", salt_hot_threshold=2000
-        ),
-        # salting isolated: same blown-up pair table, no salt — the
-        # A/B partner for the uncapped arm
-        "uncapped_nosalt": dict(max_block_size=10**9, salt_factor=None),
-    }[arm]
+    if arm != "capped":
+        blocking.MAX_BLOCK_SIZE = 10**9
+        # uncapped_nosalt: same blown-up pair table, no salt — the A/B
+        # partner for the uncapped arm (no key reaches n_docs^2 pairs)
+        skew.HOT_THRESHOLD = 2000 if arm == "uncapped" else n_docs**2
     t0 = time.time()
-    clusters = run_pipeline(
-        spark, docs.drop("truth_entity"), aliases, workdir, **cfg
-    )
+    clusters = run_pipeline(spark, docs.drop("truth_entity"), aliases, workdir)
     n_out = clusters.count()
     elapsed = time.time() - t0
 
@@ -104,7 +101,7 @@ def main() -> None:
     )
     top5 = [r["n"] for r in sizes.orderBy(F.col("n").desc()).limit(5).collect()]
     n_over_cap = sizes.where(F.col("n") > CAP).count()
-    kept = sizes.where(F.col("n") <= cfg["max_block_size"])
+    kept = sizes.where(F.col("n") <= blocking.MAX_BLOCK_SIZE)
     max_kept = kept.agg(F.max("n")).collect()[0][0]
     # max rows in one reduce partition of the pair self-join's exchange
     # (hash-partition the KEPT key rows by key at the session's shuffle
@@ -113,7 +110,7 @@ def main() -> None:
     # list (at 10M docs the kept-key set is ~10^8 rows / 12 GiB — the
     # broadcast of it killed this stats pass; the stop list is <=
     # rows/cap keys)
-    stop_keys = sizes.where(F.col("n") > cfg["max_block_size"]).select("k")
+    stop_keys = sizes.where(F.col("n") > blocking.MAX_BLOCK_SIZE).select("k")
     kept_rows = keys.select(F.xxhash64("key").alias("k"), "url").join(
         F.broadcast(stop_keys), "k", "left_anti"
     )
