@@ -26,7 +26,7 @@ paraphrase-grade duplication the token-level gates can't see).
 Every stage is the same code path its gate row / pytest suite pins, so
 the composition needs no oracle of its own; `tests/test_curation.py`
 verifies stage-by-stage row accounting on planted fixtures and
-`tools/curation_bench.py` prices the whole chain at corpus scale.
+`tools/scale_bench.py curation` prices the whole chain at corpus scale.
 
 Scale shape: stages 2/3/8 are pure-Column scans (no exchange); every
 removal gate (1/4/5/6) computes its VICTIM ids on a narrow branch —
@@ -44,7 +44,7 @@ persists the corpus ONCE (before the first multi-consumer gate) so the
 victim branches and probe sides replay cached rows, never the upstream
 chain — release it with ``spark.catalog.clearCache()`` (the persist is
 mid-plan, not the returned frame) when done. Measured on the round-5
-semi-join formulation (tools/curation_bench.py, 1M docs x 32 cores):
+semi-join formulation (tools/scale_bench.py curation, 1M docs x 32 cores):
 lazy 117.8 s vs with_stats 72.9 s — the stats pass was FASTER because
 its persists stopped the dedup gates recomputing the chain; the single
 lazy persist + victim anti-joins close that gap (see

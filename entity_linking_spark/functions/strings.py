@@ -11,11 +11,6 @@ row-at-a-time serialization.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, IntegerType
-
 
 def levenshtein(a: str, b: str) -> int:
     """Classic two-row DP edit distance."""
@@ -80,18 +75,6 @@ def jaro_winkler(a: str, b: str, p: float = 0.1, max_prefix: int = 4) -> float:
             break
         prefix += 1
     return j + prefix * p * (1.0 - j)
-
-
-@pandas_udf(DoubleType())
-def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series(
-        [jaro_winkler(x or "", y or "") for x, y in zip(a, b)], dtype=np.float64
-    )
-
-
-@pandas_udf(IntegerType())
-def levenshtein_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([levenshtein(x or "", y or "") for x, y in zip(a, b)], dtype=np.int32)
 
 
 def levenshtein_sim(a: str, b: str) -> float:

@@ -14,7 +14,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import LongType
 
 STOPWORDS_EN = (
     "the a an and or of to in on at is are was were be been with for as by "
@@ -138,11 +138,6 @@ def split_sentences(text: str) -> list[str]:
 def first_sentences(text: str, n: int = 10) -> list[str]:
     """First n sentences — the sent_desc_1..10 column source (F15)."""
     return split_sentences(text)[:n]
-
-
-@pandas_udf(ArrayType(StringType()))
-def split_sentences_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: split_sentences(t) if t is not None else None)
 
 
 _WINDOW = 8

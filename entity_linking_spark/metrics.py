@@ -44,17 +44,29 @@ def pairwise_prf(clusters: DataFrame, labeled_pairs: DataFrame) -> dict[str, flo
             "n_pairs": int(agg["n"])}
 
 
-def clusters_agree(
-    predicted: DataFrame, expected: DataFrame
-) -> dict[str, float]:
-    """Exact cluster-assignment agreement (ids are both min-url canonical)."""
-    j = predicted.alias("p").join(
-        expected.alias("e"), F.col("p.url") == F.col("e.url"), "full"
+def truth_labeled_pairs(truth: DataFrame, candidate_pairs: DataFrame) -> DataFrame:
+    """(url_a, url_b, is_match) pairs labeled by a (url, truth_entity) table.
+
+    Positives are every same-truth pair with url_a < url_b, including
+    pairs blocking missed, so recall is measured against ground truth.
+    Negatives are the candidate (url_a, url_b) pairs whose truth entities
+    differ: same-block non-matches the scorer must reject. Urls with a
+    NULL truth entity are in neither.
+    """
+    truth = truth.where(F.col("truth_entity").isNotNull())
+    ta = truth.select(F.col("url").alias("url_a"), F.col("truth_entity").alias("t_a"))
+    tb = truth.select(F.col("url").alias("url_b"), F.col("truth_entity").alias("t_b"))
+    # entity groups are small, so the self-join output is
+    # O(n * docs_per_entity), not O(n^2)
+    pos = (
+        ta.join(tb.hint("shuffle_hash"), ta.t_a == tb.t_b)
+        .where(F.col("url_a") < F.col("url_b"))
+        .select("url_a", "url_b", F.lit(True).alias("is_match"))
     )
-    agg = j.agg(
-        F.sum(
-            (F.col("p.cluster_id") == F.col("e.cluster_id")).cast("long")
-        ).alias("same"),
-        F.count("*").alias("n"),
-    ).collect()[0]
-    return {"agree": int(agg["same"] or 0), "n": int(agg["n"])}
+    neg = (
+        candidate_pairs.join(ta, "url_a")
+        .join(tb.hint("shuffle_hash"), "url_b")
+        .where(F.col("t_a") != F.col("t_b"))
+        .select("url_a", "url_b", F.lit(False).alias("is_match"))
+    )
+    return pos.unionByName(neg)

@@ -31,7 +31,7 @@ across both multipliers and all three window sizes) plus a few small
 numpy sorts. Embarrassingly parallel: one narrow scan of (id, text),
 no exchange, no hot keys, per-doc cost O(G log G) bounded by the
 longest document, never by the corpus. Two slower formulations were
-measured and rejected on the way here (tools/quality_bench.py, 200k
+measured and rejected on the way here (tools/scale_bench.py quality, 200k
 docs x 32 cores): the round-5 first cut shuffled ~460 (id, gram) rows
 per doc through two partial-agg exchanges per n (5,046 docs/s); a
 shuffle-free rewrite as JVM higher-order-function expressions (sorted

@@ -145,7 +145,7 @@ def test_perplexity_orders_natural_text_below_gibberish(spark):
 
 
 def test_all_oov_doc_scores_artificially_well(spark):
-    """Pins the vocab-pruned-LM pathology surfaced by tools/lm_bench.py's
+    """Pins the vocab-pruned-LM pathology surfaced by tools/scale_bench.py lm's
     first corpus draft: a doc whose EVERY token is OOV folds to a pure
     <unk> run, and because (unk, unk) is then one of the model's
     highest-count bigrams the doc scores LOWER perplexity than in-vocab

@@ -9,7 +9,7 @@ import shutil
 import pytest
 
 from entity_linking_spark import schema as S
-from entity_linking_spark.metrics import pairwise_prf
+from entity_linking_spark.metrics import pairwise_prf, truth_labeled_pairs
 from entity_linking_spark.pipeline import run_pipeline
 from entity_linking_spark.sources import io
 
@@ -41,6 +41,27 @@ def test_end_to_end_f1(spark, fixtures, workdir):
     assert prf["f1"] >= 0.99, prf  # BASELINE.json acceptance metric
     assert prf["precision"] >= 0.99, prf
     assert prf["recall"] >= 0.99, prf
+
+
+def test_truth_labeled_pairs(spark):
+    """Positives are exactly the same-truth pairs (url_a < url_b, blocked
+    or not); negatives only the candidate pairs with differing truth;
+    urls with a NULL truth entity are in neither."""
+    truth = spark.createDataFrame(
+        [("u1", "A"), ("u2", "A"), ("u3", "A"), ("u4", "B"), ("u5", "B"),
+         ("u6", "C"), ("u7", None), ("u8", None)],
+        "url string, truth_entity string",
+    )
+    candidates = spark.createDataFrame(
+        [("u1", "u2"), ("u1", "u4"), ("u4", "u5"), ("u5", "u6"),
+         ("u6", "u7"), ("u7", "u8"), ("u2", "u8")],
+        "url_a string, url_b string",
+    )
+    got = sorted(truth_labeled_pairs(truth, candidates).collect())
+    assert got == [
+        ("u1", "u2", True), ("u1", "u3", True), ("u1", "u4", False),
+        ("u2", "u3", True), ("u4", "u5", True), ("u5", "u6", False),
+    ]
 
 
 def test_stage_metadata_lineage(workdir):

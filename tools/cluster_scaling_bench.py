@@ -18,9 +18,10 @@ adding real executors does.
   el        ``python -m entity_linking_spark.pipeline`` over synthetic
             documents + KB aliases (default);
   curation  ``python -m entity_linking_spark.curation --stats`` over the
-            forged corpus of tools/curation_bench.py (same plants, same
-            derivable attrition; --stats because the stage-boundary
-            persist is the documented fast mode at >= 1M docs).
+            forged corpus of ``tools/scale_bench.py curation`` (same
+            plants, same derivable attrition; --stats because the
+            stage-boundary persist is the documented fast mode at >= 1M
+            docs).
 
 Usage: python tools/cluster_scaling_bench.py [n_docs] [n_workers] [reps]
        [base_workers] [--job {el,curation}]
@@ -68,15 +69,13 @@ def prep_input(n_docs: int, base: str) -> tuple[str, str]:
 
 def prep_curation(n_docs: int, base: str) -> tuple[str, str]:
     """The forged curation corpus + decontamination benchmark (reused)."""
-    sys.path.insert(0, REPO)
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    from curation_bench import forge_corpus
+    from scale_bench import forge_curation
 
     from entity_linking_spark.session import get_spark
 
     if not os.path.exists(f"{base}/docs"):
         spark = get_spark("curation-forge", cores=16)
-        forge_corpus(spark, n_docs, base)
+        forge_curation(spark, n_docs, base)
         spark.stop()
     return f"{base}/docs", f"{base}/bench"
 

@@ -32,10 +32,8 @@ def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     cores = int(sys.argv[2]) if len(sys.argv) > 2 else 16
 
-    from pyspark.sql import functions as F
-
     from entity_linking_spark import schema as S
-    from entity_linking_spark.metrics import pairwise_prf
+    from entity_linking_spark.metrics import pairwise_prf, truth_labeled_pairs
     from entity_linking_spark.pipeline import run_pipeline
     from entity_linking_spark.session import get_spark
     from entity_linking_spark.sources import io
@@ -57,28 +55,8 @@ def main() -> None:
         spark, docs.drop("truth_entity"), aliases, f"{workdir}/stages"
     )
 
-    truth = docs.where(F.col("truth_entity").isNotNull()).select(
-        "url", "truth_entity"
-    )
-    ta = truth.select(F.col("url").alias("url_a"), F.col("truth_entity").alias("t_a"))
-    tb = truth.select(F.col("url").alias("url_b"), F.col("truth_entity").alias("t_b"))
-    # positives: all same-entity pairs (entity groups are small, so the
-    # self-join output is O(n * docs_per_entity), not O(n^2))
-    pos = (
-        ta.join(tb.hint("shuffle_hash"), ta.t_a == tb.t_b)
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b", F.lit(True).alias("is_match"))
-    )
-    # negatives: the pipeline's own same-block candidate pairs with
-    # differing truth (the scorer saw these and must have rejected them)
     pairs = io.read_stage(spark, f"{workdir}/stages", "s4_pairs")
-    neg = (
-        pairs.join(ta, "url_a")
-        .join(tb.hint("shuffle_hash"), "url_b")
-        .where(F.col("t_a") != F.col("t_b"))
-        .select("url_a", "url_b", F.lit(False).alias("is_match"))
-    )
-    labeled = pos.unionByName(neg)
+    labeled = truth_labeled_pairs(docs, pairs)
     prf = pairwise_prf(clusters, labeled)
     out = {"n_docs": n_docs, "n_entities": n_entities, "cores": cores}
     out.update(

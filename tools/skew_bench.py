@@ -55,7 +55,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from entity_linking_spark import schema as S
-    from entity_linking_spark.metrics import pairwise_prf
+    from entity_linking_spark.metrics import pairwise_prf, truth_labeled_pairs
     from entity_linking_spark.operators import blocking, skew
     from entity_linking_spark.pipeline import run_pipeline
     from entity_linking_spark.session import get_spark
@@ -123,25 +123,9 @@ def main() -> None:
 
     n_pairs = io.stage_meta(workdir, "s4_pairs")["rows"]
 
-    # --- pairwise F1 vs planted truth (scale_f1_check's construction) ---
-    truth = docs.where(F.col("truth_entity").isNotNull()).select(
-        "url", "truth_entity"
-    )
-    ta = truth.select(F.col("url").alias("url_a"), F.col("truth_entity").alias("t_a"))
-    tb = truth.select(F.col("url").alias("url_b"), F.col("truth_entity").alias("t_b"))
-    pos = (
-        ta.join(tb.hint("shuffle_hash"), ta.t_a == tb.t_b)
-        .where(F.col("url_a") < F.col("url_b"))
-        .select("url_a", "url_b", F.lit(True).alias("is_match"))
-    )
+    # --- pairwise F1 vs planted truth ---
     pairs = io.read_stage(spark, workdir, "s4_pairs")
-    neg = (
-        pairs.join(ta, "url_a")
-        .join(tb.hint("shuffle_hash"), "url_b")
-        .where(F.col("t_a") != F.col("t_b"))
-        .select("url_a", "url_b", F.lit(False).alias("is_match"))
-    )
-    prf = pairwise_prf(clusters, pos.unionByName(neg))
+    prf = pairwise_prf(clusters, truth_labeled_pairs(docs, pairs))
 
     out = {
         "arm": arm,
