@@ -58,9 +58,6 @@ def make_bucket_udf(n_planes: int = N_PLANES):
     return bucket_udf
 
 
-hyperplane_bucket_udf = make_bucket_udf(N_PLANES)
-
-
 def make_multiprobe_udf(n_planes: int = N_PLANES):
     """Factory: bucket + its n_planes single-bit-flip neighbors
     (multi-probe LSH: recovers neighbors that fall just across one
@@ -79,9 +76,6 @@ def make_multiprobe_udf(n_planes: int = N_PLANES):
         return pd.Series(list(out))
 
     return multiprobe_udf
-
-
-hyperplane_multiprobe_udf = make_multiprobe_udf(N_PLANES)
 
 
 def brute_force_topk(

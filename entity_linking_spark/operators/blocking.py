@@ -18,9 +18,11 @@ Skew handling (the reference has none — SURVEY §4 "hot-key behavior"):
     dropped entirely (stop-key removal: a key shared by thousands of docs
     carries no linkage information, exactly like the reference's
     stop-word filter el_main.py:534-537);
-  - pair generation within a block is a salted self-join: blocks are
-    first capped, so the join's per-key fan-out is bounded by
-    max_block_size², and AQE skew-join splitting handles residual skew.
+  - pair generation within a block is one equi self-join on the
+    xxhash64 of the key, after a broadcast anti-join has removed the
+    over-cap keys map-side: no kept block has more than max_block_size
+    members, so the join's per-key fan-out is bounded by
+    max_block_size² (``candidate_pairs``).
 
 One alias dictionary: ``AliasDictionary`` is the only code that
 normalizes the KB alias table, sizes it and routes it to the trie or the
@@ -615,8 +617,6 @@ def candidate_pairs(
     keys: DataFrame,
     max_block_size: int = MAX_BLOCK_SIZE,
     cache_keys: bool = True,
-    overflow: str = "drop",
-    split_max: int = 4096,
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """Within-block pair generation with stop-key removal.
@@ -626,20 +626,6 @@ def candidate_pairs(
     is an equi join on the key; with capped blocks the per-key output is
     bounded, and the final distinct dedups pairs that co-occur under
     several keys.
-
-    ``overflow`` (SURVEY §4 "per-block limit + overflow re-block"):
-      "drop"  (default) — over-cap blocks are removed entirely; right
-              when multi-key blocking gives every pair other chances
-              (measured F1 1.0 with drop on the skewed corpora).
-      "split" — blocks with cap < size <= ``split_max`` are RE-BLOCKED
-              instead: each member gets a deterministic sub-block salt
-              in [0, ceil(size/cap)) from xxhash64(url), and pairs form
-              within sub-blocks only. Per-key output falls from size^2
-              to ~size*cap (a 1/nsub deterministic sample of the
-              clique — the standard bounded-recall trade when a
-              mid-size block IS discriminative and dropping it would
-              lose pairs). Blocks past ``split_max`` are still dropped:
-              at that size a key carries no linkage information.
 
     ``cache_keys``: the stop-list aggregation and the anti-join/self-join
     branches each rescan the ``keys`` subtree (measured: 2x execution of
@@ -680,11 +666,6 @@ def candidate_pairs(
     # collision would merge two unrelated blocks — blocking is a
     # candidate generator, so the extra pairs are filtered by exact
     # scoring downstream, same as any other block co-occurrence.
-    if overflow not in ("drop", "split"):
-        # a typo must not silently select the drop branch — the recall
-        # loss of dropping mid-size blocks the caller asked to re-block
-        # would be invisible in a well-formed output
-        raise ValueError(f"overflow must be 'drop' or 'split', got {overflow!r}")
     hashed = keys.select(F.xxhash64("key").alias("key"), "url")
     if cache_keys:
         from pyspark import StorageLevel
@@ -692,41 +673,17 @@ def candidate_pairs(
         hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
         if cache_registry is not None:
             cache_registry.append(hashed)
-    over = (
+    stop = (
         hashed.groupBy("key")
         .agg(F.count("*").alias("block_size"))
         .where(F.col("block_size") > max_block_size)
+        .select("key")
     )
-    if overflow == "split":
-        # mega keys (> split_max) still go; mid-size over-cap keys are
-        # re-blocked. Both sets are tiny by construction (<= rows/cap
-        # keys total), so they ride the same broadcast each.
-        stop = over.where(F.col("block_size") > split_max).select("key")
-        split = over.where(F.col("block_size") <= split_max).select(
-            "key",
-            F.ceil(F.col("block_size") / max_block_size).cast("int").alias("_nsub"),
-        )
-        kept = (
-            hashed.join(F.broadcast(stop), "key", "left_anti")
-            .join(F.broadcast(split), "key", "left")
-            .withColumn(
-                "_sub",
-                F.when(
-                    F.col("_nsub").isNotNull(),
-                    F.pmod(F.xxhash64("url"), F.col("_nsub")).cast("int"),
-                ).otherwise(F.lit(0)),
-            )
-            .drop("_nsub")
-        )
-        join_keys = ["key", "_sub"]
-    else:
-        stop = over.select("key")
-        kept = hashed.join(F.broadcast(stop), "key", "left_anti")
-        join_keys = ["key"]
-    a = kept.select(*join_keys, F.col("url").alias("url_a"))
-    b = kept.select(*join_keys, F.col("url").alias("url_b"))
+    kept = hashed.join(F.broadcast(stop), "key", "left_anti")
+    a = kept.select("key", F.col("url").alias("url_a"))
+    b = kept.select("key", F.col("url").alias("url_b"))
     return (
-        a.join(b.hint("shuffle_hash"), join_keys)
+        a.join(b.hint("shuffle_hash"), "key")
         .where(F.col("url_a") < F.col("url_b"))
         .select("url_a", "url_b")
         .distinct()

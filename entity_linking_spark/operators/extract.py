@@ -84,6 +84,23 @@ def with_extracted_text(
     return df.mapInPandas(run, schema=out_schema)
 
 
+def _featurize(texts: list) -> dict[str, list]:
+    """tokens, MinHash bands and hash-embedding of one batch of texts,
+    computed while the tokens are in Python memory (shared body of the
+    two fused featurizers below)."""
+    from entity_linking_spark.functions.minhash import (
+        bands_from_signatures,
+        minhash_signatures_batch,
+    )
+    from entity_linking_spark.functions.normalize import tokenize_batch
+    from entity_linking_spark.functions.vectors import hash_embed_matrix
+
+    token_lists = tokenize_batch(texts)
+    bands = bands_from_signatures(minhash_signatures_batch(token_lists))
+    emb = hash_embed_matrix([t or [] for t in token_lists])
+    return {"tokens": token_lists, "bands": bands, "vec": list(emb)}
+
+
 def extract_and_tokenize(
     df: DataFrame,
     html_col: str = "html",
@@ -102,13 +119,6 @@ def extract_and_tokenize(
     for the Python segment of the plan. Downstream stages (blocking keys,
     scoring) then run entirely JVM-side on the precomputed columns.
     """
-    from entity_linking_spark.functions.minhash import (
-        bands_from_signatures,
-        minhash_signatures_batch,
-    )
-    from entity_linking_spark.functions.normalize import tokenize_batch
-    from entity_linking_spark.functions.vectors import hash_embed_matrix
-
     fields = [f for f in df.schema.fields if f.name in keep]
     out_schema = StructType(
         fields
@@ -124,16 +134,7 @@ def extract_and_tokenize(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             texts = pdf[html_col].map(extract_text)
-            token_lists = tokenize_batch(list(texts))
-            sigs = minhash_signatures_batch(token_lists)
-            bands = bands_from_signatures(sigs)
-            emb = hash_embed_matrix([t or [] for t in token_lists])
-            out = pdf[keep_cols].copy()
-            out["text"] = texts
-            out["tokens"] = token_lists
-            out["bands"] = bands
-            out["vec"] = list(emb)
-            yield out
+            yield pdf[keep_cols].assign(text=texts, **_featurize(list(texts)))
 
     return df.select(*keep_cols, html_col).mapInPandas(run, schema=out_schema)
 
@@ -145,10 +146,6 @@ def tokenize_and_featurize(
     text (the no-html sibling of extract_and_tokenize — same rationale:
     tokens cross JVM<->Python once, every per-doc feature is computed while
     they're in Python memory)."""
-    from entity_linking_spark.functions.minhash import bands_from_signatures, minhash_signatures_batch
-    from entity_linking_spark.functions.normalize import tokenize_batch
-    from entity_linking_spark.functions.vectors import hash_embed_matrix
-
     out_schema = StructType(
         [
             StructField(id_col, StringType(), True),
@@ -160,17 +157,6 @@ def tokenize_and_featurize(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            token_lists = tokenize_batch(list(pdf[text_col]))
-            sigs = minhash_signatures_batch(token_lists)
-            bands = bands_from_signatures(sigs)
-            emb = hash_embed_matrix([t or [] for t in token_lists])
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "tokens": token_lists,
-                    "bands": bands,
-                    "vec": list(emb),
-                }
-            )
+            yield pd.DataFrame({id_col: pdf[id_col], **_featurize(list(pdf[text_col]))})
 
     return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)

@@ -349,7 +349,6 @@ def perplexity_buckets(
     middle_frac: float = 1.0 / 3.0,
     text_col: str = "text",
     id_col: str = "doc_id",
-    n_partitions: int | None = None,
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """(id, n_toks, ppl, bucket): CCNet's actual gate shape — rank every
@@ -361,66 +360,36 @@ def perplexity_buckets(
 
     Scale design: a naive percent_rank() over a global ORDER BY ppl
     window pulls the whole corpus into ONE task — the classic
-    scale-killer. This is instead the package's two-pass exact global
-    rank (the pack_sequences prefix-sum shape): range-partition the
-    narrow (id, n_toks, ppl) projection by (ppl, id), bring ONE count
-    row per partition to the driver, broadcast the prefix offsets, and
-    add each partition's local row_number — every partition ranks
-    independently, nothing wide ever reaches one task, and document
-    text never enters the exchange.
+    scale-killer. The rank is instead ``runtime.global_offsets`` (the
+    package's one two-pass prefix sum, shared with pack_sequences) with
+    weight 1 over the narrow (id, n_toks, ppl) projection: rank = the
+    count of documents before it in (ppl, id) order + 1. Nothing wide
+    ever reaches one task, and document text never enters the exchange.
 
-    The scored projection is persisted BEFORE the range partitioning:
-    the range partitioner's sampling pass would otherwise re-run the
-    whole scoring plan (explode + broadcast probes over the corpus)
-    once more per action — with the cache, scoring executes exactly
-    once per call. ``cache_registry``: when given, both pinned
-    projections are appended so the caller can release them after its
-    action (otherwise release is left to the ContextCleaner, as
-    before)."""
+    The scored projection is persisted: the prefix sum's two driver
+    jobs and the output plan would otherwise each re-run the whole
+    scoring plan (explode + broadcast probes over the corpus).
+    ``cache_registry``: when given, the pinned projection is appended
+    so the caller can release it after its action; a released or
+    dropped cache changes no bucket."""
     if not (0.0 <= head_frac and 0.0 <= middle_frac
             and head_frac + middle_frac <= 1.0):
         raise ValueError(
             f"head_frac/middle_frac must be >= 0 and sum <= 1, got "
             f"{head_frac!r}/{middle_frac!r}"
         )
-    from pyspark.sql.window import Window
-
     scored = perplexity(docs, lm, text_col, id_col).persist()
     if cache_registry is not None:
         cache_registry.append(scored)
-    if n_partitions is not None:
-        narrow = scored.repartitionByRange(n_partitions, "ppl", id_col)
-    else:
-        narrow = scored.repartitionByRange("ppl", id_col)
-    narrow = narrow.withColumn("_pid", F.spark_partition_id()).persist()
-    if cache_registry is not None:
-        cache_registry.append(narrow)
-    # driver-bounded: ONE row per partition (the prefix-sum counts)
-    counts = {
-        r._pid: r.c
-        for r in narrow.groupBy("_pid").agg(F.count("*").alias("c")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    cut1, cut2 = int(acc * head_frac), int(acc * (head_frac + middle_frac))
-    spark = docs.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "_pid int, _poff long")
-    )
-    w = Window.partitionBy("_pid").orderBy("ppl", id_col)
-    rank = F.row_number().over(w) + F.col("_poff")
+    ranked, n_docs = runtime.global_offsets(scored, ["ppl", id_col], F.lit(1))
+    cut1, cut2 = int(n_docs * head_frac), int(n_docs * (head_frac + middle_frac))
+    rank = F.col("_off") + 1
     bucket = (
         F.when(rank <= cut1, "head")
         .when(rank <= cut2, "middle")
         .otherwise("tail")
     )
-    return (
-        narrow.join(off_df, "_pid")
-        .withColumn("bucket", bucket)
-        .drop("_pid", "_poff")
-    )
+    return ranked.withColumn("bucket", bucket).drop("_off")
 
 
 def perplexity_filter(

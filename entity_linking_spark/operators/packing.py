@@ -17,17 +17,10 @@ stance for the weighting step that precedes this one).
 
 Scale shape — the global prefix sum is the whole problem, and a naive
 ``Window.orderBy(...)`` with no partition key would funnel 100 TB
-through ONE task. Instead the classic two-pass decomposition:
-
-1. range-repartition the NARROW (okey, id, n_toks) projection by the
-   hash order (the order WITHIN a partition is established later by
-   the window's own sort — sorting twice would be waste);
-2. per-partition token subtotals (one tiny row per partition) come to
-   the driver — bounded by the partition count, never by corpus size —
-   and turn into per-partition starting offsets;
-3. each partition computes its local running sum under a PARTITIONED
-   window and adds its broadcast offset: every document now knows its
-   absolute [start, start + n_toks) token span.
+through ONE task. ``runtime.global_offsets`` is the package's one
+two-pass prefix sum: over the NARROW (okey, id, n_toks) projection it
+gives every document its absolute [start, start + n_toks) token span,
+with only one row per bucket on the driver.
 
 Mapping spans to sequences is then pure whole-stage-codegen column
 arithmetic (floor-divide + one bounded explode over the sequences a
@@ -42,6 +35,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from entity_linking_spark import runtime
+
 
 def pack_sequences(
     df: DataFrame,
@@ -50,7 +45,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     seed: int = 42,
     drop_incomplete_last: bool = True,
-    n_partitions: int | None = None,
 ) -> DataFrame:
     """Pack the corpus into consecutive ``seq_len``-token sequences.
 
@@ -72,19 +66,17 @@ def pack_sequences(
     ``seq_len`` tokens; ``drop_incomplete_last=True`` (the published
     convention) drops the final ragged sequence, ``False`` keeps it.
 
-    Exchanges: one narrow range-exchange (the parallel sort), one
-    narrow hash-exchange for the per-partition window, one broadcast of
-    the per-partition offsets. The only driver-side data is one row per
-    partition (the prefix-sum subtotals). Null-text rows are dropped
+    Exchanges: one narrow hash-exchange on the prefix-sum bucket id
+    (the window's); the per-bucket offsets ride the plan as literals.
+    The only driver-side data is one row per bucket, at most
+    ``spark.sql.shuffle.partitions`` of them. Null-text rows are dropped
     (they carry no tokens); an empty string is one empty token,
-    matching ``split('', ' ')``. The narrow projection is persisted
-    (it is consumed by both the subtotal job and the output plan) and
-    left to the ContextCleaner — it is 3 columns, never the text.
+    matching ``split('', ' ')``. The narrow projection (3 columns, never
+    the text) is persisted because the prefix sum's two driver jobs and
+    the output plan all read it; a dropped cache changes no answer.
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
-    from pyspark.sql.window import Window
-
     narrow = (
         df.where(F.col(text_col).isNotNull())
         .select(
@@ -96,44 +88,14 @@ def pack_sequences(
                 + 1
             ).cast("long").alias("_nt"),
         )
+        .persist()
     )
-    if n_partitions is not None:
-        narrow = narrow.repartitionByRange(n_partitions, "_okey", "_id")
-    else:
-        narrow = narrow.repartitionByRange("_okey", "_id")
-    # no sortWithinPartitions here: nothing consumes intra-partition
-    # order before the window, whose own (_pid, _okey, _id) sort after
-    # the pid exchange establishes it — an eager sort into the cache
-    # would be a wasted O(n log n) pass over the whole projection
-    narrow = narrow.withColumn("_pid", F.spark_partition_id()).persist()
-    # driver-bounded: ONE row per partition (the prefix-sum subtotals)
-    psums = {
-        r._pid: r.s
-        for r in narrow.groupBy("_pid").agg(F.sum("_nt").alias("s")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in sorted(psums):
-        offsets.append((pid, acc))
-        acc += psums[pid]
-    total_tokens = acc
+    spans, total_tokens = runtime.global_offsets(narrow, ["_okey", "_id"], F.col("_nt"))
+    spans = spans.withColumnRenamed("_off", "_start")
     n_seqs = (
         total_tokens // seq_len
         if drop_incomplete_last
         else -(-total_tokens // seq_len)
-    )
-    # broadcast-joined (never a CASE chain: thousands of partitions
-    # would blow the codegen expression tree)
-    spark = df.sparkSession
-    off_df = F.broadcast(
-        spark.createDataFrame(offsets or [(0, 0)], "_pid int, _poff long")
-    )
-    w = Window.partitionBy("_pid").orderBy("_okey", "_id")
-    local = F.coalesce(
-        F.sum("_nt").over(w.rowsBetween(Window.unboundedPreceding, -1)),
-        F.lit(0),
-    )
-    spans = narrow.join(off_df, "_pid").withColumn(
-        "_start", local + F.col("_poff")
     )
     # integer `div`, never floor(double/): token offsets are exact longs
     # and double division would silently round above 2^53 total tokens

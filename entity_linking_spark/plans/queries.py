@@ -1445,9 +1445,12 @@ def lm_perplexity(spark, sf_dir):
     engines floor identical doubles; ties broken on (ppl, doc_id)).
     Report (doc_id, n_toks, ppl, bucket). The scoring plan broadcasts
     the bounded model tables; the bucket rank is the two-pass
-    prefix-sum global rank (never a one-task global window — the
-    oracle's row_number() OVER (ORDER BY ...) is exactly the plan
-    shape the Spark side is built to avoid)."""
+    prefix-sum global rank of ``runtime.global_offsets`` (never a
+    one-task global window — the oracle's row_number() OVER
+    (ORDER BY ...) is exactly the plan shape the Spark side is built to
+    avoid). Building the next query releases the pinned scores, maybe
+    before this query's action runs; the rank's offsets are keyed on
+    data, so that changes no bucket."""
     from entity_linking_spark.operators.lm import (
         perplexity_buckets,
         train_bigram_lm,

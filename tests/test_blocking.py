@@ -330,42 +330,3 @@ def test_p2_malformed_url_drops_from_host_keys_only(spark):
     mh_keys = {r.url for r in keys if r.key.startswith("mh:")}
     assert host_keys == {"https://ok.example.org/p/1"}
     assert mh_keys == {"https://ok.example.org/p/1", "http://bad url with spaces"}
-
-
-def test_candidate_pairs_overflow_split(spark):
-    """overflow='split': a mid-size over-cap block is re-blocked into
-    deterministic sub-blocks (bounded per-key pair output, partial
-    recall) instead of dropped; mega blocks past split_max still drop;
-    under-cap blocks are untouched; default 'drop' behavior unchanged."""
-    from pyspark.sql import Row
-
-    rows = (
-        [Row(url=f"m{i:03d}", key="mid") for i in range(12)]      # over cap
-        + [Row(url=f"g{i:04d}", key="mega") for i in range(300)]  # over split_max
-        + [Row(url=f"s{i}", key="small") for i in range(3)]       # under cap
-    )
-    keys = spark.createDataFrame(rows)
-    cap, smax = 4, 100
-
-    dropped = blocking.candidate_pairs(keys, max_block_size=cap, cache_keys=False)
-    got_drop = {(r.url_a, r.url_b) for r in dropped.collect()}
-    assert got_drop == {("s0", "s1"), ("s0", "s2"), ("s1", "s2")}
-
-    split = blocking.candidate_pairs(
-        keys, max_block_size=cap, cache_keys=False, overflow="split", split_max=smax
-    )
-    got_split = {(r.url_a, r.url_b) for r in split.collect()}
-    # small block intact; mega block gone; mid block contributes SOME
-    # pairs (sub-clique sample), strictly fewer than the full clique
-    assert {("s0", "s1"), ("s0", "s2"), ("s1", "s2")} <= got_split
-    assert not any(u.startswith("g") for u, _ in got_split)
-    mid_pairs = {p for p in got_split if p[0].startswith("m")}
-    assert 0 < len(mid_pairs) < 12 * 11 // 2
-    # deterministic across invocations
-    again = {
-        (r.url_a, r.url_b)
-        for r in blocking.candidate_pairs(
-            keys, max_block_size=cap, cache_keys=False, overflow="split", split_max=smax
-        ).collect()
-    }
-    assert again == got_split

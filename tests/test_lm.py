@@ -278,7 +278,12 @@ def test_buckets_deterministic_across_partitionings(spark):
     b = spark.createDataFrame(rows, "doc_id long, text string").repartition(9)
     lm = train_bigram_lm(a, vocab_size=10, bigram_size=30)
     ra = sorted(map(tuple, perplexity_buckets(a, lm).collect()))
-    rb = sorted(map(tuple, perplexity_buckets(b, lm, n_partitions=5).collect()))
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try:
+        rb = sorted(map(tuple, perplexity_buckets(b, lm).collect()))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert ra == rb
 
 
@@ -294,18 +299,46 @@ def test_buckets_frac_validation(spark):
 
 def test_buckets_no_single_task_global_window(spark):
     """Scale contract: the bucket rank must never be a one-partition
-    global window — the plan's window sort is partitioned by _pid
-    (plus the range exchange), not Window.orderBy over everything."""
+    global window — the plan's window sort is partitioned by the bucket
+    column, not Window.orderBy over everything."""
     from entity_linking_spark.operators.lm import perplexity_buckets
 
     rows = [(i, f"a b c{i}") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     lm = train_bigram_lm(df, vocab_size=8, bigram_size=16)
     plan = (
-        perplexity_buckets(df, lm, n_partitions=4)
+        perplexity_buckets(df, lm)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # a global window would show 'Window [... windowspecdefinition(...)'
-    # with no partitionBy column; ours partitions by _pid
-    assert "_pid" in plan
+    # with no partitionBy column; ours partitions by the bucket column
+    assert "windowspecdefinition(_bkt#" in plan
     assert "SinglePartition" not in plan.split("Window")[1][:400]
+
+
+def _bucket_corpus(spark, n=200):
+    rng = random.Random(5)
+    words = [f"w{i}" for i in range(15)]
+    rows = [(i, " ".join(rng.choices(words, k=10))) for i in range(n)]
+    df = spark.createDataFrame(rows, "doc_id long, text string").repartition(4)
+    return df, train_bigram_lm(df, vocab_size=10, bigram_size=30)
+
+
+def test_buckets_survive_a_cleared_cache(spark):
+    """Dropping every cache between build and action must not change
+    the buckets: their offsets are keyed on data, not on a partition id."""
+    from entity_linking_spark.operators.lm import perplexity_buckets
+
+    df, lm = _bucket_corpus(spark)
+    want = sorted(map(tuple, perplexity_buckets(df, lm).collect()))
+    built = perplexity_buckets(df, lm)
+    spark.catalog.clearCache()
+    assert sorted(map(tuple, built.collect())) == want
+
+
+def test_buckets_plan_reads_no_partition_id(spark):
+    from entity_linking_spark.operators.lm import perplexity_buckets
+
+    df, lm = _bucket_corpus(spark, n=30)
+    plan = perplexity_buckets(df, lm)._jdf.queryExecution().analyzed().toString()
+    assert "SPARK_PARTITION_ID" not in plan

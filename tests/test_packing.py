@@ -90,8 +90,30 @@ def test_packing_deterministic_across_partitionings(spark):
     df = _mk(spark, docs)
     a = {tuple(r) for r in pack_sequences(df, 32).collect()}
     b = {tuple(r) for r in pack_sequences(df.repartition(7), 32).collect()}
-    c = {tuple(r) for r in pack_sequences(df.coalesce(1), 32, n_partitions=3).collect()}
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "3")
+    try:
+        c = {tuple(r) for r in pack_sequences(df.coalesce(1), 32).collect()}
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert a == b == c
+
+
+def test_packing_survives_a_cleared_cache(spark):
+    """Dropping every cache between build and action must not change
+    the packing: token offsets are keyed on data, not on a partition id."""
+    docs = [(i, " ".join(f"x{j}" for j in range(1 + i % 23))) for i in range(300)]
+    df = _mk(spark, docs).repartition(4)
+    want = sorted(map(tuple, pack_sequences(df, 32).collect()))
+    built = pack_sequences(df, 32)
+    spark.catalog.clearCache()
+    assert sorted(map(tuple, built.collect())) == want
+
+
+def test_packing_plan_reads_no_partition_id(spark):
+    df = _mk(spark, [(i, "a b c") for i in range(10)])
+    plan = pack_sequences(df, 4)._jdf.queryExecution().analyzed().toString()
+    assert "SPARK_PARTITION_ID" not in plan
 
 
 def test_packing_doc_spanning_many_sequences(spark):

@@ -7,7 +7,8 @@ import sys
 import threading
 from types import SimpleNamespace
 
-from pyspark.sql import Row
+import pytest
+from pyspark.sql import Row, functions as F
 
 import __spark_entry__ as entry
 from entity_linking_spark import runtime, session
@@ -143,6 +144,47 @@ def test_entries_release_the_previous_querys_pins(spark):
         assert len(pinned) == 2
         queries[follower](spark, SF_DIR)
         assert not pinned & _persisted(spark), follower
+
+
+def test_lm_gate_answer_survives_the_next_query_releasing_its_pins(spark):
+    # building the next entry releases lm_perplexity's pinned scores
+    # before lm's own action runs; neither answer may change
+    queries = entry.queries()
+    lm_q, follower = queries["lm_perplexity"], queries["mention_detect_greedy"]
+    want_lm = sorted(map(tuple, lm_q(spark, SF_DIR).collect()))
+    want_follower = sorted(map(tuple, follower(spark, SF_DIR).collect()))
+    before = _persisted(spark)
+    lm_df = lm_q(spark, SF_DIR)
+    pinned = _persisted(spark) - before
+    follower_df = follower(spark, SF_DIR)
+    assert pinned and not pinned & _persisted(spark)
+    assert sorted(map(tuple, lm_df.collect())) == want_lm
+    assert sorted(map(tuple, follower_df.collect())) == want_follower
+
+
+def test_global_offsets_is_the_exact_prefix_sum(spark):
+    # heavy ties on the first key, and a key beyond 2^53 where
+    # long -> double collides: the exact (k, id) order still decides
+    big = 2**60
+    df = spark.range(500).select(
+        "id",
+        F.when(F.col("id") % 3 == 0, F.lit(big) + F.col("id") % 5)
+        .otherwise(F.col("id") % 11).alias("k"),
+        (F.col("id") % 7 + 1).alias("w"),
+    )
+    out, total = runtime.global_offsets(df, ["k", "id"], F.col("w"))
+    rows = sorted(out.collect(), key=lambda r: (r.k, r.id))
+    acc = 0
+    for r in rows:
+        assert r._off == acc
+        acc += r.w
+    assert total == acc and len(rows) == 500
+    empty, total = runtime.global_offsets(df.where("id < 0"), ["k", "id"], F.lit(1))
+    assert empty.collect() == [] and total == 0
+    for bad in ("CAST(NULL AS DOUBLE)", "CAST('NaN' AS DOUBLE)"):
+        keyed = df.withColumn("k", F.expr(f"IF(id = 7, {bad}, CAST(k AS DOUBLE))"))
+        with pytest.raises(ValueError):
+            runtime.global_offsets(keyed, ["k", "id"], F.lit(1))
 
 
 def test_ann_lsh_plane_count_from_footers(spark, monkeypatch):
