@@ -1,30 +1,53 @@
-"""Transitive clustering: connected components via large-star/small-star.
+"""Transitive clustering: connected components of the match-edge graph.
 
 The reference's final grouping is implicit — mentions resolved to the
-same subject_id belong together (entity_sort/service_main.py:160-172).
-At corpus scale that becomes transitive closure over match edges. We use
-the alternating large-star/small-star algorithm (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14 — public), which
-converges in O(log² n) rounds even on path graphs, vs O(diameter) for
-naive min-label propagation. Each round is two groupBy-min + join
-shuffles; no collect_list (hot vertices never materialize a neighbor
-array), so degree skew stays inside the hash aggregate.
+same subject_id belong together (entity_sort/service_main.py:160-172),
+computed in one process. At corpus scale that becomes transitive closure
+over match edges. Large edge sets use the alternating large-star/
+small-star algorithm (Kiveris et al., "Connected Components in MapReduce
+and Beyond", SoCC'14 — public), which converges in O(log² n) rounds even
+on path graphs, vs O(diameter) for naive min-label propagation. Each
+star is one window over the hash partitioning its emit needs (one
+exchange), and the round ends with one canonicalizing distinct; no
+collect_list (hot vertices never materialize a neighbor array), so
+degree skew stays inside the window's sort.
 
-Star iterations run on xxhash64 vertex ids (8-byte shuffles instead of
-url strings); cluster_id = min(url) per component is recovered with one
-window at the end, preserving the string-id contract.
+Once the distinct edge set is at most ``LOCAL_MAX_EDGES`` (at the start,
+or after some star round), the rest runs on the driver, as the
+reference does: the edges are collected, a numpy union-find labels every
+vertex with its component's minimum vertex id, and the (vid, root) map
+is broadcast-joined back. Small graphs — every perfbench workload, the
+flagship's near-dup edges — then skip every star round, each of which
+costs a checkpoint, a signature collect and its stage jobs, the last one
+only to detect the fixpoint.
 
-Every iteration localCheckpoints to truncate lineage (the reference's
+Vertex ids are xxhash64 of the url (8-byte shuffles and a compact driver
+array instead of url strings); cluster_id = min(url) per component is
+recovered with one window at the end, preserving the string-id contract.
+
+Every star round localCheckpoints to truncate lineage (the reference's
 per-stage pickle checkpoints, SURVEY §2.1 S7, become per-iteration
 materialization here).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
 MAX_ITERATIONS = 50
+
+LOCAL_MAX_EDGES = 2_000_000
+"""Largest distinct edge set labeled on the driver instead of by star
+rounds; read at call time, 0 forces star rounds to the fixpoint. The
+driver holds ~120 bytes per edge at the bound's peak (the collected
+int64 edge columns, their concatenation and np.unique's sort and
+inverse, the union-find arrays over at most two vertices per edge),
+so 2,000,000 edges took ~230 MB of driver Python memory (4 cores,
+random graph), plus the (vid, root) map the JVM broadcasts: 16 bytes of
+data per vertex."""
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -72,6 +95,32 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return relink
 
 
+def _local_roots(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(vids, roots): every vertex of the edges (src[i], dst[i]) and the
+    minimum vertex id of its component — the root star rounds converge to.
+
+    Union-find on dense ids: np.unique numbers the vertices in vid order,
+    each round hooks every edge's larger root onto its smaller one
+    (np.minimum.at), and pointer jumping compresses every path to its
+    root. parent[x] <= x throughout and dense order is vid order, so a
+    component's root is its minimum vid."""
+    vids, dense = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    a, b = dense[: len(src)], dense[len(src) :]
+    parent = np.arange(len(vids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        split = ra != rb
+        if not split.any():
+            return vids, vids[parent]
+        ra, rb = ra[split], rb[split]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+
+
 def _signature(edges: DataFrame) -> tuple[int, int]:
     row = edges.agg(
         F.count("*").alias("n"),
@@ -89,8 +138,11 @@ def connected_components(
 
     ``edges``: (url_a, url_b) match pairs. ``vertices``: (url) all docs —
     isolated docs become singleton clusters (cluster_id = own url).
-    Raises RuntimeError when MAX_ITERATIONS rounds end without a
-    fixpoint, instead of returning partial clusters.
+    Star rounds run only while the distinct edge set is larger than
+    LOCAL_MAX_EDGES; the rest is labeled on the driver. Raises
+    RuntimeError when MAX_ITERATIONS star rounds end with neither a
+    fixpoint nor a small enough edge set, instead of returning partial
+    clusters.
 
     ``checkpoint_dir``: when set, per-iteration lineage truncation uses
     RELIABLE checkpoints (written to this fault-tolerant path via
@@ -109,12 +161,13 @@ def connected_components(
     with a foreign session, either set that conf or clean the directory
     after the job.
     """
-    # run the star iterations on xxhash64 vertex ids: 8-byte keys shuffle
-    # ~5x less than url strings and compare faster. cluster_id = min(url)
-    # is recovered per component afterwards (same membership => same min),
-    # so the string-id contract is preserved. Collision odds for xxhash64
-    # on web-corpus cardinalities are ~n^2/2^65 — negligible, and a
-    # collision could only merge two clusters, never corrupt ids.
+    # vertex ids are xxhash64 of the url: 8-byte keys shuffle ~5x less
+    # than url strings, compare faster and collect compactly.
+    # cluster_id = min(url) is recovered per component afterwards (same
+    # membership => same min), so the string-id contract is preserved.
+    # Collision odds for xxhash64 on web-corpus cardinalities are
+    # ~n^2/2^65 — negligible, and a collision could only merge two
+    # clusters, never corrupt ids.
     e = (
         edges.select(
             F.xxhash64("url_a").alias("src"), F.xxhash64("url_b").alias("dst")
@@ -122,10 +175,6 @@ def connected_components(
         .where(F.col("src") != F.col("dst"))
         .distinct()
     )
-    # no isEmpty() pre-action: an empty edge set converges on round 2
-    # (signature (0,0) twice) and the left join below yields singletons —
-    # paying one extra job only in the empty case instead of one extra
-    # job in EVERY case
 
     if checkpoint_dir is not None:
         spark = edges.sparkSession
@@ -134,31 +183,44 @@ def connected_components(
         e = e.checkpoint()
     else:
         _ckpt = lambda df: df.localCheckpoint(eager=False)  # noqa: E731
-        # lazy: round 1's signature action materializes it — one job
-        # instead of two before the fixpoint starts
+        # lazy: the size check's signature action materializes it, and
+        # the driver collect or the first star round reads it back
         e = e.localCheckpoint(eager=False)
-    prev_sig = None
-    for _ in range(MAX_ITERATIONS):
-        e = _large_star(e)
-        e = _small_star(e)
+    sig = _signature(e)
+    rounds = 0
+    while sig[0] > LOCAL_MAX_EDGES:
+        if rounds == MAX_ITERATIONS:
+            raise RuntimeError(
+                f"connected_components: no fixpoint after {MAX_ITERATIONS} rounds"
+            )
+        rounds += 1
         # lazy checkpoint: the signature action right after materializes
-        # it — one Spark job per iteration instead of two
-        e = _ckpt(e)
+        # it — one Spark job per round instead of two
+        prev_sig = sig
+        e = _ckpt(_small_star(_large_star(e)))
         sig = _signature(e)
         if sig == prev_sig:
+            # star fixpoint: edges are (member_vid, root_vid)
+            member = e.select(F.col("src").alias("vid"), F.col("dst").alias("root"))
+            member = member.groupBy("vid").agg(F.min("root").alias("root"))
+            member = member.hint("shuffle_hash")
             break
-        prev_sig = sig
     else:
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {MAX_ITERATIONS} rounds"
+        # at most LOCAL_MAX_EDGES edges (an empty set included): label on
+        # the driver; the collect reads the checkpoint
+        pdf = e.toPandas()
+        vids, roots = _local_roots(
+            pdf["src"].to_numpy(np.int64), pdf["dst"].to_numpy(np.int64)
+        )
+        member = F.broadcast(
+            e.sparkSession.createDataFrame(
+                pd.DataFrame({"vid": vids, "root": roots}), "vid long, root long"
+            )
         )
 
-    # fixpoint edges are (member_vid, root_vid); roots map to themselves
-    member = e.select(F.col("src").alias("vid"), F.col("dst").alias("root"))
-    member = member.groupBy("vid").agg(F.min("root").alias("root"))
     verts = vertices.select("url", F.xxhash64("url").alias("vid"))
     labeled = (
-        verts.join(member.hint("shuffle_hash"), "vid", "left")
+        verts.join(member, "vid", "left")
         .select("url", F.coalesce("root", F.col("vid")).alias("root"))
     )
     w = Window.partitionBy("root")

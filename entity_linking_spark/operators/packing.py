@@ -45,6 +45,7 @@ def pack_sequences(
     id_col: str = "doc_id",
     seed: int = 42,
     drop_incomplete_last: bool = True,
+    cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """Pack the corpus into consecutive ``seq_len``-token sequences.
 
@@ -74,6 +75,8 @@ def pack_sequences(
     matching ``split('', ' ')``. The narrow projection (3 columns, never
     the text) is persisted because the prefix sum's two driver jobs and
     the output plan all read it; a dropped cache changes no answer.
+    ``cache_registry``: when given, the pinned projection is appended so
+    the caller can release it after its action.
     """
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
@@ -90,6 +93,8 @@ def pack_sequences(
         )
         .persist()
     )
+    if cache_registry is not None:
+        cache_registry.append(narrow)
     spans, total_tokens = runtime.global_offsets(narrow, ["_okey", "_id"], F.col("_nt"))
     spans = spans.withColumnRenamed("_off", "_start")
     n_seqs = (

@@ -10,7 +10,9 @@ Stage inventory and their shuffle profile:
   scoring   2 hash joins pair->features, each salted     shuffles on url, + 1 small
             for hot urls (ent evidence is a JVM map      count shuffle per side
             intersection, not a join)
-  cluster   large-star/small-star to fixpoint            2 shuffles/round, O(log n) rounds
+  cluster   star rounds while distinct edges exceed      edge distinct, 2 shuffles per
+            LOCAL_MAX_EDGES, then union-find on the      star round, 1 window; the
+            driver (collect, broadcast map back)         small case: no star round
 
 Run as a job:  python -m entity_linking_spark.pipeline --workdir /tmp/el \
                [--n-docs 2000] [--force]

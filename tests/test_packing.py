@@ -116,6 +116,24 @@ def test_packing_plan_reads_no_partition_id(spark):
     assert "SPARK_PARTITION_ID" not in plan
 
 
+def test_packing_scope_releases_its_pins(spark):
+    """Every call pins its narrow projection; one caller-owned scope
+    releases the pins of all of them."""
+    from entity_linking_spark import runtime
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    df = _mk(spark, [(i, " ".join(["w"] * (1 + i % 7))) for i in range(60)])
+    before = persisted()
+    scope = runtime.CacheScope()
+    for i in range(3):
+        pack_sequences(df.where(F.col("doc_id") >= i), 8, cache_registry=scope).count()
+    assert len(persisted() - before) == 3
+    scope.release()
+    assert not persisted() - before
+
+
 def test_packing_doc_spanning_many_sequences(spark):
     """A single giant doc stripes across consecutive sequences with
     contiguous slices at seq_off 0."""

@@ -119,12 +119,16 @@ def test_expected_clusters_match(spark, fixtures, workdir):
     assert diff == 0
 
 
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
+def test_connected_components_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """checkpoint_dir flag: reliable per-iteration checkpoints (survives
     executor loss on a real cluster) produce identical clusters."""
     from pyspark.sql import Row
 
+    from entity_linking_spark.operators import cluster
     from entity_linking_spark.operators.cluster import connected_components
+
+    # bound 0: star rounds, whose per-round checkpoints this test covers
+    monkeypatch.setattr(cluster, "LOCAL_MAX_EDGES", 0)
 
     edges = spark.createDataFrame(
         [Row(url_a="a", url_b="b"), Row(url_a="b", url_b="c"),

@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from entity_linking_spark import runtime  # noqa: E402
 from entity_linking_spark.curation import curate_corpus  # noqa: E402
 from entity_linking_spark.functions.web import url_dedup  # noqa: E402
 from entity_linking_spark.operators import dedup  # noqa: E402
@@ -579,7 +580,8 @@ def run_packing(spark, n_docs: int, args) -> dict:
     expected_seqs = expected_total // seq_len
 
     t0 = time.time()
-    packed = pack_sequences(docs, seq_len)
+    caches = runtime.CacheScope()
+    packed = pack_sequences(docs, seq_len, cache_registry=caches)
     bad = (
         packed.groupBy("seq_id")
         .agg(F.sum("slice_len").alias("n"))
@@ -589,6 +591,7 @@ def run_packing(spark, n_docs: int, args) -> dict:
     n_slices = packed.count()
     n_seqs = packed.select("seq_id").distinct().count()
     sec = time.time() - t0
+    caches.release()
 
     assert bad == 0, f"{bad} sequences not exactly {seq_len} tokens"
     assert n_seqs == expected_seqs, (n_seqs, expected_seqs)
