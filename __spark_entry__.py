@@ -74,7 +74,7 @@ def _doc_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> D
     tokenize/bands/embedding (ONE Python pass) -> MinHash-LSH band
     blocking -> exact cosine rescoring -> connected components. The
     flagship linkage slice on generic testdata."""
-    from entity_linking_spark.functions.vectors import cosine_udf
+    from entity_linking_spark.functions.vectors import cosine_col
     from entity_linking_spark.operators import blocking, cluster, extract
 
     # spread the bench scan before the fused Python pass (runtime.spread)
@@ -98,8 +98,7 @@ def _doc_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> D
     edges = (
         pairs.join(ea, "url_a")
         .join(eb, "url_b")
-        .withColumn("cos", cosine_udf("vec_a", "vec_b"))
-        .where(F.col("cos") >= threshold)
+        .where(cosine_col("vec_a", "vec_b") >= threshold)
         .select("url_a", "url_b")
     )
     clusters = cluster.connected_components(edges, docs.select("url"))

@@ -3,10 +3,11 @@
 The reference ranks mention/candidate pairs with a BERT pair classifier
 (entity_sort/el_models.py:52-95); the north rule specifies classic string
 similarities fused with embedding cosine as the batch scoring function.
-Both are standard public algorithms, implemented here pure-Python but
-always invoked inside Arrow-batched pandas UDFs over short strings
-(mentions/aliases), so per-call cost is bounded by string length, not
-row-at-a-time serialization.
+Both are standard public algorithms, implemented here pure-Python.
+Pair scoring uses Spark's JVM ``levenshtein`` builtin; Jaro-Winkler has
+no builtin and runs inside an Arrow-batched pandas UDF over short
+strings (mentions/aliases), so per-call cost is bounded by string
+length, not row-at-a-time serialization.
 """
 
 from __future__ import annotations

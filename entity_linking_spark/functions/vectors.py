@@ -1,4 +1,4 @@
-"""Vector ops: deterministic hash-embeddings + cosine, Arrow-vectorized.
+"""Vector ops: deterministic hash-embeddings (Arrow-vectorized) + JVM cosine.
 
 The reference encodes contexts/candidates with a BERT bi-encoder into
 768-dim float tensors and scores with inner product
@@ -10,7 +10,8 @@ real cluster the embed UDF body would be a batched model forward
 (predict_batch_udf-style); everything downstream is unchanged.
 
 No per-row Python in hot paths: embeddings for an Arrow batch are built
-into one [batch, dim] numpy matrix; pair cosine is a single einsum.
+into one [batch, dim] numpy matrix; pair cosine is a JVM double fold
+(``cosine_col``) and never leaves the JVM.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, DoubleType, FloatType
+from pyspark.sql.types import ArrayType, FloatType
 
 EMBED_DIM = 64
 
@@ -48,52 +49,22 @@ def hash_embed_udf(tokens: pd.Series) -> pd.Series:
     return pd.Series(list(mat))
 
 
-@pandas_udf(DoubleType())
-def cosine_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Row-wise cosine of two array<float> columns (one matmul per batch)."""
-    n = len(a)
-    out = np.zeros(n)
-    # stack ragged-safe: all vecs same dim in practice
-    try:
-        ma = np.stack([np.asarray(x, dtype=np.float32) for x in a])
-        mb = np.stack([np.asarray(x, dtype=np.float32) for x in b])
-        na = np.linalg.norm(ma, axis=1)
-        nb = np.linalg.norm(mb, axis=1)
-        denom = na * nb
-        denom[denom == 0] = 1.0
-        out = np.einsum("ij,ij->i", ma, mb) / denom
-    except (ValueError, TypeError):
-        # ragged/NULL rows: score each row alone, 0.0 for missing vecs.
-        # `x or []` would NOT work here — Arrow hands numpy arrays, whose
-        # truth value raises for >1 element; test against None explicitly
-        for i in range(n):
-            xa, xb = a.iloc[i], b.iloc[i]
-            va = np.asarray(xa if xa is not None else [], dtype=np.float32)
-            vb = np.asarray(xb if xb is not None else [], dtype=np.float32)
-            if va.shape != vb.shape:
-                out[i] = 0.0
-                continue
-            d = np.linalg.norm(va) * np.linalg.norm(vb)
-            out[i] = float(va @ vb / d) if d else 0.0
-    return pd.Series(out)
-
-
-# --- JVM-side (Column-expression) cosine -------------------------------
+# --- Cosine: one JVM (Column-expression) implementation ---------------
 #
-# cosine_udf above runs float32 numpy per Arrow batch — right for bulk
-# rescoring where 1e-7 relative error is irrelevant. The Column variants
-# below stay entirely in whole-stage codegen as sequential DOUBLE folds,
-# which makes them bit-reproducible against a DuckDB list_cosine_
-# similarity twin (same left-to-right accumulation order, same IEEE
-# ops) — the property the cosine-bearing oracle gate rows depend on.
-# ann_cosine_topk and semantic_dedup call cosine_col directly;
+# Every cosine in the library is cosine_col below: a sequential DOUBLE
+# fold that never leaves the JVM. Its left-to-right accumulation and IEEE
+# ops are the same as DuckDB's list_cosine_similarity, so it is
+# bit-reproducible against the oracle twins the cosine-bearing gate rows
+# depend on (ann_cosine_topk, semantic_dedup), and it keeps pair scoring
+# off the Python boundary: the pair rows never cross Arrow to be scored.
+# Spark evaluates the higher-order functions (zip_with, aggregate)
+# interpreted inside the generated stage, per array element, so each
+# fold over the vectors costs; cosine_col evaluates each fold once per row.
 # j9_hard_negative_join goes through brute_force_topk's float64 numpy
 # matmul, which agrees with the fold to the last ulp away from ties.
 
 def dot_col(a, b):
     """Sequential-fold double dot product of two array columns (JVM)."""
-    from pyspark.sql import Column  # noqa: F401  (doc aid)
-
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
     return F.aggregate(
@@ -107,11 +78,7 @@ def norm_col(a):
     """L2 norm of an array column as a sequential double fold (JVM)."""
     a = F.col(a) if isinstance(a, str) else a
     return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
+        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double"))
     )
 
 
@@ -121,9 +88,18 @@ def cosine_col(a, b):
     Zero-norm rows score 0.0 (not NaN): Spark orders NaN ABOVE every
     number, so an unguarded 0/0 would make a zero vector win argmax
     comparisons and pass >= thresholds — and diverge from the numpy
-    paths, which guard zero norms the same way. For non-zero rows the
-    guard is a no-op, so DuckDB bit-reproducibility is unchanged."""
+    paths, which guard zero norms the same way. The guard is try_divide's
+    NULL on a zero divisor, so the norms are folded once per row (a
+    CASE on the denominator evaluates it twice); for non-zero rows the
+    division is the plain one, so DuckDB bit-reproducibility holds.
+
+    A NULL vector, or two vectors of different lengths, give NULL
+    (zip_with pads the shorter side with NULL): one poison row never
+    fails the task, and callers that need a number coalesce."""
     a = F.col(a) if isinstance(a, str) else a
     b = F.col(b) if isinstance(b, str) else b
-    denom = norm_col(a) * norm_col(b)
-    return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_col(a, b) / denom)
+    dot = dot_col(a, b)
+    return F.coalesce(
+        F.try_divide(dot, norm_col(a) * norm_col(b)),
+        F.when(dot.isNotNull(), F.lit(0.0)),
+    )

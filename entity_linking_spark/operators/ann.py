@@ -144,7 +144,7 @@ def lsh_topk(
     ``n_planes`` sizes the bucket count (2^n_planes) to the corpus:
     target n_planes ≈ log2(|corpus| / desired_bucket_size); a fixed
     width is recall-fragile as corpus density varies."""
-    from entity_linking_spark.functions.vectors import cosine_udf
+    from entity_linking_spark.functions.vectors import cosine_col
 
     bucket_udf = make_bucket_udf(n_planes)
     probe_udf = make_multiprobe_udf(n_planes)
@@ -163,7 +163,7 @@ def lsh_topk(
     )
     return (
         q.join(c, "bucket")
-        .withColumn("cos_sim", F.round(cosine_udf("qvec", "cvec"), 4))
+        .withColumn("cos_sim", F.round(cosine_col("qvec", "cvec"), 4))
         .select(query_id_col, "neighbor_id", "cos_sim")
         .distinct()
         .withColumn("rank", F.row_number().over(w))
@@ -191,7 +191,7 @@ def ivf_topk(
     ~corpus/sample_mod rows instead of everything; default 1 (no filter)
     is right for anything that fits a normal scan.
     """
-    from entity_linking_spark.functions.vectors import cosine_udf
+    from entity_linking_spark.functions.vectors import cosine_col
 
     # Deterministic centroid init via BOTTOM-K-BY-HASH — exactly ONE job,
     # no corpus.count() pre-action, never a full sort. orderBy(limit)
@@ -257,7 +257,7 @@ def ivf_topk(
     )
     return (
         q.join(c, "cell")
-        .withColumn("cos_sim", F.round(cosine_udf("qvec", "cvec"), 4))
+        .withColumn("cos_sim", F.round(cosine_col("qvec", "cvec"), 4))
         .select(query_id_col, "neighbor_id", "cos_sim")
         .distinct()
         .withColumn("rank", F.row_number().over(w))

@@ -15,14 +15,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, LongType
+from pyspark.sql.types import LongType
 
 from entity_linking_spark import runtime
 from entity_linking_spark.functions.minhash import (
-    N_PERM,
     _token_hashes,
-    est_jaccard,
-    minhash_signature,
     minhash_signature_udf as _sig_udf,
 )
 from entity_linking_spark.operators import blocking, cluster
@@ -142,14 +139,6 @@ def simhash_near_dup_pairs(
     )
 
 
-@pandas_udf(DoubleType())
-def _minhash_jaccard_udf(sig_a: pd.Series, sig_b: pd.Series) -> pd.Series:
-    out = np.empty(len(sig_a))
-    for i, (a, b) in enumerate(zip(sig_a, sig_b)):
-        out[i] = est_jaccard(np.asarray(a), np.asarray(b))
-    return pd.Series(out)
-
-
 def shingle_set_col(tokens_col: str, k: int = 3):
     """Distinct k-shingle strings of a token array — pure Column expr
     (JVM, whole-stage codegen). Mirrors functions.minhash.shingle_hashes:
@@ -179,8 +168,9 @@ def minhash_near_dup_pairs(
 ) -> DataFrame:
     """MinHash-LSH near-dup: band-join candidates, then verify.
 
-    verify='est'   — estimated Jaccard from the full 64-perm signatures
-                     (cheap; column ``jaccard_est``).
+    verify='est'   — estimated Jaccard from the full 64-perm signatures:
+                     the share of agreeing positions, one JVM expression
+                     per pair (column ``jaccard_est``).
     verify='exact' — exact Jaccard over distinct 3-shingle string sets,
                      computed JVM-side only for candidate pairs (column
                      ``jaccard``). This is the retrieve-then-rerank shape:
@@ -233,10 +223,14 @@ def minhash_near_dup_pairs(
     sigs = base.select("url", _sig_udf("tokens").alias("sig"))
     sa = sigs.select(F.col("url").alias("url_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("url").alias("url_b"), F.col("sig").alias("sig_b"))
+    # agreeing positions over the signature length: a count over 64 is
+    # exact in double, so this equals functions.minhash.est_jaccard bit
+    # for bit without a per-pair Python call
+    agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda e: e))
     return (
         pairs.join(sa, "url_a")
         .join(sb, "url_b")
-        .withColumn("jaccard_est", _minhash_jaccard_udf("sig_a", "sig_b"))
+        .withColumn("jaccard_est", agree / F.size("sig_a"))
         .where(F.col("jaccard_est") >= min_jaccard)
         .select("url_a", "url_b", "jaccard_est")
     )
@@ -274,7 +268,7 @@ def embedding_near_dup_pairs(
     """
     from pyspark.sql.window import Window
 
-    from entity_linking_spark.functions.vectors import cosine_udf
+    from entity_linking_spark.functions.vectors import cosine_col
     from entity_linking_spark.operators.ann import make_bucket_udf
 
     bucket_udf = make_bucket_udf(n_planes)
@@ -296,7 +290,7 @@ def embedding_near_dup_pairs(
     return (
         lhs.join(rhs, "bucket")
         .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine_udf("vec_a", "vec_b"))
+        .withColumn("cos", cosine_col("vec_a", "vec_b"))
         .where(F.col("cos") >= min_cosine)
         .select("id_a", "id_b", F.round("cos", 4).alias("cos"))
         .distinct()

@@ -4,8 +4,9 @@ The reference scores each (mention, candidate) with a BERT pair
 classifier and sorts by probability (entity_sort/service_main.py:145-172,
 el_models.py:52-95). Our batch equivalent scores each candidate *page*
 pair with a fused similarity — entity-evidence overlap + embedding
-cosine + mention string similarity — computed entirely JVM-side or in
-Arrow-batched pandas UDFs:
+cosine + mention string similarity. Every term is a JVM Column
+expression except Jaro-Winkler, which has no JVM builtin: only the two
+mention strings of a pair cross Arrow, into one batched pandas UDF.
 
   ent_score   strongest shared entity evidence: for each doc, each
               candidate entity is supported with weight 1/n_ids (alias
@@ -37,47 +38,24 @@ from pyspark.sql.window import Window
 import numpy as np
 import pandas as pd
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, StructField, StructType
+from pyspark.sql.types import DoubleType
 
 from entity_linking_spark.functions.strings import jaro_winkler
-from entity_linking_spark.functions.vectors import hash_embed_udf
+from entity_linking_spark.functions.vectors import cosine_col, hash_embed_udf
 from entity_linking_spark.operators import skew
 
-_PAIR_SCORES_T = StructType(
-    [
-        StructField("cos", DoubleType()),
-        StructField("name", DoubleType()),
-    ]
-)
 
-
-@pandas_udf(_PAIR_SCORES_T)
-def _pair_scores_udf(
-    vec_a: pd.Series, vec_b: pd.Series, m_a: pd.Series, m_b: pd.Series
-) -> pd.DataFrame:
-    """Both similarity kernels in ONE Arrow pass: batched cosine as a
-    single einsum over the stacked [batch, dim] matrices, Jaro-Winkler
-    per short mention string. A struct-returning UDF is materialized
-    once per row — unlike a Catalyst expression, it cannot be inlined
-    and re-evaluated at every downstream reference."""
-    n = len(vec_a)
-    cos = np.zeros(n)
-    mask = vec_a.notna() & vec_b.notna()
-    if mask.any():
-        ma = np.stack([np.asarray(v, dtype=np.float32) for v in vec_a[mask]])
-        mb = np.stack([np.asarray(v, dtype=np.float32) for v in vec_b[mask]])
-        na = np.maximum(np.linalg.norm(ma, axis=1), 1e-12)
-        nb = np.maximum(np.linalg.norm(mb, axis=1), 1e-12)
-        cos[np.flatnonzero(mask.to_numpy())] = (
-            np.einsum("ij,ij->i", ma, mb) / (na * nb)
-        )
-    # Jaro-Winkler half of the name blend (no JVM builtin exists); the
-    # Levenshtein half runs JVM-side via F.levenshtein in score_pairs — a
-    # pure-Python O(len^2) DP per pair measured 2-3x slower on the whole
-    # scoring stage at 3.7M pairs. Representative mentions come from a
-    # bounded alias vocabulary, so (m_a, m_b) pairs repeat heavily across
-    # a batch — a batch-local memo turns most rows into a dict hit
-    # instead of an O(len^2) scan.
+@pandas_udf(DoubleType())
+def _jaro_winkler_udf(m_a: pd.Series, m_b: pd.Series) -> pd.Series:
+    """Jaro-Winkler of the two representative mention strings — the only
+    per-pair kernel with no JVM builtin, so the only one that crosses
+    Arrow; the Levenshtein half of the name blend and the cosine run
+    JVM-side in score_pairs. A pure-Python O(len^2) Levenshtein DP per
+    pair measured 2-3x slower on the whole scoring stage at 3.7M pairs.
+    Representative mentions come from a bounded alias vocabulary, so
+    (m_a, m_b) pairs repeat heavily across a batch — a batch-local memo
+    turns most rows into a dict hit instead of an O(len^2) scan. A NULL
+    side scores 0.0."""
     memo: dict[tuple[str, str], float] = {}
 
     def jw(x, y) -> float:
@@ -89,10 +67,10 @@ def _pair_scores_udf(
             v = memo[key] = jaro_winkler(x, y)
         return v
 
-    name = np.fromiter(
-        (jw(x, y) for x, y in zip(m_a, m_b)), dtype=np.float64, count=n
+    return pd.Series(
+        np.fromiter((jw(x, y) for x, y in zip(m_a, m_b)), dtype=np.float64, count=len(m_a))
     )
-    return pd.DataFrame({"cos": cos, "name": name})
+
 
 MATCH_THRESHOLD = 0.75
 DUP_COSINE_THRESHOLD = 0.92
@@ -206,7 +184,7 @@ def score_pairs(
 
     # ent_score = max over shared candidate entities of min(support_a,
     # support_b) — pure Column expressions (map_filter + try_element_at),
-    # whole-stage codegen, no shuffle.
+    # no Python, no shuffle.
     shared = F.map_filter(
         F.col("smap_a"), lambda k, v: F.map_contains_key(F.col("smap_b"), k)
     )
@@ -232,11 +210,12 @@ def score_pairs(
         - F.levenshtein("m_a", "m_b")
         / F.greatest(F.length("m_a"), F.length("m_b"), F.lit(1)),
     ).otherwise(F.lit(0.0))
-    feat = (
-        feat
-        .withColumn("_ps", _pair_scores_udf("vec_a", "vec_b", "m_a", "m_b"))
-        .withColumn("cos_score", F.col("_ps.cos"))
-        .withColumn("name_score", 0.5 * F.col("_ps.name") + 0.5 * lev_sim)
+    # a pair whose side found no embedding in the left feature join
+    # scores cosine 0.0, not NULL
+    feat = feat.withColumn(
+        "cos_score", F.coalesce(cosine_col("vec_a", "vec_b"), F.lit(0.0))
+    ).withColumn(
+        "name_score", 0.5 * _jaro_winkler_udf("m_a", "m_b") + 0.5 * lev_sim
     )
     # fusion: unambiguous shared entity is decisive; near-identical text
     # (near-dup page) is decisive; otherwise a weighted blend.

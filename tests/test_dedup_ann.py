@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F
 
+from entity_linking_spark.functions.minhash import est_jaccard, minhash_signature
 from entity_linking_spark.operators import ann, dedup
 
 
@@ -62,6 +63,8 @@ def test_minhash_near_dup_and_clusters(spark):
     pairs = dedup.minhash_near_dup_pairs(df, min_jaccard=0.5)
     got = {(r.url_a, r.url_b): r.jaccard_est for r in pairs.collect()}
     assert ("a", "b") in got and got[("a", "b")] > 0.5
+    # the JVM agreement count equals the numpy estimator bit for bit
+    assert got[("a", "b")] == est_jaccard(minhash_signature(base), minhash_signature(var))
     clusters = dedup.dedup_clusters(df, pairs)
     ks = {r.url: r.keeper for r in clusters.collect()}
     assert ks["a"] == ks["b"] == "a"

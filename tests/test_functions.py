@@ -112,22 +112,63 @@ def test_minhash_banding_recall_on_near_dups():
     assert not any(x == y for x, y in zip(ba, bc))
 
 
-def test_cosine_udf_tolerates_null_and_ragged_rows(spark):
-    """A NULL (or wrong-dim) vector in a batch must score 0.0 for that
-    row, not crash the task: the batched np.stack path raises on mixed
-    None rows and the per-row fallback used `x or []`, whose numpy-array
-    truth value raises for >1 element — one poison row killed the whole
-    scoring stage."""
+def test_cosine_col_tolerates_null_and_ragged_rows(spark):
+    """A NULL (or wrong-dim) vector must give NULL for that row, not fail
+    the task: one poison row once killed the whole scoring stage. s5
+    turns such a pair's cosine into 0.0, which is what it scored before
+    the cosine moved into the JVM."""
     from pyspark.sql import Row
 
-    from entity_linking_spark.functions.vectors import cosine_udf
+    from entity_linking_spark.functions.vectors import cosine_col
+    from entity_linking_spark.operators import scoring
 
     rows = [
         Row(a=[1.0, 0.0], b=[1.0, 0.0]),   # cos 1
-        Row(a=None, b=[0.0, 1.0]),          # null side -> 0
-        Row(a=[1.0, 0.0], b=None),          # other side -> 0
-        Row(a=[1.0], b=[0.0, 1.0]),         # ragged dims -> 0
+        Row(a=None, b=[0.0, 1.0]),          # null side -> NULL
+        Row(a=[1.0, 0.0], b=None),          # other side -> NULL
+        Row(a=[1.0], b=[0.0, 1.0]),         # ragged dims -> NULL
     ]
     df = spark.createDataFrame(rows, "a array<float>, b array<float>")
-    got = [r.c for r in df.coalesce(1).select(cosine_udf("a", "b").alias("c")).collect()]
-    assert got[0] == 1.0 and got[1:] == [0.0, 0.0, 0.0]
+    got = [r.c for r in df.coalesce(1).select(cosine_col("a", "b").alias("c")).collect()]
+    assert got == [1.0, None, None, None]
+
+    # s5: "c" has a NULL vec row, "d" no embedding row at all
+    pairs = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("a", "d")], "url_a string, url_b string"
+    )
+    embeddings = spark.createDataFrame(
+        [("a", [1.0, 0.0]), ("b", [1.0, 0.0]), ("c", None)], "url string, vec array<float>"
+    )
+    supports = spark.createDataFrame([], "url string, smap map<string, double>")
+    top_mention = spark.createDataFrame(
+        [("a", "x"), ("b", "x"), ("c", "x"), ("d", "x")], "url string, mention string"
+    )
+    scored = scoring.score_pairs(pairs, supports, embeddings, top_mention)
+    cos = {r.url_b: r.cos_score for r in scored.collect()}
+    assert cos == {"b": 1.0, "c": 0.0, "d": 0.0}
+
+
+def test_cosine_col_matches_float64_numpy(spark):
+    """The one cosine agrees with a float64 numpy cosine of the same
+    float32 inputs within 1e-12; a zero vector scores 0.0, not NaN."""
+    from entity_linking_spark.functions.vectors import EMBED_DIM, cosine_col
+
+    rng = np.random.default_rng(7)
+    a = rng.standard_normal((200, EMBED_DIM)).astype(np.float32)
+    b = rng.standard_normal((200, EMBED_DIM)).astype(np.float32)
+    b[:50] = a[:50] + np.float32(0.05) * b[:50]  # near-duplicates, cos ~ 1
+    a[7] = 0.0
+    b[9] = 0.0
+    a64, b64 = a.astype(np.float64), b.astype(np.float64)
+    denom = np.linalg.norm(a64, axis=1) * np.linalg.norm(b64, axis=1)
+    want = np.divide(
+        np.einsum("ij,ij->i", a64, b64), denom, out=np.zeros(len(a)), where=denom != 0
+    )
+    df = spark.createDataFrame(
+        [(i, a[i].tolist(), b[i].tolist()) for i in range(len(a))],
+        "i int, a array<float>, b array<float>",
+    )
+    got = dict(df.select("i", cosine_col("a", "b").alias("c")).collect())
+    got = np.array([got[i] for i in range(len(a))])
+    assert got[7] == 0.0 and got[9] == 0.0
+    assert np.max(np.abs(got - want)) <= 1e-12

@@ -7,6 +7,7 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql import functions as F
 
 from entity_linking_spark import schema as S
 from entity_linking_spark.metrics import pairwise_prf, truth_labeled_pairs
@@ -109,6 +110,22 @@ def test_resume_from_checkpoint(spark, fixtures, workdir):
     )
     after = {(r["url"], r["cluster_id"]) for r in clusters.collect()}
     assert before == after
+
+
+def test_pair_scores_clear_their_thresholds(spark, workdir):
+    """Every s5 score sits well away from the threshold it is compared
+    with, so float rounding in the similarity kernels (summation order,
+    float32 vs double) cannot flip an edge or a near-dup decision."""
+    from entity_linking_spark.operators import scoring
+
+    margins = io.read_stage(spark, workdir, "s5_scores").agg(
+        F.min(F.abs(F.col("cos_score") - scoring.DUP_COSINE_THRESHOLD)).alias("cos"),
+        F.min(F.abs(F.col("score") - scoring.MATCH_THRESHOLD)).alias("score"),
+        F.count("*").alias("n"),
+    ).first()
+    assert margins["n"] > 0
+    assert margins["cos"] >= 1e-3, margins
+    assert margins["score"] >= 1e-3, margins
 
 
 def test_expected_clusters_match(spark, fixtures, workdir):

@@ -7,9 +7,10 @@ otherwise an oracle-backed query could fall outside the gated window
 and silently lose its hash check.
 """
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry
 

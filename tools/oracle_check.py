@@ -11,9 +11,14 @@ Usage: python tools/oracle_check.py [sf_dir] [name_filter]
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
+
+# the checkout this tool lives in, ahead of any other on the path: the
+# gate checks this tree's __spark_entry__ and package, never another's
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -64,7 +69,6 @@ def run_check(spark, sf_dir: str, name_filter: str = "", quiet: bool = False) ->
     Importable so bench.py can run the gate in the same JVM before
     publishing numbers — a red row never ships silently.
     """
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
 
     def say(msg: str) -> None:
@@ -134,7 +138,6 @@ def run_check(spark, sf_dir: str, name_filter: str = "", quiet: bool = False) ->
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
-    sys.path.insert(0, "/root/repo")
     from entity_linking_spark.session import get_spark
 
     spark = get_spark("oracle-check", cores=8)
