@@ -89,9 +89,7 @@ def _doc_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> D
     keys = blocking.blocking_keys(
         feats, candidates=None, use_host=False, use_entity=False, use_minhash=True
     )
-    pairs = blocking.candidate_pairs(
-        keys, max_block_size=64, cache_registry=Q._LIVE_CACHES
-    )
+    pairs = blocking.candidate_pairs(keys, max_block_size=64)
     emb = feats.select("url", "vec")
     ea = emb.select(F.col("url").alias("url_a"), F.col("vec").alias("vec_a"))
     eb = emb.select(F.col("url").alias("url_b"), F.col("vec").alias("vec_b"))

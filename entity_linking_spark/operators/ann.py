@@ -46,7 +46,13 @@ def make_bucket_udf(n_planes: int = N_PLANES):
     """Factory: sign pattern of n_planes fixed hyperplanes -> int bucket id.
 
     Parametrized so callers size the bucket count (2^n_planes) to the
-    corpus: more planes = smaller buckets = fewer pairs per bucket."""
+    corpus: more planes = smaller buckets = fewer pairs per bucket.
+
+    The UDF is a pure function of the vector, but it is marked
+    nondeterministic: a join on its output makes the optimizer infer an
+    ``isnotnull(bucket)`` filter and push it below the projection, and a
+    deterministic UDF is copied into that filter — a second
+    ``ArrowEvalPython`` pass over every row of the join side."""
 
     @pandas_udf(IntegerType())
     def bucket_udf(vecs: pd.Series) -> pd.Series:
@@ -55,7 +61,7 @@ def make_bucket_udf(n_planes: int = N_PLANES):
         weights = (1 << np.arange(n_planes)).astype(np.int64)
         return pd.Series((signs @ weights).astype(np.int32))
 
-    return bucket_udf
+    return bucket_udf.asNondeterministic()
 
 
 def make_multiprobe_udf(n_planes: int = N_PLANES):
@@ -235,6 +241,8 @@ def ivf_topk(
     def cell_udf(vecs: pd.Series) -> pd.Series:
         mat = np.stack([np.asarray(v, dtype=np.float32) for v in vecs])
         return pd.Series(np.argmax(mat @ cents.T, axis=1).astype(np.int32))
+
+    cell_udf = cell_udf.asNondeterministic()  # one evaluation per row, see make_bucket_udf
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe_udf(vecs: pd.Series) -> pd.Series:

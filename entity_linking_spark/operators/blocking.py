@@ -42,7 +42,7 @@ import threading
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,
@@ -56,6 +56,7 @@ from entity_linking_spark.functions.normalize import normalize_text
 
 MAX_BLOCK_SIZE = 64
 MAX_ALIAS_AMBIGUITY = 8  # aliases shared by more entities don't emit ent: keys
+MAX_CANDIDATE_AMBIGUITY = 16  # ...and by more than this, no candidate rows at all
 # Above this alias-table size AliasDictionary routes mention detection
 # from the broadcast trie matcher to the join-based path
 # (detect_mentions_join) and never collects the aliases: ~4M short
@@ -248,19 +249,34 @@ class AliasDictionary:
 
     @_once
     def table(self) -> DataFrame:
-        """Normalized (alias, subject_id) rows, empty aliases dropped,
-        pinned: unpinned, the empty-string filter re-evaluates the
-        normalize UDF under each consumer (2x stacked ArrowEvalPython per
-        candidate-join branch; s3 9-16 s -> 3.0 s at 3k docs)."""
+        """Normalized (alias, subject_id, n_ids) rows, empty aliases
+        dropped, pinned: unpinned, the empty-string filter re-evaluates
+        the normalize UDF under each consumer (2x stacked ArrowEvalPython
+        per candidate-join branch; s3 9-16 s -> 3.0 s at 3k docs).
+
+        ``n_ids`` is the alias's ambiguity, the number of distinct
+        entities sharing the normalized alias (the reference's
+        entity_to_ids fan-out, built with its dict). It is the largest
+        ``dense_rank`` of subject_id within the alias: one window, one
+        exchange, a scalar per row (a ``collect_set`` window would copy
+        the alias's id array into each of its rows). dense_rank would
+        count a NULL id where a distinct count does not; ALIASES_SCHEMA
+        declares subject_id non-null."""
         from pyspark import StorageLevel
 
         from entity_linking_spark.functions.normalize import normalize_udf
 
+        by_alias = Window.partitionBy("alias")
         table = (
             self._aliases.select(
                 normalize_udf(F.col("alias")).alias("alias"), F.col("subject_id")
             )
             .where(F.col("alias") != "")
+            .withColumn("_rank", F.dense_rank().over(by_alias.orderBy("subject_id")))
+            # coalesce only types n_ids non-null, as the s3 schema has it
+            .withColumn("n_ids", F.max("_rank").over(by_alias).cast("long"))
+            .withColumn("n_ids", F.coalesce("n_ids", F.lit(0)))
+            .drop("_rank")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
         if self._cache_registry is not None:
@@ -508,42 +524,33 @@ def detect_mentions_join(
     )
 
 
-def candidate_entities(
-    mentions: DataFrame,
-    dictionary: AliasDictionary,
-    max_ambiguity: int = 16,
-) -> DataFrame:
+def candidate_entities(mentions: DataFrame, dictionary: AliasDictionary) -> DataFrame:
     """J1: equi hash join mention -> candidate subject_ids, with per-alias
-    ambiguity (how many entities share the alias — the disambiguation
-    prior, analog of the reference's entity_to_ids fan-out).
+    ambiguity ``n_ids`` (how many entities share the alias — the
+    disambiguation prior, analog of the reference's entity_to_ids
+    fan-out).
 
-    Aliases shared by more than ``max_ambiguity`` entities are dropped at
-    the source: their fan-out is quadratic cost with near-zero evidence
+    The alias side is the dictionary's pinned, normalized alias table
+    (the SAME frozen normalizer made the mention strings, so
+    hyphen/punct variants join), which carries ``n_ids`` computed once
+    per dictionary, not once per call or micro-batch. Aliases shared by
+    more than ``MAX_CANDIDATE_AMBIGUITY`` entities are dropped at the
+    source: their fan-out is quadratic cost with near-zero evidence
     weight (support 1/n_ids), and at corpus scale a stop-word-like alias
     would multiply the candidate table by its entity count (the
     reference's 南京南站-style hot keys, SURVEY §4)."""
-    # the dictionary's table is normalized with the SAME frozen
-    # normalizer that produced the mention strings (else hyphen/punct
-    # variants never join) and pinned, so the normalize UDF runs once per
-    # alias row although this plan reads the table on two branches
-    alias_norm = dictionary.table
-    ambiguity = alias_norm.groupBy("alias").agg(
-        F.countDistinct("subject_id").alias("n_ids")
-    )
+    alias_side = dictionary.table.where(F.col("n_ids") <= MAX_CANDIDATE_AMBIGUITY)
     # SIZE-GATED broadcast hint (round 4, twice-revised): an unconditional
     # hint blew spark.driver.maxResultSize at the 10M-doc scale point (1M
     # entities, 3.4M alias rows), but dropping the hint entirely regressed
     # the 1M-doc local-cluster W4 runs ~10% — the static planner cannot
-    # size the filtered-alias join output (agg estimates) nor the
-    # Python-stage mentions side, so the build-side choice is a coin flip
-    # AQE only corrects after shuffle-writing the mentions table.
-    # Provably-small alias tables (AliasDictionary.broadcast) are hinted
-    # onto the build side; beyond the gate AQE decides, which is the only
-    # plan that works there anyway.
-    joined = alias_norm.join(
-        ambiguity.where(F.col("n_ids") <= max_ambiguity), "alias"
-    )
-    alias_b = F.broadcast(joined) if dictionary.broadcast else joined
+    # size the filtered-alias join output nor the Python-stage mentions
+    # side, so the build-side choice is a coin flip AQE only corrects
+    # after shuffle-writing the mentions table. Provably-small alias
+    # tables (AliasDictionary.broadcast) are hinted onto the build side;
+    # beyond the gate AQE decides, which is the only plan that works
+    # there anyway.
+    alias_b = F.broadcast(alias_side) if dictionary.broadcast else alias_side
     return (
         mentions.join(alias_b, mentions.mention == alias_b["alias"])
         .select("url", "mention", "subject_id", "n_ids")
@@ -613,12 +620,7 @@ def blocking_keys(
     return out
 
 
-def candidate_pairs(
-    keys: DataFrame,
-    max_block_size: int = MAX_BLOCK_SIZE,
-    cache_keys: bool = True,
-    cache_registry: runtime.CacheScope | None = None,
-) -> DataFrame:
+def candidate_pairs(keys: DataFrame, max_block_size: int = MAX_BLOCK_SIZE) -> DataFrame:
     """Within-block pair generation with stop-key removal.
 
     Blocks larger than ``max_block_size`` are dropped (non-discriminative
@@ -627,19 +629,11 @@ def candidate_pairs(
     bounded, and the final distinct dedups pairs that co-occur under
     several keys.
 
-    ``cache_keys``: the stop-list aggregation and the anti-join/self-join
-    branches each rescan the ``keys`` subtree (measured: 2x execution of
-    a UDF feeding ``keys``). When keys embed a Python stage — the LSH
-    bands pandas UDF in ``dedup.minhash_near_dup_pairs`` — that doubles
-    the dominant featurization cost, so the hashed key table is persisted
-    by default (16-byte rows, MEMORY_AND_DISK). Pass ``False`` when keys
-    scan straight from a checkpointed stage snapshot (the pipeline path):
-    rescanning columnar files twice is cheaper than pinning a 10^12-row
-    key table to executor storage. The cache has no explicit unpersist
-    (the plan is returned lazily); it is released when the returned
-    DataFrame's references are GC'd (ContextCleaner) — loop-heavy callers
-    that invoke this many times per session should pass cache_keys=False
-    and persist their keys input themselves.
+    The stop-list aggregation and the anti-join/self-join branches each
+    scan the ``keys`` subtree, so a caller whose keys embed a Python
+    stage (the LSH bands pandas UDF in ``dedup.minhash_near_dup_pairs``)
+    persists them first; keys read from a checkpointed stage snapshot or
+    a persisted table (the pipeline, the flagship) are cheap to rescan.
     """
     # Stop keys are found by a two-phase groupBy().count() — partial
     # (map-side) aggregation collapses a hot key to one partial row per
@@ -667,12 +661,6 @@ def candidate_pairs(
     # candidate generator, so the extra pairs are filtered by exact
     # scoring downstream, same as any other block co-occurrence.
     hashed = keys.select(F.xxhash64("key").alias("key"), "url")
-    if cache_keys:
-        from pyspark import StorageLevel
-
-        hashed = hashed.persist(StorageLevel.MEMORY_AND_DISK)
-        if cache_registry is not None:
-            cache_registry.append(hashed)
     stop = (
         hashed.groupBy("key")
         .agg(F.count("*").alias("block_size"))

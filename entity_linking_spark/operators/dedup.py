@@ -180,21 +180,28 @@ def minhash_near_dup_pairs(
     ``n_bands`` tunes candidate recall (defaults to the module's 16x4
     banding; 32x2 pushes the miss probability at j>=0.7 below 1e-9).
     """
+    from pyspark import StorageLevel
+
     from entity_linking_spark.functions.minhash import N_BANDS, make_bands_udf
 
     base = docs_tokens.select(
         F.col(id_col).alias("url"), F.col(tokens_col).alias("tokens")
     )
     bands_udf = make_bands_udf(n_bands or N_BANDS)
-    keys = base.select(
-        "url", F.posexplode(bands_udf("tokens")).alias("band_idx", "band_hash")
+    # pinned: candidate_pairs scans its keys twice (stop list, self-join),
+    # and each unpinned scan would rerun the bands UDF over the corpus
+    bands = base.select("url", bands_udf("tokens").alias("bands")).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    if cache_registry is not None:
+        cache_registry.append(bands)
+    keys = bands.select(
+        "url", F.posexplode("bands").alias("band_idx", "band_hash")
     ).select(
         "url",
         F.concat_ws(":", F.lit("mh"), "band_idx", "band_hash").alias("key"),
     )
-    pairs = blocking.candidate_pairs(
-        keys, max_block_size=max_block_size, cache_registry=cache_registry
-    )
+    pairs = blocking.candidate_pairs(keys, max_block_size=max_block_size)
     if verify == "exact":
         # shingles are hashed to int64 (JVM xxhash64) BEFORE the pair
         # join: the set semantics — and hence the exact Jaccard value —

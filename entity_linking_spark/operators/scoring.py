@@ -23,17 +23,17 @@ mention strings of a pair cross Arrow, into one batched pandas UDF.
   fused = max(ent_score, cos when cos >= dup_threshold, ...) — see
   ``score_pairs``. A pair is an edge when fused >= threshold.
 
-Shuffle inventory: two hash joins (pair -> per-doc features) on url,
-each salted for the urls the key-frequency pass finds hot
-(operators/skew.py), plus that pass's small count shuffle per side.
-Feature tables are small projections (url, entity supports / embedding)
-so the join input is pruned to exactly the needed columns.
+Shuffle inventory: the per-url feature table (``doc_features``) is a
+two-level aggregate over the s3 candidates — one exchange on (url,
+subject_id), one on url — left-joined to the encodings; the pair table
+then takes two hash joins on url, each salted for the urls the
+key-frequency pass finds hot (operators/skew.py), plus that pass's small
+count shuffle per side.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.window import Window
 
 import numpy as np
 import pandas as pd
@@ -41,7 +41,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
 
 from entity_linking_spark.functions.strings import jaro_winkler
-from entity_linking_spark.functions.vectors import cosine_col, hash_embed_udf
+from entity_linking_spark.functions.vectors import cosine_col
 from entity_linking_spark.operators import skew
 
 
@@ -83,69 +83,32 @@ STRONG_SUPPORT = 0.9  # support 1/n_ids above this = unambiguous alias
 # guarantees shared keys, so name similarity is not independent evidence.
 
 
-def entity_support(candidates: DataFrame) -> DataFrame:
-    """Per (url, subject_id): support = max over its aliases of 1/n_ids."""
-    return candidates.groupBy("url", "subject_id").agg(
-        F.max(1.0 / F.col("n_ids")).alias("support")
+def doc_features(candidates: DataFrame, embeddings: DataFrame) -> DataFrame:
+    """The per-url feature table ``(url, vec, mention, smap)`` of
+    score_pairs: every url of ``embeddings`` (the pipeline's s1b
+    encodings), with its candidate evidence from ``candidates`` (s3), or
+    NULL mention and smap when it has none.
+
+    One two-level aggregate: per (url, subject_id) the support max over
+    its aliases of 1/n_ids, and the longest mention (longest-alias-wins,
+    reference el_process.py:65; an equal-length tie goes to the smaller
+    string); per url the support map (subject_id -> support) and the
+    longest of those mentions. The ambiguity cap upstream bounds each
+    map to a handful of entries, and shipping it once per pair side lets
+    score_pairs intersect maps in the JVM instead of joining the pair
+    table to an exploded supports table and re-aggregating."""
+    per_entity = candidates.groupBy("url", "subject_id").agg(
+        F.max(1.0 / F.col("n_ids")).alias("support"),
+        F.min(F.struct((-F.length("mention")).alias("neg_len"), "mention")).alias("top"),
     )
-
-
-def doc_features(
-    docs_tokens: DataFrame,
-    candidates: DataFrame,
-    embeddings: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(supports, embeddings, top mention) per url — pruned feature tables.
-
-    ``supports`` carries each doc's candidate-entity evidence as a MAP
-    column (subject_id -> support). Candidate fan-out per doc is already
-    bounded upstream (ambiguity cap at the alias join), so the map is a
-    handful of entries — and shipping it once per pair side lets
-    score_pairs compute shared-entity evidence with a JVM map
-    intersection instead of an extra pair-table join + re-aggregation
-    (two full exchanges of the pair table saved)."""
-    supports = (
-        entity_support(candidates)
-        .groupBy("url")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("subject_id", "support"))
-            ).alias("smap")
-        )
+    per_url = per_entity.groupBy("url").agg(
+        F.min("top")["mention"].alias("mention"),
+        F.map_from_entries(F.collect_list(F.struct("subject_id", "support"))).alias("smap"),
     )
-    # ``embeddings``: a precomputed (url, vec) encodings table — the
-    # reference's write-once-reuse contract (eval_biencoder_.py:305-341);
-    # the pipeline passes its checkpointed s1b_embeddings stage here so a
-    # resumed run never re-encodes. Fallbacks: the fused-s1 vec column,
-    # else encode from tokens in-plan.
-    if embeddings is None:
-        if "vec" in docs_tokens.columns:  # fused s1 already embedded each doc
-            embeddings = docs_tokens.select("url", "vec")
-        else:
-            embeddings = docs_tokens.select(
-                "url", hash_embed_udf(F.col("tokens")).alias("vec")
-            )
-    # representative mention: longest mention per doc (longest-alias-wins,
-    # reference el_process.py:65 ordering)
-    w = Window.partitionBy("url").orderBy(
-        F.length("mention").desc(), F.col("mention")
-    )
-    top_mention = (
-        candidates.select("url", "mention")
-        .distinct()
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("url", "mention")
-    )
-    return supports, embeddings, top_mention
+    return embeddings.join(per_url.hint("shuffle_hash"), "url", "left")
 
 
-def score_pairs(
-    pairs: DataFrame,
-    supports: DataFrame,
-    embeddings: DataFrame,
-    top_mention: DataFrame,
-) -> DataFrame:
+def score_pairs(pairs: DataFrame, per_url: DataFrame) -> DataFrame:
     """Fused pair scores: (url_a, url_b, ent_score, cos_score, name_score,
     score).
 
@@ -154,15 +117,8 @@ def score_pairs(
     spreads over many reducers (``skew.adaptive_salted_join``); urls
     under ``skew.HOT_THRESHOLD`` join as in a plain equi join, so uniform
     corpora pay only the map-side-combined key-frequency pass."""
-    # merge ALL per-url features once (small joins on the 1:1 url key), so
-    # the big pair table is joined exactly twice (a-side, b-side). The
-    # shared-entity evidence is a JVM map intersection over the two
-    # support maps — the round-1 design joined the pair table to an
-    # exploded supports table and re-aggregated, costing two more full
-    # exchanges of the pair table.
-    per_url = embeddings.join(top_mention.hint("shuffle_hash"), "url", "left").join(
-        supports.hint("shuffle_hash"), "url", "left"
-    )
+    # ``per_url`` (doc_features) holds every per-url feature, so the big
+    # pair table is joined exactly twice (a-side, b-side).
     fa = per_url.select(
         F.col("url").alias("url_a"), F.col("vec").alias("vec_a"),
         F.col("mention").alias("m_a"), F.col("smap").alias("smap_a"),

@@ -3,16 +3,21 @@
 Orchestrates the stage graph with resume-from-checkpoint (sources/io.py).
 Stage inventory and their shuffle profile:
 
-  extract   narrow map (mapInPandas over html)          no shuffle
-  mentions  narrow dictionary UDTF                       no shuffle
-  blocking  key explode + stop-key cap                   1 shuffle (groupBy key)
-  pairs     within-block self-join + distinct            1-2 shuffles
-  scoring   2 hash joins pair->features, each salted     shuffles on url, + 1 small
-            for hot urls (ent evidence is a JVM map      count shuffle per side
-            intersection, not a join)
-  cluster   star rounds while distinct edges exceed      edge distinct, 2 shuffles per
-            LOCAL_MAX_EDGES, then union-find on the      star round, 1 window; the
-            driver (collect, broadcast map back)         small case: no star round
+  extract    narrow map (mapInPandas over html)           no shuffle
+  mentions   narrow dictionary UDTF                       no shuffle
+  candidates mention -> alias join; n_ids is one window   1 shuffle of the KB alias
+             over the pinned KB alias table               table (partition by alias),
+             (AliasDictionary.table)                      once per dictionary
+  blocking   key explode + stop-key cap                   1 shuffle (groupBy key)
+  pairs      within-block self-join + distinct            1-2 shuffles
+  scoring    one per-url feature table (two-level         2 aggregate shuffles + 1
+             aggregate over candidates, left-joined to    join on url; then the pair
+             the encodings), then 2 hash joins            joins on url, + 1 small
+             pair->features, each salted for hot urls     count shuffle per side
+             (ent evidence is a JVM map intersection)
+  cluster    star rounds while distinct edges exceed      edge distinct, 2 shuffles per
+             LOCAL_MAX_EDGES, then union-find on the      star round, 1 window; the
+             driver (collect, broadcast map back)         small case: no star round
 
 Run as a job:  python -m entity_linking_spark.pipeline --workdir /tmp/el \
                [--n-docs 2000] [--force]
@@ -99,8 +104,9 @@ def run_pipeline(
     docs = io.run_stage(spark, workdir, "s1_extract", _extract, force)
 
     # S9 encodings table: the per-doc embedding as a FIRST-CLASS stage
-    # output (url, vec) — written once, reused by scoring and by any
-    # ANN/linkage consumer across runs (the reference precomputes and
+    # output (url, vec) — written once; scoring's per-url feature table
+    # (scoring.doc_features) is built on it, and any ANN/linkage consumer
+    # can read it across runs (the reference precomputes and
     # caches entity encodings the same way, eval_biencoder_.py:305-341).
     # The fused s1 pass already computed vec, so building it is a pure
     # projection. s1b depends ONLY on s1, so it runs on a SECOND driver
@@ -128,21 +134,14 @@ def run_pipeline(
 
     def _pairs() -> DataFrame:
         keys = blocking.blocking_keys(docs, candidates)
-        # cache_keys=False: docs/candidates are checkpointed stage
-        # snapshots, so the two scans of the keys subtree are cheap
-        # columnar re-reads — no Python stage to protect, and no reason
-        # to pin a corpus-sized key table to executor storage
-        return blocking.candidate_pairs(keys, blocking.MAX_BLOCK_SIZE, cache_keys=False)
+        return blocking.candidate_pairs(keys, blocking.MAX_BLOCK_SIZE)
 
     pairs = io.run_stage(spark, workdir, "s4_pairs", _pairs, force)
 
     embeddings = join_embeddings()
 
     def _scores() -> DataFrame:
-        supports, emb, top_mention = scoring.doc_features(
-            docs, candidates, embeddings=embeddings
-        )
-        return scoring.score_pairs(pairs, supports, emb, top_mention)
+        return scoring.score_pairs(pairs, scoring.doc_features(candidates, embeddings))
 
     scores = io.run_stage(spark, workdir, "s5_scores", _scores, force)
 

@@ -40,18 +40,28 @@ def test_detect_mentions_positions_in_normalized_text(spark):
     assert norm[m.start_pos : m.end_pos] == m.mention == "acme - corp"
 
 
-def test_candidate_entities_ambiguity(spark):
+def test_candidate_entities_ambiguity(spark, monkeypatch):
+    """n_ids counts DISTINCT entities per normalized alias: a duplicated
+    (alias, subject_id) row counts once but still yields its own
+    candidate row, and raw aliases that normalize to one share a count.
+    The ambiguity cap is read at call time, also by a dictionary whose
+    pinned table (and its n_ids) is already built."""
     mentions = spark.createDataFrame(
         [Row(url="u1", mention="foo", start_pos=0, end_pos=3)]
     )
     aliases = spark.createDataFrame(
-        [Row(alias="foo", subject_id="e1"), Row(alias="foo", subject_id="e2"),
-         Row(alias="bar", subject_id="e3")]
+        [Row(alias="foo", subject_id="e1"), Row(alias="foo", subject_id="e1"),
+         Row(alias="Foo", subject_id="e2"), Row(alias="bar", subject_id="e3")]
     )
-    out = blocking.candidate_entities(
-        mentions, blocking.AliasDictionary(aliases)
-    ).collect()
-    assert sorted((r.subject_id, r.n_ids) for r in out) == [("e1", 2), ("e2", 2)]
+    dictionary = blocking.AliasDictionary(aliases)
+    out = blocking.candidate_entities(mentions, dictionary)
+    assert dict(out.dtypes)["n_ids"] == "bigint"
+    assert sorted((r.subject_id, r.n_ids) for r in out.collect()) == [
+        ("e1", 2), ("e1", 2), ("e2", 2)
+    ]
+    monkeypatch.setattr(blocking, "MAX_CANDIDATE_AMBIGUITY", 1)
+    assert blocking.candidate_entities(mentions, dictionary).count() == 0
+    dictionary.table.unpersist()
 
 
 def test_candidate_pairs_cap_drops_stop_keys(spark):
@@ -227,7 +237,10 @@ def test_alias_dictionary_lazy_and_once(spark, monkeypatch):
     assert d.rows == 3 and d.broadcast and d.token_vocab_fits
     assert d.alias_list is d.alias_list and d.table is d.table
     assert len(calls) == 1
-    assert sorted(map(tuple, d.table.collect())) == [("acme", "e2"), ("acme corp", "e1")]
+    assert sorted(map(tuple, d.table.collect())) == [
+        ("acme", "e2", 1),
+        ("acme corp", "e1", 1),
+    ]
     monkeypatch.setattr(blocking, "ALIAS_BROADCAST_MAX_ROWS", 2)
     monkeypatch.setattr(blocking, "CANDIDATE_BROADCAST_MAX_ROWS", 2)
     assert d.alias_list is not None  # decided once, not re-read

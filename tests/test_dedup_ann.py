@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import Row, functions as F
@@ -122,6 +124,29 @@ def test_ivf_topk_coarse_sample_mod_falls_back(spark, corpus):
     )
     rows = sorted(out.collect(), key=lambda r: r.rank)
     assert rows[0].neighbor_id == 1 and rows[0].cos_sim == 1.0
+
+
+@pytest.mark.parametrize(
+    "op, key_udf",
+    [
+        (lambda c, q: dedup.embedding_near_dup_pairs(c, n_planes=4), "bucket_udf"),
+        (lambda c, q: ann.lsh_topk(c, q, k=4, n_planes=4), "bucket_udf"),
+        (lambda c, q: ann.ivf_topk(c, q, k=4, n_cells=4, n_probe=2), "cell_udf"),
+    ],
+    ids=["embedding_near_dup_pairs", "lsh_topk", "ivf_topk"],
+)
+def test_key_udf_runs_once_per_join_side(spark, corpus, op, key_udf):
+    """A join on a UDF-made key evaluates the UDF once per row of its
+    side: a deterministic key UDF is copied into the join's inferred
+    isnotnull filter, a second ArrowEvalPython over the same rows. The
+    near-dup self-join's two sides share one exchange, and the ANN joins
+    compute the key on the corpus side only, so each executed plan has
+    exactly one ArrowEvalPython node of the key UDF."""
+    queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
+    df = op(corpus, queries)
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    assert len(re.findall(rf"ArrowEvalPython \[{key_udf}\(", final)) == 1, final
 
 
 def test_lsh_recall_vs_bruteforce(spark):

@@ -132,18 +132,15 @@ def test_cosine_col_tolerates_null_and_ragged_rows(spark):
     got = [r.c for r in df.coalesce(1).select(cosine_col("a", "b").alias("c")).collect()]
     assert got == [1.0, None, None, None]
 
-    # s5: "c" has a NULL vec row, "d" no embedding row at all
+    # s5: "c" has a NULL vec row, "d" no per-url feature row at all
     pairs = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("a", "d")], "url_a string, url_b string"
     )
-    embeddings = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [1.0, 0.0]), ("c", None)], "url string, vec array<float>"
+    per_url = spark.createDataFrame(
+        [("a", [1.0, 0.0], "x", None), ("b", [1.0, 0.0], "x", None), ("c", None, "x", None)],
+        "url string, vec array<float>, mention string, smap map<string, double>",
     )
-    supports = spark.createDataFrame([], "url string, smap map<string, double>")
-    top_mention = spark.createDataFrame(
-        [("a", "x"), ("b", "x"), ("c", "x"), ("d", "x")], "url string, mention string"
-    )
-    scored = scoring.score_pairs(pairs, supports, embeddings, top_mention)
+    scored = scoring.score_pairs(pairs, per_url)
     cos = {r.url_b: r.cos_score for r in scored.collect()}
     assert cos == {"b": 1.0, "c": 0.0, "d": 0.0}
 

@@ -141,14 +141,11 @@ def test_score_pairs_auto_salting_identical_output(spark, monkeypatch):
             for u in urls
         ]
     )
-    emb = feats.select("url", "vec")
-    tm = feats.select("url", "mention")
-    sup = feats.select("url", "smap")
     cols = ["url_a", "url_b", "ent_score", "cos_score", "name_score", "score"]
 
     monkeypatch.setattr(skew, "HOT_THRESHOLD", pairs.count())
-    base = scoring.score_pairs(pairs, sup, emb, tm).select(cols).collect()
+    base = scoring.score_pairs(pairs, feats).select(cols).collect()
     monkeypatch.setattr(skew, "HOT_THRESHOLD", 20)
     assert skew.hot_keys(pairs, "url_a").count() > 0  # the salted path runs
-    salted = scoring.score_pairs(pairs, sup, emb, tm).select(cols).collect()
+    salted = scoring.score_pairs(pairs, feats).select(cols).collect()
     assert sorted(base) == sorted(salted)
