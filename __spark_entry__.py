@@ -86,10 +86,7 @@ def _doc_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.9) -> D
     # (the pipeline's checkpointed stages play this role at full scale)
     feats = extract.tokenize_and_featurize(docs).persist()
     Q._LIVE_CACHES.append(feats)
-    keys = blocking.blocking_keys(
-        feats, candidates=None, use_host=False, use_entity=False, use_minhash=True
-    )
-    pairs = blocking.candidate_pairs(keys, max_block_size=64)
+    pairs = blocking.candidate_pairs(blocking.minhash_keys(feats))
     emb = feats.select("url", "vec")
     ea = emb.select(F.col("url").alias("url_a"), F.col("vec").alias("vec_a"))
     eb = emb.select(F.col("url").alias("url_b"), F.col("vec").alias("vec_b"))

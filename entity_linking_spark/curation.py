@@ -190,13 +190,21 @@ def curate_corpus(
             F.col(id_col).alias("url"),
             F.split(F.lower(F.col(text_col)), " ").alias("tokens"),
         )
-        pairs = minhash_near_dup_pairs(toks, min_jaccard=near_dup_jaccard)
+        nd_caches = runtime.CacheScope()
+        pairs = minhash_near_dup_pairs(
+            toks, min_jaccard=near_dup_jaccard, cache_registry=nd_caches
+        )
         victims = (
             dedup_clusters(toks, pairs, "url")
             .where(F.col("url") != F.col("keeper"))
             .select(F.col("url").alias(id_col))
         )
         step("near_dup", cur.join(victims, id_col, "left_anti"))
+        if with_stats:
+            # the operator's band table has served the counted boundary
+            # above; on the lazy path it must outlive this call, like
+            # the semantic step's cache below
+            nd_caches.release()
     if semantic_k is not None:
         # opt-in 9th stage (SemDeDup, Abbas et al. 2023): embed the
         # cleaned text with the library's deterministic hash embedding

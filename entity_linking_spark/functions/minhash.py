@@ -270,9 +270,6 @@ def make_bands_udf(n_bands: int = N_BANDS):
     return bands_udf
 
 
-minhash_bands_udf = make_bands_udf(N_BANDS)
-
-
 @pandas_udf(ArrayType(LongType()))
 def minhash_signature_udf(tokens: pd.Series) -> pd.Series:
     """Full 64-perm signature (for exact MinHash-Jaccard estimation).

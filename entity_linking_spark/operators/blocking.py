@@ -1,28 +1,36 @@
 """Candidate generation: mention detection + multi-key blocking.
 
 Re-expresses the reference's three candidate generators as one blocking
-stage producing (url_a, url_b) candidate pairs:
+stage producing (url_a, url_b) candidate pairs. Each key family is built
+by one function, and ``blocking_keys`` is their union:
 
   1. alias-dictionary mentions (reference: jieba user-dict cut + alias
      lookup, entity_sort/service_main.py:110-127, dict built at
      el_process.py:19-43, longest-alias-wins ordering el_process.py:65)
      -> here a broadcast longest-match-first dictionary matcher run as a
      dictionary-driven UDTF (mapInPandas, one doc row -> many mention
-     rows), then an equi hash join mentions.alias == aliases.alias.
-  2. normalized-URL-host key (SURVEY §2.7 F11 analog for web pages).
+     rows), then an equi hash join mentions.alias == aliases.alias;
+     ``entity_keys`` turns the low-ambiguity candidates into ent: keys.
+  2. normalized-URL-host key (SURVEY §2.7 F11 analog for web pages),
+     ``host_keys``.
   3. MinHash-LSH bands over text shingles (replaces Solr BM25 J5 and
-     FAISS ANN J7: candidates by similarity, re-scored exactly later).
+     FAISS ANN J7: candidates by similarity, re-scored exactly later),
+     ``minhash_keys``: the only code that builds the mh:<band>:<hash>
+     key, used by the pipeline's s4, the flagship and
+     ``dedup.minhash_near_dup_pairs``. It reads a precomputed ``bands``
+     column (made by the fused featurize pass, or by dedup's bands UDF)
+     and runs no Python itself.
 
 Skew handling (the reference has none — SURVEY §4 "hot-key behavior"):
-  - blocking keys whose document frequency exceeds ``max_block_size`` are
+  - blocking keys whose document frequency exceeds ``MAX_BLOCK_SIZE`` are
     dropped entirely (stop-key removal: a key shared by thousands of docs
     carries no linkage information, exactly like the reference's
     stop-word filter el_main.py:534-537);
   - pair generation within a block is one equi self-join on the
     xxhash64 of the key, after a broadcast anti-join has removed the
-    over-cap keys map-side: no kept block has more than max_block_size
+    over-cap keys map-side: no kept block has more than MAX_BLOCK_SIZE
     members, so the join's per-key fan-out is bounded by
-    max_block_size² (``candidate_pairs``).
+    MAX_BLOCK_SIZE² (``candidate_pairs``).
 
 One alias dictionary: ``AliasDictionary`` is the only code that
 normalizes the KB alias table, sizes it and routes it to the trie or the
@@ -51,7 +59,6 @@ from pyspark.sql.types import (
 )
 
 from entity_linking_spark import runtime
-from entity_linking_spark.functions.minhash import minhash_bands_udf
 from entity_linking_spark.functions.normalize import normalize_text
 
 MAX_BLOCK_SIZE = 64
@@ -557,83 +564,73 @@ def candidate_entities(mentions: DataFrame, dictionary: AliasDictionary) -> Data
     )
 
 
-def blocking_keys(
-    docs: DataFrame,
-    candidates: DataFrame,
-    text_tokens_col: str = "tokens",
-    use_host: bool = True,
-    use_entity: bool = True,
-    use_minhash: bool = True,
-) -> DataFrame:
-    """Union of blocking keys: (url, key) rows.
-
-    key spaces are prefixed (host:/ent:/mh:<band>) so they never collide.
-
-    ent: keys are emitted only for candidates supported by a low-ambiguity
-    alias (n_ids <= MAX_ALIAS_AMBIGUITY). A hot alias shared by dozens of
-    entities (the reference's stop-word problem, el_main.py:534-537) would
-    otherwise inject every doc mentioning it into every one of those
-    entities' blocks, blowing them past the size cap and destroying the
-    discriminative pairs inside — the skew would also dominate the
-    self-join at scale.
-    """
-    parts = []
-    if use_host:
-        # try_parse_url, NOT parse_url: Spark 4's parse_url THROWS on an
-        # invalid URL (INVALID_URL), so one malformed crawl url would
-        # kill the whole blocking stage; try_ returns NULL and the
-        # isNotNull filter drops the row from host-blocking (it still
-        # blocks via its other keys) — P2's drop-unusable-rows semantics
-        parts.append(
-            docs.select(
-                "url",
-                F.concat(
-                    F.lit("host:"), F.try_parse_url("url", F.lit("HOST"))
-                ).alias("key"),
-            ).where(F.col("key").isNotNull())
-        )
-    if use_entity:
-        parts.append(
-            candidates.where(F.col("n_ids") <= MAX_ALIAS_AMBIGUITY)
-            .select("url", F.concat(F.lit("ent:"), F.col("subject_id")).alias("key"))
-            .distinct()
-        )
-    if use_minhash:
-        # use a precomputed bands column when the fused extract stage
-        # provides one (no extra Python pass); else derive from tokens
-        if "bands" in docs.columns:
-            bands = docs.select("url", "bands")
-        else:
-            bands = docs.select(
-                "url", minhash_bands_udf(F.col(text_tokens_col)).alias("bands")
-            )
-        parts.append(
-            bands.select("url", F.posexplode("bands").alias("band_idx", "band_hash"))
-            .select(
-                "url",
-                F.concat_ws(":", F.lit("mh"), "band_idx", "band_hash").alias("key"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def host_keys(docs: DataFrame) -> DataFrame:
+    """host:<host> keys, (url, key) rows; urls without a parseable host
+    emit none."""
+    # try_parse_url, NOT parse_url: Spark 4's parse_url THROWS on an
+    # invalid URL (INVALID_URL), so one malformed crawl url would kill
+    # the whole blocking stage; try_ returns NULL and the isNotNull
+    # filter drops the row from host-blocking (it still blocks via its
+    # other keys) — P2's drop-unusable-rows semantics
+    return docs.select(
+        "url",
+        F.concat(F.lit("host:"), F.try_parse_url("url", F.lit("HOST"))).alias("key"),
+    ).where(F.col("key").isNotNull())
 
 
-def candidate_pairs(keys: DataFrame, max_block_size: int = MAX_BLOCK_SIZE) -> DataFrame:
+def entity_keys(candidates: DataFrame) -> DataFrame:
+    """ent:<subject_id> keys, (url, key) rows, one per distinct pair.
+
+    Emitted only for candidates supported by a low-ambiguity alias
+    (n_ids <= MAX_ALIAS_AMBIGUITY). A hot alias shared by dozens of
+    entities (the reference's stop-word problem, el_main.py:534-537)
+    would otherwise inject every doc mentioning it into every one of
+    those entities' blocks, blowing them past the size cap and
+    destroying the discriminative pairs inside — the skew would also
+    dominate the self-join at scale."""
+    return (
+        candidates.where(F.col("n_ids") <= MAX_ALIAS_AMBIGUITY)
+        .select("url", F.concat(F.lit("ent:"), F.col("subject_id")).alias("key"))
+        .distinct()
+    )
+
+
+def minhash_keys(df: DataFrame) -> DataFrame:
+    """mh:<band_idx>:<band_hash> keys from ``(url, bands)``, one per
+    band. The band index keeps equal hashes in different bands apart."""
+    return (
+        df.select("url", "bands")
+        .select("url", F.posexplode("bands").alias("band_idx", "band_hash"))
+        .select("url", F.concat_ws(":", F.lit("mh"), "band_idx", "band_hash").alias("key"))
+    )
+
+
+def blocking_keys(docs: DataFrame, candidates: DataFrame) -> DataFrame:
+    """s4's keys: the union of ``host_keys(docs)``, ``entity_keys(candidates)``
+    and ``minhash_keys(docs)``, in that order, as (url, key) rows. The
+    host:/ent:/mh: prefixes keep the key spaces from colliding."""
+    return (
+        host_keys(docs)
+        .unionByName(entity_keys(candidates))
+        .unionByName(minhash_keys(docs))
+    )
+
+
+def candidate_pairs(keys: DataFrame) -> DataFrame:
     """Within-block pair generation with stop-key removal.
 
-    Blocks larger than ``max_block_size`` are dropped (non-discriminative
-    keys: hot aliases, boilerplate LSH bands, mega-hosts). The self-join
-    is an equi join on the key; with capped blocks the per-key output is
-    bounded, and the final distinct dedups pairs that co-occur under
-    several keys.
+    Blocks larger than ``MAX_BLOCK_SIZE`` (read at call time) are dropped
+    (non-discriminative keys: hot aliases, boilerplate LSH bands,
+    mega-hosts). The self-join is an equi join on the key; with capped
+    blocks the per-key output is bounded, and the final distinct dedups
+    pairs that co-occur under several keys.
 
     The stop-list aggregation and the anti-join/self-join branches each
-    scan the ``keys`` subtree, so a caller whose keys embed a Python
-    stage (the LSH bands pandas UDF in ``dedup.minhash_near_dup_pairs``)
-    persists them first; keys read from a checkpointed stage snapshot or
-    a persisted table (the pipeline, the flagship) are cheap to rescan.
+    scan the ``keys`` subtree, and this function pins nothing: each
+    caller hands it keys that are cheap to rescan. The pipeline's s4
+    reads the s1 and s3 stage snapshots, the flagship reads its pinned
+    ``tokenize_and_featurize`` output, and
+    ``dedup.minhash_near_dup_pairs`` reads its pinned band table.
     """
     # Stop keys are found by a two-phase groupBy().count() — partial
     # (map-side) aggregation collapses a hot key to one partial row per
@@ -664,7 +661,7 @@ def candidate_pairs(keys: DataFrame, max_block_size: int = MAX_BLOCK_SIZE) -> Da
     stop = (
         hashed.groupBy("key")
         .agg(F.count("*").alias("block_size"))
-        .where(F.col("block_size") > max_block_size)
+        .where(F.col("block_size") > MAX_BLOCK_SIZE)
         .select("key")
     )
     kept = hashed.join(F.broadcast(stop), "key", "left_anti")

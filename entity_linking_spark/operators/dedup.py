@@ -159,9 +159,7 @@ def shingle_set_col(tokens_col: str, k: int = 3):
 def minhash_near_dup_pairs(
     docs_tokens: DataFrame,
     id_col: str = "url",
-    tokens_col: str = "tokens",
     min_jaccard: float = 0.7,
-    max_block_size: int = 64,
     n_bands: int | None = None,
     verify: str = "est",
     cache_registry: runtime.CacheScope | None = None,
@@ -179,14 +177,16 @@ def minhash_near_dup_pairs(
 
     ``n_bands`` tunes candidate recall (defaults to the module's 16x4
     banding; 32x2 pushes the miss probability at j>=0.7 below 1e-9).
+    Candidates come from ``blocking.minhash_keys`` over the pinned band
+    table and ``blocking.candidate_pairs`` (its ``MAX_BLOCK_SIZE`` cap).
+    The band table is appended to ``cache_registry``: release it once
+    the result has been materialized.
     """
     from pyspark import StorageLevel
 
     from entity_linking_spark.functions.minhash import N_BANDS, make_bands_udf
 
-    base = docs_tokens.select(
-        F.col(id_col).alias("url"), F.col(tokens_col).alias("tokens")
-    )
+    base = docs_tokens.select(F.col(id_col).alias("url"), "tokens")
     bands_udf = make_bands_udf(n_bands or N_BANDS)
     # pinned: candidate_pairs scans its keys twice (stop list, self-join),
     # and each unpinned scan would rerun the bands UDF over the corpus
@@ -195,13 +195,7 @@ def minhash_near_dup_pairs(
     )
     if cache_registry is not None:
         cache_registry.append(bands)
-    keys = bands.select(
-        "url", F.posexplode("bands").alias("band_idx", "band_hash")
-    ).select(
-        "url",
-        F.concat_ws(":", F.lit("mh"), "band_idx", "band_hash").alias("key"),
-    )
-    pairs = blocking.candidate_pairs(keys, max_block_size=max_block_size)
+    pairs = blocking.candidate_pairs(blocking.minhash_keys(bands))
     if verify == "exact":
         # shingles are hashed to int64 (JVM xxhash64) BEFORE the pair
         # join: the set semantics — and hence the exact Jaccard value —

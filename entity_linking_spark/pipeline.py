@@ -133,8 +133,7 @@ def run_pipeline(
     caches.release()
 
     def _pairs() -> DataFrame:
-        keys = blocking.blocking_keys(docs, candidates)
-        return blocking.candidate_pairs(keys, blocking.MAX_BLOCK_SIZE)
+        return blocking.candidate_pairs(blocking.blocking_keys(docs, candidates))
 
     pairs = io.run_stage(spark, workdir, "s4_pairs", _pairs, force)
 

@@ -3,9 +3,14 @@
 The reference pickles every stage's output and skips recompute when the
 file exists (process_wiki_extractor_output.py:33-35, enrich_data.py:27-29
 — SURVEY §2.1 S7). Here each stage writes a columnar snapshot plus a
-_STAGE.json sidecar carrying row counts and per-partition lineage, and a
-rerun skips any stage whose snapshot is complete. Kill-and-rerun
-therefore resumes mid-pipeline — the north-rule resumability requirement.
+_STAGE.json sidecar carrying row counts, per-partition lineage, the
+format and the schema, written once per stage; a rerun skips any stage
+whose snapshot is complete. Kill-and-rerun therefore resumes
+mid-pipeline — the north-rule resumability requirement.
+
+Reads take the format and the schema from the sidecar, so reading a
+stage back runs no Spark job (inferring the schema from the files would
+run one per read).
 
 The snapshot FORMAT is pluggable via SPARK_GRAFT_TABLE_FORMAT: parquet
 (default) and orc are exercised in this container's test suite; on a
@@ -26,6 +31,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import DataType
 
 from entity_linking_spark import runtime
 
@@ -34,10 +40,10 @@ _META = "_STAGE.json"
 
 def stage_format() -> str:
     """Stage snapshot format for NEW writes (read per call so harnesses
-    can switch). Reads never trust this alone: write_stage records the
-    format in the sidecar and read_stage prefers the recorded value, so
-    resuming a workdir under a different SPARK_GRAFT_TABLE_FORMAT reads
-    existing snapshots with the DataSource that actually wrote them."""
+    can switch). Reads never use it: write_stage records the format in
+    the sidecar and read_stage uses the recorded value, so resuming a
+    workdir under a different SPARK_GRAFT_TABLE_FORMAT reads existing
+    snapshots with the DataSource that actually wrote them."""
     return os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
 
 
@@ -94,15 +100,14 @@ def stage_complete(root: str, name: str) -> bool:
     return _exists(os.path.join(stage_path(root, name), _META))
 
 
-def write_stage(df: DataFrame, root: str, name: str, partition_by: list[str] | None = None) -> dict:
-    """Materialize a stage snapshot + lineage metrics sidecar."""
+def write_stage(df: DataFrame, root: str, name: str, build_seconds: float | None = None) -> dict:
+    """Materialize a stage snapshot + lineage metrics sidecar, written
+    once. ``build_seconds`` (how long building ``df`` took) is recorded
+    when given."""
     path = stage_path(root, name)
     t0 = time.time()
     fmt = stage_format()
-    writer = df.write.mode("overwrite").format(fmt)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    df.write.mode("overwrite").format(fmt).save(path)
     spark = df.sparkSession
     try:
         # per-file rows from the parquet footers, no Spark job
@@ -126,21 +131,24 @@ def write_stage(df: DataFrame, root: str, name: str, partition_by: list[str] | N
         "partitions": per_partition,
         "schema": df.schema.simpleString(),
     }
+    if build_seconds is not None:
+        meta["build_seconds"] = build_seconds
     _sidecar_write(os.path.join(path, _META), meta)
     return meta
 
 
 def read_stage(spark: SparkSession, root: str, name: str) -> DataFrame:
-    # prefer the format recorded at write time: a workdir written under
-    # one SPARK_GRAFT_TABLE_FORMAT must resume correctly even if the
-    # env var has since changed (sidecars from before the format seam
-    # carry no "format" key and fall back to the current setting)
-    fmt = stage_format()
-    try:
-        fmt = stage_meta(root, name).get("format", fmt)
-    except (OSError, json.JSONDecodeError):
-        pass
-    return spark.read.format(fmt).load(stage_path(root, name))
+    """The stage snapshot, read with the format and schema its sidecar
+    recorded at write time: no schema-inference job, and a workdir
+    written under one SPARK_GRAFT_TABLE_FORMAT resumes under another.
+    The schema is the ``simpleString`` form, which ``DataType.fromDDL``
+    parses and ``DataFrameReader.schema(str)`` does not."""
+    meta = stage_meta(root, name)
+    return (
+        spark.read.format(meta["format"])
+        .schema(DataType.fromDDL(meta["schema"]))
+        .load(stage_path(root, name))
+    )
 
 
 def stage_meta(root: str, name: str) -> dict:
@@ -156,7 +164,6 @@ def run_stage(
     name: str,
     build: Callable[[], DataFrame],
     force: bool = False,
-    partition_by: list[str] | None = None,
 ) -> DataFrame:
     """Skip-if-exists stage runner (the resume-from-checkpoint primitive).
     The sidecar also records ``build_seconds``: the ``build()`` call,
@@ -165,10 +172,5 @@ def run_stage(
         return read_stage(spark, root, name)
     t0 = time.time()
     df = build()
-    build_seconds = round(time.time() - t0, 3)
-    meta = write_stage(df, root, name, partition_by)
-    _sidecar_write(
-        os.path.join(stage_path(root, name), _META),
-        {**meta, "build_seconds": build_seconds},
-    )
+    write_stage(df, root, name, round(time.time() - t0, 3))
     return read_stage(spark, root, name)

@@ -64,34 +64,44 @@ def test_candidate_entities_ambiguity(spark, monkeypatch):
     dictionary.table.unpersist()
 
 
-def test_candidate_pairs_cap_drops_stop_keys(spark):
+def test_candidate_pairs_cap_drops_stop_keys(spark, monkeypatch):
+    monkeypatch.setattr(blocking, "MAX_BLOCK_SIZE", 5)
     rows = [Row(url=f"u{i}", key="hot") for i in range(10)]
     rows += [Row(url="a", key="cold"), Row(url="b", key="cold")]
     keys = spark.createDataFrame(rows)
-    out = blocking.candidate_pairs(keys, max_block_size=5).collect()
+    out = blocking.candidate_pairs(keys).collect()
     assert [(r.url_a, r.url_b) for r in out] == [("a", "b")]
 
 
-def test_candidate_pairs_dedup_across_keys(spark):
+def test_candidate_pairs_dedup_across_keys(spark, monkeypatch):
+    monkeypatch.setattr(blocking, "MAX_BLOCK_SIZE", 5)
     keys = spark.createDataFrame(
         [Row(url="a", key="k1"), Row(url="b", key="k1"),
          Row(url="a", key="k2"), Row(url="b", key="k2")]
     )
-    out = blocking.candidate_pairs(keys, max_block_size=5).collect()
+    out = blocking.candidate_pairs(keys).collect()
     assert len(out) == 1
+
+
+def _with_bands(spark, rows):
+    """(url, tokens, bands) rows, the bands folded from each token list
+    exactly as the featurize pass does."""
+    from entity_linking_spark.functions.minhash import (
+        bands_from_signatures,
+        minhash_signatures_batch,
+    )
+
+    bands = bands_from_signatures(minhash_signatures_batch([t for _, t in rows]))
+    return spark.createDataFrame(
+        [Row(url=u, tokens=t, bands=b) for (u, t), b in zip(rows, bands)],
+        "url string, tokens array<string>, bands array<bigint>",
+    )
 
 
 def test_minhash_bands_identical_texts_collide(spark):
     toks = "the quick brown fox jumps over the lazy dog".split()
-    df = spark.createDataFrame([Row(url="a", tokens=toks), Row(url="b", tokens=toks)])
-    keys = blocking.blocking_keys(
-        df.withColumnRenamed("tokens", "tokens"),
-        candidates=None,
-        use_host=False,
-        use_entity=False,
-        use_minhash=True,
-    )
-    pairs = blocking.candidate_pairs(keys).collect()
+    df = _with_bands(spark, [("a", toks), ("b", toks)])
+    pairs = blocking.candidate_pairs(blocking.minhash_keys(df)).collect()
     assert [(r.url_a, r.url_b) for r in pairs] == [("a", "b")]
 
 
@@ -100,17 +110,16 @@ def test_blocking_keys_drop_null_host_keys(spark):
     parseable host yield NO host: key (parse_url -> NULL, dropped by the
     isNotNull filter) instead of a null-key block that would union every
     malformed-url doc into one giant bogus blocking group."""
-    from pyspark.sql import Row
-
-    docs = spark.createDataFrame(
+    docs = _with_bands(
+        spark,
         [
-            Row(url="https://a.example.org/x", tokens=["t1", "t2", "t3"]),
-            Row(url="not a url at all", tokens=["t4", "t5", "t6"]),
-        ]
+            ("https://a.example.org/x", ["t1", "t2", "t3"]),
+            ("not a url at all", ["t4", "t5", "t6"]),
+        ],
     )
-    keys = blocking.blocking_keys(
-        docs, candidates=None, use_host=True, use_entity=False, use_minhash=True
-    ).collect()
+    keys = (
+        blocking.host_keys(docs).unionByName(blocking.minhash_keys(docs)).collect()
+    )
     host_keys = [r for r in keys if r.key.startswith("host:")]
     assert [r.url for r in host_keys] == ["https://a.example.org/x"]
     assert all(r.key is not None for r in keys)
@@ -328,17 +337,16 @@ def test_p2_malformed_url_drops_from_host_keys_only(spark):
     blocking stage (Spark 4 parse_url THROWS; we use try_parse_url) —
     the row silently loses its host: key but still blocks via its other
     keys."""
-    from pyspark.sql import Row
-
-    docs = spark.createDataFrame(
+    docs = _with_bands(
+        spark,
         [
-            Row(url="https://ok.example.org/p/1", tokens=["alpha", "beta"]),
-            Row(url="http://bad url with spaces", tokens=["alpha", "beta"]),
-        ]
+            ("https://ok.example.org/p/1", ["alpha", "beta"]),
+            ("http://bad url with spaces", ["alpha", "beta"]),
+        ],
     )
-    keys = blocking.blocking_keys(
-        docs, candidates=None, use_host=True, use_entity=False, use_minhash=True
-    ).collect()
+    keys = (
+        blocking.host_keys(docs).unionByName(blocking.minhash_keys(docs)).collect()
+    )
     host_keys = {r.url for r in keys if r.key.startswith("host:")}
     mh_keys = {r.url for r in keys if r.key.startswith("mh:")}
     assert host_keys == {"https://ok.example.org/p/1"}

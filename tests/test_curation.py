@@ -168,3 +168,21 @@ def test_curate_corpus_semantic_stage(spark):
     assert ids - {10, 11} == base_ids - {10, 11}
     assert by_stage["semantic_dedup"]["rows_in"] - by_stage[
         "semantic_dedup"]["rows_out"] == 1
+
+
+def test_curate_corpus_releases_near_dup_bands(spark):
+    """With stats, the near-dup step releases the band table its MinHash
+    operator pinned once the step's boundary is counted: no cached RDD
+    built by the bands UDF is left."""
+    from conftest import SF_DIR
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
+    spark.catalog.clearCache()
+    _, stats = curate_corpus(docs, min_words=5, with_stats=True)
+    assert "near_dup" in [s["stage"] for s in stats]
+    names = [
+        str(rdd.name())
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values()
+    ]
+    assert names and not [n for n in names if "bands_udf" in n]
+    spark.catalog.clearCache()

@@ -191,6 +191,67 @@ def test_write_stage_empty_output(spark, tmp_path):
     assert io.stage_complete(str(tmp_path), "s_empty")
 
 
+def _jobs_submitted(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_read_stage_runs_no_job(spark, tmp_path, monkeypatch):
+    """read_stage takes format and schema from the sidecar, so reading a
+    stage back submits no Spark job (schema inference would), for
+    parquet, for ORC, and for a sidecar written before this reader;
+    nested types round-trip through the sidecar's simpleString schema,
+    and the schema equals the inferred one."""
+    root = str(tmp_path)
+
+    def nested():
+        return spark.range(5).selectExpr(
+            "id",
+            "cast(id AS string) AS url",
+            "array(cast(id AS string), 'x') AS tokens",
+            "map('a', cast(id AS double)) AS smap",
+            "named_struct('n', id, 'v', array(cast(id AS float))) AS rec",
+        )
+
+    io.run_stage(spark, root, "s_pq", nested)
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "orc")
+    io.run_stage(spark, root, "s_orc", nested)
+    monkeypatch.delenv("SPARK_GRAFT_TABLE_FORMAT")
+    # a workdir written before this reader: data plus a hand-written
+    # sidecar with the fields (and simpleString schema) it recorded
+    old = io.stage_path(root, "s_old")
+    nested().write.parquet(old)
+    with open(os.path.join(old, "_STAGE.json"), "w") as f:
+        json.dump({"stage": "s_old", "format": "parquet", "rows": 5, "seconds": 0.1,
+                   "partitions": {}, "schema": nested().schema.simpleString(),
+                   "build_seconds": 0.1}, f)
+    for name, fmt in (("s_pq", "parquet"), ("s_orc", "orc"), ("s_old", "parquet")):
+        meta = io.stage_meta(root, name)
+        assert meta["format"] == fmt
+        assert meta["schema"] == nested().schema.simpleString()
+        before = _jobs_submitted(spark)
+        back = io.read_stage(spark, root, name)
+        assert _jobs_submitted(spark) == before, name
+        inferred = spark.read.format(fmt).load(io.stage_path(root, name)).schema
+        assert back.schema == inferred, name
+        assert sorted(r.id for r in back.select("id").collect()) == list(range(5))
+
+
+def test_run_stage_writes_sidecar_once(spark, tmp_path, monkeypatch):
+    """One stage write makes one sidecar write, build_seconds included."""
+    writes = []
+    sidecar_write = io._sidecar_write
+
+    def counted(path, meta):
+        writes.append(meta)
+        sidecar_write(path, meta)
+
+    monkeypatch.setattr(io, "_sidecar_write", counted)
+    io.run_stage(spark, str(tmp_path), "s_once", lambda: spark.range(3))
+    assert len(writes) == 1
+    assert "build_seconds" in writes[0]
+    assert io.stage_meta(str(tmp_path), "s_once") == writes[0]
+
+
 def test_stage_format_seam_orc(spark, tmp_path, monkeypatch):
     """SPARK_GRAFT_TABLE_FORMAT routes every stage save/load through the
     named DataSource. ORC is the second real columnar format in this

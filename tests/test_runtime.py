@@ -16,6 +16,7 @@ from entity_linking_spark.operators import ann
 
 SF_DIR = entry.SF0001
 SF01_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+TOOLS = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 
 
 def _aliases(spark, rows):
@@ -160,6 +161,39 @@ def test_lm_gate_answer_survives_the_next_query_releasing_its_pins(spark):
     assert pinned and not pinned & _persisted(spark)
     assert sorted(map(tuple, lm_df.collect())) == want_lm
     assert sorted(map(tuple, follower_df.collect())) == want_follower
+
+
+def _pinning_entries() -> list[str]:
+    """Registered queries whose build pins frames in the live-cache
+    scope (their source names it, directly or as a cache_registry)."""
+    import inspect
+
+    return [
+        name
+        for name, fn in entry.queries().items()
+        if "_LIVE_CACHES" in inspect.getsource(inspect.unwrap(fn))
+    ]
+
+
+@pytest.mark.parametrize("name", [*_pinning_entries(), "entry"])
+def test_answer_survives_a_cleared_cache(spark, name):
+    """Every entry that pins frames gives the same value hash when all
+    caches are dropped between two collects of the same DataFrame."""
+    if TOOLS not in sys.path:
+        sys.path.insert(0, TOOLS)
+    from oracle_check import value_hash
+
+    df = entry.entry(spark) if name == "entry" else entry.queries()[name](spark, SF_DIR)
+    first = value_hash(df.columns, [tuple(r) for r in df.collect()])
+    spark.catalog.clearCache()
+    assert value_hash(df.columns, [tuple(r) for r in df.collect()]) == first
+    spark.catalog.clearCache()
+
+
+def test_pinning_entries_are_covered():
+    """The source scan above finds every entry known to pin frames."""
+    assert {"semantic_dedup", "lm_perplexity", "dedup_minhash_pairs",
+            "mention_detect_greedy", "minhash_near_dup_clusters"} <= set(_pinning_entries())
 
 
 def test_global_offsets_is_the_exact_prefix_sum(spark):
