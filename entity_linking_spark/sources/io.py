@@ -8,9 +8,11 @@ format and the schema, written once per stage; a rerun skips any stage
 whose snapshot is complete. Kill-and-rerun therefore resumes
 mid-pipeline — the north-rule resumability requirement.
 
-Reads take the format and the schema from the sidecar, so reading a
-stage back runs no Spark job (inferring the schema from the files would
-run one per read).
+Reads take the format from the sidecar. For the file formats (parquet,
+orc) they also take the schema from it, so reading a stage back runs no
+Spark job (inferring the schema from the files would run one per read);
+other formats load without a user schema, since a table format such as
+Iceberg reads its schema from table metadata and rejects a given one.
 
 The snapshot FORMAT is pluggable via SPARK_GRAFT_TABLE_FORMAT: parquet
 (default) and orc are exercised in this container's test suite; on a
@@ -31,7 +33,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 from entity_linking_spark import runtime
 
@@ -129,7 +131,7 @@ def write_stage(df: DataFrame, root: str, name: str, build_seconds: float | None
         "rows": sum(per_partition.values()),
         "seconds": round(time.time() - t0, 3),
         "partitions": per_partition,
-        "schema": df.schema.simpleString(),
+        "schema": df.schema.json(),
     }
     if build_seconds is not None:
         meta["build_seconds"] = build_seconds
@@ -138,17 +140,25 @@ def write_stage(df: DataFrame, root: str, name: str, build_seconds: float | None
 
 
 def read_stage(spark: SparkSession, root: str, name: str) -> DataFrame:
-    """The stage snapshot, read with the format and schema its sidecar
-    recorded at write time: no schema-inference job, and a workdir
-    written under one SPARK_GRAFT_TABLE_FORMAT resumes under another.
-    The schema is the ``simpleString`` form, which ``DataType.fromDDL``
-    parses and ``DataFrameReader.schema(str)`` does not."""
+    """The stage snapshot, read with the format its sidecar recorded at
+    write time, so a workdir written under one SPARK_GRAFT_TABLE_FORMAT
+    resumes under another. Parquet and orc snapshots are also given the
+    recorded schema, so the read runs no schema-inference job; other
+    formats resolve their own schema."""
     meta = stage_meta(root, name)
-    return (
-        spark.read.format(meta["format"])
-        .schema(DataType.fromDDL(meta["schema"]))
-        .load(stage_path(root, name))
-    )
+    reader = spark.read.format(meta["format"])
+    if meta["format"] in ("parquet", "orc"):
+        reader = reader.schema(_schema(meta["schema"]))
+    return reader.load(stage_path(root, name))
+
+
+def _schema(recorded: str) -> DataType:
+    """The sidecar's schema: JSON, which round-trips any field name, or
+    the ``simpleString`` form that older sidecars carry (``fromDDL``
+    parses it; ``DataFrameReader.schema(str)`` does not)."""
+    if recorded.startswith("{"):
+        return StructType.fromJson(json.loads(recorded))
+    return DataType.fromDDL(recorded)
 
 
 def stage_meta(root: str, name: str) -> dict:

@@ -170,19 +170,28 @@ def test_curate_corpus_semantic_stage(spark):
         "semantic_dedup"]["rows_out"] == 1
 
 
-def test_curate_corpus_releases_near_dup_bands(spark):
+def test_curate_corpus_releases_near_dup_bands(spark, monkeypatch):
     """With stats, the near-dup step releases the band table its MinHash
-    operator pinned once the step's boundary is counted: no cached RDD
-    built by the bands UDF is left."""
+    operator pinned once the step's boundary is counted; on the lazy path
+    the pin outlives the call, since the returned frame still reads it."""
     from conftest import SF_DIR
 
+    from entity_linking_spark import runtime
+
+    pinned = []
+
+    class RecordedScope(runtime.CacheScope):
+        def append(self, df):
+            pinned.append(df)
+            super().append(df)
+
+    monkeypatch.setattr(runtime, "CacheScope", RecordedScope)
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id", "text")
-    spark.catalog.clearCache()
-    _, stats = curate_corpus(docs, min_words=5, with_stats=True)
-    assert "near_dup" in [s["stage"] for s in stats]
-    names = [
-        str(rdd.name())
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values()
-    ]
-    assert names and not [n for n in names if "bands_udf" in n]
+    for with_stats in (True, False):
+        pinned.clear()
+        spark.catalog.clearCache()
+        curate_corpus(docs, min_words=5, with_stats=with_stats)
+        assert pinned, with_stats
+        held = {df.storageLevel.useMemory or df.storageLevel.useDisk for df in pinned}
+        assert held == {not with_stats}, with_stats
     spark.catalog.clearCache()

