@@ -69,6 +69,12 @@ from entity_linking_spark.operators.quality import (
     repetition_signals,
 )
 
+# repetition gate: a page is dropped when its most frequent 2-gram or
+# 3-gram, or its duplicated 5-grams, cover more than this TOKEN fraction
+_MAX_TOP2_FRAC = 0.20
+_MAX_TOP3_FRAC = 0.18
+_MAX_DUP5_FRAC = 0.30
+
 
 def curate_corpus(
     docs: DataFrame,
@@ -77,19 +83,13 @@ def curate_corpus(
     url_col: str | None = None,
     benchmark: DataFrame | None = None,
     c4: bool = True,
-    c4_min_kept_lines: int = 3,
     gopher_quality: bool = True,
     min_words: int = 50,
     gopher_repetition: bool = True,
-    max_top2_frac: float = 0.20,
-    max_top3_frac: float = 0.18,
-    max_dup5_frac: float = 0.30,
     near_dup: bool = True,
     near_dup_jaccard: float = 0.8,
     semantic_k: int | None = None,
     semantic_min_cosine: float = 0.95,
-    semantic_max_cluster: int = 4096,
-    decontaminate_window: int = 13,
     redact: bool = True,
     with_stats: bool = True,
 ) -> tuple[DataFrame, list[dict]]:
@@ -105,9 +105,14 @@ def curate_corpus(
     skips decontamination, ``semantic_k=None`` skips the opt-in
     SemDeDup stage — set it to the cluster budget to enable, numeric
     ``id_col`` required there, the booleans gate the rest) let callers
-    run any prefix/subset; thresholds default to the Gopher paper values
-    where one exists (repetition fractions are this library's
-    documented TOKEN-fraction analogs — see
+    run any prefix/subset. The thresholds other than ``min_words``,
+    ``near_dup_jaccard`` and ``semantic_min_cosine`` are fixed: C4
+    cleaning drops pages left with fewer than 3 lines, decontamination
+    matches 13-token windows, SemDeDup skips clusters of more than
+    4,096 documents, and the repetition gate drops pages whose
+    top-2-gram, top-3-gram or duplicated-5-gram TOKEN fraction exceeds
+    0.20, 0.18 or 0.30 (the Gopher paper's limits where one exists, on
+    this library's documented token-fraction analogs — see
     operators/quality.repetition_signals).
 
     C4 cleaning REWRITES the text column (kept lines only), so later
@@ -139,8 +144,7 @@ def curate_corpus(
         step(
             "c4_line_clean",
             c4_line_clean(
-                cur, text_col, id_col,
-                min_kept_lines=c4_min_kept_lines, mode="remove",
+                cur, text_col, id_col, min_kept_lines=3, mode="remove"
             ),
         )
     if gopher_quality:
@@ -162,9 +166,9 @@ def curate_corpus(
     if gopher_repetition:
         sig = repetition_signals(cur, text_col, id_col)
         ok = (
-            (F.col("top2_frac") <= max_top2_frac)
-            & (F.col("top3_frac") <= max_top3_frac)
-            & (F.col("dup5_frac") <= max_dup5_frac)
+            (F.col("top2_frac") <= _MAX_TOP2_FRAC)
+            & (F.col("top3_frac") <= _MAX_TOP3_FRAC)
+            & (F.col("dup5_frac") <= _MAX_DUP5_FRAC)
         )
         # null signals (null text) count as BAD — parity with the
         # previous keep-the-ok-set semi-join, where nulls never matched
@@ -220,7 +224,7 @@ def curate_corpus(
         # its k exemplars at plan-construction time, so `cur` is
         # persisted here first and the collect replays cached rows,
         # not the upstream chain; (b) clusters larger than
-        # semantic_max_cluster are SKIPPED, not deduped (absent from
+        # 4,096 members are SKIPPED, not deduped (absent from
         # semantic_dedup's output -> never victims -> kept): size
         # semantic_k so expected cluster size N/k sits well under the
         # cap, or a degenerate boilerplate cluster silently keeps its
@@ -242,7 +246,7 @@ def curate_corpus(
                 emb,
                 k=semantic_k,
                 min_cosine=semantic_min_cosine,
-                max_cluster_size=semantic_max_cluster,
+                max_cluster_size=4096,
                 cache_registry=sem_caches,
             )
             .where(~F.col("keep"))
@@ -261,8 +265,7 @@ def curate_corpus(
         step(
             "decontaminate",
             decontaminate(
-                cur, benchmark, text_col, id_col,
-                window=decontaminate_window, mode="remove",
+                cur, benchmark, text_col, id_col, window=13, mode="remove"
             ),
         )
     if redact:

@@ -28,7 +28,6 @@ from pyspark.sql.types import ArrayType, LongType
 
 N_PERM = 64
 N_BANDS = 16
-ROWS_PER_BAND = N_PERM // N_BANDS
 SHINGLE_K = 3
 _EMPTY_SENTINEL = (1 << 64) - 1
 
@@ -236,12 +235,9 @@ def band_hashes_matrix(sigs: np.ndarray, n_bands: int = N_BANDS) -> np.ndarray:
     return _splitmix64(comb).view(np.int64)
 
 
-def band_hashes(sig: np.ndarray, n_bands: int = N_BANDS) -> list[int]:
-    """Fold one signature into n_bands band hashes (int64 for Spark).
-
-    More bands of fewer rows = higher candidate recall at lower Jaccard
-    (P(candidate) = 1-(1-j^rows)^bands); size to the target threshold."""
-    return band_hashes_matrix(sig[None, :], n_bands)[0].tolist()
+def band_hashes(sig: np.ndarray) -> list[int]:
+    """Fold one signature into N_BANDS band hashes (int64 for Spark)."""
+    return band_hashes_matrix(sig[None, :])[0].tolist()
 
 
 def bands_from_signatures(

@@ -83,7 +83,6 @@ _ASCII_PUNCT = "".join(
     chr(c) for c in range(33, 127) if not chr(c).isalnum()
 )
 _ASCII_PUNCT_RE = re.compile(f"([{re.escape(_ASCII_PUNCT)}])")
-_WS_RE = re.compile(r"\s+")
 
 
 def _normalize_ascii(text: str) -> str:
@@ -170,19 +169,16 @@ def _split_punct(token: str) -> list[str]:
     return ["".join(x) for x in out]
 
 
-def basic_tokenize(text: str, lower: bool = True) -> list[str]:
-    """Full BasicTokenizer: text -> list of normalized tokens."""
+def basic_tokenize(text: str) -> list[str]:
+    """Full BasicTokenizer: text -> list of lowercased, accent-stripped,
+    punctuation-split tokens."""
     if text.isascii():
-        norm = _normalize_ascii(text) if lower else None
-        if norm is not None:
-            return norm.split()
+        return _normalize_ascii(text).split()
     text = clean_text(text)
     text = _pad_cjk(text)
     tokens: list[str] = []
     for tok in text.split():
-        if lower:
-            tok = _strip_accents(tok.lower())
-        tokens.extend(_split_punct(tok))
+        tokens.extend(_split_punct(_strip_accents(tok.lower())))
     return [t for t in " ".join(tokens).split()]
 
 

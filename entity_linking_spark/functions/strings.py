@@ -68,14 +68,16 @@ def jaro(a: str, b: str) -> float:
     return (m / la + m / lb + (m - t) / m) / 3.0
 
 
-def jaro_winkler(a: str, b: str, p: float = 0.1, max_prefix: int = 4) -> float:
+def jaro_winkler(a: str, b: str) -> float:
+    """Jaro boosted by the common prefix (at most 4 characters), with
+    Winkler's standard scaling factor 0.1."""
     j = jaro(a, b)
     prefix = 0
     for ca, cb in zip(a, b):
-        if ca != cb or prefix >= max_prefix:
+        if ca != cb or prefix >= 4:
             break
         prefix += 1
-    return j + prefix * p * (1.0 - j)
+    return j + prefix * 0.1 * (1.0 - j)
 
 
 def levenshtein_sim(a: str, b: str) -> float:

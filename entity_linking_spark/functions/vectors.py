@@ -27,9 +27,9 @@ from pyspark.sql.types import ArrayType, FloatType
 EMBED_DIM = 64
 
 
-def hash_embed_matrix(token_lists: list[list[str]], dim: int = EMBED_DIM) -> np.ndarray:
-    """Feature-hash token lists into L2-normalized [n, dim] float32."""
-    out = np.zeros((len(token_lists), dim), dtype=np.float32)
+def hash_embed_matrix(token_lists: list[list[str]]) -> np.ndarray:
+    """Feature-hash token lists into L2-normalized [n, EMBED_DIM] float32."""
+    out = np.zeros((len(token_lists), EMBED_DIM), dtype=np.float32)
     for i, toks in enumerate(token_lists):
         if not toks:
             continue
@@ -37,7 +37,7 @@ def hash_embed_matrix(token_lists: list[list[str]], dim: int = EMBED_DIM) -> np.
             (zlib.crc32(t.encode("utf-8")) for t in toks), dtype=np.int64, count=len(toks)
         )
         sign = np.where((idx >> 31) & 1, -1.0, 1.0).astype(np.float32)
-        np.add.at(out[i], idx % dim, sign)
+        np.add.at(out[i], idx % EMBED_DIM, sign)
     norms = np.linalg.norm(out, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return out / norms

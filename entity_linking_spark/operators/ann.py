@@ -17,6 +17,10 @@ IndexFlatIP exact + HNSW approximate) with Spark-native strategies:
                          deterministic), assign corpus to nearest
                          centroid, search only n_probe nearest cells.
 
+All three read a corpus of ``(vec_id, embedding)`` rows and queries of
+``(query_id, embedding)`` rows, and return ``(query_id, neighbor_id,
+cos_sim, rank)``, cos_sim rounded to 4 decimals.
+
 All math stays in numpy over Arrow batches — no per-row Python.
 """
 
@@ -88,17 +92,16 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries, matmul per Arrow batch.
+    """Exact cosine top-k of each ``queries`` row (query_id,
+    embedding) over ``corpus`` (vec_id, embedding): broadcast queries,
+    matmul per Arrow batch.
 
     Scale shape: corpus stays partitioned; each task scores its slice
     against ALL queries in one [batch, dim] x [dim, nq] matmul, then a
     per-query window keeps k. Works while queries fit in a broadcast
     (the reference's eval path batches mentions the same way)."""
-    qrows = queries.select(query_id_col, vec_col).collect()
+    qrows = queries.select("query_id", "embedding").collect()
     qids = [r[0] for r in qrows]
     # float64 throughout: scores are oracle-compared at 4 decimals, and
     # float32 accumulation error (~1e-7 relative) can flip a rounding
@@ -114,20 +117,20 @@ def brute_force_topk(
         return pd.Series(list(sims))
 
     scored = corpus.select(
-        F.col(id_col), sims_udf(F.col(vec_col)).alias("sims")
+        F.col("vec_id"), sims_udf(F.col("embedding")).alias("sims")
     ).select(
-        id_col, F.posexplode("sims").alias("q_idx", "cos_sim")
+        "vec_id", F.posexplode("sims").alias("q_idx", "cos_sim")
     )
     qmap = F.array(*[F.lit(q) for q in qids])
     w = Window.partitionBy("q_idx").orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
+        F.col("cos_sim").desc(), F.col("vec_id")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .select(
-            qmap[F.col("q_idx")].alias(query_id_col),
-            F.col(id_col).alias("neighbor_id"),
+            qmap[F.col("q_idx")].alias("query_id"),
+            F.col("vec_id").alias("neighbor_id"),
             F.round("cos_sim", 4).alias("cos_sim"),
             F.col("rn").alias("rank"),
         )
@@ -138,14 +141,12 @@ def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     n_planes: int = N_PLANES,
 ) -> DataFrame:
-    """LSH-bucketed ANN: corpus bucketed once (single bucket), queries
-    multi-probe their bucket + 1-bit neighbors; exact cosine inside
-    matched buckets; per-query top-k.
+    """LSH-bucketed ANN over ``corpus`` (vec_id, embedding) for
+    ``queries`` (query_id, embedding): corpus bucketed once (single
+    bucket), queries multi-probe their bucket + 1-bit neighbors; exact
+    cosine inside matched buckets; per-query top-k.
 
     ``n_planes`` sizes the bucket count (2^n_planes) to the corpus:
     target n_planes ≈ log2(|corpus| / desired_bucket_size); a fixed
@@ -155,22 +156,22 @@ def lsh_topk(
     bucket_udf = make_bucket_udf(n_planes)
     probe_udf = make_multiprobe_udf(n_planes)
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        bucket_udf(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        bucket_udf(F.col("embedding")).alias("bucket"),
     )
     q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("qvec"),
-        F.explode(probe_udf(F.col(vec_col))).alias("bucket"),
+        F.col("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.explode(probe_udf(F.col("embedding"))).alias("bucket"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
         q.join(c, "bucket")
         .withColumn("cos_sim", F.round(cosine_col("qvec", "cvec"), 4))
-        .select(query_id_col, "neighbor_id", "cos_sim")
+        .select("query_id", "neighbor_id", "cos_sim")
         .distinct()
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
@@ -183,14 +184,12 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     sample_mod: int = 1,
 ) -> DataFrame:
-    """IVF-style ANN: deterministic centroids (bottom-k-by-hash sample,
-    one k-means sweep), corpus assigned to nearest cell, queries probe
-    n_probe cells, exact rescoring within.
+    """IVF-style ANN over ``corpus`` (vec_id, embedding) for
+    ``queries`` (query_id, embedding): deterministic centroids
+    (bottom-k-by-hash sample, one k-means sweep), corpus assigned to
+    nearest cell, queries probe n_probe cells, exact rescoring within.
 
     ``sample_mod``: hash-modulus pre-filter for the centroid sample. At
     web scale (>=10^10 rows) set e.g. 1<<20 so the bottom-k heap scans
@@ -206,8 +205,8 @@ def ivf_topk(
     # partition, not the corpus. Selection is by xxhash64 order, so the
     # sample is independent of partitioning (FIXTURES.md determinism).
     target = n_cells * 32
-    base = corpus.select(id_col, vec_col).withColumn(
-        "_h", F.xxhash64(F.col(id_col))
+    base = corpus.select("vec_id", "embedding").withColumn(
+        "_h", F.xxhash64(F.col("vec_id"))
     )
 
     def _bottom_k(df):
@@ -251,22 +250,22 @@ def ivf_topk(
         return pd.Series(list(order.astype(np.int32)))
 
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        cell_udf(F.col(vec_col)).alias("cell"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("cvec"),
+        cell_udf(F.col("embedding")).alias("cell"),
     )
     q = queries.select(
-        F.col(query_id_col),
-        F.col(vec_col).alias("qvec"),
-        F.explode(probe_udf(F.col(vec_col))).alias("cell"),
+        F.col("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.explode(probe_udf(F.col("embedding"))).alias("cell"),
     )
-    w = Window.partitionBy(query_id_col).orderBy(
+    w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
         q.join(c, "cell")
         .withColumn("cos_sim", F.round(cosine_col("qvec", "cvec"), 4))
-        .select(query_id_col, "neighbor_id", "cos_sim")
+        .select("query_id", "neighbor_id", "cos_sim")
         .distinct()
         .withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

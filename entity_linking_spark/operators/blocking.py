@@ -339,14 +339,14 @@ class AliasDictionary:
 def detect_mentions_join(
     docs: DataFrame,
     dictionary: AliasDictionary,
-    text_col: str = "text",
-    url_col: str = "url",
     tokens_col: str | None = None,
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
-    """Beyond-broadcast mention detection: pure-join path, byte-identical
-    output to ``detect_mentions`` (pytest-pinned), with NO driver-side
-    alias collect — the alias dictionary stays distributed.
+    """Beyond-broadcast mention detection over ``docs`` (url, text — or
+    url and the precomputed ``tokens_col``): pure-join path,
+    byte-identical output to ``detect_mentions`` (pytest-pinned), with
+    NO driver-side alias collect — the alias dictionary stays
+    distributed.
 
     The trie path collects the full alias list to the driver to build a
     broadcast matcher; at the reference's real KB scale (5,903,527
@@ -424,7 +424,7 @@ def detect_mentions_join(
         # tokens feed TWO subtrees (anchors + the verify join): without a
         # persist the tokenizer UDF would run twice over the whole corpus
         toks = src.select(
-            F.col(url_col).alias("url"), tokenize_udf(F.col(text_col)).alias("tokens")
+            F.col("url").alias("url"), tokenize_udf(F.col("text")).alias("tokens")
         ).persist(StorageLevel.MEMORY_AND_DISK)
         # a repeated caller (the streaming micro-batch loop) must be able
         # to release this batch-scoped cache entry after its action —
@@ -436,7 +436,7 @@ def detect_mentions_join(
         # precomputed tokens (the pipeline's checkpointed s1 output):
         # both subtree scans are cheap columnar re-reads — pinning a
         # corpus-sized token table to executor storage would cost more
-        toks = docs.select(F.col(url_col).alias("url"), F.col(tokens_col).alias("tokens"))
+        toks = docs.select(F.col("url").alias("url"), F.col(tokens_col).alias("tokens"))
 
     # corpus gate first (footer metadata, no job). Unknown size counts as
     # small: every unknown-size caller here (tests, micro-batches) IS small

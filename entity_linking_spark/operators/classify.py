@@ -76,15 +76,14 @@ def _tok_col(text_col: str):
 
 def train_nb_quality(
     docs: DataFrame,
-    label_col: str = "label",
-    text_col: str = "text",
     vocab_size: int = 50_000,
     k: float = 1.0,
     materialize: bool | str = "auto",
 ) -> NBQualityModel:
-    """Train the pruned NB quality model on labeled ``docs``.
+    """Train the pruned NB quality model on labeled ``docs`` (label,
+    text).
 
-    ``label_col`` must be boolean-coercible (true/1 = the curated
+    ``label`` must be boolean-coercible (true/1 = the curated
     "high quality" class, the GPT-3 positives). ONE token-explode
     corpus pass: raw per-(label, token) counts are aggregated once
     (map-side-combined, so the shuffle carries the per-class
@@ -107,9 +106,9 @@ def train_nb_quality(
     passes dominate and the bounded collects win; unknown-size inputs
     (in-memory fixtures) count as small.
 
-    Documents with NULL ``text_col`` or NULL ``label_col`` are
-    skipped. A literal ``<unk>`` corpus token folds into the UNK class
-    like any OOV token (the sentinel is excluded from the vocabulary).
+    Documents with NULL ``text`` or NULL ``label`` are skipped. A
+    literal ``<unk>`` corpus token folds into the UNK class like any OOV
+    token (the sentinel is excluded from the vocabulary).
     BOTH classes must be non-empty — the priors and the negative-class
     denominator are meaningless otherwise; scoring a model trained on
     one class fails the job with Spark's ANSI DIVIDE_BY_ZERO (pinned
@@ -126,10 +125,10 @@ def train_nb_quality(
         materialize = est is not None and est >= 250_000
 
     base = docs.where(
-        F.col(text_col).isNotNull() & F.col(label_col).isNotNull()
+        F.col("text").isNotNull() & F.col("label").isNotNull()
     ).select(
-        F.col(label_col).cast("boolean").alias("lab"),
-        F.explode(_tok_col(text_col)).alias("tok"),
+        F.col("label").cast("boolean").alias("lab"),
+        F.explode(_tok_col("text")).alias("tok"),
     )
     # the ONE corpus explode; consumed by the vocab top-k AND the
     # folded likelihood table. Persisted only on the materialize path
@@ -179,10 +178,10 @@ def train_nb_quality(
         )
     )
     doc_counts = (
-        docs.where(F.col(text_col).isNotNull() & F.col(label_col).isNotNull())
+        docs.where(F.col("text").isNotNull() & F.col("label").isNotNull())
         .agg(
-            F.sum(F.col(label_col).cast("boolean").cast("long")).alias("d_pos"),
-            F.sum((~F.col(label_col).cast("boolean")).cast("long")).alias(
+            F.sum(F.col("label").cast("boolean").cast("long")).alias("d_pos"),
+            F.sum((~F.col("label").cast("boolean")).cast("long")).alias(
                 "d_neg"
             ),
         )
@@ -290,18 +289,17 @@ def pareto_keep(
     model: NBQualityModel,
     alpha: float = 9.0,
     seed: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     mode: str = "remove",
 ) -> DataFrame:
-    """The GPT-3 curation action (Brown et al. 2020, Appendix A): keep
-    a document iff ``pareto_draw(alpha) > 1 - quality_score``, so
-    high-scoring docs are (almost) always kept while low-scoring docs
-    survive with small probability — importance sampling, not a hard
-    cut, preserving some tail diversity. GPT-3's alpha = 9.
+    """The GPT-3 curation action (Brown et al. 2020, Appendix A) over
+    ``docs`` (doc_id, text): keep a document iff
+    ``pareto_draw(alpha) > 1 - quality_score``, so high-scoring docs are
+    (almost) always kept while low-scoring docs survive with small
+    probability — importance sampling, not a hard cut, preserving some
+    tail diversity. GPT-3's alpha = 9.
 
     quality_score = sigmoid(log_odds) ∈ (0, 1) — NB's posterior
-    P(positive | doc). The draw is deterministic: u = xxhash64(id,
+    P(positive | doc). The draw is deterministic: u = xxhash64(doc_id,
     copy-seed) mapped to [0, 1), x = (1 - u)^(-1/alpha) - 1 (the
     inverse CDF of numpy.random.pareto's Lomax distribution), never
     rand() — reruns, retries and repartitionings keep identical rows
@@ -312,16 +310,16 @@ def pareto_keep(
         raise ValueError(f"mode must be 'remove' or 'flag', got {mode!r}")
     if not alpha > 0.0:
         raise ValueError(f"alpha must be > 0, got {alpha!r}")
-    scored = nb_log_odds(docs, model, text_col, id_col).select(
-        id_col, "log_odds"
+    scored = nb_log_odds(docs, model, "text", "doc_id").select(
+        "doc_id", "log_odds"
     )
-    joined = docs.join(scored, id_col, "left")
+    joined = docs.join(scored, "doc_id", "left")
     score = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("log_odds")))
     # xxhash64 -> uniform in [0, 1): shift the signed 64-bit hash into
     # unsigned range, divide by 2^64. 1 - u stays in (0, 1], so the
     # Lomax inverse CDF below never divides by zero.
     u = (
-        F.xxhash64(F.col(id_col), F.lit(seed)).cast("double")
+        F.xxhash64(F.col("doc_id"), F.lit(seed)).cast("double")
         + F.lit(float(2**63))
     ) / F.lit(float(2**64))
     draw = F.pow(F.lit(1.0) - u, F.lit(-1.0 / alpha)) - F.lit(1.0)

@@ -56,8 +56,6 @@ def _large_star(edges: DataFrame) -> DataFrame:
     min is computed as a window over the SAME hash partitioning the emit
     needs — one exchange per star round instead of groupBy+join's two.
     """
-    from pyspark.sql.window import Window
-
     sym = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).unionByName(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
@@ -77,8 +75,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     """Orient (big, small); for each big b: m = min of its small neighbors;
     emit (s, m) for each small neighbor plus (b, m). Same one-exchange
     window trick as _large_star."""
-    from pyspark.sql.window import Window
-
     o = edges.select(
         F.greatest("src", "dst").alias("b"), F.least("src", "dst").alias("s")
     ).where(F.col("b") != F.col("s"))

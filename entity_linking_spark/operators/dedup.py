@@ -27,13 +27,12 @@ from entity_linking_spark.operators import blocking, cluster
 
 def exact_dedup(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "url",
     max_members: int | None = 100,
 ) -> DataFrame:
-    """Hash-groupBy exact dedup: (content_hash, keeper, n_copies, members).
+    """Hash-groupBy exact dedup of ``df``'s ``text`` column:
+    (content_hash, keeper, n_copies, members).
 
-    Keeper = min(id). One shuffle (hash aggregate with map-side combine).
+    Keeper = min(url). One shuffle (hash aggregate with map-side combine).
 
     ``members`` is CAPPED at max_members ids per hash (viral duplicates —
     empty pages, boilerplate — can have millions of copies; an unbounded
@@ -49,7 +48,7 @@ def exact_dedup(
     from pyspark.sql.window import Window
 
     hashed = df.select(
-        F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col).alias("_id")
+        F.md5(F.col("text")).alias("content_hash"), F.col("url").alias("_id")
     )
     aggs = [F.min("_id").alias("keeper"), F.count("*").alias("n_copies")]
     if max_members is None:
@@ -61,9 +60,6 @@ def exact_dedup(
     )
     aggs.append(F.sort_array(F.collect_list("_member")).alias("members"))
     return capped.groupBy("content_hash").agg(*aggs)
-
-
-SIMHASH_BITS = 64
 
 
 def simhash(tokens: list[str]) -> int:
@@ -95,20 +91,19 @@ def simhash_udf(tokens: pd.Series) -> pd.Series:
 
 def simhash_near_dup_pairs(
     docs_tokens: DataFrame,
-    id_col: str = "url",
-    tokens_col: str = "tokens",
     max_hamming: int = 3,
 ) -> DataFrame:
-    """SimHash near-dup candidates: band the 64-bit fingerprint into 4
-    16-bit chunks (pigeonhole: hamming<=3 pairs share >=1 exact chunk),
-    equi-join on (chunk_idx, chunk), verify hamming distance exactly.
+    """SimHash near-dup pairs (id_a, id_b, hamming) of ``docs_tokens``
+    (url, tokens): band the 64-bit fingerprint into 4 16-bit chunks
+    (pigeonhole: hamming<=3 pairs share >=1 exact chunk), equi-join on
+    (chunk_idx, chunk), verify hamming distance exactly.
 
     The banding join is the only shuffle; verification is bit_count on
     xor — pure JVM.
     """
-    sh = docs_tokens.select(id_col, simhash_udf(F.col(tokens_col)).alias("sh"))
+    sh = docs_tokens.select("url", simhash_udf(F.col("tokens")).alias("sh"))
     chunks = sh.select(
-        id_col,
+        "url",
         "sh",
         F.explode(
             F.array(
@@ -121,12 +116,12 @@ def simhash_near_dup_pairs(
                 ]
             )
         ).alias("c"),
-    ).select(id_col, "sh", "c.chunk_idx", "c.chunk")
+    ).select("url", "sh", "c.chunk_idx", "c.chunk")
     a = chunks.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"), "chunk_idx", "chunk"
+        F.col("url").alias("id_a"), F.col("sh").alias("sh_a"), "chunk_idx", "chunk"
     )
     b = chunks.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"), "chunk_idx", "chunk"
+        F.col("url").alias("id_b"), F.col("sh").alias("sh_b"), "chunk_idx", "chunk"
     )
     return (
         a.join(b, ["chunk_idx", "chunk"])
@@ -139,20 +134,20 @@ def simhash_near_dup_pairs(
     )
 
 
-def shingle_set_col(tokens_col: str, k: int = 3):
-    """Distinct k-shingle strings of a token array — pure Column expr
+def shingle_set_col(tokens_col: str):
+    """Distinct 3-shingle strings of a token array — pure Column expr
     (JVM, whole-stage codegen). Mirrors functions.minhash.shingle_hashes:
-    fewer than k tokens degrade to one whole-join shingle."""
+    fewer than 3 tokens degrade to one whole-join shingle."""
     toks = F.col(tokens_col)
     n = F.size(toks)
     tri = F.transform(
-        F.sequence(F.lit(1), n - k + 1),
+        F.sequence(F.lit(1), n - 3 + 1),
         lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + off) for off in range(k)]
+            " ", *[F.element_at(toks, i + off) for off in range(3)]
         ),
     )
     return F.array_distinct(
-        F.when(n >= k, tri).otherwise(F.array(F.concat_ws(" ", toks)))
+        F.when(n >= 3, tri).otherwise(F.array(F.concat_ws(" ", toks)))
     )
 
 
@@ -250,14 +245,13 @@ def dedup_clusters(
 
 def embedding_near_dup_pairs(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     min_cosine: float = 0.95,
     n_planes: int = 16,
     max_bucket_size: int = 1024,
 ) -> DataFrame:
-    """Embedding-cosine near-dup via random-hyperplane LSH bucketing:
-    sign-pattern of ``n_planes`` fixed pseudo-random hyperplanes (2^n_planes
+    """Embedding-cosine near-dup pairs (id_a, id_b, cos) of
+    ``embeddings`` (vec_id, embedding) via random-hyperplane LSH
+    bucketing: sign-pattern of ``n_planes`` fixed pseudo-random hyperplanes (2^n_planes
     buckets — size it to the corpus) -> bucket self-join -> exact cosine
     verify inside buckets (never the full cross product).
 
@@ -274,9 +268,9 @@ def embedding_near_dup_pairs(
 
     bucket_udf = make_bucket_udf(n_planes)
     b = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("vec"),
-        bucket_udf(F.col(vec_col)).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("vec"),
+        bucket_udf(F.col("embedding")).alias("bucket"),
     )
     size_w = Window.partitionBy("bucket")
     b = b.withColumn("_bsize", F.count("*").over(size_w)).where(
@@ -548,14 +542,14 @@ def remove_duplicated_spans(
 
 def dedup_repeated_substrings(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "url",
     window: int = 20,
-    min_docs: int = 2,
     max_postings: int = 256,
     keep_first: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """Detection + removal composed: the full ExactSubstr curation pass.
+    """Detection + removal composed: the full ExactSubstr curation pass
+    over ``df``'s ``text`` column, cutting every window that appears in
+    at least 2 documents.
 
     Returns (cleaned, dropped): ``cleaned`` is ``df`` + clean_text +
     n_removed_tokens with every cross-document duplicated span cut from
@@ -566,15 +560,15 @@ def dedup_repeated_substrings(
     n_postings) so the max_postings cap is observable, never silent."""
     spans, dropped = duplicated_spans(
         df,
-        text_col,
+        "text",
         id_col,
         window=window,
-        min_docs=min_docs,
+        min_docs=2,
         max_postings=max_postings,
         return_dropped=True,
         keep_first=keep_first,
     )
-    return remove_duplicated_spans(df, spans, text_col, id_col), dropped
+    return remove_duplicated_spans(df, spans, "text", id_col), dropped
 
 
 def semantic_dedup(

@@ -70,15 +70,16 @@ def extract_text(html: bytes | None) -> str | None:
     return "\n".join(decoded)
 
 
-def with_extracted_text(
-    df: DataFrame, html_col: str = "html", out_col: str = "text_extracted"
-) -> DataFrame:
-    """Append extracted text via mapInPandas (Arrow-batched, narrow)."""
-    out_schema = StructType(df.schema.fields + [StructField(out_col, StringType(), True)])
+def with_extracted_text(df: DataFrame) -> DataFrame:
+    """Append ``text_extracted``, the text of the ``html`` column, via
+    mapInPandas (Arrow-batched, narrow)."""
+    out_schema = StructType(
+        df.schema.fields + [StructField("text_extracted", StringType(), True)]
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            pdf[out_col] = pdf[html_col].map(extract_text)
+            pdf["text_extracted"] = pdf["html"].map(extract_text)
             yield pdf
 
     return df.mapInPandas(run, schema=out_schema)
@@ -101,13 +102,10 @@ def _featurize(texts: list) -> dict[str, list]:
     return {"tokens": token_lists, "bands": bands, "vec": list(emb)}
 
 
-def extract_and_tokenize(
-    df: DataFrame,
-    html_col: str = "html",
-    keep: tuple[str, ...] = ("url", "warc_ts", "lang"),
-) -> DataFrame:
-    """Fused extract + tokenize + MinHash bands + hash-embedding in ONE
-    Python pass.
+def extract_and_tokenize(df: DataFrame) -> DataFrame:
+    """Fused extract + tokenize + MinHash bands + hash-embedding of the
+    ``html`` column in ONE Python pass. Of the input columns, only
+    ``url``, ``warc_ts`` and ``lang`` ride along (those present).
 
     Chaining mapInPandas(extract) into per-column pandas UDFs costs a
     JVM<->Python Arrow round-trip per stage, with the multi-KB html
@@ -119,7 +117,7 @@ def extract_and_tokenize(
     for the Python segment of the plan. Downstream stages (blocking keys,
     scoring) then run entirely JVM-side on the precomputed columns.
     """
-    fields = [f for f in df.schema.fields if f.name in keep]
+    fields = [f for f in df.schema.fields if f.name in ("url", "warc_ts", "lang")]
     out_schema = StructType(
         fields
         + [
@@ -133,22 +131,21 @@ def extract_and_tokenize(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf[html_col].map(extract_text)
+            texts = pdf["html"].map(extract_text)
             yield pdf[keep_cols].assign(text=texts, **_featurize(list(texts)))
 
-    return df.select(*keep_cols, html_col).mapInPandas(run, schema=out_schema)
+    return df.select(*keep_cols, "html").mapInPandas(run, schema=out_schema)
 
 
-def tokenize_and_featurize(
-    df: DataFrame, text_col: str = "text", id_col: str = "url"
-) -> DataFrame:
-    """Fused tokenize + MinHash bands + hash-embedding for ALREADY-extracted
-    text (the no-html sibling of extract_and_tokenize — same rationale:
+def tokenize_and_featurize(df: DataFrame) -> DataFrame:
+    """Fused tokenize + MinHash bands + hash-embedding of the ALREADY-
+    extracted ``text`` of each ``url``: (url, tokens, bands, vec) (the
+    no-html sibling of extract_and_tokenize — same rationale:
     tokens cross JVM<->Python once, every per-doc feature is computed while
     they're in Python memory)."""
     out_schema = StructType(
         [
-            StructField(id_col, StringType(), True),
+            StructField("url", StringType(), True),
             StructField("tokens", ArrayType(StringType()), True),
             StructField("bands", ArrayType(LongType()), True),
             StructField("vec", ArrayType(FloatType()), True),
@@ -157,6 +154,6 @@ def tokenize_and_featurize(
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield pd.DataFrame({id_col: pdf[id_col], **_featurize(list(pdf[text_col]))})
+            yield pd.DataFrame({"url": pdf["url"], **_featurize(list(pdf["text"]))})
 
-    return df.select(id_col, text_col).mapInPandas(run, schema=out_schema)
+    return df.select("url", "text").mapInPandas(run, schema=out_schema)

@@ -347,16 +347,15 @@ def perplexity_buckets(
     lm: NgramLM,
     head_frac: float = 1.0 / 3.0,
     middle_frac: float = 1.0 / 3.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
-    """(id, n_toks, ppl, bucket): CCNet's actual gate shape — rank every
-    document by perplexity and split the corpus into 'head' (lowest-ppl
-    ``head_frac``), 'middle' (next ``middle_frac``) and 'tail' buckets
-    (Wenzek et al. 2020 §4.4 keep head+middle per language). Fractions
+    """(doc_id, n_toks, ppl, bucket): CCNet's actual gate shape — rank
+    every document of ``docs`` (doc_id, text) by perplexity and split
+    the corpus into 'head' (lowest-ppl ``head_frac``), 'middle' (next
+    ``middle_frac``) and 'tail' buckets (Wenzek et al. 2020 §4.4 keep
+    head+middle per language). Fractions
     are of the SCORED corpus, exact by global rank, ties broken on
-    (ppl, id) so the split is total-order deterministic.
+    (ppl, doc_id) so the split is total-order deterministic.
 
     Scale design: a naive percent_rank() over a global ORDER BY ppl
     window pulls the whole corpus into ONE task — the classic
@@ -378,10 +377,10 @@ def perplexity_buckets(
             f"head_frac/middle_frac must be >= 0 and sum <= 1, got "
             f"{head_frac!r}/{middle_frac!r}"
         )
-    scored = perplexity(docs, lm, text_col, id_col).persist()
+    scored = perplexity(docs, lm, "text", "doc_id").persist()
     if cache_registry is not None:
         cache_registry.append(scored)
-    ranked, n_docs = runtime.global_offsets(scored, ["ppl", id_col], F.lit(1))
+    ranked, n_docs = runtime.global_offsets(scored, ["ppl", "doc_id"], F.lit(1))
     cut1, cut2 = int(n_docs * head_frac), int(n_docs * (head_frac + middle_frac))
     rank = F.col("_off") + 1
     bucket = (
@@ -396,32 +395,25 @@ def perplexity_filter(
     docs: DataFrame,
     lm: NgramLM,
     max_ppl: float,
-    min_ppl: float = 0.0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     mode: str = "remove",
 ) -> DataFrame:
-    """The CCNet curation action: keep documents whose perplexity lies
-    in [min_ppl, max_ppl] — CCNet's head/middle buckets are exactly two
-    such bands chained. mode='flag' returns every doc with its ppl and
-    a ``kept`` flag instead of filtering (the audit shape the quality
-    operators share).
+    """The CCNet curation action: keep the documents of ``docs``
+    (doc_id, text) whose perplexity is at most ``max_ppl``. mode='flag'
+    returns every doc with its ppl and a ``kept`` flag instead of
+    filtering (the audit shape the quality operators share).
 
-    ``min_ppl`` is not decorative: ppl is NOT monotone in quality at
-    the OOV extreme. A doc whose every token is OOV folds to a pure
-    <unk> run, and since (unk, unk) is then a high-count bigram the doc
-    scores artificially LOW (pinned by tests/test_lm.py::
-    test_all_oov_doc_scores_artificially_well). A band, not a ceiling,
-    is the correct CCNet-shaped gate; corpora with heavy foreign-
-    vocabulary contamination should additionally gate on unk fraction
+    A ceiling alone keeps one kind of junk: ppl is NOT monotone in
+    quality at the OOV extreme. A doc whose every token is OOV folds to
+    a pure <unk> run, and since (unk, unk) is then a high-count bigram
+    the doc scores artificially LOW (pinned by tests/test_lm.py::
+    test_all_oov_doc_scores_artificially_well). Corpora with heavy
+    foreign-vocabulary contamination should gate on unk fraction
     upstream."""
     if mode not in ("remove", "flag"):
         raise ValueError(f"mode must be 'remove' or 'flag', got {mode!r}")
-    ppl = perplexity(docs, lm, text_col, id_col).select(
-        F.col(id_col), "ppl"
-    )
-    joined = docs.join(ppl, id_col, "left")
-    kept = F.col("ppl").isNotNull() & F.col("ppl").between(min_ppl, max_ppl)
+    ppl = perplexity(docs, lm, "text", "doc_id").select(F.col("doc_id"), "ppl")
+    joined = docs.join(ppl, "doc_id", "left")
+    kept = F.col("ppl").isNotNull() & (F.col("ppl") <= max_ppl)
     if mode == "flag":
         return joined.withColumn("kept", kept)
     return joined.where(kept)

@@ -31,29 +31,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType(), False),
-        StructField("kind", StringType(), False),  # image | audio | video
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
-MEDIA_META_SCHEMA = StructType(
-    [
-        StructField("width", IntegerType(), True),
-        StructField("height", IntegerType(), True),
-        StructField("duration_ms", IntegerType(), True),
-        StructField("codec", StringType(), True),
-    ]
 )
 
 FAKE_MAGIC = b"FAKE"
@@ -79,10 +61,10 @@ def _require_codec(kind: str) -> None:
     )
 
 
-def encode_wav_media(n_samples: int, framerate: int = 8000, seed: int = 0) -> bytes:
-    """A real RIFF/WAVE payload (16-bit mono PCM, stdlib `wave` writer)
-    with a deterministic seeded waveform — test/fixture generator for the
-    genuine wav decode path."""
+def encode_wav_media(n_samples: int, seed: int = 0) -> bytes:
+    """A real RIFF/WAVE payload (16-bit mono PCM at 8 kHz, stdlib
+    `wave` writer) with a deterministic seeded waveform — test/fixture
+    generator for the genuine wav decode path."""
     import io
     import wave
 
@@ -92,7 +74,7 @@ def encode_wav_media(n_samples: int, framerate: int = 8000, seed: int = 0) -> by
     with wave.open(buf, "wb") as w:
         w.setnchannels(1)
         w.setsampwidth(2)
-        w.setframerate(framerate)
+        w.setframerate(8000)
         w.writeframes(samples.tobytes())
     return buf.getvalue()
 
@@ -405,18 +387,16 @@ def decode_media(payload: bytes, kind: str, codec: str = "fake") -> np.ndarray:
 
 def with_media_features(
     df: DataFrame,
-    payload_col: str = "payload",
-    kind_col: str = "kind",
-    out_col: str = "features",
     codec: str = "fake",
 ) -> DataFrame:
-    """mapInPandas decode/feature stage: binary -> array<float> + error col.
+    """mapInPandas decode/feature stage: the binary ``payload`` of each
+    ``kind`` -> ``features`` array<float> + error col.
 
     Per-row failures land in an ``decode_error`` column instead of
     failing the task — at corpus scale a poison payload must not kill a
     400-partition stage."""
     fields = df.schema.fields + [
-        StructField(out_col, ArrayType(FloatType()), True),
+        StructField("features", ArrayType(FloatType()), True),
         StructField("decode_error", StringType(), True),
     ]
     out_schema = StructType(fields)
@@ -424,14 +404,14 @@ def with_media_features(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats, errs = [], []
-            for payload, kind in zip(pdf[payload_col], pdf[kind_col]):
+            for payload, kind in zip(pdf["payload"], pdf["kind"]):
                 try:
                     feats.append([float(x) for x in decode_media(payload, kind, codec)])
                     errs.append(None)
                 except Exception as e:  # noqa: BLE001 — per-row error channel
                     feats.append(None)
                     errs.append(f"{type(e).__name__}: {e}")
-            pdf[out_col] = feats
+            pdf["features"] = feats
             pdf["decode_error"] = errs
             yield pdf
 
@@ -440,14 +420,13 @@ def with_media_features(
 
 def sample_video_frames(
     df: DataFrame,
-    payload_col: str = "payload",
     n_frames: int = 4,
-    codec: str = "fake",
 ) -> DataFrame:
     """Frame-sampling UDTF: one video row -> n_frames feature rows.
 
-    Real decoder would seek keyframes; the fake codec derives per-frame
-    seeds deterministically. Output keeps (media_id, frame_idx, features).
+    Decodes ``payload`` with the fake codec, which derives per-frame
+    seeds deterministically (a real decoder would seek keyframes).
+    Output keeps (media_id, frame_idx, features).
     """
     out_schema = StructType(
         [
@@ -460,15 +439,13 @@ def sample_video_frames(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, feats = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf[payload_col]):
+            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 if payload is None:
                     continue
                 for fi in range(n_frames):
                     frame_payload = payload[:12] + struct.pack("<I", fi)
                     try:
-                        arr = decode_media(
-                            frame_payload + payload[16:], "video", codec
-                        )
+                        arr = decode_media(frame_payload + payload[16:], "video")
                         feats.append([float(x) for x in arr])
                     except Exception:  # noqa: BLE001
                         feats.append(None)
@@ -485,10 +462,10 @@ def sample_video_frames(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def media_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def media_stats(df: DataFrame) -> DataFrame:
     """JVM-side payload stats (no decode): sizes per kind for planning."""
     return df.groupBy("kind").agg(
         F.count("*").alias("n"),
-        F.sum(F.length(F.col(payload_col))).alias("total_bytes"),
-        F.round(F.avg(F.length(F.col(payload_col))), 2).alias("avg_bytes"),
+        F.sum(F.length(F.col("payload"))).alias("total_bytes"),
+        F.round(F.avg(F.length(F.col("payload"))), 2).alias("avg_bytes"),
     )

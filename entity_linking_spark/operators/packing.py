@@ -41,15 +41,14 @@ from entity_linking_spark import runtime
 def pack_sequences(
     df: DataFrame,
     seq_len: int,
-    text_col: str = "text",
     id_col: str = "doc_id",
-    seed: int = 42,
     drop_incomplete_last: bool = True,
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
-    """Pack the corpus into consecutive ``seq_len``-token sequences.
+    """Pack the corpus (``id_col``, text) into consecutive
+    ``seq_len``-token sequences.
 
-    Documents are ordered by ``xxhash64(id, seed)`` (ties broken by id;
+    Documents are ordered by ``xxhash64(id, 42)`` (ties broken by id;
     ids must be unique), their single-space token streams concatenated,
     and the stream cut every ``seq_len`` tokens. Tokens are
     whitespace-split words (``n_toks = count(' ') + 1``, the repo-wide
@@ -81,13 +80,13 @@ def pack_sequences(
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
     narrow = (
-        df.where(F.col(text_col).isNotNull())
+        df.where(F.col("text").isNotNull())
         .select(
             F.col(id_col).alias("_id"),
-            F.xxhash64(F.col(id_col), F.lit(seed)).alias("_okey"),
+            F.xxhash64(F.col(id_col), F.lit(42)).alias("_okey"),
             (
-                F.length(F.col(text_col))
-                - F.length(F.regexp_replace(F.col(text_col), " ", ""))
+                F.length(F.col("text"))
+                - F.length(F.regexp_replace(F.col("text"), " ", ""))
                 + 1
             ).cast("long").alias("_nt"),
         )
@@ -137,21 +136,20 @@ def pack_sequences(
 def packed_sequence_text(
     df: DataFrame,
     packing: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Materialize packed sequences as text: join the slice map back to
-    the corpus, slice each document's tokens, and stitch per sequence.
+    the corpus (doc_id, text), slice each document's tokens, and stitch
+    per sequence.
 
     Returns (seq_id, text, n_docs). One join + one aggregate — meant
     for tests, samples, and small exports; a 100 TB training run feeds
     the slice map to its data loader instead of materializing strings.
     """
     toks = df.select(
-        F.col(id_col).alias("_jid"), F.split(F.col(text_col), " ").alias("_t")
+        F.col("doc_id").alias("_jid"), F.split(F.col("text"), " ").alias("_t")
     )
     sliced = packing.join(
-        toks, packing[id_col].cast("string") == toks["_jid"].cast("string")
+        toks, packing["doc_id"].cast("string") == toks["_jid"].cast("string")
     ).select(
         "seq_id",
         "seq_off",

@@ -63,7 +63,6 @@ def _doc_signals(
     text: str,
     top_ns: tuple[int, ...],
     dup_n: int,
-    min_repeats: int,
 ) -> tuple[int, list[int], int]:
     """(n_tokens, [top_n counts], dup-coverage) for one document — all
     numpy over the shared-decode window-hash families."""
@@ -84,13 +83,13 @@ def _doc_signals(
         tops.append(int(counts.max()))
     h31, h131 = fams[dup_n]
     cov = 0
-    if len(h31) >= min_repeats:
+    if len(h31) >= 2:
         packed = h31 * _WHASH_P + h131
         _, inverse, counts = np.unique(
             packed, return_inverse=True, return_counts=True
         )
         # positions of duplicated windows, ascending by construction
-        pos = np.nonzero(counts[inverse] >= min_repeats)[0]
+        pos = np.nonzero(counts[inverse] >= 2)[0]
         if len(pos):
             # overlap-merged coverage in one vectorized line: the first
             # flagged window contributes dup_n tokens; each later one
@@ -107,8 +106,6 @@ def repetition_signals(
     id_col: str = "doc_id",
     top_ns: tuple[int, ...] = (2, 3),
     dup_n: int = 5,
-    min_repeats: int = 2,
-    persist_base: bool = False,
 ) -> DataFrame:
     """One row per document with its Gopher-style repetition signals:
 
@@ -129,10 +126,8 @@ def repetition_signals(
 
     ONE narrow mapInPandas pass — no join, no shuffle, a single scan of
     (id, text); see the module docstring for the two slower
-    formulations this replaced. ``persist_base`` is kept for API
-    stability and is a no-op now that nothing is scanned twice.
+    formulations this replaced.
     """
-    del persist_base  # single-pass since the vectorized rewrite
     id_type = df.schema[id_col].dataType
     fields = [
         StructField(id_col, id_type, True),
@@ -162,7 +157,7 @@ def repetition_signals(
                     out[f"dup{dup_n}_covered_tokens"].append(0)
                     out[f"dup{dup_n}_frac"].append(None)
                     continue
-                nt, tops, cov = _doc_signals(text, top_ns, dup_n, min_repeats)
+                nt, tops, cov = _doc_signals(text, top_ns, dup_n)
                 out["n_tokens"].append(nt)
                 for n, c in zip(top_ns, tops):
                     out[f"top{n}_count"].append(c)
@@ -179,16 +174,17 @@ def repetition_signals(
 # C4's published terminal-punctuation set (Raffel et al. 2020 §2.2 /
 # the public T5 text-cleaning code): a retained line must end in one.
 _C4_TERMINAL = (".", "!", "?", '"')
+# C4's other published line and page rules
+_C4_MIN_WORDS_PER_LINE = 5
+_C4_DROP_LINE_PHRASES = ("javascript",)
+_C4_DROP_PAGE_PHRASES = ("lorem ipsum", "{")
 
 
 def c4_line_clean(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_words_per_line: int = 5,
     min_kept_lines: int = 3,
-    drop_line_phrases: tuple[str, ...] = ("javascript",),
-    drop_page_phrases: tuple[str, ...] = ("lorem ipsum", "{"),
     mode: str = "flag",
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020, "Exploring the
@@ -197,14 +193,13 @@ def c4_line_clean(
     hold, after trimming):
 
     - ends in terminal punctuation (``. ! ? "``);
-    - has at least ``min_words_per_line`` whitespace words (C4: 5);
-    - contains none of ``drop_line_phrases`` case-insensitively
-      (C4: the word "javascript").
+    - has at least 5 whitespace words;
+    - does not contain the word "javascript" case-insensitively.
 
     Page rules (the whole document is dropped iff ANY hold):
 
-    - raw text contains any of ``drop_page_phrases``
-      case-insensitively (C4: "lorem ipsum" and the curly brace);
+    - raw text contains "lorem ipsum" or the curly brace
+      case-insensitively;
     - fewer than ``min_kept_lines`` lines survive the line rules
       (documented approximation of C4's "fewer than 3 sentences" —
       every kept line ends in terminal punctuation, so kept lines are
@@ -229,10 +224,10 @@ def c4_line_clean(
         raise ValueError(f"mode must be 'flag' or 'remove', got {mode!r}")
 
     def line_ok(line):
-        ok = (F.size(F.split(line, " ")) >= min_words_per_line) & (
+        ok = (F.size(F.split(line, " ")) >= _C4_MIN_WORDS_PER_LINE) & (
             F.substring(line, -1, 1).isin(*_C4_TERMINAL)
         )
-        for ph in drop_line_phrases:
+        for ph in _C4_DROP_LINE_PHRASES:
             ok = ok & ~F.contains(F.lower(line), F.lit(ph))
         return ok
 
@@ -241,7 +236,7 @@ def c4_line_clean(
     )
     kept = F.filter(lines, line_ok)
     page_bad = F.lit(False)
-    for ph in drop_page_phrases:
+    for ph in _C4_DROP_PAGE_PHRASES:
         page_bad = page_bad | F.contains(
             F.lower(F.col(text_col)), F.lit(ph)
         )
@@ -391,10 +386,8 @@ def decontaminate(
     benchmark: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    bench_text_col: str | None = None,
     window: int = 13,
     mode: str = "flag",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag (or drop) every training document
     that shares at least one ``window``-token n-gram with the benchmark
@@ -407,11 +400,11 @@ def decontaminate(
     millions of windows, ALWAYS tiny next to a training corpus) is
     hashed, deduplicated, and broadcast; the corpus side is ONE
     mapInPandas hash pass probed against that broadcast — the training
-    corpus is never shuffled. ``broadcast_benchmark=False`` switches to
-    a shuffle semi-join for the unusual case of a benchmark too large
-    to broadcast. The window key is the combined two-multiplier poly
-    hash (false-positive rate ~5e-7 per window — a stray FP flags one
-    extra doc, it never drops a benchmark hit).
+    corpus is never shuffled. The benchmark's text is read from its
+    ``text_col``, the same column name as the corpus. The window key is
+    the combined two-multiplier poly hash (false-positive rate ~5e-7 per
+    window — a stray FP flags one extra doc, it never drops a benchmark
+    hit).
 
     Docs (or benchmark rows) of <= window tokens emit one whole-doc
     window, so a short benchmark item only matches documents containing
@@ -430,16 +423,14 @@ def decontaminate(
     # the benchmark id is a throwaway (only whash survives); xxhash64 of
     # the text keeps it deterministic, per the module-wide never-rand rule
     bench = benchmark.select(
-        F.xxhash64(F.col(bench_text_col or text_col)).alias("_bid"),
-        F.col(bench_text_col or text_col).alias("text"),
+        F.xxhash64(F.col(text_col)).alias("_bid"),
+        F.col(text_col).alias("text"),
     )
-    bh = (
+    bh = F.broadcast(
         window_hash_positions(bench, "text", "_bid", window)
         .select("whash")
         .distinct()
     )
-    if broadcast_benchmark:
-        bh = F.broadcast(bh)
     dh = window_hash_positions(docs, text_col, id_col, window)
     # the hits key gets a private name: drop-by-name drops EVERY column
     # called "id", so joining on hits["id"] and dropping it would also

@@ -23,8 +23,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     BooleanType,
-    FloatType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -84,13 +82,6 @@ EXPECTED_CLUSTERS_SCHEMA = StructType(
     [
         StructField("url", StringType(), False),
         StructField("cluster_id", StringType(), False),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("entity_id", LongType(), False),
-        StructField("vec", ArrayType(FloatType()), False),
     ]
 )
 
@@ -277,11 +268,9 @@ def truth_clusters(truth: list[tuple[str, str | None]]) -> pd.DataFrame:
     return pd.DataFrame(rows).sort_values("url").reset_index(drop=True)
 
 
-def labeled_pairs_from_truth(
-    truth: list[tuple[str, str | None]], n_pairs: int = 5000, seed: int = SEED
-) -> pd.DataFrame:
-    """Same-block labeled pairs, ~30% positive (FIXTURES.md §7)."""
-    rng = random.Random(seed + 2)
+def labeled_pairs_from_truth(truth: list[tuple[str, str | None]]) -> pd.DataFrame:
+    """5,000 same-block labeled pairs, ~30% positive (FIXTURES.md §7)."""
+    rng = random.Random(SEED + 2)
     by_ent: dict[str, list[str]] = {}
     for url, ent in truth:
         if ent is not None:
@@ -291,7 +280,7 @@ def labeled_pairs_from_truth(
     ent_of = dict(truth)
     rows = []
     seen = set()
-    while len(rows) < n_pairs and ents:
+    while len(rows) < 5000 and ents:
         if rng.random() < 0.3:
             e = rng.choice(ents)
             a, b = rng.sample(by_ent[e], 2)
@@ -328,12 +317,12 @@ def kb_to_aliases(kb: pd.DataFrame) -> pd.DataFrame:
 
 
 def load_fixtures(
-    spark: SparkSession, n_docs: int = 2000, n_entities: int = 300, seed: int = SEED
+    spark: SparkSession, n_docs: int = 2000, n_entities: int = 300
 ) -> dict[str, DataFrame]:
-    """All EL fixtures as Spark DataFrames (deterministic)."""
-    docs_pd = synth_documents(n_docs, n_entities, seed)
+    """All EL fixtures as Spark DataFrames (deterministic: seed ``SEED``)."""
+    docs_pd = synth_documents(n_docs, n_entities, SEED)
     truth = docs_pd.attrs["truth"]
-    kb_pd = synth_kb(n_entities, seed)
+    kb_pd = synth_kb(n_entities, SEED)
     out = {
         "documents": spark.createDataFrame(docs_pd, schema=DOCUMENTS_SCHEMA),
         "kb": spark.createDataFrame(kb_pd, schema=KB_SCHEMA),
@@ -387,14 +376,13 @@ def synth_documents_spark(
     spark: SparkSession,
     n_docs: int,
     n_entities: int,
-    seed: int = SEED,
     with_truth_column: bool = False,
     hot_alias_ladder: tuple[tuple[str, float], ...] = (),
 ) -> DataFrame:
     """Deterministic distributed corpus: same schema + statistical shape as
     synth_documents (hosts with hot-key skew, 1-3 embedded aliases with at
     least one unique, ~10% zh rows, mid-text newline), generated via
-    mapInPandas over spark.range. Pure function of (seed, doc_id).
+    mapInPandas over spark.range. Pure function of doc_id (seed ``SEED``).
 
     ``hot_alias_ladder``: (alias, doc_fraction) pairs — each doc
     additionally plants alias with prob doc_fraction (independent
@@ -405,7 +393,7 @@ def synth_documents_spark(
 
     from collections.abc import Iterator as _Iterator
 
-    kb = synth_kb(n_entities, seed)
+    kb = synth_kb(n_entities, SEED)
     alias_count: dict[str, int] = {}
     for alist in kb["alias"]:
         for a in alist:
@@ -431,7 +419,7 @@ def synth_documents_spark(
             rows = []
             for d in pdf["id"]:
                 d = int(d)
-                rng = _random.Random((seed << 32) ^ d)
+                rng = _random.Random((SEED << 32) ^ d)
                 host = (
                     "site00.example.org"
                     if rng.random() < 0.2

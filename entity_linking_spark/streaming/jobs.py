@@ -25,25 +25,21 @@ from pyspark.sql.streaming import StreamingQuery
 from entity_linking_spark import runtime
 
 
-def streaming_mention_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-) -> DataFrame:
-    """Watermarked windowed counts (the streaming analog of
-    plans/queries.stream_windowed_counts — same window semantics)."""
+def streaming_mention_counts(events: DataFrame) -> DataFrame:
+    """Watermarked windowed counts: ``events`` per ``event_type`` in
+    1-hour windows of ``ts``, with a 2-hour watermark (the streaming
+    analog of plans/queries.stream_windowed_counts — same window
+    semantics)."""
     # watermarks require TIMESTAMP (with zone); parquet sources often carry
     # TIMESTAMP_NTZ — cast defensively
-    events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    events = events.withColumn("ts", F.col("ts").cast("timestamp"))
     return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window).alias("w"), F.col(key_col))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
         .agg(F.count("*").alias("n"))
         .select(
             F.date_format(F.col("w.start"), "yyyy-MM-dd HH:00").alias("window_start"),
-            key_col,
+            "event_type",
             "n",
         )
     )
@@ -103,13 +99,10 @@ def _first_seen_of_group(n_prior: int, pdf_iter, id_col: str):
     return first_id, n_this_batch
 
 
-def streaming_dedup_first_seen(
-    docs_stream: DataFrame,
-    text_col: str = "text",
-    id_col: str = "url",
-) -> DataFrame:
-    """Stateful streaming exact-dedup: keep only the FIRST document seen
-    per content hash across all micro-batches.
+def streaming_dedup_first_seen(docs_stream: DataFrame) -> DataFrame:
+    """Stateful streaming exact-dedup: keep only the FIRST document
+    (``url``) seen per content hash of ``text`` across all
+    micro-batches.
 
     Custom stateful operator via applyInPandasWithState: state per
     content-hash group is a running count; a group's first arrival is
@@ -132,7 +125,7 @@ def streaming_dedup_first_seen(
     out_schema = StructType(
         [
             StructField("content_hash", StringType()),
-            StructField(id_col, StringType()),
+            StructField("url", StringType()),
             StructField("n_batch_dupes", LongType()),
         ]
     )
@@ -140,7 +133,7 @@ def streaming_dedup_first_seen(
 
     def dedup_fn(key, pdf_iter, state: GroupState):
         n_prior = state.get[0] if state.exists else 0
-        first_id, n_this_batch = _first_seen_of_group(n_prior, pdf_iter, id_col)
+        first_id, n_this_batch = _first_seen_of_group(n_prior, pdf_iter, "url")
         state.update((n_prior + n_this_batch,))
         if first_id is not None:
             # n_batch_dupes: duplicates of the keeper within this first
@@ -148,13 +141,13 @@ def streaming_dedup_first_seen(
             yield pd.DataFrame(
                 {
                     "content_hash": [key[0]],
-                    id_col: [first_id],
+                    "url": [first_id],
                     "n_batch_dupes": [n_this_batch - 1],
                 }
             )
 
     hashed = docs_stream.select(
-        F.md5(F.col(text_col)).alias("content_hash"), F.col(id_col)
+        F.md5(F.col("text")).alias("content_hash"), F.col("url")
     )
     return hashed.groupBy("content_hash").applyInPandasWithState(
         dedup_fn,

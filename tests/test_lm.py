@@ -152,9 +152,8 @@ def test_all_oov_doc_scores_artificially_well(spark):
     text in unseen order — ppl is not monotone in quality at the OOV
     extreme. This is a property of any vocab-capped interpolated n-gram
     LM; it is why CCNet keeps the low-perplexity HEAD band rather than
-    treating lower-is-better (perplexity_filter's min_ppl exists for
-    exactly this), and why a real pipeline gates on unk fraction before
-    this pass."""
+    treating lower-is-better, and why a real pipeline gates on unk
+    fraction before this pass."""
     train = {i: f"x{i}a x{i}b x{i}c x{i}d" for i in range(10)}  # all OOV
     train.update({100 + i: "a b c d" for i in range(3)})        # the vocab
     tdf = spark.createDataFrame(list(train.items()), "doc_id long, text string")

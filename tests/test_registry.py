@@ -5,12 +5,17 @@ order, so the repo budget is exactly 50 slots with every oracle-backed
 query registered BEFORE the rows-only custom vectorized operators —
 otherwise an oracle-backed query could fall outside the gated window
 and silently lose its hash check.
+
+The library's option surface is held to a rule too: every defaulted
+parameter of a public function has a caller.
 """
 
+import ast
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
@@ -46,3 +51,67 @@ def test_rows_only_set_matches_docs():
     q = entry.queries()
     oracles = entry.oracle_sql()
     assert {n for n in q if n not in oracles} == ROWS_ONLY
+
+
+# deployment settings stay configurable without an in-repo caller
+UNCALLED_OPTIONS_ALLOWED = {"get_spark.extra_conf"}
+
+
+def _py_files(*parts):
+    top = os.path.join(ROOT, *parts)
+    if top.endswith(".py"):
+        yield top
+        return
+    for dirpath, _dirs, files in os.walk(top):
+        yield from (os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py"))
+
+
+def _parse(path):
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def test_every_option_has_a_caller():
+    """Each defaulted positional parameter of a public library function
+    (methods included) is passed by some call in the library,
+    ``__spark_entry__.py``, ``bench.py``, ``tools/``, ``perfbench/`` or
+    ``tests/``: by keyword, by enough positional arguments, or through
+    ``*args`` / ``**kwargs``. Calls match by function name only, so the
+    scan can over-count callers but never miss one."""
+    options = []  # (func, param, positional index not counting self/cls)
+    for path in _py_files("entity_linking_spark"):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
+                args = node.args.posonlyargs + node.args.args
+                assert not node.args.kwonlyargs, node.name
+                skip = 1 if args and args[0].arg in ("self", "cls") else 0
+                first = len(args) - len(node.args.defaults)
+                options += [
+                    (node.name, a.arg, i - skip)
+                    for i, a in enumerate(args) if i >= first
+                ]
+    calls: dict[str, list[ast.Call]] = {}
+    sources = ("entity_linking_spark", "__spark_entry__.py", "bench.py",
+               "tools", "perfbench", "tests")
+    for path in (p for part in sources for p in _py_files(part)):
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = getattr(f, "id", None) or getattr(f, "attr", None)
+                calls.setdefault(name, []).append(node)
+
+    def passed(func, param, index):
+        return any(
+            len(c.args) > index
+            or any(isinstance(a, ast.Starred) for a in c.args)
+            or any(k.arg in (None, param) for k in c.keywords)
+            for c in calls.get(func, ())
+        )
+
+    uncalled = sorted(
+        f"{func}.{param}"
+        for func, param, index in options
+        if not passed(func, param, index)
+        and f"{func}.{param}" not in UNCALLED_OPTIONS_ALLOWED
+    )
+    assert not uncalled, f"{len(uncalled)} options no call passes: {uncalled}"

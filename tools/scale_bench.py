@@ -139,7 +139,7 @@ def zipf_corpus(spark, n_docs: int, path: str, label):
     folded to <unk> and junk docs scored ppl ~1.4, because (unk, unk)
     became the model's most confident bigram. That inversion is a real
     property of any vocab-pruned interpolated LM (and why CCNet keeps the
-    low-perplexity HEAD band, i.e. why perplexity_filter has min_ppl); it
+    low-perplexity HEAD band rather than treating lower-is-better); it
     is pinned by tests/test_lm.py::test_all_oov_doc_scores_artificially_well.
     """
     docs = spark.range(n_docs).withColumnRenamed("id", "doc_id")
