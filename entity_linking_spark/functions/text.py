@@ -146,7 +146,7 @@ _WINDOW = 8
 _POLY_MOD = 1_000_000_007
 _POLY_MUL = 31
 # modular inverse of 31 (Fermat): lets prefix hashes be a cumsum of
-# cp_i * 31^-i, which numpy can vectorize — see _window_min_hash
+# cp_i * 31^-i, which numpy can vectorize — see _window_hashes
 _POLY_INV = pow(_POLY_MUL, _POLY_MOD - 2, _POLY_MOD)
 
 
@@ -169,10 +169,8 @@ def _poly_hash(s: str, mul: int = _POLY_MUL) -> int:
     return h
 
 
-# block size for the stateless power computation below: the per-call
-# Python loop is bounded by _POW_BLOCK + n/_POW_BLOCK iterations (~17k
-# for a 10 MB doc), everything else is one numpy outer product
-_POW_BLOCK = 1 << 14
+# powers computed by a scalar loop before _pow_array switches to doubling
+_POW_SEED = 64
 
 
 def _pow_array(base: int, n: int) -> np.ndarray:
@@ -180,166 +178,100 @@ def _pow_array(base: int, n: int) -> np.ndarray:
     state. Replaces the round-4 growing module-level power tables, which
     grew to the longest document's char count and never shrank — one
     10 MB doc pinned ~2x10^7 Python ints (~150 MB) per worker for the
-    process lifetime. Block decomposition: base^(q*B + r) =
-    (base^B)^q * base^r mod p; the two small factor tables come from
-    bounded Python loops and the full table is one numpy outer product.
-    Products stay exact: both factors < p = 1e9+7, so hi*lo < p^2
-    ~ 1.00e18 < 2^63 - 1 ~ 9.22e18 — no int64 overflow."""
-    b = min(n, _POW_BLOCK)
-    lo = np.empty(b, dtype=np.int64)
-    v = 1
-    for i in range(b):
-        lo[i] = v
+    process lifetime. The first _POW_SEED powers come from a scalar
+    loop; the rest by doubling, out[m : 2m] = out[:m] * base^m mod p, so
+    a table of n powers costs ~log2(n / _POW_SEED) numpy products and no
+    per-element Python loop beyond the seed. Products stay exact: both
+    factors < p = 1e9+7, so the product < p^2 ~ 1.00e18 < 2^63 - 1
+    ~ 9.22e18 — no int64 overflow."""
+    seed, v = [], 1
+    for _ in range(min(n, _POW_SEED)):
+        seed.append(v)
         v = v * base % _POLY_MOD
-    if n <= _POW_BLOCK:
-        return lo
-    nq = (n + _POW_BLOCK - 1) // _POW_BLOCK
-    hi = np.empty(nq, dtype=np.int64)
-    step = pow(base, _POW_BLOCK, _POLY_MOD)
-    w = 1
-    for q in range(nq):
-        hi[q] = w
-        w = w * step % _POLY_MOD
-    return ((hi[:, None] * lo[None, :]) % _POLY_MOD).reshape(-1)[:n]
+    out = np.empty(n, dtype=np.int64)
+    out[: len(seed)] = seed
+    m = len(seed)
+    while m < n:
+        k = min(m, n - m)
+        out[m : m + k] = out[:k] * pow(base, m, _POLY_MOD) % _POLY_MOD
+        m += k
+    return out
 
 
-def _all_window_hashes(t: str, window: int, mul: int = _POLY_MUL) -> np.ndarray:
-    """Polynomial hash of EVERY ``window``-token window in O(chars).
+# second multiplier of the combined window key (31 is the fingerprint
+# family's; 131 is independent of it mod p): duplicated spans, the
+# quality n-grams and decontamination key a window on both hashes
+_WHASH_MUL2 = 131
+
+
+def _window_hashes(
+    t: str, windows: tuple[int, ...], muls: tuple[int, ...]
+) -> dict[int, list[np.ndarray]]:
+    """Polynomial hash of EVERY w-token window of ``t`` for each w in
+    ``windows`` and each multiplier in ``muls``, in O(chars):
+    {w: [hashes per mul]}, one hash per window position.
 
     Key identity: `" ".join(t.lower().split(" ")) == t.lower()`, so every
     token window is a CONTIGUOUS SUBSTRING of the lowered text. One
-    vectorized prefix-hash pass then prices every window at O(1):
+    vectorized prefix-hash pass per multiplier then prices every window
+    of every size at O(1):
     H(b) = hash(s[:b]) = mul^(b-1) * sum_{i<b} cp_i * mul^-i  (mod p),
     the sum being a single numpy cumsum; hash(s[a:b]) = H(b) -
-    H(a)*mul^(b-a). Replaces the round-3 version that re-hashed all W
-    tokens per window — O(len·W·chars) per doc, the judge's "not
-    actually rolling" finding. Returns one hash per window position (a
-    single whole-doc window for docs of <= ``window`` tokens)."""
+    H(a)*mul^(b-a). The decode (lower, split, utf-32 code points, token
+    char starts) is shared across multipliers, the prefix arrays across
+    window sizes.
+
+    A doc of at most w tokens yields ONE whole-doc window, H(len(s)) —
+    equal to _poly_hash(s), 0 for "" (the fingerprint, duplicated-span
+    and decontamination convention; the quality n-grams drop it)."""
     s = t.lower()
     toks = s.split(" ")
     n_toks = len(toks)
     nc = len(s)
-    if n_toks <= window:
-        # cheap scalar path for the whole-doc window: a giant
-        # single-token doc (minified JS, base64 blob) never needs the
-        # vectorized machinery at all
-        return np.array([_poly_hash(s, mul)], dtype=np.int64)
-    # power tables are computed per call and freed with it (numpy int64,
-    # not Python ints) — peak transient cost for a 10 MB doc is ~160 MB
-    # of arrays inside one Arrow batch, persistent cost zero
-    pw = _pow_array(mul, nc + 1)
-    inv = _pow_array(pow(mul, _POLY_MOD - 2, _POLY_MOD), nc)
-    cps = np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(np.int64)
-    # cp < 2^21 and inv < p ≈ 2^30 → products < 2^51; cumsum of < 2^33
-    # terms each < p stays under int64 — no overflow anywhere below
-    terms = (cps * inv) % _POLY_MOD
-    prefix = np.cumsum(terms) % _POLY_MOD  # prefix[b-1] = sum of first b
-    H = np.empty(nc + 1, dtype=np.int64)
-    H[0] = 0
-    H[1:] = prefix * pw[:nc] % _POLY_MOD
-    # token char-start offsets; window i = s[starts[i] : starts[i+W]-1]
     lens = np.fromiter((len(x) for x in toks), dtype=np.int64, count=n_toks)
     starts = np.empty(n_toks + 1, dtype=np.int64)
     starts[0] = 0
     np.cumsum(lens + 1, out=starts[1:])
-    a = starts[: n_toks - window + 1]
-    b = starts[window:] - 1
-    return (H[b] - H[a] * pw[b - a]) % _POLY_MOD
-
-
-def _all_window_hashes_multi(
-    t: str, window: int, muls: tuple[int, ...]
-) -> list[np.ndarray]:
-    """_all_window_hashes under SEVERAL multipliers in one pass: the
-    mul-independent work (lowering, token split, utf-32 codepoint
-    decode, token char-start offsets) is done once and shared — the
-    combined-key consumers (operators/dedup.window_hash_positions) pay
-    ~1.4x a single pass instead of 2x. Exact-equal to per-mul calls
-    (property-tested)."""
-    s = t.lower()
-    toks = s.split(" ")
-    n_toks = len(toks)
-    nc = len(s)
-    if n_toks <= window:
-        return [np.array([_poly_hash(s, m)], dtype=np.int64) for m in muls]
     cps = np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(np.int64)
-    lens = np.fromiter((len(x) for x in toks), dtype=np.int64, count=n_toks)
-    starts = np.empty(n_toks + 1, dtype=np.int64)
-    starts[0] = 0
-    np.cumsum(lens + 1, out=starts[1:])
-    a = starts[: n_toks - window + 1]
-    b = starts[window:] - 1
-    out = []
+    out: dict[int, list[np.ndarray]] = {w: [] for w in windows}
     for mul in muls:
+        # power tables are computed per call and freed with it (numpy
+        # int64, not Python ints) — peak transient cost for a 10 MB doc
+        # is ~160 MB of arrays inside one Arrow batch, persistent cost 0
         pw = _pow_array(mul, nc + 1)
         inv = _pow_array(pow(mul, _POLY_MOD - 2, _POLY_MOD), nc)
-        terms = (cps * inv) % _POLY_MOD
-        prefix = np.cumsum(terms) % _POLY_MOD
-        H = np.empty(nc + 1, dtype=np.int64)
-        H[0] = 0
-        H[1:] = prefix * pw[:nc] % _POLY_MOD
-        out.append((H[b] - H[a] * pw[b - a]) % _POLY_MOD)
+        # cp < 2^21 and inv < p ≈ 2^30 → products < 2^51; cumsum of < 2^33
+        # terms each < p stays under int64 — no overflow anywhere below
+        H = np.zeros(nc + 1, dtype=np.int64)
+        H[1:] = np.cumsum(cps * inv % _POLY_MOD) % _POLY_MOD * pw[:nc] % _POLY_MOD
+        for w in windows:
+            if n_toks <= w:
+                out[w].append(H[nc:])
+                continue
+            # window i = s[starts[i] : starts[i+w]-1]
+            a = starts[: n_toks - w + 1]
+            b = starts[w:] - 1
+            out[w].append((H[b] - H[a] * pw[b - a]) % _POLY_MOD)
     return out
 
 
-def _window_hash_families(
-    t: str, windows: tuple[int, ...], muls: tuple[int, ...]
-) -> dict[int, list[np.ndarray]]:
-    """_all_window_hashes under SEVERAL multipliers AND several window
-    sizes in one pass: the decode work (lower, split, utf-32 codepoints,
-    token char-starts) is shared across everything, and the per-mul
-    prefix-hash arrays are shared across window sizes — a window size
-    only selects (start, end) index pairs into the same prefix arrays.
-    Returns {window: [hashes_per_mul]}; a window larger than the doc's
-    token count yields EMPTY arrays (full windows only — this is the
-    n-gram convention of operators/quality, NOT the whole-doc-window
-    convention of _all_window_hashes/window_hash_positions)."""
-    s = t.lower()
-    toks = s.split(" ")
-    n_toks = len(toks)
-    nc = len(s)
-    lens = np.fromiter((len(x) for x in toks), dtype=np.int64, count=n_toks)
-    starts = np.empty(n_toks + 1, dtype=np.int64)
-    starts[0] = 0
-    np.cumsum(lens + 1, out=starts[1:])
-    cps = None
-    Hs = []
-    pws = []
-    for mul in muls:
-        if any(n_toks >= w for w in windows):
-            if cps is None:
-                cps = np.frombuffer(s.encode("utf-32-le"), dtype="<u4").astype(
-                    np.int64
-                )
-            pw = _pow_array(mul, nc + 1)
-            inv = _pow_array(pow(mul, _POLY_MOD - 2, _POLY_MOD), nc)
-            terms = (cps * inv) % _POLY_MOD
-            prefix = np.cumsum(terms) % _POLY_MOD
-            H = np.empty(nc + 1, dtype=np.int64)
-            H[0] = 0
-            H[1:] = prefix * pw[:nc] % _POLY_MOD
-        else:  # every window is larger than the doc: nothing to hash
-            H, pw = None, None
-        Hs.append(H)
-        pws.append(pw)
-    empty = np.empty(0, dtype=np.int64)
-    out: dict[int, list[np.ndarray]] = {}
-    for w in windows:
-        if n_toks < w:
-            out[w] = [empty] * len(muls)
-            continue
-        a = starts[: n_toks - w + 1]
-        b = starts[w:] - 1
-        out[w] = [
-            (H[b] - H[a] * pw[b - a]) % _POLY_MOD for H, pw in zip(Hs, pws)
-        ]
-    return out
+def _window_keys(t: str, windows: tuple[int, ...]) -> dict[int, np.ndarray]:
+    """{w: combined key of every w-token window}: the multiplier-31 and
+    -131 hashes packed into one int64 as h31*p + h131 (~2^60 key space;
+    exact, since h31*p + h131 < p^2 + p ~ 1.0e18 < 2^63). Short docs
+    follow _window_hashes: one whole-doc window."""
+    return {
+        w: h31 * _POLY_MOD + h131
+        for w, (h31, h131) in _window_hashes(
+            t, windows, (_POLY_MUL, _WHASH_MUL2)
+        ).items()
+    }
 
 
 def _window_min_hash(t: str) -> int:
     """Min polynomial hash over all W-token windows (winnowing-style
-    fingerprint) — the min of _all_window_hashes."""
-    return int(_all_window_hashes(t, _WINDOW).min())
+    fingerprint)."""
+    return int(_window_hashes(t, (_WINDOW,), (_POLY_MUL,))[_WINDOW][0].min())
 
 
 @pandas_udf(LongType())

@@ -292,12 +292,6 @@ def embedding_near_dup_pairs(
     )
 
 
-# second multiplier for the combined window hash below (31 is the
-# fingerprint family's; 131 is independent of it mod 1e9+7)
-_WHASH_MUL2 = 131
-_WHASH_P = 1_000_000_007
-
-
 def window_hash_positions(
     df: DataFrame,
     text_col: str = "text",
@@ -317,18 +311,15 @@ def window_hash_positions(
     (10^12 windows into 10^9 buckets puts ~10^3 different windows in
     EVERY bucket — a catastrophic false-dup rate), while the combined
     ~2^60 key space keeps the per-window false-positive rate ~5e-7 even
-    at a trillion windows. Packing stays exact in int64: h31*p + h131
-    < p^2 + p ~ 1.0e18 < 2^63. Both hash passes are the O(chars)
-    vectorized prefix-hash computation; DuckDB replays each with a
-    list_reduce fold and the same packing arithmetic."""
+    at a trillion windows. The keys come from functions/text._window_keys
+    (the O(chars) vectorized prefix-hash fold, which also owns the
+    packing); DuckDB replays each hash with a list_reduce fold and the
+    same packing arithmetic."""
     from collections.abc import Iterator
 
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-    from entity_linking_spark.functions.text import (
-        _POLY_MUL,
-        _all_window_hashes_multi,
-    )
+    from entity_linking_spark.functions.text import _window_keys
 
     out_schema = StructType(
         [
@@ -347,10 +338,7 @@ def window_hash_positions(
             for did, text in zip(pdf["id"], pdf[text_col]):
                 if text is None:
                     continue
-                h31, h131 = _all_window_hashes_multi(
-                    text, window, (_POLY_MUL, _WHASH_MUL2)
-                )
-                vals = h31 * _WHASH_P + h131
+                vals = _window_keys(text, (window,))[window]
                 # single-space-split token count without a second split:
                 # len(s.split(' ')) == s.count(' ') + 1 by definition
                 nt = text.count(" ") + 1

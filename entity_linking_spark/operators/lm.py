@@ -141,14 +141,13 @@ def _bounded_topk(df: DataFrame, k: int, order_cols: list, n_buckets: int = 64) 
 
 def train_bigram_lm(
     docs: DataFrame,
-    text_col: str = "text",
     vocab_size: int = 50_000,
     bigram_size: int = 500_000,
     k: float = 1.0,
     lam: float = 0.75,
-    materialize: bool = True,
 ) -> NgramLM:
-    """Train the pruned interpolated bigram LM on ``docs``.
+    """Train the pruned interpolated bigram LM on the ``text`` column of
+    ``docs``.
 
     ONE corpus pass: the raw (prev, cur) pair counts are aggregated
     once (map-side-combined hash aggregate, so the shuffle carries the
@@ -166,15 +165,15 @@ def train_bigram_lm(
     at any partition count. Deterministic: ties at both caps break on
     the token strings, as before.
 
-    ``materialize`` (default): the finished model tables are collected
-    (bounded by vocab_size/bigram_size rows BY CONSTRUCTION) and
-    rebuilt as local DataFrames, so every downstream broadcast/score
-    plan embeds data, not the training lineage — otherwise each action
-    over a scoring plan (broadcast builds, range-partition sampling,
-    persists) silently re-runs training subtrees, and the vocab pass
-    alone was being recomputed ~5x per scoring query.
+    The finished model tables are collected (bounded by
+    vocab_size/bigram_size rows BY CONSTRUCTION) and rebuilt as local
+    DataFrames, so every downstream broadcast/score plan embeds data,
+    not the training lineage — otherwise each action over a scoring
+    plan (broadcast builds, range-partition sampling, persists) silently
+    re-runs training subtrees, and the vocab pass alone was being
+    recomputed ~5x per scoring query.
 
-    Documents whose ``text_col`` is NULL are skipped. A literal
+    Documents whose ``text`` is NULL are skipped. A literal
     ``<unk>`` corpus token is folded into the UNK class like any OOV
     token (the sentinel is excluded from the vocabulary), so the model
     never confuses it with a real type.
@@ -186,8 +185,8 @@ def train_bigram_lm(
     from pyspark import StorageLevel
 
     pairs = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.explode(_pair_col(text_col)).alias("pc"))
+        docs.where(F.col("text").isNotNull())
+        .select(F.explode(_pair_col("text")).alias("pc"))
         .select(F.col("pc.cur").alias("cur"), F.col("pc.prev").alias("prev"))
     )
     # the ONE corpus pass; consumed by unigram derivation AND the mapped
@@ -198,73 +197,66 @@ def train_bigram_lm(
         .agg(F.count("*").alias("_c"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    uni_raw = bg_raw.groupBy(F.col("cur").alias("token")).agg(
-        F.sum("_c").alias("c")
-    )
-    vocab = _bounded_topk(
-        uni_raw.where(F.col("token") != UNK),
-        vocab_size,
-        [("desc", F.col("c")), ("asc", F.col("token"))],
-    ).select("token")
-    spark = docs.sparkSession
-    vocab_rows: list | None = None
-    if materialize:
-        # collect the vocabulary FIRST (bounded by vocab_size) and build
-        # the mapped tables against the LOCAL copy: otherwise every
-        # broadcast build below re-runs the vocab top-k subtree — with a
-        # local build side, the unigram and bigram jobs each read only
-        # the cached pair table (one job apiece, no recursive lineage)
+    try:
+        uni_raw = bg_raw.groupBy(F.col("cur").alias("token")).agg(
+            F.sum("_c").alias("c")
+        )
+        vocab = _bounded_topk(
+            uni_raw.where(F.col("token") != UNK),
+            vocab_size,
+            [("desc", F.col("c")), ("asc", F.col("token"))],
+        ).select("token")
+        spark = docs.sparkSession
+        # collect the vocabulary FIRST (bounded by vocab_size) and build the
+        # mapped tables against the LOCAL copy: otherwise every broadcast
+        # build below re-runs the vocab top-k subtree — with a local build
+        # side, the unigram and bigram jobs each read only the cached pair
+        # table (one job apiece, no recursive lineage)
         vocab_rows = vocab.collect()
         vocab = spark.createDataFrame(vocab_rows, schema="token string")
-    vb = F.broadcast(vocab)
-    # UNK-fold the bounded tables instead of the corpus: identical
-    # counts (the fold is a sum over the same occurrences), no second
-    # corpus explode
-    unigrams = (
-        uni_raw.join(
-            vb.select(F.col("token"), F.lit(True).alias("_in")), "token", "left"
+        vb = F.broadcast(vocab)
+        # UNK-fold the bounded tables instead of the corpus: identical
+        # counts (the fold is a sum over the same occurrences), no second
+        # corpus explode
+        unigrams = (
+            uni_raw.join(
+                vb.select(F.col("token"), F.lit(True).alias("_in")), "token", "left"
+            )
+            .select(
+                F.when(F.col("_in").isNotNull(), F.col("token"))
+                .otherwise(F.lit(UNK))
+                .alias("token"),
+                F.col("c"),
+            )
+            .groupBy("token")
+            .agg(F.sum("c").alias("c1"))
         )
-        .select(
-            F.when(F.col("_in").isNotNull(), F.col("token"))
-            .otherwise(F.lit(UNK))
-            .alias("token"),
-            F.col("c"),
+        bigrams = _bounded_topk(
+            bg_raw.where(F.col("prev").isNotNull())
+            .join(
+                vb.select(F.col("token").alias("cur"), F.lit(True).alias("_cin")),
+                "cur",
+                "left",
+            )
+            .join(
+                vb.select(F.col("token").alias("prev"), F.lit(True).alias("_pin")),
+                "prev",
+                "left",
+            )
+            .select(
+                F.when(F.col("_pin").isNotNull(), F.col("prev"))
+                .otherwise(F.lit(UNK))
+                .alias("prev"),
+                F.when(F.col("_cin").isNotNull(), F.col("cur"))
+                .otherwise(F.lit(UNK))
+                .alias("cur"),
+                F.col("_c"),
+            )
+            .groupBy("prev", "cur")
+            .agg(F.sum("_c").alias("c2")),
+            bigram_size,
+            [("desc", F.col("c2")), ("asc", F.col("prev")), ("asc", F.col("cur"))],
         )
-        .groupBy("token")
-        .agg(F.sum("c").alias("c1"))
-    )
-    bigrams = _bounded_topk(
-        bg_raw.where(F.col("prev").isNotNull())
-        .join(
-            vb.select(F.col("token").alias("cur"), F.lit(True).alias("_cin")),
-            "cur",
-            "left",
-        )
-        .join(
-            vb.select(F.col("token").alias("prev"), F.lit(True).alias("_pin")),
-            "prev",
-            "left",
-        )
-        .select(
-            F.when(F.col("_pin").isNotNull(), F.col("prev"))
-            .otherwise(F.lit(UNK))
-            .alias("prev"),
-            F.when(F.col("_cin").isNotNull(), F.col("cur"))
-            .otherwise(F.lit(UNK))
-            .alias("cur"),
-            F.col("_c"),
-        )
-        .groupBy("prev", "cur")
-        .agg(F.sum("_c").alias("c2")),
-        bigram_size,
-        [("desc", F.col("c2")), ("asc", F.col("prev")), ("asc", F.col("cur"))],
-    )
-    if not materialize:
-        totals = unigrams.agg(F.sum("c1").alias("n_tokens")).crossJoin(
-            vocab.agg((F.count("*") + F.lit(1)).cast("long").alias("v_eff"))
-        )
-        return NgramLM(vocab, unigrams, bigrams, totals, k, lam)
-    try:
         uni_rows = unigrams.collect()
         lu = spark.createDataFrame(uni_rows, schema="token string, c1 long")
         lb = spark.createDataFrame(

@@ -65,28 +65,24 @@ def _doc_signals(
     dup_n: int,
 ) -> tuple[int, list[int], int]:
     """(n_tokens, [top_n counts], dup-coverage) for one document — all
-    numpy over the shared-decode window-hash families."""
-    from entity_linking_spark.functions.text import _window_hash_families
-    from entity_linking_spark.operators.dedup import _WHASH_MUL2, _WHASH_P
+    numpy over the combined window keys of functions/text._window_keys.
+    n-grams are full windows only: a doc of fewer than n tokens has
+    none (its whole-doc window is dropped)."""
+    from entity_linking_spark.functions.text import _window_keys
 
-    windows = tuple(dict.fromkeys(list(top_ns) + [dup_n]))
-    fams = _window_hash_families(text, windows, (31, _WHASH_MUL2))
+    keys = _window_keys(text, tuple(dict.fromkeys(list(top_ns) + [dup_n])))
     n_tokens = text.count(" ") + 1
     tops = []
     for n in top_ns:
-        h31, h131 = fams[n]
-        if len(h31) == 0:
+        if n_tokens < n:
             tops.append(0)
             continue
-        packed = h31 * _WHASH_P + h131
-        _, counts = np.unique(packed, return_counts=True)
+        _, counts = np.unique(keys[n], return_counts=True)
         tops.append(int(counts.max()))
-    h31, h131 = fams[dup_n]
     cov = 0
-    if len(h31) >= 2:
-        packed = h31 * _WHASH_P + h131
+    if len(keys[dup_n]) >= 2:
         _, inverse, counts = np.unique(
-            packed, return_inverse=True, return_counts=True
+            keys[dup_n], return_inverse=True, return_counts=True
         )
         # positions of duplicated windows, ascending by construction
         pos = np.nonzero(counts[inverse] >= 2)[0]

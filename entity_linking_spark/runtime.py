@@ -1,6 +1,7 @@
 """The runtime decisions every stage and query makes, each made here once.
 
 - ``spread``: whether a scan is spread over the cores before per-row work.
+- ``resolve_fs``: which filesystem a path lives on.
 - ``parquet_rows`` / ``input_rows``: how many rows an input has, read
   from parquet footers (metadata only, no Spark job).
 - ``CacheScope``: when the frames a stage or query pinned are dropped.
@@ -36,6 +37,17 @@ def spread(df: DataFrame) -> DataFrame:
     return df
 
 
+def resolve_fs(path: str):
+    """path -> (pyarrow FileSystem, fs-local path). Scheme-qualified
+    paths (s3://, hdfs://, file://, ...) resolve via ``from_uri``; bare
+    paths, relative ones included, are local."""
+    from pyarrow import fs as pafs
+
+    if "://" in path:
+        return pafs.FileSystem.from_uri(path)
+    return pafs.LocalFileSystem(), path
+
+
 def _footer_rows(source) -> int:
     import pyarrow.parquet as pq
 
@@ -50,25 +62,17 @@ def parquet_rows(path: str) -> dict[str, int]:
     (~0.5-1 s of fixed cost x 6 stages); at 100 TB it reads a few KB per
     file instead of re-scanning the output. ``partitionBy`` layouts nest
     files under ``key=value/`` directories, so the listing is recursive.
-    Scheme-qualified paths (s3://, hdfs://) are listed and read through
-    ``pyarrow.fs``. Raises when there is no parquet file under ``path``
-    (e.g. an orc snapshot) or a footer cannot be read."""
-    out: dict[str, int] = {}
-    if "://" in path:
-        from pyarrow import fs as pafs
+    Raises when ``path`` does not exist, there is no parquet file under
+    it (e.g. an orc snapshot) or a footer cannot be read."""
+    from pyarrow import fs as pafs
 
-        filesystem, fs_path = pafs.FileSystem.from_uri(path)
-        infos = filesystem.get_file_info(pafs.FileSelector(fs_path, recursive=True))
-        for info in sorted(infos, key=lambda i: i.path):
-            if info.is_file and info.path.endswith(".parquet"):
-                with filesystem.open_input_file(info.path) as f:
-                    out[os.path.relpath(info.path, fs_path)] = _footer_rows(f)
-    else:
-        for dirpath, _dirs, files in sorted(os.walk(path)):
-            for entry in sorted(files):
-                if entry.endswith(".parquet"):
-                    full = os.path.join(dirpath, entry)
-                    out[os.path.relpath(full, path)] = _footer_rows(full)
+    filesystem, fs_path = resolve_fs(path)
+    infos = filesystem.get_file_info(pafs.FileSelector(fs_path, recursive=True))
+    out: dict[str, int] = {}
+    for info in sorted(infos, key=lambda i: i.path):
+        if info.is_file and info.path.endswith(".parquet"):
+            with filesystem.open_input_file(info.path) as f:
+                out[os.path.relpath(info.path, fs_path)] = _footer_rows(f)
     if not out:
         raise FileNotFoundError(f"no parquet files under {path}")
     return out

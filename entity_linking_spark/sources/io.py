@@ -53,53 +53,29 @@ def stage_path(root: str, name: str) -> str:
     return os.path.join(root, name)
 
 
-# Scheme-qualified workdirs (s3://, hdfs://) route every sidecar
-# operation through pyarrow.fs so resume/lineage work end-to-end on a
-# remote filesystem, not just the parquet-footer reads: the sidecar
-# write, the skip-if-exists probe, and the meta read all share the
-# branch below. (Spark's own writer already handles remote stage data
-# via its Hadoop filesystems.)
-
-
-def _is_remote(path: str) -> bool:
-    return "://" in path
+# Every sidecar operation goes through runtime.resolve_fs, so resume
+# and lineage work end-to-end on a scheme-qualified workdir (s3://,
+# hdfs://), not just the parquet-footer reads. (Spark's own writer
+# already handles remote stage data via its Hadoop filesystems.)
 
 
 def _sidecar_write(path: str, meta: dict) -> None:
-    data = json.dumps(meta, indent=1)
-    if _is_remote(path):
-        from pyarrow import fs as pafs
-
-        filesystem, p = pafs.FileSystem.from_uri(path)
-        with filesystem.open_output_stream(p) as f:
-            f.write(data.encode())
-    else:
-        with open(path, "w") as f:
-            f.write(data)
+    filesystem, p = runtime.resolve_fs(path)
+    with filesystem.open_output_stream(p) as f:
+        f.write(json.dumps(meta, indent=1).encode())
 
 
 def _sidecar_read(path: str) -> dict:
-    if _is_remote(path):
-        from pyarrow import fs as pafs
-
-        filesystem, p = pafs.FileSystem.from_uri(path)
-        with filesystem.open_input_file(p) as f:
-            return json.loads(f.read().decode())
-    with open(path) as f:
-        return json.load(f)
-
-
-def _exists(path: str) -> bool:
-    if _is_remote(path):
-        from pyarrow import fs as pafs
-
-        filesystem, p = pafs.FileSystem.from_uri(path)
-        return filesystem.get_file_info(p).type != pafs.FileType.NotFound
-    return os.path.exists(path)
+    filesystem, p = runtime.resolve_fs(path)
+    with filesystem.open_input_file(p) as f:
+        return json.loads(f.read())
 
 
 def stage_complete(root: str, name: str) -> bool:
-    return _exists(os.path.join(stage_path(root, name), _META))
+    from pyarrow import fs as pafs
+
+    filesystem, p = runtime.resolve_fs(os.path.join(stage_path(root, name), _META))
+    return filesystem.get_file_info(p).type != pafs.FileType.NotFound
 
 
 def write_stage(df: DataFrame, root: str, name: str, build_seconds: float | None = None) -> dict:

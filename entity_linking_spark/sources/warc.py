@@ -8,16 +8,18 @@ Spark-first at the right granularity for the format: WARC is NOT
 line-splittable, so the unit of parallelism is the FILE (Common Crawl
 ships ~1 GB segments, thousands per crawl — file-level parallelism
 saturates any cluster). File paths are distributed as a tiny DataFrame
-and each task STREAMS its file through pyarrow.fs + stdlib gzip
-(concatenated-member transparent), yielding bounded Arrow batches
-(_BATCH_ROWS records / _BATCH_BYTES payload per flush) — unlike the
-binaryFile DataSource, a 1 GB archive never materializes as a single
-row or a single batch, and no binary column approaches Arrow's 2 GiB
-int32-offset capacity.
+and each task STREAMS its file through pyarrow.fs, yielding bounded
+Arrow batches (_BATCH_ROWS records / _BATCH_BYTES payload per flush) —
+unlike the binaryFile DataSource, a 1 GB archive never materializes as a
+single row or a single batch, and no binary column approaches Arrow's
+2 GiB int32-offset capacity.
 
-Per-record failures land in a ``parse_error`` column (same poison-row
-philosophy as operators/multimodal.py): one corrupt record in a
-400-file batch must not kill the ingest stage.
+One record parser (_iter_warc_records_resync) frames every file: a
+.warc.gz file reaches it as per-gzip-member chunks, a plain .warc file
+as a single member. Per-record failures land in a ``parse_error``
+column (same poison-row philosophy as operators/multimodal.py): one
+corrupt record in a 400-file batch must not kill the ingest stage, and
+it costs only the member it started in.
 
 Reference parity: the reference ingests WikiExtractor JSONL dumps
 (SURVEY §2.1 S1-S4); WARC is the equivalent ingest boundary for the
@@ -30,6 +32,7 @@ from __future__ import annotations
 import gzip
 import hashlib
 import io
+import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -42,6 +45,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from entity_linking_spark.runtime import resolve_fs
 
 WARC_SCHEMA = StructType(
     [
@@ -58,23 +63,13 @@ WARC_SCHEMA = StructType(
 )
 
 _CRLF2 = b"\r\n\r\n"
+_NOT_CRLF = re.compile(rb"[^\r\n]")
 
 # flush thresholds for the streaming parse: a yielded Arrow batch stays
 # well under the 2 GiB binary-column offset limit and executor memory
 # holds one batch, not one decompressed segment
 _BATCH_ROWS = 4096
 _BATCH_BYTES = 64 << 20
-
-
-def _resolve_fs(path: str):
-    """path -> (pyarrow FileSystem, fs-local path). Scheme-qualified
-    paths (s3://, hdfs://, ...) resolve via from_uri; bare paths are
-    local."""
-    from pyarrow import fs as pafs
-
-    if "://" in path:
-        return pafs.FileSystem.from_uri(path)
-    return pafs.LocalFileSystem(), path
 
 
 def _record_id(url: str, ts: str) -> str:
@@ -132,55 +127,11 @@ def write_warc_file(
     before opening the destination — a malformed record dict raises
     with nothing written, never a truncated file."""
     body = b"".join(_record_bytes(rec, gzip_per_record) for rec in records)
-    fs, fpath = _resolve_fs(path)
+    fs, fpath = resolve_fs(path)
     # compression=None: pyarrow would otherwise gzip AGAIN based on the
     # .gz extension — the per-record member framing is the format
     with fs.open_output_stream(fpath, compression=None) as f:
         f.write(body)
-
-
-def _iter_warc_records(stream: io.BufferedIOBase) -> Iterator[dict]:
-    """Stream WARC records from an open byte stream (already
-    decompressed). Holds one record in memory at a time."""
-    buf = b""
-    while True:
-        # skip the inter-record CRLF separator left from the previous
-        # record (it would otherwise match as an empty header block)
-        while True:
-            buf = buf.lstrip(b"\r\n")
-            if buf:
-                break
-            chunk = stream.read(65536)
-            if not chunk:
-                return
-            buf = chunk
-        # accumulate until the end of the record's header block
-        while _CRLF2 not in buf:
-            chunk = stream.read(65536)
-            if not chunk:
-                raise ValueError("truncated WARC header block")
-            buf += chunk
-        head, buf = buf.split(_CRLF2, 1)
-        lines = head.split(b"\r\n")
-        if not lines[0].startswith(b"WARC/"):
-            raise ValueError(f"bad WARC version line {lines[0][:40]!r}")
-        headers = {}
-        for line in lines[1:]:
-            k, _, v = line.partition(b":")
-            headers[k.strip().lower().decode()] = v.strip().decode(
-                "utf-8", "replace"
-            )
-        length = int(headers["content-length"])
-        if length < 0:
-            # a negative length would mis-frame the stream via buf[:length]
-            raise ValueError(f"negative WARC Content-Length {length}")
-        while len(buf) < length + 4:  # payload + trailing CRLFCRLF
-            chunk = stream.read(max(65536, length + 4 - len(buf)))
-            if not chunk:
-                raise ValueError("truncated WARC payload")
-            buf += chunk
-        payload, buf = buf[:length], buf[length:]
-        yield {"headers": headers, "payload": payload}
 
 
 def _iter_member_chunks(raw) -> Iterator[tuple[int, bytes]]:
@@ -216,54 +167,66 @@ def _iter_member_chunks(raw) -> Iterator[tuple[int, bytes]]:
 def _iter_warc_records_resync(
     chunks: Iterator[tuple[int, bytes]],
 ) -> Iterator[tuple[str, dict | str]]:
-    """Parse WARC records from member-aligned chunks, yielding
-    ("ok", record) or ("err", message). A record-level parse failure
-    poisons only the member where the failed record STARTED: that
-    member's bytes are dropped and parsing resumes at the next member
-    boundary, re-using any later members' bytes the header scan had
-    already pulled into the buffer (a garbage member with no CRLFCRLF
-    makes the scan read ahead into its good successor — those successor
-    records must survive). With Common Crawl's one-record-per-member
-    framing exactly the bad record is lost, not the remainder of a 1 GB
-    segment (the round-4 advice finding)."""
-    buf = b""
+    """The record parser for every WARC file: parse records from
+    member-aligned (member_index, bytes) chunks, yielding ("ok", record)
+    or ("err", message). A plain .warc file is one member, read as
+    (0, chunk) pieces.
+
+    A record-level parse failure poisons only the member where the
+    failed record STARTED: its bytes are dropped through the end of that
+    member — including chunks of it not yet pulled, since a member
+    larger than one read arrives as several chunks with the same index —
+    and parsing resumes at the next member boundary, re-using any later
+    members' bytes the header scan had already pulled into the buffer (a
+    garbage member with no CRLFCRLF makes the scan read ahead into its
+    good successor — those successor records must survive). With Common
+    Crawl's one-record-per-member framing exactly the bad record is
+    lost, not the remainder of a 1 GB segment (the round-4 advice
+    finding); in a plain file the rest of the file is skipped.
+
+    The buffer is a bytearray: appends are amortized O(1) and consumed
+    bytes are cut from its front in O(1), so a multi-MB record arriving
+    as many chunks is read in linear time."""
+    buf = bytearray()
     base = 0  # absolute stream offset of buf[0]
-    done = False
-    # (member_index, absolute_end_offset) per pulled member, pruned as
-    # their bytes are consumed — locates the member owning any offset
-    spans: list[tuple[int, int]] = []
+    # [member_index, absolute_end_offset] per member with pulled bytes,
+    # pruned as they are consumed — locates the member owning any offset
+    spans: list[list[int]] = []
 
     def pull() -> bool:
-        nonlocal buf, done
         try:
             idx, c = next(chunks)
         except StopIteration:
-            done = True
             return False
-        spans.append((idx, base + len(buf) + len(c)))
-        buf += c
+        if spans and spans[-1][0] == idx:
+            spans[-1][1] += len(c)
+        else:
+            spans.append([idx, base + len(buf) + len(c)])
+        buf.extend(c)
         return True
 
-    rec_start = 0
+    def consume(n: int) -> None:
+        nonlocal base
+        del buf[:n]
+        base += n
+        while spans and spans[0][1] <= base:
+            spans.pop(0)
+
     while True:
-        head = None
+        # skip the inter-record CRLF separator left from the previous
+        # record (it would otherwise match as an empty header block)
+        while not (m := _NOT_CRLF.search(buf)):
+            consume(len(buf))
+            if not pull():
+                return
+        consume(m.start())
         try:
-            # one record, same framing rules as the plain-stream parser
-            while True:
-                n = len(buf)
-                buf = buf.lstrip(b"\r\n")
-                base += n - len(buf)
-                if buf:
-                    break
-                if not pull():
-                    return
-            rec_start = base
-            while _CRLF2 not in buf:
+            scanned = 0
+            while (end := buf.find(_CRLF2, scanned)) < 0:
+                scanned = max(len(buf) - 3, 0)
                 if not pull():
                     raise ValueError("truncated WARC header block")
-            head, buf = buf.split(_CRLF2, 1)
-            base += len(head) + 4
-            lines = head.split(b"\r\n")
+            lines = bytes(buf[:end]).split(b"\r\n")
             if not lines[0].startswith(b"WARC/"):
                 raise ValueError(f"bad WARC version line {lines[0][:40]!r}")
             headers = {}
@@ -274,61 +237,32 @@ def _iter_warc_records_resync(
                 )
             length = int(headers["content-length"])
             if length < 0:
+                # a negative length would mis-frame the stream
                 raise ValueError(f"negative WARC Content-Length {length}")
-            while len(buf) < length + 4:  # payload + trailing CRLFCRLF
+            start = end + 4
+            while len(buf) < start + length + 4:  # + trailing CRLFCRLF
                 if not pull():
                     raise ValueError("truncated WARC payload")
-            payload, buf = buf[:length], buf[length:]
-            base += length
-            while spans and spans[0][1] <= base:
-                spans.pop(0)
-            yield "ok", {"headers": headers, "payload": payload}
         except (ValueError, KeyError) as e:
-            if head is not None:
-                # the header block was consumed before validation could
-                # fail; restore it so the resync cut below starts at the
-                # failed record's first byte (a garbage member glues
-                # itself onto its successor's header scan — the
-                # successor's bytes must stay parseable)
-                buf = head + _CRLF2 + buf
-                base = rec_start
-            # poison the member the failed record started in
-            poisoned_idx, poison_end = next(
-                ((i, end) for i, end in spans if end > rec_start),
-                (spans[-1][0], base + len(buf)) if spans else (0, base + len(buf)),
-            )
-            # resume at the poisoned member's boundary: later members'
-            # bytes already pulled stay parseable (poison_end <= end of
-            # buf, and >= base since base == rec_start <= poison_end)
-            buf = buf[max(poison_end - base, 0) :]
-            base = max(poison_end, base)
-            while spans and spans[0][1] <= base:
-                spans.pop(0)
-            if not buf and not done:
-                pull()
+            # nothing of the failed record was consumed: buf[0] is its
+            # first byte, and spans[0] the member it started in
+            poisoned, poison_end = spans[0]
+            consume(poison_end - base)
+            while not buf and pull() and spans[-1][0] == poisoned:
+                consume(len(buf))
             where = (
                 f"resumed at gzip member {spans[0][0]}"
-                if buf and spans
-                else "no further members"
+                if buf
+                else "remainder of file skipped"
             )
             yield "err", (
                 f"{type(e).__name__}: {e} "
-                f"(poisoned member {poisoned_idx}; {where})"
+                f"(poisoned member {poisoned}; {where})"
             )
-            if done and not buf:
-                return
-
-
-def _plain_record_events(stream) -> Iterator[tuple[str, dict | str]]:
-    """The uncompressed-.warc event stream: no member boundaries exist
-    to resync at, so a poison record skips the REMAINDER of the file —
-    stated in the error row, with the caller appending how many records
-    parsed before it."""
-    try:
-        for rec in _iter_warc_records(stream):
-            yield "ok", rec
-    except Exception as e:  # noqa: BLE001 — converted to a poison row
-        yield "err", f"{type(e).__name__}: {e} (remainder of file skipped)"
+            continue
+        payload = bytes(buf[start : start + length])
+        consume(start + length)
+        yield "ok", {"headers": headers, "payload": payload}
 
 
 def _parse_http_payload(payload: bytes) -> tuple[int | None, bytes]:
@@ -357,18 +291,19 @@ def read_warc(
     task streams one file — the natural WARC granularity (the format is
     not mid-file splittable; Common Crawl parallelism is across its
     thousands of ~1 GB segment files). A corrupt record or file yields
-    a parse_error row, never a dead stage — and in per-record-gzip
-    files (Common Crawl's framing) a poison record costs only its own
-    gzip member: parsing RESUMES at the next member boundary, with the
-    error row recording how many records parsed before it. Uncompressed
-    .warc files have no boundary to resync at; there the remainder of
-    the file is skipped, which the error row states explicitly.
+    a parse_error row, never a dead stage. Every file goes through one
+    record parser, and a poison record costs only the member it started
+    in: in per-record-gzip files (Common Crawl's framing) that is its
+    own gzip member and parsing RESUMES at the next member boundary; an
+    uncompressed .warc file is a single member, so there the remainder
+    of the file is skipped. The error row says which, and how many
+    records parsed before it.
     Writer leftovers ('*.inprogress-*') are never picked up.
     """
     from pyarrow import fs as pafs
 
     if isinstance(paths, str):
-        fs, root = _resolve_fs(paths)
+        fs, root = resolve_fs(paths)
         info = fs.get_file_info(root)
         if info.type == pafs.FileType.Directory:
             sel = pafs.FileSelector(root, recursive=True)
@@ -461,17 +396,18 @@ def _read_one_file(fpath: str, keep: set[str]) -> Iterator[pd.DataFrame]:
 
     n_parsed = 0
     try:
-        fs, p = _resolve_fs(fpath)
+        fs, p = resolve_fs(fpath)
         # compression=None: keep pyarrow's extension-triggered gzip layer
         # out of the way — member decompression is explicit below
         with fs.open_input_stream(p, compression=None) as raw:
-            if fpath.endswith(".gz"):
-                # member-aware decompression: a poison RECORD costs one
-                # gzip member, not the rest of the file
-                events = _iter_warc_records_resync(_iter_member_chunks(raw))
-            else:
-                events = _plain_record_events(raw)  # type: ignore[assignment]
-            for status_tag, rec in events:
+            # member-aware decompression: a poison RECORD costs one gzip
+            # member, not the rest of the file; a plain file is one member
+            chunks = (
+                _iter_member_chunks(raw)
+                if fpath.endswith(".gz")
+                else ((0, c) for c in iter(lambda: raw.read(65536), b""))
+            )
+            for status_tag, rec in _iter_warc_records_resync(chunks):
                 if status_tag == "err":
                     emit(parse_error=f"{rec} [records_read={n_parsed}]")
                     continue
@@ -543,7 +479,7 @@ def write_warc(
     n_skipped), one row per written file, as the action's result; the
     write happens when it is consumed.
     """
-    fs, root = _resolve_fs(path)
+    fs, root = resolve_fs(path)
     fs.create_dir(root, recursive=True)
     if n_segments is not None:
         df = df.repartition(n_segments)
@@ -563,7 +499,7 @@ def write_warc(
         seg = f"{path.rstrip('/')}/part-{ctx.partitionId():05d}.warc.gz"
         tmp = f"{seg}.inprogress-{ctx.taskAttemptId()}"
         n, skipped, stream = 0, 0, None
-        wfs, wtmp = _resolve_fs(tmp)
+        wfs, wtmp = resolve_fs(tmp)
         try:
             for pdf in batches:
                 ok = pdf["url"].notna() & pdf["warc_ts"].notna() & pdf["html"].notna()
@@ -600,7 +536,7 @@ def write_warc(
             raise
         if stream is not None:
             stream.close()
-            wfs.move(wtmp, _resolve_fs(seg)[1])
+            wfs.move(wtmp, resolve_fs(seg)[1])
             # NO sweep of sibling .inprogress twins here: with task
             # speculation two attempts of this partition run
             # concurrently, and the first committer deleting the other

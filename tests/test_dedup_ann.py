@@ -284,11 +284,14 @@ def _ref_duplicated_spans(docs, window, min_docs):
     the doc's token count."""
     from collections import defaultdict
 
-    from entity_linking_spark.functions.text import _poly_hash
-    from entity_linking_spark.operators.dedup import _WHASH_MUL2, _WHASH_P
+    from entity_linking_spark.functions.text import (
+        _POLY_MOD,
+        _WHASH_MUL2,
+        _poly_hash,
+    )
 
     def h(s):
-        return _poly_hash(s) * _WHASH_P + _poly_hash(s, _WHASH_MUL2)
+        return _poly_hash(s) * _POLY_MOD + _poly_hash(s, _WHASH_MUL2)
 
     windows = {}  # id -> (n_toks, [(pos, hash)])
     postings = defaultdict(set)
@@ -459,11 +462,14 @@ def test_keep_first_randomized_against_replay(spark):
     replay of the per-posting exemption rule."""
     import random
 
-    from entity_linking_spark.functions.text import _poly_hash
-    from entity_linking_spark.operators.dedup import _WHASH_MUL2, _WHASH_P
+    from entity_linking_spark.functions.text import (
+        _POLY_MOD,
+        _WHASH_MUL2,
+        _poly_hash,
+    )
 
     def h(s):
-        return _poly_hash(s) * _WHASH_P + _poly_hash(s, _WHASH_MUL2)
+        return _poly_hash(s) * _POLY_MOD + _poly_hash(s, _WHASH_MUL2)
 
     rng = random.Random(31)
     vocab = [f"w{i}" for i in range(300)]

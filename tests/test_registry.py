@@ -71,13 +71,41 @@ def _parse(path):
         return ast.parse(f.read(), path)
 
 
+def _calls(tree):
+    """(call, splat_keys) for every call in ``tree``. ``splat_keys`` are
+    the string keys of the dict literals in the call's innermost
+    enclosing function (the module, for top-level code), or None when
+    it has none."""
+    out = []
+
+    def visit(node, keys):
+        if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef)):
+            keys = {
+                k.value
+                for d in ast.walk(node)
+                if isinstance(d, ast.Dict)
+                for k in d.keys
+                if isinstance(k, ast.Constant) and isinstance(k.value, str)
+            } or None
+        if isinstance(node, ast.Call):
+            out.append((node, keys))
+        for child in ast.iter_child_nodes(node):
+            visit(child, keys)
+
+    visit(tree, None)
+    return out
+
+
 def test_every_option_has_a_caller():
     """Each defaulted positional parameter of a public library function
     (methods included) is passed by some call in the library,
     ``__spark_entry__.py``, ``bench.py``, ``tools/``, ``perfbench/`` or
     ``tests/``: by keyword, by enough positional arguments, or through
-    ``*args`` / ``**kwargs``. Calls match by function name only, so the
-    scan can over-count callers but never miss one."""
+    ``*args`` / ``**kwargs``. A ``**kwargs`` splat passes the parameter
+    when a dict literal in the calling function has it as a string key;
+    when that function has no dict literal (pure forwarding), the splat
+    counts for every parameter. Calls match by function name only, so
+    the scan can over-count callers but never miss one."""
     options = []  # (func, param, positional index not counting self/cls)
     for path in _py_files("entity_linking_spark"):
         for node in ast.walk(_parse(path)):
@@ -90,22 +118,24 @@ def test_every_option_has_a_caller():
                     (node.name, a.arg, i - skip)
                     for i, a in enumerate(args) if i >= first
                 ]
-    calls: dict[str, list[ast.Call]] = {}
+    calls: dict[str, list[tuple[ast.Call, set[str] | None]]] = {}
     sources = ("entity_linking_spark", "__spark_entry__.py", "bench.py",
                "tools", "perfbench", "tests")
     for path in (p for part in sources for p in _py_files(part)):
-        for node in ast.walk(_parse(path)):
-            if isinstance(node, ast.Call):
-                f = node.func
-                name = getattr(f, "id", None) or getattr(f, "attr", None)
-                calls.setdefault(name, []).append(node)
+        for node, keys in _calls(_parse(path)):
+            f = node.func
+            name = getattr(f, "id", None) or getattr(f, "attr", None)
+            calls.setdefault(name, []).append((node, keys))
 
     def passed(func, param, index):
         return any(
             len(c.args) > index
             or any(isinstance(a, ast.Starred) for a in c.args)
-            or any(k.arg in (None, param) for k in c.keywords)
-            for c in calls.get(func, ())
+            or any(
+                k.arg == param or (k.arg is None and (keys is None or param in keys))
+                for k in c.keywords
+            )
+            for c, keys in calls.get(func, ())
         )
 
     uncalled = sorted(

@@ -173,7 +173,7 @@ def test_rolling_hash_vectorized_equals_reference():
 
 def test_pow_array_exact_and_stateless():
     """_pow_array must equal the scalar pow() chain exactly across the
-    block boundary, and the module must hold NO growing power table
+    seed and doubling boundaries, and the module must hold NO growing power table
     (the round-4 finding: one mega-doc pinned ~150 MB of Python ints
     per worker forever)."""
     import numpy as np
@@ -183,12 +183,13 @@ def test_pow_array_exact_and_stateless():
         _POLY_INV,
         _POLY_MOD,
         _POLY_MUL,
-        _POW_BLOCK,
+        _POW_SEED,
         _pow_array,
     )
 
     for base in (_POLY_MUL, _POLY_INV):
-        for n in (1, 2, _POW_BLOCK - 1, _POW_BLOCK, _POW_BLOCK + 1, 3 * _POW_BLOCK + 7):
+        for n in (0, 1, 2, _POW_SEED - 1, _POW_SEED, _POW_SEED + 1,
+                  2 * _POW_SEED + 1, 3 * (1 << 14) + 7):
             got = _pow_array(base, n)
             assert got.dtype == np.int64 and len(got) == n
             # spot-check exactly (full scalar chain at the small sizes,
@@ -206,18 +207,23 @@ def test_pow_array_exact_and_stateless():
     assert leaked == []
 
 
-def test_multi_hash_pass_equals_per_mul_calls():
-    """_all_window_hashes_multi (shared-decode fused pass) must be
-    exact-equal to independent _all_window_hashes calls per multiplier,
-    including the short-doc scalar path."""
+def test_window_hashes_equal_poly_hash_per_window():
+    """_window_hashes (the one prefix-hash fold: decode shared across
+    multipliers, prefix arrays across window sizes) must give exactly
+    _poly_hash of every token window under both multipliers; a doc of
+    at most w tokens gets ONE whole-doc window equal to _poly_hash of
+    the doc (0 for ""). _window_keys packs both hashes as h31*p + h131,
+    and the quality n-grams (_doc_signals) keep full windows only."""
     import random
 
-    import numpy as np
-
     from entity_linking_spark.functions.text import (
-        _all_window_hashes,
-        _all_window_hashes_multi,
+        _POLY_MOD,
+        _WHASH_MUL2,
+        _poly_hash,
+        _window_hashes,
+        _window_keys,
     )
+    from entity_linking_spark.operators.quality import _doc_signals
 
     rng = random.Random(5)
     cases = ["", "one", "Ünïcødé tøkens 漢字 in a stream of text tokens here"]
@@ -229,56 +235,35 @@ def test_multi_hash_pass_equals_per_mul_calls():
                 for _ in range(n)
             )
         )
+    windows = (2, 3, 5, 8, 20)
+    muls = (31, _WHASH_MUL2)
+    seen = set()
     for c in cases:
-        for w in (3, 8, 20):
-            multi = _all_window_hashes_multi(c, w, (31, 131))
-            for mul, got in zip((31, 131), multi):
-                assert np.array_equal(got, _all_window_hashes(c, w, mul)), (
-                    repr(c),
-                    w,
-                    mul,
-                )
-
-
-def test_window_hash_families_equals_per_window_calls():
-    """_window_hash_families (decode + prefix arrays shared across muls
-    AND window sizes) must be exact-equal to per-(window, mul)
-    _all_window_hashes calls wherever the doc has at least one full
-    window, and EMPTY (not whole-doc) below that — the n-gram
-    convention of operators/quality."""
-    import random
-
-    import numpy as np
-
-    from entity_linking_spark.functions.text import (
-        _all_window_hashes,
-        _window_hash_families,
-    )
-
-    rng = random.Random(7)
-    cases = ["", "one", "Ünïcødé tøkens 漢字 in a stream of text tokens here"]
-    for _ in range(60):
-        n = rng.randint(0, 40)
-        cases.append(
-            " ".join(
-                "".join(rng.choices("abcdefé漢.,", k=rng.randint(0, 6)))
-                for _ in range(n)
-            )
-        )
-    windows = (2, 3, 5, 20)
-    for c in cases:
-        n_toks = c.count(" ") + 1
-        fams = _window_hash_families(c, windows, (31, 131))
+        toks = c.lower().split(" ")
+        fams = _window_hashes(c, windows, muls)
+        keys = _window_keys(c, windows)
         for w in windows:
-            for mul, got in zip((31, 131), fams[w]):
-                if n_toks < w:
-                    assert len(got) == 0, (repr(c), w, mul)
-                else:
-                    assert np.array_equal(got, _all_window_hashes(c, w, mul)), (
-                        repr(c),
-                        w,
-                        mul,
-                    )
+            if len(toks) <= w:
+                spans = [c.lower()]
+                seen.add("whole" if len(toks) < w else "exact")
+            else:
+                spans = [
+                    " ".join(toks[i : i + w]) for i in range(len(toks) - w + 1)
+                ]
+            for mul, got in zip(muls, fams[w]):
+                expect = [_poly_hash(x, mul) for x in spans]
+                assert got.tolist() == expect, (repr(c), w, mul)
+            packed = [_poly_hash(x) * _POLY_MOD + _poly_hash(x, _WHASH_MUL2) for x in spans]
+            assert keys[w].tolist() == packed, (repr(c), w)
+        # n-gram convention: no window below n tokens
+        _, tops, cov = _doc_signals(c, (2, 3), 5)
+        for n, top in zip((2, 3), tops):
+            grams = [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+            assert top == max((grams.count(g) for g in grams), default=0), repr(c)
+        if len(toks) < 5:
+            assert cov == 0
+    assert _window_hashes("", (3,), muls)[3][0].tolist() == [0]
+    assert seen == {"whole", "exact"}
 
 
 def test_window_hashes_multi_mb_multitoken_doc():
@@ -288,16 +273,13 @@ def test_window_hashes_multi_mb_multitoken_doc():
     table behind."""
     import random
 
-    from entity_linking_spark.functions.text import (
-        _all_window_hashes,
-        _poly_hash,
-    )
+    from entity_linking_spark.functions.text import _poly_hash, _window_hashes
 
     rng = random.Random(11)
     toks = ["tok%06d" % rng.randrange(1_000_000) for _ in range(400_000)]
     doc = " ".join(toks)  # ~3.6 MB, 400k tokens
     W = 20
-    hashes = _all_window_hashes(doc, W)
+    (hashes,) = _window_hashes(doc, (W,), (31,))[W]
     assert len(hashes) == len(toks) - W + 1
     for i in (0, 1, 12345, len(hashes) // 2, len(hashes) - 1):
         expect = _poly_hash(" ".join(toks[i : i + W]).lower())

@@ -157,6 +157,56 @@ def test_warc_truncated_final_member_keeps_prefix(spark, tmp_path):
     assert len(err) == 1 and "[records_read=3]" in err[0].parse_error
 
 
+def test_poison_member_straddling_a_read_costs_one_row(spark, tmp_path):
+    """A poison member larger than one 64 KiB read arrives as several
+    chunks with the same member index; the resync must drop ALL of them
+    (one error row naming the next member), not resume inside the
+    poisoned member and fail a second time on its tail."""
+    import random
+
+    recs = [
+        {
+            "url": f"https://s.example/{i}",
+            "date": "2026-01-01T00:00:00Z",
+            "body": random.Random(i).randbytes(40_000),  # incompressible
+        }
+        for i in range(8)
+    ]
+    members = [warc._record_bytes(r, gzip_per_record=True) for r in recs]
+    bad = warc._record_bytes(recs[3], gzip_per_record=False)
+    members[3] = gzip.compress(bad.replace(b"WARC/1.0", b"XARC/1.0", 1), mtime=0)
+    # member 3 straddles the first 64 KiB read boundary of its bytes
+    start = sum(map(len, members[:3]))
+    assert start < 2 * 65536 < start + len(members[3])
+    (tmp_path / "seg.warc.gz").write_bytes(b"".join(members))
+    out = warc.read_warc(spark, str(tmp_path)).collect()
+    ok = [r for r in out if r.parse_error is None]
+    err = [r for r in out if r.parse_error is not None]
+    assert {r.url for r in ok} == {r["url"] for i, r in enumerate(recs) if i != 3}
+    assert len(err) == 1
+    assert "bad WARC version line b'XARC/1.0'" in err[0].parse_error
+    assert "resumed at gzip member 4" in err[0].parse_error
+    assert "[records_read=3]" in err[0].parse_error
+
+
+def test_plain_warc_poison_skips_rest_of_file(spark, tmp_path):
+    """A plain .warc is one member: a bad record mid-file keeps the
+    records before it and costs the rest of the file, which the single
+    error row states."""
+    recs = _records(6, "p.example")
+    good = [warc._record_bytes(r, gzip_per_record=False) for r in recs]
+    good[3] = good[3].replace(b"WARC/1.0", b"XARC/1.0", 1)
+    (tmp_path / "plain.warc").write_bytes(b"".join(good))
+    out = warc.read_warc(spark, str(tmp_path)).collect()
+    ok = [r for r in out if r.parse_error is None]
+    err = [r for r in out if r.parse_error is not None]
+    assert {r.url for r in ok} == {r["url"] for r in recs[:3]}
+    assert len(err) == 1
+    assert "bad WARC version line" in err[0].parse_error
+    assert "remainder of file skipped" in err[0].parse_error
+    assert "[records_read=3]" in err[0].parse_error
+
+
 def test_warc_read_ignores_inprogress_leftovers(spark, tmp_path):
     """Stale '.inprogress-<attempt>' twins of a committed segment (a
     killed writer attempt) must NOT be re-ingested: they would yield
