@@ -266,6 +266,59 @@ def test_window_hashes_equal_poly_hash_per_window():
     assert seen == {"whole", "exact"}
 
 
+def _hash_cases(seed: int) -> list[str]:
+    import random
+
+    rng = random.Random(seed)
+    cases = ["", "one", "Ünïcødé tøkens 漢字 in a stream of text tokens here"]
+    for _ in range(60):
+        n = rng.randint(0, 40)
+        cases.append(
+            " ".join(
+                "".join(rng.choices("abcdefé漢.,", k=rng.randint(0, 6)))
+                for _ in range(n)
+            )
+        )
+    return cases
+
+
+def test_multi_hash_pass_equals_per_mul_calls():
+    """_window_hashes over several multipliers (decode shared across
+    them) must be exact-equal to one call per multiplier, including
+    docs of at most w tokens (one whole-doc window)."""
+    import numpy as np
+
+    from entity_linking_spark.functions.text import _WHASH_MUL2, _window_hashes
+
+    muls = (31, _WHASH_MUL2)
+    for c in _hash_cases(5):
+        for w in (3, 8, 20):
+            multi = _window_hashes(c, (w,), muls)[w]
+            assert len(multi) == len(muls)
+            for mul, got in zip(muls, multi):
+                (single,) = _window_hashes(c, (w,), (mul,))[w]
+                assert np.array_equal(got, single), (repr(c), w, mul)
+
+
+def test_window_hash_families_equals_per_window_calls():
+    """_window_hashes over several window sizes (prefix arrays shared
+    across them) must be exact-equal to one call per window size, for
+    every multiplier."""
+    import numpy as np
+
+    from entity_linking_spark.functions.text import _WHASH_MUL2, _window_hashes
+
+    windows = (2, 3, 5, 20)
+    muls = (31, _WHASH_MUL2)
+    for c in _hash_cases(7):
+        fams = _window_hashes(c, windows, muls)
+        assert sorted(fams) == sorted(windows)
+        for w in windows:
+            per_w = _window_hashes(c, (w,), muls)[w]
+            for mul, got, single in zip(muls, fams[w], per_w):
+                assert np.array_equal(got, single), (repr(c), w, mul)
+
+
 def test_window_hashes_multi_mb_multitoken_doc():
     """A multi-MB MULTI-token doc (the round-4 guard only covered the
     single-token case) takes the vectorized path, stays exact vs the
