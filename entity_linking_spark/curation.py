@@ -82,15 +82,9 @@ def curate_corpus(
     id_col: str = "doc_id",
     url_col: str | None = None,
     benchmark: DataFrame | None = None,
-    c4: bool = True,
-    gopher_quality: bool = True,
     min_words: int = 50,
-    gopher_repetition: bool = True,
-    near_dup: bool = True,
     near_dup_jaccard: float = 0.8,
     semantic_k: int | None = None,
-    semantic_min_cosine: float = 0.95,
-    redact: bool = True,
     with_stats: bool = True,
 ) -> tuple[DataFrame, list[dict]]:
     """Run the full curation chain over ``docs``; returns
@@ -101,15 +95,16 @@ def curate_corpus(
     victim anti-join branches reuse; release it with
     ``spark.catalog.clearCache()`` after the final action).
 
-    Stage toggles (``url_col=None`` skips URL dedup, ``benchmark=None``
-    skips decontamination, ``semantic_k=None`` skips the opt-in
-    SemDeDup stage — set it to the cluster budget to enable, numeric
-    ``id_col`` required there, the booleans gate the rest) let callers
-    run any prefix/subset. The thresholds other than ``min_words``,
-    ``near_dup_jaccard`` and ``semantic_min_cosine`` are fixed: C4
-    cleaning drops pages left with fewer than 3 lines, decontamination
-    matches 13-token windows, SemDeDup skips clusters of more than
-    4,096 documents, and the repetition gate drops pages whose
+    Every stage runs except three that the input turns on:
+    ``url_col=None`` skips URL dedup, ``benchmark=None`` skips
+    decontamination, and ``semantic_k=None`` skips the opt-in SemDeDup
+    stage (set it to the cluster budget to enable; numeric ``id_col``
+    required there). The thresholds other than ``min_words`` and
+    ``near_dup_jaccard`` are fixed: C4 cleaning drops pages left with
+    fewer than 3 lines, decontamination matches 13-token windows,
+    SemDeDup counts same-cluster documents at cosine 0.95 or more as
+    near-duplicates and skips clusters of more than 4,096 documents,
+    and the repetition gate drops pages whose
     top-2-gram, top-3-gram or duplicated-5-gram TOKEN fraction exceeds
     0.20, 0.18 or 0.30 (the Gopher paper's limits where one exists, on
     this library's documented token-fraction analogs — see
@@ -140,20 +135,13 @@ def curate_corpus(
 
     if url_col is not None:
         step("url_dedup", url_dedup(cur, url_col, id_col).drop("canonical_url"))
-    if c4:
-        step(
-            "c4_line_clean",
-            c4_line_clean(
-                cur, text_col, id_col, min_kept_lines=3, mode="remove"
-            ),
-        )
-    if gopher_quality:
-        step(
-            "gopher_quality",
-            gopher_quality_signals(
-                cur, text_col, id_col, min_words=min_words, mode="remove"
-            ),
-        )
+    step("c4_line_clean", c4_line_clean(cur, text_col, id_col, mode="remove"))
+    step(
+        "gopher_quality",
+        gopher_quality_signals(
+            cur, text_col, id_col, min_words=min_words, mode="remove"
+        ),
+    )
     # ---- multi-consumer gates below: each computes a VICTIM id set on
     # a narrow branch and anti-joins it back, so the document payload
     # (text + ride-along columns) never enters an exchange — victims
@@ -163,17 +151,16 @@ def curate_corpus(
     # path persists ONCE here so the upstream scan-gates never replay.
     if not with_stats:
         cur = cur.persist()
-    if gopher_repetition:
-        sig = repetition_signals(cur, text_col, id_col)
-        ok = (
-            (F.col("top2_frac") <= _MAX_TOP2_FRAC)
-            & (F.col("top3_frac") <= _MAX_TOP3_FRAC)
-            & (F.col("dup5_frac") <= _MAX_DUP5_FRAC)
-        )
-        # null signals (null text) count as BAD — parity with the
-        # previous keep-the-ok-set semi-join, where nulls never matched
-        bad_ids = sig.where(~F.coalesce(ok, F.lit(False))).select(id_col)
-        step("gopher_repetition", cur.join(bad_ids, id_col, "left_anti"))
+    sig = repetition_signals(cur, text_col, id_col)
+    ok = (
+        (F.col("top2_frac") <= _MAX_TOP2_FRAC)
+        & (F.col("top3_frac") <= _MAX_TOP3_FRAC)
+        & (F.col("dup5_frac") <= _MAX_DUP5_FRAC)
+    )
+    # null signals (null text) count as BAD — parity with the
+    # previous keep-the-ok-set semi-join, where nulls never matched
+    bad_ids = sig.where(~F.coalesce(ok, F.lit(False))).select(id_col)
+    step("gopher_repetition", cur.join(bad_ids, id_col, "left_anti"))
     # keep-first exact dedup, min(id) keeper per content hash (same
     # semantics as operators/dedup.exact_dedup, whose metadata output
     # the chain doesn't need): the row_number window runs over the
@@ -189,26 +176,25 @@ def curate_corpus(
         .select(id_col)
     )
     step("exact_dedup", cur.join(exact_victims, id_col, "left_anti"))
-    if near_dup:
-        toks = cur.select(
-            F.col(id_col).alias("url"),
-            F.split(F.lower(F.col(text_col)), " ").alias("tokens"),
-        )
-        nd_caches = runtime.CacheScope()
-        pairs = minhash_near_dup_pairs(
-            toks, min_jaccard=near_dup_jaccard, cache_registry=nd_caches
-        )
-        victims = (
-            dedup_clusters(toks, pairs, "url")
-            .where(F.col("url") != F.col("keeper"))
-            .select(F.col("url").alias(id_col))
-        )
-        step("near_dup", cur.join(victims, id_col, "left_anti"))
-        if with_stats:
-            # the operator's band table has served the counted boundary
-            # above; on the lazy path it must outlive this call, like
-            # the semantic step's cache below
-            nd_caches.release()
+    toks = cur.select(
+        F.col(id_col).alias("url"),
+        F.split(F.lower(F.col(text_col)), " ").alias("tokens"),
+    )
+    nd_caches = runtime.CacheScope()
+    pairs = minhash_near_dup_pairs(
+        toks, min_jaccard=near_dup_jaccard, cache_registry=nd_caches
+    )
+    victims = (
+        dedup_clusters(toks, pairs)
+        .where(F.col("url") != F.col("keeper"))
+        .select(F.col("url").alias(id_col))
+    )
+    step("near_dup", cur.join(victims, id_col, "left_anti"))
+    if with_stats:
+        # the operator's band table has served the counted boundary
+        # above; on the lazy path it must outlive this call, like
+        # the semantic step's cache below
+        nd_caches.release()
     if semantic_k is not None:
         # opt-in 9th stage (SemDeDup, Abbas et al. 2023): embed the
         # cleaned text with the library's deterministic hash embedding
@@ -245,7 +231,7 @@ def curate_corpus(
             semantic_dedup(
                 emb,
                 k=semantic_k,
-                min_cosine=semantic_min_cosine,
+                min_cosine=0.95,
                 max_cluster_size=4096,
                 cache_registry=sem_caches,
             )
@@ -268,11 +254,7 @@ def curate_corpus(
                 cur, benchmark, text_col, id_col, window=13, mode="remove"
             ),
         )
-    if redact:
-        step(
-            "redact_pii",
-            cur.withColumn(text_col, redact_pii(F.col(text_col))),
-        )
+    step("redact_pii", cur.withColumn(text_col, redact_pii(F.col(text_col))))
     return cur, stats
 
 

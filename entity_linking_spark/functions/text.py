@@ -135,9 +135,9 @@ def split_sentences(text: str) -> list[str]:
     return [s.strip() for s in _SENT_BOUNDARY.split(text) if s.strip()]
 
 
-def first_sentences(text: str, n: int = 10) -> list[str]:
-    """First n sentences — the sent_desc_1..10 column source (F15)."""
-    return split_sentences(text)[:n]
+def first_sentences(text: str) -> list[str]:
+    """First 10 sentences — the sent_desc_1..10 column source (F15)."""
+    return split_sentences(text)[:10]
 
 
 _WINDOW = 8

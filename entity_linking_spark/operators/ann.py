@@ -35,6 +35,12 @@ from pyspark.sql.window import Window
 
 _SEED = 42
 N_PLANES = 16  # default bucket-signature width; tune per corpus size
+# ivf_topk: cells, cells probed per query, and the hash modulus of the
+# centroid sample (1 = no pre-filter; at >= 10^10 rows e.g. 1 << 20 makes
+# the bottom-k heap scan ~corpus/modulus rows)
+_IVF_N_CELLS = 16
+_IVF_N_PROBE = 4
+_IVF_SAMPLE_MOD = 1
 _PLANE_CACHE: dict[tuple[int, int], np.ndarray] = {}
 
 
@@ -182,21 +188,16 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    sample_mod: int = 1,
 ) -> DataFrame:
     """IVF-style ANN over ``corpus`` (vec_id, embedding) for
     ``queries`` (query_id, embedding): deterministic centroids
     (bottom-k-by-hash sample, one k-means sweep), corpus assigned to
-    nearest cell, queries probe n_probe cells, exact rescoring within.
-
-    ``sample_mod``: hash-modulus pre-filter for the centroid sample. At
-    web scale (>=10^10 rows) set e.g. 1<<20 so the bottom-k heap scans
-    ~corpus/sample_mod rows instead of everything; default 1 (no filter)
-    is right for anything that fits a normal scan.
+    the nearest of 16 cells, queries probe their 4 nearest cells, exact
+    rescoring within.
     """
     from entity_linking_spark.functions.vectors import cosine_col
+
+    n_cells, n_probe, sample_mod = _IVF_N_CELLS, _IVF_N_PROBE, _IVF_SAMPLE_MOD
 
     # Deterministic centroid init via BOTTOM-K-BY-HASH — exactly ONE job,
     # no corpus.count() pre-action, never a full sort. orderBy(limit)

@@ -55,6 +55,11 @@ from pyspark.sql import DataFrame, functions as F
 from entity_linking_spark import runtime
 
 UNK = "<unk>"
+# train_nb_quality materializes the model tables from this many corpus
+# rows (parquet footer count) up
+_MATERIALIZE_MIN_ROWS = 250_000
+# pareto_keep's Pareto shape (GPT-3: 9)
+_PARETO_ALPHA = 9.0
 
 
 class NBQualityModel(NamedTuple):
@@ -77,11 +82,9 @@ def _tok_col(text_col: str):
 def train_nb_quality(
     docs: DataFrame,
     vocab_size: int = 50_000,
-    k: float = 1.0,
-    materialize: bool | str = "auto",
 ) -> NBQualityModel:
     """Train the pruned NB quality model on labeled ``docs`` (label,
-    text).
+    text), with add-1 smoothing (k = 1).
 
     ``label`` must be boolean-coercible (true/1 = the curated
     "high quality" class, the GPT-3 positives). ONE token-explode
@@ -93,14 +96,14 @@ def train_nb_quality(
     column, no explode). Deterministic: vocab ties break on the token
     string.
 
-    ``materialize``: the finished model tables — bounded at vocab_size
+    On large corpora the finished model tables — bounded at vocab_size
     / vocab_size+1 / 1 rows BY CONSTRUCTION — are collected and rebuilt
     as local DataFrames, so scoring plans embed data instead of
     training lineage (the lazy form re-runs the vocab pass once per
     broadcast build: ~4 redundant corpus passes per scoring query, the
-    pathology train_bigram_lm had). "auto" (default) gates on corpus
-    size from parquet footer metadata (no job): small corpora stay
-    LAZY, because there the redundant in-job passes are cheaper than
+    pathology train_bigram_lm had). The choice gates on corpus size
+    from parquet footer metadata (no job): small corpora stay LAZY,
+    because there the redundant in-job passes are cheaper than
     the extra collect jobs materialization costs (measured 1.3 s vs
     2.2 s at 5k docs), while at >= 250k rows the redundant corpus
     passes dominate and the bounded collects win; unknown-size inputs
@@ -116,13 +119,10 @@ def train_nb_quality(
     """
     if vocab_size < 1:
         raise ValueError(f"vocab_size must be >= 1, got {vocab_size}")
-    if not k > 0.0:
-        raise ValueError(f"k must be > 0, got {k!r}")
     from pyspark import StorageLevel
 
-    if materialize == "auto":
-        est = runtime.input_rows(docs)
-        materialize = est is not None and est >= 250_000
+    est = runtime.input_rows(docs)
+    materialize = est is not None and est >= _MATERIALIZE_MIN_ROWS
 
     base = docs.where(
         F.col("text").isNotNull() & F.col("label").isNotNull()
@@ -196,7 +196,7 @@ def train_nb_quality(
                 vocab.agg((F.count("*") + F.lit(1)).cast("long").alias("v_eff"))
             )
         )
-        return NBQualityModel(vocab, likelihoods, totals, k)
+        return NBQualityModel(vocab, likelihoods, totals, 1.0)
     try:
         lik_rows = likelihoods.collect()
         ll = spark.createDataFrame(
@@ -217,16 +217,12 @@ def train_nb_quality(
         )
     finally:
         raw.unpersist(False)
-    return NBQualityModel(vocab, ll, lt, k)
+    return NBQualityModel(vocab, ll, lt, 1.0)
 
 
-def nb_log_odds(
-    docs: DataFrame,
-    model: NBQualityModel,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, n_toks, log_odds, mean_llr): per-document NB quality score.
+def nb_log_odds(docs: DataFrame, model: NBQualityModel) -> DataFrame:
+    """(doc_id, n_toks, log_odds, mean_llr): per-document NB quality
+    score of ``docs`` (doc_id, text).
 
     log_odds > 0 reads "more like the positive (curated) class";
     mean_llr is the length-normalized per-token margin. Both rounded
@@ -237,10 +233,8 @@ def nb_log_odds(
     keep them out anyway)."""
     k = F.lit(model.k)
     toks = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"), F.explode(_tok_col(text_col)).alias("tok")
-        )
+        docs.where(F.col("text").isNotNull())
+        .select(F.col("doc_id").alias("id"), F.explode(_tok_col("text")).alias("tok"))
     )
     vb = F.broadcast(model.vocab)
     tm = toks.join(
@@ -271,7 +265,7 @@ def nb_log_odds(
     prior = F.log(F.col("d_pos") / F.col("d_neg"))
     return (
         scored.select("id", (lp - ln).alias("_llr"), prior.alias("_prior"))
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").alias("n_toks"),
             # + 0.0 normalizes IEEE -0.0 to +0.0 (round can emit -0.0
@@ -287,32 +281,24 @@ def nb_log_odds(
 def pareto_keep(
     docs: DataFrame,
     model: NBQualityModel,
-    alpha: float = 9.0,
     seed: int = 0,
-    mode: str = "remove",
 ) -> DataFrame:
     """The GPT-3 curation action (Brown et al. 2020, Appendix A) over
     ``docs`` (doc_id, text): keep a document iff
     ``pareto_draw(alpha) > 1 - quality_score``, so high-scoring docs are
     (almost) always kept while low-scoring docs survive with small
     probability — importance sampling, not a hard cut, preserving some
-    tail diversity. GPT-3's alpha = 9.
+    tail diversity. alpha = 9, GPT-3's value.
 
     quality_score = sigmoid(log_odds) ∈ (0, 1) — NB's posterior
     P(positive | doc). The draw is deterministic: u = xxhash64(doc_id,
     copy-seed) mapped to [0, 1), x = (1 - u)^(-1/alpha) - 1 (the
     inverse CDF of numpy.random.pareto's Lomax distribution), never
     rand() — reruns, retries and repartitionings keep identical rows
-    (the weighted_mix / r1_r2 split convention). mode='flag' returns
-    every doc with score, draw and a ``kept`` flag (the audit shape
-    the quality operators share)."""
-    if mode not in ("remove", "flag"):
-        raise ValueError(f"mode must be 'remove' or 'flag', got {mode!r}")
-    if not alpha > 0.0:
-        raise ValueError(f"alpha must be > 0, got {alpha!r}")
-    scored = nb_log_odds(docs, model, "text", "doc_id").select(
-        "doc_id", "log_odds"
-    )
+    (the weighted_mix / r1_r2 split convention). The kept rows carry
+    the input columns only."""
+    alpha = _PARETO_ALPHA
+    scored = nb_log_odds(docs, model).select("doc_id", "log_odds")
     joined = docs.join(scored, "doc_id", "left")
     score = F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("log_odds")))
     # xxhash64 -> uniform in [0, 1): shift the signed 64-bit hash into
@@ -324,10 +310,4 @@ def pareto_keep(
     ) / F.lit(float(2**64))
     draw = F.pow(F.lit(1.0) - u, F.lit(-1.0 / alpha)) - F.lit(1.0)
     kept = F.col("log_odds").isNotNull() & (draw > (F.lit(1.0) - score))
-    if mode == "flag":
-        return (
-            joined.withColumn("quality_score", F.round(score, 4))
-            .withColumn("pareto_draw", F.round(draw, 4))
-            .withColumn("kept", kept)
-        )
     return joined.where(kept).drop("log_odds")

@@ -24,42 +24,48 @@ from entity_linking_spark.functions.minhash import (
 )
 from entity_linking_spark.operators import blocking, cluster
 
+# exact_dedup lists at most this many member ids per content hash
+_EXACT_MAX_MEMBERS = 100
+# embedding_near_dup_pairs: pair threshold, hyperplanes per bucket key,
+# and the stop-key cap on bucket size
+_EMB_MIN_COSINE = 0.95
+_EMB_N_PLANES = 16
+_EMB_MAX_BUCKET_SIZE = 1024
+# semantic_dedup's centroid literals serve k up to this; beyond it the
+# Arrow matmul path runs
+_SEMDEDUP_LITERAL_MAX_K = 64
 
-def exact_dedup(
-    df: DataFrame,
-    max_members: int | None = 100,
-) -> DataFrame:
+
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Hash-groupBy exact dedup of ``df``'s ``text`` column:
     (content_hash, keeper, n_copies, members).
 
     Keeper = min(url). One shuffle (hash aggregate with map-side combine).
 
-    ``members`` is CAPPED at max_members ids per hash (viral duplicates —
-    empty pages, boilerplate — can have millions of copies; an unbounded
+    ``members`` is CAPPED at 100 ids per hash (viral duplicates — empty
+    pages, boilerplate — can have millions of copies; an unbounded
     collect_list would materialize them all into one reducer row and OOM).
     The cap is applied BEFORE aggregation via a row_number window on the
-    same key, so no task ever buffers more than max_members ids — and the
+    same key, so no task ever buffers more than 100 ids — and the
     window's exchange is reused by the groupBy (one shuffle total).
-    ``n_copies`` always carries the true count; pass max_members=None to
-    drop the members column entirely (the unbounded-safe output for
-    full-corpus runs — join back on content_hash to enumerate members as
-    ordinary rows instead).
+    ``n_copies`` always carries the true count; join back on
+    content_hash to enumerate every member as ordinary rows.
     """
     from pyspark.sql.window import Window
 
     hashed = df.select(
         F.md5(F.col("text")).alias("content_hash"), F.col("url").alias("_id")
     )
-    aggs = [F.min("_id").alias("keeper"), F.count("*").alias("n_copies")]
-    if max_members is None:
-        return hashed.groupBy("content_hash").agg(*aggs)
     w = Window.partitionBy("content_hash").orderBy("_id")
     capped = hashed.withColumn(
         "_member",
-        F.when(F.row_number().over(w) <= max_members, F.col("_id")),
+        F.when(F.row_number().over(w) <= _EXACT_MAX_MEMBERS, F.col("_id")),
     )
-    aggs.append(F.sort_array(F.collect_list("_member")).alias("members"))
-    return capped.groupBy("content_hash").agg(*aggs)
+    return capped.groupBy("content_hash").agg(
+        F.min("_id").alias("keeper"),
+        F.count("*").alias("n_copies"),
+        F.sort_array(F.collect_list("_member")).alias("members"),
+    )
 
 
 def simhash(tokens: list[str]) -> int:
@@ -232,30 +238,22 @@ def minhash_near_dup_pairs(
     )
 
 
-def dedup_clusters(
-    docs: DataFrame, pair_df: DataFrame, id_col: str = "url"
-) -> DataFrame:
-    """Near-dup pairs -> transitive dup clusters -> keeper per cluster."""
+def dedup_clusters(docs: DataFrame, pair_df: DataFrame) -> DataFrame:
+    """Near-dup pairs -> transitive dup clusters -> keeper per cluster:
+    (url, keeper) for every ``url`` of ``docs``."""
     edges = pair_df.select("url_a", "url_b")
-    comps = cluster.connected_components(
-        edges, docs.select(F.col(id_col).alias("url"))
-    )
-    return comps.select(F.col("url").alias(id_col), F.col("cluster_id").alias("keeper"))
+    comps = cluster.connected_components(edges, docs.select("url"))
+    return comps.select("url", F.col("cluster_id").alias("keeper"))
 
 
-def embedding_near_dup_pairs(
-    embeddings: DataFrame,
-    min_cosine: float = 0.95,
-    n_planes: int = 16,
-    max_bucket_size: int = 1024,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a, id_b, cos) of
+def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
+    """Embedding-cosine near-dup pairs (id_a, id_b, cos >= 0.95) of
     ``embeddings`` (vec_id, embedding) via random-hyperplane LSH
-    bucketing: sign-pattern of ``n_planes`` fixed pseudo-random hyperplanes (2^n_planes
-    buckets — size it to the corpus) -> bucket self-join -> exact cosine
-    verify inside buckets (never the full cross product).
+    bucketing: sign-pattern of 16 fixed pseudo-random hyperplanes (2^16
+    buckets) -> bucket self-join -> exact cosine verify inside buckets
+    (never the full cross product).
 
-    Buckets larger than ``max_bucket_size`` are DROPPED before the
+    Buckets larger than 1,024 rows are DROPPED before the
     self-join (stop-key treatment, same policy as blocking.candidate_pairs):
     a degenerate bucket holding 10^5 near-identical boilerplate vectors
     would otherwise emit 10^10 pairs on one reducer. Dropped buckets are
@@ -266,7 +264,7 @@ def embedding_near_dup_pairs(
     from entity_linking_spark.functions.vectors import cosine_col
     from entity_linking_spark.operators.ann import make_bucket_udf
 
-    bucket_udf = make_bucket_udf(n_planes)
+    bucket_udf = make_bucket_udf(_EMB_N_PLANES)
     b = embeddings.select(
         F.col("vec_id").alias("id"),
         F.col("embedding").alias("vec"),
@@ -274,7 +272,7 @@ def embedding_near_dup_pairs(
     )
     size_w = Window.partitionBy("bucket")
     b = b.withColumn("_bsize", F.count("*").over(size_w)).where(
-        F.col("_bsize") <= max_bucket_size
+        F.col("_bsize") <= _EMB_MAX_BUCKET_SIZE
     ).drop("_bsize")
     lhs = b.select(
         F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), "bucket"
@@ -286,7 +284,7 @@ def embedding_near_dup_pairs(
         lhs.join(rhs, "bucket")
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn("cos", cosine_col("vec_a", "vec_b"))
-        .where(F.col("cos") >= min_cosine)
+        .where(F.col("cos") >= _EMB_MIN_COSINE)
         .select("id_a", "id_b", F.round("cos", 4).alias("cos"))
         .distinct()
     )
@@ -360,20 +358,18 @@ def window_hash_positions(
 
 def duplicated_spans(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "url",
     window: int = 20,
-    min_docs: int = 2,
     max_postings: int = 256,
     return_dropped: bool = False,
-    keep_first: bool = False,
 ) -> DataFrame | tuple[DataFrame, DataFrame]:
-    """Cross-document repeated-substring detection (the ExactSubstr-style
-    dedup of the public training-data literature — Lee et al. 2022,
-    "Deduplicating Training Data Makes Language Models Better" — re-
-    expressed relationally instead of via a monolithic suffix array):
-    every ``window``-token span whose hash appears in >= ``min_docs``
-    distinct documents is reported, with overlapping duplicated windows
+    """Cross-document repeated-substring detection over ``df``'s
+    ``text`` column (the ExactSubstr-style dedup of the public
+    training-data literature — Lee et al. 2022, "Deduplicating Training
+    Data Makes Language Models Better" — re-expressed relationally
+    instead of via a monolithic suffix array): every ``window``-token
+    span whose hash appears in at least 2 distinct documents is
+    reported, with overlapping duplicated windows
     merged into MAXIMAL spans per document (gaps-and-islands, pure JVM
     window functions).
 
@@ -396,39 +392,15 @@ def duplicated_spans(
     (whole-doc windows on short docs would otherwise overshoot,
     corrupting any consumer that slices tokens by these bounds).
 
-    ``keep_first=True`` switches to the keep-one policy: each duplicated
-    window's posting in the LOWEST document id (its "keeper") is exempt,
-    so a window's content survives in one document instead of vanishing
-    corpus-wide. Exemption is per POSTING: a position is cut when any
-    NON-exempt duplicated window covers it, so a doc that is keeper for
-    one window and mere carrier for an overlapping one can still have
-    the overlap trimmed — the same byte-range imprecision the public
-    ExactSubstr implementation accepts; in the common non-overlapping
-    case exactly one copy per duplicated run survives. Costs one extra
-    min(id) column through the same aggregate, no extra shuffle (the
-    semi-join becomes an inner join on the identical key). Default
-    False mirrors deduplicate-text-datasets: cut all occurrences."""
+    Every occurrence of a duplicated span is reported, so removal cuts
+    all of them — the deduplicate-text-datasets policy."""
     from pyspark.sql import Window
 
-    wh = window_hash_positions(df, text_col, id_col, window)
-    key_aggs = [
+    wh = window_hash_positions(df, "text", id_col, window)
+    key_stats = wh.groupBy("whash").agg(
         F.countDistinct("id").alias("n_docs"),
         F.count("*").alias("n_postings"),
-    ]
-    if keep_first:
-        # keeper = lowest id in the SOURCE column's own ordering: ids ride
-        # through the hash pass stringified (fixed Arrow schema), and a
-        # plain min over those strings would pick "10" over "2" on a
-        # numeric-id corpus — inconsistent with the doc contract and with
-        # the curation chain's exact-dedup keeper. Ties are impossible
-        # (the ordering value is a cast of the id itself).
-        id_type = df.schema[id_col].dataType.simpleString()
-        key_aggs.append(
-            F.min_by("id", F.col("id").cast(id_type)).alias("_keeper")
-        )
-    key_stats = wh.groupBy("whash").agg(*key_aggs).where(
-        F.col("n_docs") >= min_docs
-    )
+    ).where(F.col("n_docs") >= 2)
     if return_dropped:
         # spans and dropped are consumed as SEPARATE actions; without a
         # cache the second action would replay the whole posting
@@ -438,12 +410,7 @@ def duplicated_spans(
         # postings would be the bug).
         key_stats = key_stats.persist()
     in_cap = key_stats.where(F.col("n_postings") <= max_postings)
-    if keep_first:
-        dup = wh.join(in_cap.select("whash", "_keeper"), "whash").where(
-            F.col("id") != F.col("_keeper")
-        )
-    else:
-        dup = wh.join(in_cap.select("whash"), "whash", "left_semi")
+    dup = wh.join(in_cap.select("whash"), "whash", "left_semi")
     # gaps-and-islands: a new island starts where this window neither
     # overlaps nor touches any previous duplicated window ([pos,
     # pos+window) spans; touching regions merge into one contiguous span)
@@ -467,12 +434,7 @@ def duplicated_spans(
         .drop("_grp")
     )
     if return_dropped:
-        # explicit projection: the keep_first variant carries an extra
-        # _keeper column through key_stats; the dropped contract is
-        # (whash, n_docs, n_postings) either way
-        dropped = key_stats.where(F.col("n_postings") > max_postings).select(
-            "whash", "n_docs", "n_postings"
-        )
+        dropped = key_stats.where(F.col("n_postings") > max_postings)
         return spans, dropped
     return spans
 
@@ -480,10 +442,9 @@ def duplicated_spans(
 def remove_duplicated_spans(
     df: DataFrame,
     spans: DataFrame,
-    text_col: str = "text",
     id_col: str = "url",
 ) -> DataFrame:
-    """Cut token spans out of documents — the curation ACTION of
+    """Cut token spans out of ``df``'s ``text`` column — the curation ACTION of
     ExactSubstr dedup (Lee et al. 2022 cut the duplicated spans; round
     4's duplicated_spans only reported them).
 
@@ -507,7 +468,7 @@ def remove_duplicated_spans(
     joined = df.join(
         per_doc, F.col(id_col).cast("string") == F.col("_sid"), "left"
     ).drop("_sid")
-    toks = F.split(F.col(text_col), " ")
+    toks = F.split(F.col("text"), " ")
     kept = F.filter(
         toks,
         lambda _tok, i: ~F.exists(
@@ -515,7 +476,7 @@ def remove_duplicated_spans(
             lambda s: (i >= s["span_start"]) & (i < s["span_end"]),
         ),
     )
-    clean = F.when(F.col("_spans").isNull(), F.col(text_col)).otherwise(
+    clean = F.when(F.col("_spans").isNull(), F.col("text")).otherwise(
         F.concat_ws(" ", kept)
     )
     removed = F.when(F.col("_spans").isNull(), F.lit(0)).otherwise(
@@ -528,49 +489,33 @@ def remove_duplicated_spans(
     )
 
 
-def dedup_repeated_substrings(
-    df: DataFrame,
-    id_col: str = "url",
-    window: int = 20,
-    max_postings: int = 256,
-    keep_first: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+def dedup_repeated_substrings(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Detection + removal composed: the full ExactSubstr curation pass
-    over ``df``'s ``text`` column, cutting every window that appears in
-    at least 2 documents.
+    over ``df`` (url, text), cutting every 20-token window that appears
+    in at least 2 documents.
 
     Returns (cleaned, dropped): ``cleaned`` is ``df`` + clean_text +
     n_removed_tokens with every cross-document duplicated span cut from
     EVERY document carrying it (the public deduplicate-text-datasets
-    behavior) — or, with ``keep_first=True``, from every document except
-    each window's lowest-id keeper, so one copy survives per duplicated
-    run; ``dropped`` is the stop-keyed hot-window table (whash, n_docs,
-    n_postings) so the max_postings cap is observable, never silent."""
+    behavior); ``dropped`` is the stop-keyed hot-window table (whash,
+    n_docs, n_postings) of windows in more than 256 postings, so the
+    cap is observable, never silent."""
     spans, dropped = duplicated_spans(
-        df,
-        "text",
-        id_col,
-        window=window,
-        min_docs=2,
-        max_postings=max_postings,
-        return_dropped=True,
-        keep_first=keep_first,
+        df, window=20, max_postings=256, return_dropped=True
     )
-    return remove_duplicated_spans(df, spans, "text", id_col), dropped
+    return remove_duplicated_spans(df, spans), dropped
 
 
 def semantic_dedup(
     embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 8,
     min_cosine: float = 0.38,
     max_cluster_size: int = 4096,
-    arrow_path: bool | None = None,
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
-    arXiv:2303.09540): cluster the embedding space, then inside each
+    arXiv:2303.09540) of ``embeddings`` (vec_id, embedding): cluster
+    the embedding space, then inside each
     cluster remove every document that has a near-duplicate (cosine >=
     ``min_cosine``), keeping the member FARTHEST from its centroid —
     the paper's diversity-preserving keep rule.
@@ -609,7 +554,8 @@ def semantic_dedup(
         projection AND per-pair higher-order-function folds stop being
         reasonable there (the expression tree outgrows codegen; N*k
         interpreted folds measured ~2 orders slower than one matmul).
-        ``arrow_path`` switches to the ivf_topk convention — ONE
+        So for k > 64 the Arrow path runs instead (the ivf_topk
+        convention) — ONE
         [batch, dim] x [dim, k] float64 matmul per Arrow batch for
         assignment (centroids ride the UDF closure: zero exchanges,
         zero explode), then ONE applyInPandas over the cluster key
@@ -618,18 +564,17 @@ def semantic_dedup(
         never materializes, so the whole dedup is one exchange of N
         narrow rows (the relational pair join ships s^2/2 rows each
         carrying two vectors: measured 131 GB of Arrow traffic at 1M
-        docs where this shape moves ~0.5 GB). ``None`` auto-selects
-        the Arrow path when k > 64 (the trie-vs-join mention-path
-        convention: both paths pinned output-identical by pytest on
-        the fixture corpus — double-precision matmul and the JVM fold
-        agree to the last ulp everywhere away from knife-edge
-        centroid ties).
+        docs where this shape moves ~0.5 GB). The k picks the path as
+        the alias-table size picks the trie or join mention path: both
+        paths are pinned output-identical by pytest on the fixture
+        corpus — double-precision matmul and the JVM fold agree to the
+        last ulp everywhere away from knife-edge centroid ties.
 
     On the gate path (small k) all similarity arithmetic is the JVM
     sequential double fold (functions.vectors.cosine_col),
     bit-reproducible against DuckDB's list_cosine_similarity.
 
-    Returns (id_col, cluster_id, centroid_sim DOUBLE round-4,
+    Returns (vec_id, cluster_id, centroid_sim DOUBLE round-4,
     keep BOOLEAN), one row per surviving-cluster document (rows with a
     NULL embedding and rows in over-cap clusters are absent — callers
     that treat the output as a removal list, like curate_corpus, keep
@@ -643,10 +588,9 @@ def semantic_dedup(
     # no semantic identity — they would otherwise crash the Arrow
     # path's np.stack and poison an exemplar draw on the literal path)
     src = embeddings.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
-    ).where(F.col(vec_col).isNotNull())
-    if arrow_path is None:
-        arrow_path = k > 64
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
+    ).where(F.col("embedding").isNotNull())
+    arrow_path = k > _SEMDEDUP_LITERAL_MAX_K
     # bounded k-row collect either way (the brute_force_topk
     # convention); exemplar order is md5-of-id, plan-independent
     exemplars = (
@@ -658,7 +602,7 @@ def semantic_dedup(
     # Arrow / gate) — hardcoding long made the output dtype depend on
     # which path ran for e.g. an int32 id, breaking the documented
     # path-identical contract and downstream join key types
-    _id_dt = embeddings.schema[id_col].dataType.simpleString()
+    _id_dt = embeddings.schema["vec_id"].dataType.simpleString()
     if not exemplars:
         # empty corpus: an empty, correctly-typed result — not a
         # zero-centroid argmax crash (an upstream gate emptying the
@@ -666,7 +610,7 @@ def semantic_dedup(
         return embeddings.sparkSession.createDataFrame(
             [],
             schema=(
-                f"{id_col} {_id_dt}, cluster_id long, "
+                f"vec_id {_id_dt}, cluster_id long, "
                 "centroid_sim double, keep boolean"
             ),
         )
@@ -775,7 +719,7 @@ def semantic_dedup(
             ids = pdf["id"].to_numpy()
             sims = pdf["sim"].to_numpy()
             out = pd.DataFrame({
-                id_col: ids,
+                "vec_id": ids,
                 "cluster_id": pdf["cid"].to_numpy(),
                 # HALF_UP-style to match Spark's round() (np.round is
                 # half-to-even — would diverge from the literal path
@@ -810,7 +754,7 @@ def semantic_dedup(
         return asg.groupBy("cid").applyInPandas(
             _cluster_dedup,
             schema=(
-                f"{id_col} {_id_dt}, cluster_id long, "
+                f"vec_id {_id_dt}, cluster_id long, "
                 "centroid_sim double, keep boolean"
             ),
         )
@@ -839,7 +783,7 @@ def semantic_dedup(
     return (
         asg.join(victims.withColumn("_hit", F.lit(1)), "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("vec_id"),
             F.col("cid").alias("cluster_id"),
             F.round("sim", 4).alias("centroid_sim"),
             F.col("_hit").isNull().alias("keep"),

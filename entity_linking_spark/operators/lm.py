@@ -55,6 +55,9 @@ from pyspark.sql import Column, DataFrame, functions as F
 from entity_linking_spark import runtime
 
 UNK = "<unk>"
+# train_bigram_lm's add-k smoothing and bigram interpolation weight
+_K = 1.0
+_LAM = 0.75
 
 
 class NgramLM(NamedTuple):
@@ -143,11 +146,9 @@ def train_bigram_lm(
     docs: DataFrame,
     vocab_size: int = 50_000,
     bigram_size: int = 500_000,
-    k: float = 1.0,
-    lam: float = 0.75,
 ) -> NgramLM:
-    """Train the pruned interpolated bigram LM on the ``text`` column of
-    ``docs``.
+    """Train the pruned interpolated bigram LM (add-1 smoothing, bigram
+    weight lam = 0.75) on the ``text`` column of ``docs``.
 
     ONE corpus pass: the raw (prev, cur) pair counts are aggregated
     once (map-side-combined hash aggregate, so the shuffle carries the
@@ -180,8 +181,6 @@ def train_bigram_lm(
     """
     if vocab_size < 1 or bigram_size < 0:
         raise ValueError("vocab_size must be >= 1 and bigram_size >= 0")
-    if not 0.0 < k or not 0.0 <= lam <= 1.0:
-        raise ValueError("k must be > 0 and lam in [0, 1]")
     from pyspark import StorageLevel
 
     pairs = (
@@ -270,16 +269,12 @@ def train_bigram_lm(
         )
     finally:
         bg_raw.unpersist(False)
-    return NgramLM(vocab, lu, lb, lt, k, lam)
+    return NgramLM(vocab, lu, lb, lt, _K, _LAM)
 
 
-def perplexity(
-    docs: DataFrame,
-    lm: NgramLM,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, n_toks, ppl): per-document perplexity under ``lm``.
+def perplexity(docs: DataFrame, lm: NgramLM) -> DataFrame:
+    """(doc_id, n_toks, ppl): per-document perplexity of ``docs``
+    (doc_id, text) under ``lm``.
 
     ppl is rounded to 4 decimals (the package's engine-neutral double
     convention). The plan broadcasts all model tables; the single
@@ -289,8 +284,8 @@ def perplexity(
     """
     k, lam = F.lit(lm.k), F.lit(lm.lam)
     toks = (
-        docs.where(F.col(text_col).isNotNull())
-        .select(F.col(id_col).alias("id"), F.explode(_pair_col(text_col)).alias("pc"))
+        docs.where(F.col("text").isNotNull())
+        .select(F.col("doc_id").alias("id"), F.explode(_pair_col("text")).alias("pc"))
         .select("id", F.col("pc.cur").alias("cur"), F.col("pc.prev").alias("prev"))
     )
     tm = _map_to_vocab(toks, lm.vocab)
@@ -326,7 +321,7 @@ def perplexity(
     p = F.when(F.col("prev_m").isNull(), p1).otherwise(lam * p2 + (1 - lam) * p1)
     return (
         scored.select("id", (-F.log(p)).alias("_nll"))
-        .groupBy(F.col("id").alias(id_col))
+        .groupBy(F.col("id").alias("doc_id"))
         .agg(
             F.count("*").alias("n_toks"),
             F.round(F.exp(F.avg("_nll")), 4).alias("ppl"),
@@ -369,7 +364,7 @@ def perplexity_buckets(
             f"head_frac/middle_frac must be >= 0 and sum <= 1, got "
             f"{head_frac!r}/{middle_frac!r}"
         )
-    scored = perplexity(docs, lm, "text", "doc_id").persist()
+    scored = perplexity(docs, lm).persist()
     if cache_registry is not None:
         cache_registry.append(scored)
     ranked, n_docs = runtime.global_offsets(scored, ["ppl", "doc_id"], F.lit(1))
@@ -383,16 +378,10 @@ def perplexity_buckets(
     return ranked.withColumn("bucket", bucket).drop("_off")
 
 
-def perplexity_filter(
-    docs: DataFrame,
-    lm: NgramLM,
-    max_ppl: float,
-    mode: str = "remove",
-) -> DataFrame:
+def perplexity_filter(docs: DataFrame, lm: NgramLM, max_ppl: float) -> DataFrame:
     """The CCNet curation action: keep the documents of ``docs``
-    (doc_id, text) whose perplexity is at most ``max_ppl``. mode='flag'
-    returns every doc with its ppl and a ``kept`` flag instead of
-    filtering (the audit shape the quality operators share).
+    (doc_id, text) whose perplexity is at most ``max_ppl``, with their
+    ``ppl``. Documents with NULL text have no perplexity and are dropped.
 
     A ceiling alone keeps one kind of junk: ppl is NOT monotone in
     quality at the OOV extreme. A doc whose every token is OOV folds to
@@ -401,11 +390,6 @@ def perplexity_filter(
     test_all_oov_doc_scores_artificially_well). Corpora with heavy
     foreign-vocabulary contamination should gate on unk fraction
     upstream."""
-    if mode not in ("remove", "flag"):
-        raise ValueError(f"mode must be 'remove' or 'flag', got {mode!r}")
-    ppl = perplexity(docs, lm, "text", "doc_id").select(F.col("doc_id"), "ppl")
+    ppl = perplexity(docs, lm).select(F.col("doc_id"), "ppl")
     joined = docs.join(ppl, "doc_id", "left")
-    kept = F.col("ppl").isNotNull() & (F.col("ppl") <= max_ppl)
-    if mode == "flag":
-        return joined.withColumn("kept", kept)
-    return joined.where(kept)
+    return joined.where(F.col("ppl").isNotNull() & (F.col("ppl") <= max_ppl))

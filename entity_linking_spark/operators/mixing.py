@@ -33,38 +33,35 @@ from pyspark.sql import DataFrame, functions as F
 # quantized to 1/2^20 (~1e-6) — exact for the round weights corpus
 # cards publish, and the quantization error is documented either way
 _BUCKETS = 1 << 20
+# weight of a domain absent from the weights dict (0 drops it — the
+# explicit-allowlist convention of corpus assembly), and the hash seed
+# of the fractional keep decision
+_DEFAULT_WEIGHT = 0.0
+_SEED = 42
 
 
-def weighted_mix(
-    df: DataFrame,
-    weights: dict[str, float],
-    domain_col: str = "domain",
-    id_col: str = "doc_id",
-    default_weight: float = 0.0,
-    seed: int = 42,
-) -> DataFrame:
-    """Mix ``df`` by ``weights[domain]``: each row is emitted
-    floor(w) times, plus once more iff
-    xxhash64(id, copy_ordinal, seed) % 2^20 < frac(w) * 2^20.
+def weighted_mix(df: DataFrame, weights: dict[str, float]) -> DataFrame:
+    """Mix ``df`` (doc_id, domain, ...) by ``weights[domain]``: each row
+    is emitted floor(w) times, plus once more iff
+    xxhash64(doc_id, copy_ordinal, 42) % 2^20 < frac(w) * 2^20.
 
-    Domains absent from ``weights`` get ``default_weight`` (0 drops
-    them — the explicit-allowlist convention of corpus assembly).
+    Domains absent from ``weights`` are dropped (weight 0 — the
+    explicit-allowlist convention of corpus assembly).
     Output = input columns + ``copy`` (0-based replica ordinal), so
     replicas stay distinct rows under any downstream distinct/groupBy
-    on (id, copy).
+    on (doc_id, copy).
 
     All weights must be >= 0; a weight's integer part must be small
     (< 1000) — replication beyond that is never what a corpus mix
     means and would explode the output.
     """
-    bad = {d: w for d, w in {**weights, "": default_weight}.items()
-           if w < 0 or w >= 1000}
+    bad = {d: w for d, w in weights.items() if w < 0 or w >= 1000}
     if bad:
         raise ValueError(f"weights must be in [0, 1000): {bad}")
 
-    w_col = F.lit(float(default_weight))
+    w_col = F.lit(float(_DEFAULT_WEIGHT))
     for dom, w in sorted(weights.items()):
-        w_col = F.when(F.col(domain_col) == dom, F.lit(float(w))).otherwise(w_col)
+        w_col = F.when(F.col("domain") == dom, F.lit(float(w))).otherwise(w_col)
 
     n_whole = F.floor(w_col).cast("int")
     frac_buckets = F.round((w_col - F.floor(w_col)) * _BUCKETS).cast("long")
@@ -78,7 +75,7 @@ def weighted_mix(
             (F.col("copy") < F.col("_nw"))
             | (
                 F.pmod(
-                    F.xxhash64(F.col(id_col), F.col("copy"), F.lit(seed)),
+                    F.xxhash64(F.col("doc_id"), F.col("copy"), F.lit(_SEED)),
                     F.lit(_BUCKETS),
                 )
                 < F.col("_fb")

@@ -418,11 +418,8 @@ def with_media_features(
     return df.mapInPandas(run, schema=out_schema)
 
 
-def sample_video_frames(
-    df: DataFrame,
-    n_frames: int = 4,
-) -> DataFrame:
-    """Frame-sampling UDTF: one video row -> n_frames feature rows.
+def sample_video_frames(df: DataFrame) -> DataFrame:
+    """Frame-sampling UDTF: one video row -> 4 feature rows.
 
     Decodes ``payload`` with the fake codec, which derives per-frame
     seeds deterministically (a real decoder would seek keyframes).
@@ -442,7 +439,7 @@ def sample_video_frames(
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
                 if payload is None:
                     continue
-                for fi in range(n_frames):
+                for fi in range(4):
                     frame_payload = payload[:12] + struct.pack("<I", fi)
                     try:
                         arr = decode_media(frame_payload + payload[16:], "video")

@@ -41,12 +41,10 @@ from entity_linking_spark import runtime
 def pack_sequences(
     df: DataFrame,
     seq_len: int,
-    id_col: str = "doc_id",
-    drop_incomplete_last: bool = True,
     cache_registry: runtime.CacheScope | None = None,
 ) -> DataFrame:
-    """Pack the corpus (``id_col``, text) into consecutive
-    ``seq_len``-token sequences.
+    """Pack the corpus (doc_id, text) into consecutive ``seq_len``-token
+    sequences.
 
     Documents are ordered by ``xxhash64(id, 42)`` (ties broken by id;
     ids must be unique), their single-space token streams concatenated,
@@ -57,14 +55,14 @@ def pack_sequences(
     Returns the slice map, one row per (document, sequence) overlap:
 
     - ``seq_id``   0-based sequence ordinal (long)
-    - ``id_col``   the document id (source type preserved)
+    - ``doc_id``   the document id (source type preserved)
     - ``slice_start`` first token of the slice WITHIN the document
     - ``slice_len``   tokens contributed by this document
     - ``seq_off``     offset of the slice WITHIN the sequence
 
     Every sequence's slices concatenate (by seq_off) to exactly
-    ``seq_len`` tokens; ``drop_incomplete_last=True`` (the published
-    convention) drops the final ragged sequence, ``False`` keeps it.
+    ``seq_len`` tokens; the final ragged sequence is dropped (the
+    published convention).
 
     Exchanges: one narrow hash-exchange on the prefix-sum bucket id
     (the window's); the per-bucket offsets ride the plan as literals.
@@ -82,8 +80,8 @@ def pack_sequences(
     narrow = (
         df.where(F.col("text").isNotNull())
         .select(
-            F.col(id_col).alias("_id"),
-            F.xxhash64(F.col(id_col), F.lit(42)).alias("_okey"),
+            F.col("doc_id").alias("_id"),
+            F.xxhash64(F.col("doc_id"), F.lit(42)).alias("_okey"),
             (
                 F.length(F.col("text"))
                 - F.length(F.regexp_replace(F.col("text"), " ", ""))
@@ -96,11 +94,7 @@ def pack_sequences(
         cache_registry.append(narrow)
     spans, total_tokens = runtime.global_offsets(narrow, ["_okey", "_id"], F.col("_nt"))
     spans = spans.withColumnRenamed("_off", "_start")
-    n_seqs = (
-        total_tokens // seq_len
-        if drop_incomplete_last
-        else -(-total_tokens // seq_len)
-    )
+    n_seqs = total_tokens // seq_len
     # integer `div`, never floor(double/): token offsets are exact longs
     # and double division would silently round above 2^53 total tokens
     first_seq = F.expr(f"_start div {seq_len}")
@@ -112,7 +106,7 @@ def pack_sequences(
         .where(F.col("seq_id") < F.lit(n_seqs))
         .select(
             "seq_id",
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("doc_id"),
             F.greatest(
                 F.lit(0).cast("long"), F.col("seq_id") * seq_len - F.col("_start")
             ).cast("int").alias("slice_start"),

@@ -33,11 +33,10 @@ def prior_fallback_join(
     freq: DataFrame,
     p_e_m: DataFrame,
     p_e_m_lower: DataFrame,
-    span_col: str = "span",
 ) -> DataFrame:
     """Attach prior candidates to mentions with the 4-probe cascade.
 
-    mentions:    any DF with span_col
+    mentions:    any DF with a ``span`` column
     freq:        (key string, freq long)        — mention_total_freq
     p_e_m:       (key string, entity string, prior double)
     p_e_m_lower: (key string, entity string, prior double)
@@ -46,7 +45,7 @@ def prior_fallback_join(
     per mention x candidate; NULL candidate columns when every probe
     misses (the reference returns [] there).
     """
-    span = F.col(span_col)
+    span = F.col("span")
     # F14: span.title() — for single-word spans initcap == str.title();
     # multi-word spans can differ on digit-adjacent letters ('44th'.title()
     # == '44Th' but initcap -> '44th'). The cascade itself is what J10

@@ -59,6 +59,12 @@ from pyspark.sql.types import (
 )
 
 
+# repetition_signals' n-gram sizes: the most-frequent-n-gram signal
+# for each n in _TOP_NS, the duplicated-n-gram coverage for _DUP_N
+_TOP_NS = (2, 3)
+_DUP_N = 5
+
+
 def _doc_signals(
     text: str,
     top_ns: tuple[int, ...],
@@ -100,20 +106,18 @@ def repetition_signals(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    top_ns: tuple[int, ...] = (2, 3),
-    dup_n: int = 5,
 ) -> DataFrame:
     """One row per document with its Gopher-style repetition signals:
 
     - ``n_tokens``
-    - ``top{n}_count`` for each n in top_ns: occurrences of the doc's
-      most frequent n-gram (0 when the doc has fewer than n tokens)
+    - ``top{n}_count`` for n = 2 and 3: occurrences of the doc's most
+      frequent n-gram (0 when the doc has fewer than n tokens)
     - ``top{n}_frac``: top{n}_count * n / n_tokens — the token-fraction
       analog of the paper's "fraction of characters in the most
       frequent n-gram"
-    - ``dup{dup_n}_covered_tokens`` and ``dup{dup_n}_frac``: overlap-
-      merged token coverage of within-doc duplicated dup_n-grams —
-      the "fraction of characters in duplicate n-grams" analog.
+    - ``dup5_covered_tokens`` and ``dup5_frac``: overlap-merged token
+      coverage of within-doc duplicated 5-grams — the "fraction of
+      characters in duplicate n-grams" analog.
 
     All counts are exact integers (the fractions are single divisions
     of exact integers, so they are deterministic across engines). A
@@ -124,6 +128,7 @@ def repetition_signals(
     (id, text); see the module docstring for the two slower
     formulations this replaced.
     """
+    top_ns, dup_n = _TOP_NS, _DUP_N
     id_type = df.schema[id_col].dataType
     fields = [
         StructField(id_col, id_type, True),
@@ -172,6 +177,7 @@ def repetition_signals(
 _C4_TERMINAL = (".", "!", "?", '"')
 # C4's other published line and page rules
 _C4_MIN_WORDS_PER_LINE = 5
+_C4_MIN_KEPT_LINES = 3
 _C4_DROP_LINE_PHRASES = ("javascript",)
 _C4_DROP_PAGE_PHRASES = ("lorem ipsum", "{")
 
@@ -180,7 +186,6 @@ def c4_line_clean(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_kept_lines: int = 3,
     mode: str = "flag",
 ) -> DataFrame:
     """C4-style line-level cleaning (Raffel et al. 2020, "Exploring the
@@ -196,7 +201,7 @@ def c4_line_clean(
 
     - raw text contains "lorem ipsum" or the curly brace
       case-insensitively;
-    - fewer than ``min_kept_lines`` lines survive the line rules
+    - fewer than 3 lines survive the line rules
       (documented approximation of C4's "fewer than 3 sentences" —
       every kept line ends in terminal punctuation, so kept lines are
       the natural sentence proxy at line granularity).
@@ -242,7 +247,7 @@ def c4_line_clean(
             "n_lines_kept": F.size(kept),
             "clean_text": F.array_join(kept, "\n"),
             "is_page_dropped": page_bad
-            | (F.size(kept) < min_kept_lines),
+            | (F.size(kept) < _C4_MIN_KEPT_LINES),
         }
     )
     if mode == "remove":
@@ -262,6 +267,8 @@ _GOPHER_STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 # GopherQualityFilter, kept identical in the DuckDB gate twin.
 _BULLET_PREFIXES = ("•", "‣", "▶", "◦", "·", "-", "*")
 _ELLIPSIS_SUFFIXES = ("…", "...")
+# required DISTINCT stop words per document (Gopher: 2)
+_GOPHER_MIN_STOP_HITS = 2
 
 
 def gopher_quality_signals(
@@ -269,14 +276,6 @@ def gopher_quality_signals(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stop_hits: int = 2,
     mode: str = "flag",
 ) -> DataFrame:
     """The NON-repetition half of the Gopher quality rules (Rae et al.
@@ -284,19 +283,15 @@ def gopher_quality_signals(
     LLM-data pipelines, companion to ``repetition_signals`` above. A
     document PASSES iff all of:
 
-    - ``min_words <= n_words <= max_words`` (Gopher: 50..100,000);
-    - ``min_mean_word_len <= mean_word_len <= max_mean_word_len``
-      (Gopher: 3..10 characters);
+    - ``min_words <= n_words <= 100,000`` (Gopher: 50..100,000);
+    - ``3 <= mean_word_len <= 10`` characters;
     - symbol-to-word ratio (occurrences of ``#``, ``…``, ``...``
-      over words) ``<= max_symbol_ratio`` (Gopher: 0.1);
-    - fraction of lines starting with a bullet
-      ``<= max_bullet_line_frac`` (Gopher: 90%);
-    - fraction of lines ending with an ellipsis
-      ``<= max_ellipsis_line_frac`` (Gopher: 30%);
-    - fraction of words containing an ASCII letter
-      ``>= min_alpha_word_frac`` (Gopher: 80%);
-    - at least ``min_stop_hits`` DISTINCT required stop words present
-      (Gopher: 2 of the/be/to/of/and/that/have/with).
+      over words) at most 0.1;
+    - at most 90% of lines start with a bullet;
+    - at most 30% of lines end with an ellipsis;
+    - at least 80% of words contain an ASCII letter;
+    - at least 2 DISTINCT required stop words present (of
+      the/be/to/of/and/that/have/with).
 
     Documented divergence from the paper (same stance as
     ``repetition_signals``): words are single-space splits and lines
@@ -353,13 +348,13 @@ def gopher_quality_signals(
     )
     symbol_ratio = n_symbols.cast("double") / n_words
     passes = (
-        n_words.between(min_words, max_words)
-        & mean_len.between(min_mean_word_len, max_mean_word_len)
-        & (symbol_ratio <= max_symbol_ratio)
-        & (bullet_frac <= max_bullet_line_frac)
-        & (ellipsis_frac <= max_ellipsis_line_frac)
-        & (alpha_frac >= min_alpha_word_frac)
-        & (stop_hits >= min_stop_hits)
+        n_words.between(min_words, 100_000)
+        & mean_len.between(3.0, 10.0)
+        & (symbol_ratio <= 0.1)
+        & (bullet_frac <= 0.9)
+        & (ellipsis_frac <= 0.3)
+        & (alpha_frac >= 0.8)
+        & (stop_hits >= _GOPHER_MIN_STOP_HITS)
     )
     if mode == "remove":
         return df.where(passes)

@@ -122,7 +122,7 @@ def run_pipeline(
     join_aliases()
 
     def _mentions() -> DataFrame:
-        return dictionary.mentions(docs, tokens_col="tokens", cache_registry=caches)
+        return dictionary.mentions(docs, tokens_col="tokens")
 
     mentions = io.run_stage(spark, workdir, "s2_mentions", _mentions, force)
 

@@ -256,8 +256,7 @@ def semantic_dedup_query(spark, sf_dir):
     # folds and the within-cluster pair verify otherwise run on one core
     e = runtime.spread(_t(spark, sf_dir, "embeddings"))
     out = semantic_dedup(
-        e, id_col="vec_id", vec_col="embedding",
-        k=8, min_cosine=0.38, max_cluster_size=4096,
+        e, k=8, min_cosine=0.38, max_cluster_size=4096,
         cache_registry=_LIVE_CACHES,
     )
     return out.select(
@@ -1083,7 +1082,7 @@ def gopher_repetition_signals(spark, sf_dir):
 
     d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     return (
-        repetition_signals(d, top_ns=(2, 3), dup_n=5)
+        repetition_signals(d)
         .select(
             "doc_id", "n_tokens", "top2_count", "top3_count",
             "dup5_covered_tokens",
@@ -1457,7 +1456,7 @@ def lm_perplexity(spark, sf_dir):
     )
 
     d = runtime.spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
-    lm = train_bigram_lm(d, vocab_size=512, bigram_size=2048, k=1.0, lam=0.75)
+    lm = train_bigram_lm(d, vocab_size=512, bigram_size=2048)
     return perplexity_buckets(
         d, lm, head_frac=0.25, middle_frac=0.5, cache_registry=_LIVE_CACHES
     ).orderBy("doc_id")
@@ -1537,7 +1536,7 @@ def nb_quality_classifier(spark, sf_dir):
     # covers the large-corpus case instead
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     labeled = d.withColumn("label", F.col("doc_id") % 3 == 0)
-    model = train_nb_quality(labeled, vocab_size=256, k=1.0)
+    model = train_nb_quality(labeled, vocab_size=256)
     return nb_log_odds(d, model).orderBy("doc_id")
 
 
@@ -1721,7 +1720,7 @@ def j10_prior_fallback_join(spark, sf_dir):
         ic.where(F.col("L") % 7 == 0).select(F.col("w").alias("key")).distinct(), "l_"
     )
     mentions = ic.select(F.col("w").alias("span"))
-    out = prior_fallback_join(mentions, freq, pem, peml, span_col="span")
+    out = prior_fallback_join(mentions, freq, pem, peml)
     return out.select(
         "span", "matched_key", "matched_map", "entity", "prior"
     ).orderBy("span", "entity")
@@ -1898,7 +1897,6 @@ def duplicated_span_removal(spark, sf_dir):
         d,
         id_col="doc_id",
         window=_DUP_SPAN_WINDOW,
-        min_docs=2,
         max_postings=_DUP_SPAN_MAX_POSTINGS,
     )
     cleaned = dedup.remove_duplicated_spans(d, spans, id_col="doc_id")
@@ -2217,9 +2215,7 @@ def weighted_mix_integer(spark, sf_dir):
         "doc_id",
         F.concat(F.lit("d"), (F.col("doc_id") % 3).cast("string")).alias("domain"),
     )
-    return weighted_mix(
-        d, {"d0": 2.0, "d2": 1.0}, domain_col="domain", id_col="doc_id"
-    ).orderBy("doc_id", "copy")
+    return weighted_mix(d, {"d0": 2.0, "d2": 1.0}).orderBy("doc_id", "copy")
 
 
 @query(

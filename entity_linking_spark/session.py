@@ -28,17 +28,19 @@ def _default_heap() -> str:
 def get_spark(
     app_name: str = "entity-linking-spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this pipeline.
 
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` (driver contract) or all
-    local cores. On a real cluster the master/parallelism comes from
-    spark-submit and this function only applies the SQL-level confs.
+    local cores; shuffle partitions are the larger of
+    ``DEFAULT_SHUFFLE_PARTITIONS`` and the cores. ``extra_conf`` entries
+    are applied after these defaults, so they override them. On a real
+    cluster the master/parallelism comes from spark-submit and this
+    function only applies the SQL-level confs.
     """
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    shuffle_partitions = shuffle_partitions or max(DEFAULT_SHUFFLE_PARTITIONS, cores)
+    shuffle_partitions = max(DEFAULT_SHUFFLE_PARTITIONS, cores)
 
     builder = (
         SparkSession.builder.appName(app_name)

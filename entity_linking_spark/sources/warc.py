@@ -279,12 +279,9 @@ def _parse_http_payload(payload: bytes) -> tuple[int | None, bytes]:
     return None, payload
 
 
-def read_warc(
-    spark: SparkSession,
-    paths: list[str] | str,
-    warc_types: tuple[str, ...] = ("response",),
-) -> DataFrame:
-    """WARC files -> DataFrame(url, warc_ts, ..., html, parse_error).
+def read_warc(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+    """WARC ``response`` records -> DataFrame(url, warc_ts, ..., html,
+    parse_error); request, metadata and other record types are skipped.
 
     ``paths`` is a directory, a single file, or an explicit list; local
     or scheme-qualified (pyarrow.fs resolves s3://, hdfs://, ...). One
@@ -335,12 +332,10 @@ def read_warc(
     if not file_list:
         raise ValueError(f"no .warc files under {paths!r}")
 
-    keep = set(warc_types)
-
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for fpath in pdf["path"]:
-                yield from _read_one_file(fpath, keep)
+                yield from _read_one_file(fpath, {"response"})
 
     n_tasks = min(len(file_list), spark.sparkContext.defaultParallelism)
     # round-robin (no key): hashing the paths would stack several files
@@ -414,7 +409,7 @@ def _read_one_file(fpath: str, keep: set[str]) -> Iterator[pd.DataFrame]:
                 n_parsed += 1
                 h = rec["headers"]
                 wtype = h.get("warc-type", "")
-                if keep and wtype not in keep:
+                if wtype not in keep:
                     continue
                 ctype = h.get("content-type", "")
                 status, body = (

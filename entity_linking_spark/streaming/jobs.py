@@ -45,39 +45,6 @@ def streaming_mention_counts(events: DataFrame) -> DataFrame:
     )
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    source_parquet: str,
-    schema,
-    transform,
-    table_name: str,
-    output_mode: str = "complete",
-    max_files_per_trigger: int = 4,
-) -> StreamingQuery:
-    """readStream(parquet) -> transform -> in-memory sink, availableNow.
-
-    Bounded run of the real streaming engine: used by tests and as the
-    template for a production kafka/iceberg-source deployment.
-    ``output_mode='append'`` + ``max_files_per_trigger=1`` turns each
-    source file into its own micro-batch, which is how the late-data /
-    watermark-drop semantics are exercised deterministically (the file
-    source orders batches by modification time).
-    """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_parquet)
-    )
-    out = transform(stream)
-    return (
-        out.writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _first_seen_of_group(n_prior: int, pdf_iter, id_col: str):
     """(keeper_id | None, rows_in_batch) for one state group's chunks.
 

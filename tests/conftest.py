@@ -7,7 +7,9 @@ from entity_linking_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("el-tests", cores=4, shuffle_partitions=8)
+    s = get_spark(
+        "el-tests", cores=4, extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield s
 
 

@@ -19,28 +19,22 @@ from entity_linking_spark.operators.packing import pack_sequences
 @pytest.fixture(scope="module")
 def assembled(spark):
     # forged corpus: 400 docs across two domains, with enough clean
-    # long-form text to survive the C4/Gopher gates; every 10th doc an
-    # exact duplicate of its predecessor so dedup does real work
+    # long-form text to survive every curation gate (six lines of their
+    # own words, so the repetition gate passes them too); every 10th doc
+    # an exact duplicate of its predecessor so dedup does real work
+    def line(n):
+        words = F.transform(
+            F.sequence(F.lit(1), F.lit(18)),
+            lambda i: F.concat(
+                F.lit("word"), F.pmod(F.xxhash64(F.col("id"), F.lit(n), i), F.lit(4000))
+            ),
+        )
+        return F.concat_ws(" ", words, F.lit("and that is the point."))
+
     base = spark.range(400).select(
         F.col("id").alias("doc_id"),
         F.when(F.col("id") % 2 == 0, F.lit("web")).otherwise(F.lit("books")).alias("domain"),
-        F.concat_ws(
-            "\n",
-            F.array_repeat(
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(18)),
-                        lambda i: F.concat(
-                            F.lit("word"),
-                            F.pmod(F.xxhash64(F.col("id"), i), F.lit(4000)),
-                        ),
-                    ),
-                    F.lit("and that is the point."),
-                ),
-                6,
-            ),
-        ).alias("text"),
+        F.concat_ws("\n", *[line(n) for n in range(6)]).alias("text"),
     ).withColumn(
         "text",
         F.when(
@@ -48,22 +42,29 @@ def assembled(spark):
             F.lag("text").over(Window.orderBy("doc_id")),
         ).otherwise(F.col("text")),
     )
-    curated, stats = curate_corpus(
-        base, near_dup=False, gopher_repetition=False, with_stats=True
-    )
+    curated, stats = curate_corpus(base, with_stats=True)
     curated = curated.persist()
-    mixed = weighted_mix(
-        curated, {"web": 0.5, "books": 2.0}, id_col="doc_id"
-    ).withColumn("pack_id", F.xxhash64("doc_id", "copy"))
-    packed = pack_sequences(mixed, 64, id_col="pack_id")
+    mixed = weighted_mix(curated, {"web": 0.5, "books": 2.0}).withColumn(
+        "pack_id", F.xxhash64("doc_id", "copy")
+    )
+    packed = pack_sequences(
+        mixed.select(F.col("pack_id").alias("doc_id"), "text"), 64
+    )
     return curated, stats, mixed.persist(), packed
 
 
 def test_assembly_curation_did_work(assembled):
     curated, stats, mixed, _ = assembled
     by = {s["stage"]: s for s in stats}
+    assert list(by) == [
+        "c4_line_clean", "gopher_quality", "gopher_repetition",
+        "exact_dedup", "near_dup", "redact_pii",
+    ]
     # the exact-dup plants were removed, nothing else from this forge
     assert by["exact_dedup"]["rows_in"] > by["exact_dedup"]["rows_out"]
+    assert all(
+        s["rows_in"] == s["rows_out"] for s in stats if s["stage"] != "exact_dedup"
+    )
     assert curated.count() == by[list(by)[-1]]["rows_out"]
 
 

@@ -15,6 +15,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from entity_linking_spark import runtime
+from entity_linking_spark.operators import classify
 from entity_linking_spark.operators.classify import (
     NBQualityModel,
     nb_log_odds,
@@ -74,7 +76,7 @@ def test_hand_replay_exact(spark):
     ]
     rows = [(i, text, lab) for i, (lab, text) in enumerate(corpus)]
     df = _docs(spark, rows)
-    model = train_nb_quality(df, vocab_size=100, k=1.0)
+    model = train_nb_quality(df, vocab_size=100)
     got = {
         r.doc_id: (r.n_toks, r.log_odds, r.mean_llr)
         for r in nb_log_odds(df, model).collect()
@@ -93,7 +95,7 @@ def test_unk_fold_and_vocab_cap(spark):
         (2, "a b rare2", False),
     ]
     df = _docs(spark, rows)
-    model = train_nb_quality(df, vocab_size=2, k=1.0)
+    model = train_nb_quality(df, vocab_size=2)
     assert {r.token for r in model.vocab.collect()} == {"a", "b"}
     scored = {r.doc_id: r.log_odds for r in nb_log_odds(df, model).collect()}
     # doc 1 ('<unk>' literal) and doc 2 ('rare2' OOV) have identical
@@ -147,13 +149,6 @@ def test_validation_errors(spark):
     df = _docs(spark, [(0, "a", True)])
     with pytest.raises(ValueError):
         train_nb_quality(df, vocab_size=0)
-    with pytest.raises(ValueError):
-        train_nb_quality(df, k=0.0)
-    model = train_nb_quality(df, vocab_size=4)
-    with pytest.raises(ValueError):
-        pareto_keep(df, model, mode="bogus")
-    with pytest.raises(ValueError):
-        pareto_keep(df, model, alpha=0.0)
 
 
 def _structured(spark, n_nat=30, n_junk=15):
@@ -165,30 +160,29 @@ def _structured(spark, n_nat=30, n_junk=15):
 def test_pareto_keep_biased_and_deterministic(spark):
     df = _structured(spark)
     model = train_nb_quality(df, vocab_size=64)
-    flagged = pareto_keep(df, model, alpha=9.0, seed=7, mode="flag")
-    rows = flagged.collect()
-    nat_kept = sum(1 for r in rows if r.doc_id < 1000 and r.kept)
-    junk_kept = sum(1 for r in rows if r.doc_id >= 1000 and r.kept)
+    kept_ids = sorted(r.doc_id for r in pareto_keep(df, model, seed=7).collect())
+    nat_kept = sum(1 for i in kept_ids if i < 1000)
+    junk_kept = sum(1 for i in kept_ids if i >= 1000)
     # high-quality docs survive (GPT-3's draw keeps score~1 docs w.p.
     # ~1); junk survives only via the pareto tail
     assert nat_kept == 30
     assert junk_kept < 15
-    # deterministic: rerun + repartition give the identical keep set
-    kept_ids = sorted(r.doc_id for r in rows if r.kept)
-    again = pareto_keep(df.repartition(7), model, alpha=9.0, seed=7)
+    # deterministic: a repartitioned rerun gives the identical keep set
+    again = pareto_keep(df.repartition(7), model, seed=7)
     assert sorted(r.doc_id for r in again.collect()) == kept_ids
-    # remove mode returns the original columns (score dropped)
+    # the kept rows carry the original columns (score dropped)
     assert set(again.columns) == {"doc_id", "text", "label"}
 
 
-def test_pareto_seed_sensitivity(spark):
+def test_pareto_seed_sensitivity(spark, monkeypatch):
     # junk docs' survival set depends on the seed (the draw moves);
     # use alpha small enough that some junk survives under some seed
+    monkeypatch.setattr(classify, "_PARETO_ALPHA", 2.0)
     df = _structured(spark, n_nat=5, n_junk=40)
     model = train_nb_quality(df, vocab_size=64)
     sets = []
     for seed in (1, 2, 3):
-        kept = pareto_keep(df, model, alpha=2.0, seed=seed)
+        kept = pareto_keep(df, model, seed=seed)
         sets.append(tuple(sorted(r.doc_id for r in kept.collect())))
     assert len(set(sets)) > 1
 
@@ -216,14 +210,20 @@ def test_model_roundtrips_through_parquet(spark, tmp_path):
     assert a == b
 
 
-def test_materialize_matches_lazy(spark):
-    # materialize only changes how the model tables are held (collected
-    # local tables vs training lineage), never their contents
+def test_materialize_matches_lazy(spark, tmp_path, monkeypatch):
+    # materializing only changes how the model tables are held (collected
+    # local tables vs training lineage), never their contents; a parquet
+    # input at or above the footer-row threshold takes that path
     rows = [(i, f"tok{i % 7} tok{i % 3} common w{i % 11}", i % 2 == 0) for i in range(60)]
     rows += [(100, "<unk> rare", True), (101, "common common", False)]
-    df = _docs(spark, rows)
-    lazy = train_nb_quality(df, vocab_size=8, materialize=False)
-    mat = train_nb_quality(df, vocab_size=8, materialize=True)
+    _docs(spark, rows).write.parquet(str(tmp_path / "docs"))
+    df = spark.read.parquet(str(tmp_path / "docs"))
+    lazy = train_nb_quality(df, vocab_size=8)
+    monkeypatch.setattr(classify, "_MATERIALIZE_MIN_ROWS", len(rows))
+    mat = train_nb_quality(df, vocab_size=8)
+    # only the lazy vocab still reads the corpus files
+    assert runtime.input_rows(lazy.vocab) == len(rows)
+    assert runtime.input_rows(mat.vocab) is None
     for table in ("vocab", "likelihoods", "totals"):
         got = sorted(map(tuple, getattr(mat, table).collect()))
         assert got == sorted(map(tuple, getattr(lazy, table).collect())), table

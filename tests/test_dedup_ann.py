@@ -74,7 +74,7 @@ def test_minhash_near_dup_and_clusters(spark):
 
 
 def test_embedding_near_dup(corpus):
-    pairs = dedup.embedding_near_dup_pairs(corpus, min_cosine=0.95)
+    pairs = dedup.embedding_near_dup_pairs(corpus)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (0, 100) in got and (0, 101) in got and (100, 101) in got
     assert (1, 102) in got
@@ -102,26 +102,33 @@ def test_lsh_topk_finds_near_dups(spark, corpus):
     assert 100 in ids and 101 in ids  # near-dups recovered via multiprobe
 
 
-def test_ivf_topk_finds_near_dups(spark, corpus):
+def _small_ivf(monkeypatch):
+    """4 cells, 2 probed: a multi-cell index over the 43-row corpus."""
+    monkeypatch.setattr(ann, "_IVF_N_CELLS", 4)
+    monkeypatch.setattr(ann, "_IVF_N_PROBE", 2)
+
+
+def test_ivf_topk_finds_near_dups(spark, corpus, monkeypatch):
+    _small_ivf(monkeypatch)
     queries = corpus.where(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ann.ivf_topk(corpus, queries, k=4, n_cells=4, n_probe=2)
+    out = ann.ivf_topk(corpus, queries, k=4)
     rows = sorted(out.collect(), key=lambda r: r.rank)
     assert rows[0].neighbor_id == 1 and rows[0].cos_sim == 1.0
     assert 102 in {r.neighbor_id for r in rows}
 
 
-def test_ivf_topk_coarse_sample_mod_falls_back(spark, corpus):
-    """A web-scale sample_mod on a small corpus can leave ZERO rows in
-    the centroid hash-sample; ivf_topk must fall back to the unfiltered
-    bottom-k-by-hash instead of crashing in np.stack."""
+def test_ivf_topk_coarse_sample_mod_falls_back(spark, corpus, monkeypatch):
+    """A web-scale sample modulus on a small corpus can leave ZERO rows
+    in the centroid hash-sample; ivf_topk must fall back to the
+    unfiltered bottom-k-by-hash instead of crashing in np.stack."""
+    _small_ivf(monkeypatch)
+    monkeypatch.setattr(ann, "_IVF_SAMPLE_MOD", 1 << 20)
     queries = corpus.where(F.col("vec_id") == 1).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    out = ann.ivf_topk(
-        corpus, queries, k=4, n_cells=4, n_probe=2, sample_mod=1 << 20
-    )
+    out = ann.ivf_topk(corpus, queries, k=4)
     rows = sorted(out.collect(), key=lambda r: r.rank)
     assert rows[0].neighbor_id == 1 and rows[0].cos_sim == 1.0
 
@@ -129,19 +136,21 @@ def test_ivf_topk_coarse_sample_mod_falls_back(spark, corpus):
 @pytest.mark.parametrize(
     "op, key_udf",
     [
-        (lambda c, q: dedup.embedding_near_dup_pairs(c, n_planes=4), "bucket_udf"),
+        (lambda c, q: dedup.embedding_near_dup_pairs(c), "bucket_udf"),
         (lambda c, q: ann.lsh_topk(c, q, k=4, n_planes=4), "bucket_udf"),
-        (lambda c, q: ann.ivf_topk(c, q, k=4, n_cells=4, n_probe=2), "cell_udf"),
+        (lambda c, q: ann.ivf_topk(c, q, k=4), "cell_udf"),
     ],
     ids=["embedding_near_dup_pairs", "lsh_topk", "ivf_topk"],
 )
-def test_key_udf_runs_once_per_join_side(spark, corpus, op, key_udf):
+def test_key_udf_runs_once_per_join_side(spark, corpus, op, key_udf, monkeypatch):
     """A join on a UDF-made key evaluates the UDF once per row of its
     side: a deterministic key UDF is copied into the join's inferred
     isnotnull filter, a second ArrowEvalPython over the same rows. The
     near-dup self-join's two sides share one exchange, and the ANN joins
     compute the key on the corpus side only, so each executed plan has
     exactly one ArrowEvalPython node of the key UDF."""
+    monkeypatch.setattr(dedup, "_EMB_N_PLANES", 4)
+    _small_ivf(monkeypatch)
     queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
     df = op(corpus, queries)
     df.collect()
@@ -181,21 +190,18 @@ def test_lsh_recall_vs_bruteforce(spark):
     assert sum(recalls) / len(recalls) >= 0.8, recalls
 
 
-def test_exact_dedup_members_capped(spark):
+def test_exact_dedup_members_capped(spark, monkeypatch):
+    monkeypatch.setattr(dedup, "_EXACT_MAX_MEMBERS", 3)
     rows = [Row(url=f"u{i:02d}", text="viral page") for i in range(10)]
     rows.append(Row(url="zz", text="unique"))
     df = spark.createDataFrame(rows)
     out = {
         r.keeper: (r.n_copies, r.members)
-        for r in dedup.exact_dedup(df, max_members=3).collect()
+        for r in dedup.exact_dedup(df).collect()
     }
     # true count preserved, members bounded at 3
     assert out["u00"] == (10, ["u00", "u01", "u02"])
     assert out["zz"] == (1, ["zz"])
-    # members=None drops the column (unbounded-safe full-corpus output)
-    no_members = dedup.exact_dedup(df, max_members=None)
-    assert "members" not in no_members.columns
-    assert {r.n_copies for r in no_members.collect()} == {10, 1}
 
 
 def test_minhash_exact_verify(spark):
@@ -216,16 +222,17 @@ def test_minhash_exact_verify(spark):
     assert got[("a", "b")] == pytest.approx(55 / 61, abs=1e-4)
 
 
-def test_embedding_near_dup_bucket_cap(spark, corpus):
+def test_embedding_near_dup_bucket_cap(spark, corpus, monkeypatch):
+    monkeypatch.setattr(dedup, "_EMB_MIN_COSINE", 0.98)
     # with a tiny cap every bucket holding the near-dup family is dropped
-    pairs = dedup.embedding_near_dup_pairs(
-        corpus, min_cosine=0.98, n_planes=2, max_bucket_size=1
-    )
+    monkeypatch.setattr(dedup, "_EMB_N_PLANES", 2)
+    monkeypatch.setattr(dedup, "_EMB_MAX_BUCKET_SIZE", 1)
+    pairs = dedup.embedding_near_dup_pairs(corpus)
     assert pairs.count() == 0
     # with a sane cap the planted near-dups surface
-    pairs = dedup.embedding_near_dup_pairs(
-        corpus, min_cosine=0.98, n_planes=4, max_bucket_size=64
-    ).collect()
+    monkeypatch.setattr(dedup, "_EMB_N_PLANES", 4)
+    monkeypatch.setattr(dedup, "_EMB_MAX_BUCKET_SIZE", 64)
+    pairs = dedup.embedding_near_dup_pairs(corpus).collect()
     got = {(r.id_a, r.id_b) for r in pairs}
     assert (0, 100) in got or (0, 101) in got
 
@@ -391,7 +398,7 @@ def test_remove_duplicated_spans_cuts_all_cross_doc_repeats(spark):
     ]
     W = 20
     df = spark.createDataFrame(docs, "url string, text string")
-    cleaned, dropped = dedup.dedup_repeated_substrings(df, window=W)
+    cleaned, dropped = dedup.dedup_repeated_substrings(df)
     got = {r.url: r for r in cleaned.collect()}
     assert dropped.count() == 0
     # doc a: tokens [25, 55) cut -> the a-prefix survives
@@ -406,115 +413,6 @@ def test_remove_duplicated_spans_cuts_all_cross_doc_repeats(spark):
     # the curation postcondition: no cross-doc repeat survives
     clean_df = cleaned.select("url", F.col("clean_text").alias("text"))
     assert dedup.duplicated_spans(clean_df, window=W).collect() == []
-
-
-def test_keep_first_policy_preserves_one_copy(spark):
-    """keep_first=True: the lowest-id doc keeps each duplicated run,
-    every other carrier sheds it, and the cleaned corpus has no
-    cross-doc repeat left (the surviving copy is unique, so min_docs=2
-    never fires on a re-run)."""
-    shared = " ".join(f"s{i}" for i in range(30))
-    docs = [
-        ("a", " ".join(f"a{i}" for i in range(25)) + " " + shared),
-        ("b", shared + " " + " ".join(f"b{i}" for i in range(40))),
-        ("c", shared + " " + " ".join(f"c{i}" for i in range(25))),
-    ]
-    W = 20
-    df = spark.createDataFrame(docs, "url string, text string")
-    cleaned, _ = dedup.dedup_repeated_substrings(df, window=W, keep_first=True)
-    got = {r.url: r for r in cleaned.collect()}
-    # doc a is the keeper (lowest id): untouched
-    assert got["a"].clean_text == docs[0][1]
-    assert got["a"].n_removed_tokens == 0
-    # carriers b and c shed the run
-    assert got["b"].clean_text == " ".join(f"b{i}" for i in range(40))
-    assert got["b"].n_removed_tokens == 30
-    assert got["c"].clean_text == " ".join(f"c{i}" for i in range(25))
-    # the run still exists in the corpus (in a) — keep-one, not erase
-    assert shared in got["a"].clean_text
-    # and no cross-doc repeat survives
-    clean_df = cleaned.select("url", F.col("clean_text").alias("text"))
-    assert dedup.duplicated_spans(clean_df, window=W).collect() == []
-
-
-def test_keep_first_numeric_ids_use_numeric_order(spark):
-    """The keeper is the lowest id in the SOURCE column's ordering:
-    with long ids 2 and 10, doc 2 keeps the run (a min over the
-    stringified ids would wrongly pick '10' < '2')."""
-    shared = " ".join(f"s{i}" for i in range(30))
-    docs = [
-        (10, shared + " " + " ".join(f"x{i}" for i in range(25))),
-        (2, " ".join(f"y{i}" for i in range(25)) + " " + shared),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    cleaned, _ = dedup.dedup_repeated_substrings(
-        df, id_col="doc_id", window=20, keep_first=True
-    )
-    got = {r.doc_id: r for r in cleaned.collect()}
-    assert got[2].n_removed_tokens == 0  # numeric-lowest id keeps
-    assert shared in got[2].clean_text
-    assert got[10].n_removed_tokens == 30
-    assert shared not in got[10].clean_text
-
-
-def test_keep_first_randomized_against_replay(spark):
-    """Randomized keep_first agreement with a from-first-principles
-    replay of the per-posting exemption rule."""
-    import random
-
-    from entity_linking_spark.functions.text import (
-        _POLY_MOD,
-        _WHASH_MUL2,
-        _poly_hash,
-    )
-
-    def h(s):
-        return _poly_hash(s) * _POLY_MOD + _poly_hash(s, _WHASH_MUL2)
-
-    rng = random.Random(31)
-    vocab = [f"w{i}" for i in range(300)]
-    runs = [" ".join(rng.choice(vocab) for _ in range(L)) for L in (25, 33)]
-    docs = []
-    for d in range(12):
-        toks = [rng.choice(vocab) for _ in range(rng.randint(25, 70))]
-        text = " ".join(toks)
-        if d % 4 != 3:
-            run = runs[d % len(runs)]
-            cut = rng.randint(0, len(toks))
-            text = " ".join(toks[:cut] + [run] + toks[cut:])
-        docs.append((f"d{d:02d}", text))
-    W = 20
-    # replay: postings -> keeper per hash -> non-exempt positions -> cut
-    postings = {}
-    per_doc = {}
-    for did, text in docs:
-        toks = text.lower().split(" ")
-        ws = (
-            [(0, h(" ".join(toks)))]
-            if len(toks) <= W
-            else [
-                (i, h(" ".join(toks[i : i + W])))
-                for i in range(len(toks) - W + 1)
-            ]
-        )
-        per_doc[did] = ws
-        for p, hv in ws:
-            postings.setdefault(hv, []).append(did)
-    keeper = {hv: min(ds) for hv, ds in postings.items()}
-    expect = {}
-    for did, text in docs:
-        toks = text.split(" ")
-        cut = set()
-        for p, hv in per_doc[did]:
-            if len(set(postings[hv])) >= 2 and keeper[hv] != did:
-                cut.update(range(p, min(p + W, len(toks))))
-        expect[did] = " ".join(t for i, t in enumerate(toks) if i not in cut)
-    df = spark.createDataFrame(docs, "url string, text string")
-    cleaned, _ = dedup.dedup_repeated_substrings(
-        df, window=W, max_postings=1000, keep_first=True
-    )
-    got = {r.url: r.clean_text for r in cleaned.collect()}
-    assert got == expect
 
 
 def test_remove_duplicated_spans_randomized_postcondition(spark):
@@ -537,7 +435,7 @@ def test_remove_duplicated_spans_randomized_postcondition(spark):
         docs.append((f"d{d}", text))
     W = 20
     df = spark.createDataFrame(docs, "url string, text string")
-    cleaned, _ = dedup.dedup_repeated_substrings(df, window=W, max_postings=1000)
+    cleaned, _ = dedup.dedup_repeated_substrings(df)
     rows = {r.url: r for r in cleaned.collect()}
     spans = _ref_duplicated_spans(docs, W, 2)
     for did, text in docs:
@@ -715,16 +613,18 @@ def test_semantic_dedup_k1_and_validation(spark, corpus):
         dedup.semantic_dedup(corpus, k=0)
 
 
-def test_semantic_dedup_join_path_identical_to_literal(spark, corpus):
+def test_semantic_dedup_join_path_identical_to_literal(spark, corpus, monkeypatch):
     """The beyond-literal-envelope Arrow path (batched float64 matmul
     assignment + einsum pair verify) must be output-identical to the
     literal-centroid JVM projection on the fixture corpus — the
     trie-vs-join mention-path convention."""
     lit = sorted(map(tuple, dedup.semantic_dedup(
-        corpus, k=4, min_cosine=0.9, arrow_path=False).collect()))
+        corpus, k=4, min_cosine=0.9).collect()))
+    monkeypatch.setattr(dedup, "_SEMDEDUP_LITERAL_MAX_K", 0)
     jn = sorted(map(tuple, dedup.semantic_dedup(
-        corpus, k=4, min_cosine=0.9, arrow_path=True).collect()))
+        corpus, k=4, min_cosine=0.9).collect()))
     assert lit == jn
+    monkeypatch.undo()
     # auto-select: k > 64 takes the join path without blowing up the
     # expression tree (65 centroids over a 43-row corpus degenerates to
     # ~1 row per cluster — removals impossible, assignment still total)
@@ -739,7 +639,7 @@ def test_semantic_dedup_empty_corpus(spark):
     assert out.columns == ["vec_id", "cluster_id", "centroid_sim", "keep"]
 
 
-def test_semantic_dedup_null_and_zero_vectors(spark):
+def test_semantic_dedup_null_and_zero_vectors(spark, monkeypatch):
     from pyspark.sql import Row as R
 
     e1 = [1.0, 0.0, 0.0, 0.0]
@@ -756,9 +656,10 @@ def test_semantic_dedup_null_and_zero_vectors(spark):
          R(vec_id=7, embedding=[0.0, 0.0, 1.0, 0.0])],  # anchor B
         "vec_id long, embedding array<double>",
     )
-    for arrow in (False, True):
+    for literal_max_k in (64, 0):  # the literal path, then the Arrow path
+        monkeypatch.setattr(dedup, "_SEMDEDUP_LITERAL_MAX_K", literal_max_k)
         out = {r.vec_id: r for r in dedup.semantic_dedup(
-            df, k=2, min_cosine=0.97, arrow_path=arrow).collect()}
+            df, k=2, min_cosine=0.97).collect()}
         # NULL-embedding rows are excluded from the output entirely
         assert 4 not in out and set(out) == {1, 2, 3, 6, 7}
         # the zero vector scores 0.0 against everything (never NaN, so

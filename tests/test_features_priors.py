@@ -6,8 +6,6 @@ quota math; candidate_retrieval/dataset.py:300-347 probe cascade).
 
 from __future__ import annotations
 
-import pytest
-
 from entity_linking_spark.functions.features import (
     get_candidate_representation,
     get_context_representation,
@@ -91,18 +89,10 @@ def test_split_sentences_no_boundary_and_empty():
 
 def test_first_sentences_caps():
     text = " ".join(f"s{i}." for i in range(20))
-    assert len(first_sentences(text, 10)) == 10
-    assert first_sentences(text, 3) == ["s0.", "s1.", "s2."]
+    assert first_sentences(text) == [f"s{i}." for i in range(10)]
 
 
 # ---------------------------------------------------------------- J10 cascade
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from entity_linking_spark.session import get_spark
-
-    return get_spark("test-priors", cores=4)
 
 
 def test_prior_fallback_cascade(spark):

@@ -15,6 +15,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from entity_linking_spark.operators import lm as lm_mod
 from entity_linking_spark.operators.lm import (
     UNK,
     perplexity,
@@ -70,13 +71,11 @@ HAND = {
 }
 
 
-def _run(spark, texts, vocab_size, bigram_size, k=1.0, lam=0.75):
+def _run(spark, texts, vocab_size, bigram_size):
     df = spark.createDataFrame(
         list(texts.items()), "doc_id long, text string"
     )
-    lm = train_bigram_lm(
-        df, vocab_size=vocab_size, bigram_size=bigram_size, k=k, lam=lam
-    )
+    lm = train_bigram_lm(df, vocab_size=vocab_size, bigram_size=bigram_size)
     got = {
         r["doc_id"]: (r["n_toks"], r["ppl"])
         for r in perplexity(df, lm).collect()
@@ -89,8 +88,10 @@ def test_hand_corpus_exact_vs_python_replay(spark):
     assert got == _python_replay(HAND, 4, 6, 1.0, 0.75)
 
 
-def test_uncapped_model_exact(spark):
-    got, _ = _run(spark, HAND, vocab_size=1000, bigram_size=1000, k=0.5, lam=0.5)
+def test_uncapped_model_exact(spark, monkeypatch):
+    monkeypatch.setattr(lm_mod, "_K", 0.5)
+    monkeypatch.setattr(lm_mod, "_LAM", 0.5)
+    got, _ = _run(spark, HAND, vocab_size=1000, bigram_size=1000)
     assert got == _python_replay(HAND, 1000, 1000, 0.5, 0.5)
 
 
@@ -184,13 +185,6 @@ def test_filter_modes(spark):
     cut = (ppls[0] + ppls[2]) / 2
     kept = perplexity_filter(df, lm, max_ppl=cut).select("doc_id").collect()
     assert sorted(r["doc_id"] for r in kept) == [0, 1]
-    flagged = {
-        r["doc_id"]: r["kept"]
-        for r in perplexity_filter(df, lm, max_ppl=cut, mode="flag").collect()
-    }
-    assert flagged == {0: True, 1: True, 2: False}
-    with pytest.raises(ValueError):
-        perplexity_filter(df, lm, max_ppl=1.0, mode="bogus")
 
 
 def test_null_text_dropped_from_scores_and_filter(spark):
@@ -199,11 +193,8 @@ def test_null_text_dropped_from_scores_and_filter(spark):
     )
     lm = train_bigram_lm(df, vocab_size=5, bigram_size=5)
     assert [r["doc_id"] for r in perplexity(df, lm).collect()] == [0]
-    flagged = {
-        r["doc_id"]: r["kept"]
-        for r in perplexity_filter(df, lm, max_ppl=1e9, mode="flag").collect()
-    }
-    assert flagged[0] is True and flagged[1] is False
+    kept = perplexity_filter(df, lm, max_ppl=1e9).collect()
+    assert [r["doc_id"] for r in kept] == [0]
 
 
 def test_param_validation(spark):
@@ -211,8 +202,6 @@ def test_param_validation(spark):
     for kwargs in (
         {"vocab_size": 0},
         {"bigram_size": -1},
-        {"k": 0.0},
-        {"lam": 1.5},
     ):
         with pytest.raises(ValueError):
             train_bigram_lm(df, **kwargs)

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from entity_linking_spark.operators import mixing
 from entity_linking_spark.operators.mixing import weighted_mix
 
 
@@ -35,7 +36,7 @@ def test_weighted_mix_exact_integer_weights(spark):
     ).collect()[0][0:2] == (3, 3)
 
 
-def test_weighted_mix_fractional_concentration_and_determinism(spark):
+def test_weighted_mix_fractional_concentration_and_determinism(spark, monkeypatch):
     df = _docs(spark, n=6000)
     out1 = weighted_mix(df, {"web": 0.25, "wiki": 1.5, "code": 1.0})
     # fractional keep-rate concentrates on the weight (n=2000/domain,
@@ -52,16 +53,19 @@ def test_weighted_mix_fractional_concentration_and_determinism(spark):
     assert out1.exceptAll(out2).count() == 0
     assert out2.exceptAll(out1).count() == 0
     # a different seed picks a different (but equally sized-ish) subset
-    out3 = weighted_mix(df, {"web": 0.25, "wiki": 1.5, "code": 1.0}, seed=7)
+    monkeypatch.setattr(mixing, "_SEED", 7)
+    out3 = weighted_mix(df, {"web": 0.25, "wiki": 1.5, "code": 1.0})
     assert out1.exceptAll(out3).count() > 0
 
 
-def test_weighted_mix_default_weight_and_validation(spark):
+def test_weighted_mix_default_weight_and_validation(spark, monkeypatch):
     df = _docs(spark, n=300)
-    # unknown domains drop by default, ride along with default_weight=1
+    # unknown domains drop by default, ride along with a default weight 1
     assert weighted_mix(df, {"web": 1.0}).select("domain").distinct().count() == 1
-    out = weighted_mix(df, {"web": 2.0}, default_weight=1.0)
-    assert out.select("domain").distinct().count() == 3
+    with monkeypatch.context() as m:
+        m.setattr(mixing, "_DEFAULT_WEIGHT", 1.0)
+        out = weighted_mix(df, {"web": 2.0})
+        assert out.select("domain").distinct().count() == 3
     with pytest.raises(ValueError):
         weighted_mix(df, {"web": -0.1})
     with pytest.raises(ValueError):

@@ -48,7 +48,7 @@ def test_frame_sampling_udtf(spark):
     vids = spark.createDataFrame(
         [Row(media_id="v1", kind="video", payload=mm.encode_fake_media("video", 8, 8, 9))]
     )
-    frames = mm.sample_video_frames(vids, n_frames=4).collect()
+    frames = mm.sample_video_frames(vids).collect()
     assert [r.frame_idx for r in sorted(frames, key=lambda r: r.frame_idx)] == [0, 1, 2, 3]
     feats = {r.frame_idx: tuple(r.features) for r in frames}
     assert feats[0] != feats[1]  # per-frame seeds differ

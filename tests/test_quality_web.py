@@ -396,16 +396,17 @@ def _replay_gopher(
     }
 
 
-def _gopher_assert(spark, docs, **kw):
-    from entity_linking_spark.operators.quality import gopher_quality_signals
+def _gopher_assert(spark, docs, min_words=50):
+    from entity_linking_spark.operators import quality
 
     df = spark.createDataFrame(docs, "doc_id long, text string")
-    got = {r.doc_id: r.asDict() for r in gopher_quality_signals(df, **kw).collect()}
+    got = {
+        r.doc_id: r.asDict()
+        for r in quality.gopher_quality_signals(df, min_words=min_words).collect()
+    }
     for did, text in docs:
         want = _replay_gopher(
-            text,
-            min_words=kw.get("min_words", 50),
-            min_stops=kw.get("min_stop_hits", 2),
+            text, min_words=min_words, min_stops=quality._GOPHER_MIN_STOP_HITS
         )
         for k, v in want.items():
             if isinstance(v, float):
@@ -439,7 +440,9 @@ def test_gopher_quality_hand_cases(spark):
     assert kept.columns == ["doc_id", "text"]
 
 
-def test_gopher_quality_randomized_replay(spark):
+def test_gopher_quality_randomized_replay(spark, monkeypatch):
+    from entity_linking_spark.operators import quality
+
     rng = random.Random(31)
     vocab = ["the", "of", "and", "alpha", "beta#", "…", "12345", "-", "to"]
     docs = []
@@ -451,4 +454,5 @@ def test_gopher_quality_randomized_replay(spark):
                          + rng.choice(["", "...", "…", "."]))
         docs.append((d, "\n".join(lines)))
     # lax thresholds so both outcomes occur at these tiny sizes
-    _gopher_assert(spark, docs, min_words=10, min_stop_hits=1)
+    monkeypatch.setattr(quality, "_GOPHER_MIN_STOP_HITS", 1)
+    _gopher_assert(spark, docs, min_words=10)

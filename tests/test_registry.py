@@ -7,7 +7,8 @@ otherwise an oracle-backed query could fall outside the gated window
 and silently lose its hash check.
 
 The library's option surface is held to a rule too: every defaulted
-parameter of a public function has a caller.
+parameter of a public function is set by some program call, tests not
+counted, or is allow-listed with its reason.
 """
 
 import ast
@@ -53,8 +54,14 @@ def test_rows_only_set_matches_docs():
     assert {n for n in q if n not in oracles} == ROWS_ONLY
 
 
-# deployment settings stay configurable without an in-repo caller
-UNCALLED_OPTIONS_ALLOWED = {"get_spark.extra_conf"}
+# options no program call sets, each with the reason it stays
+UNCALLED_OPTIONS_ALLOWED = {
+    "get_spark.extra_conf": "deployment setting",
+    "connected_components.checkpoint_dir":
+        "reliable checkpoints that survive executor loss",
+    "write_warc_file.gzip_per_record":
+        "writes the plain .warc input that read_warc must accept",
+}
 
 
 def _py_files(*parts):
@@ -96,17 +103,27 @@ def _calls(tree):
     return out
 
 
+def _literal(node):
+    """(True, value) for a literal expression, (False, None) otherwise."""
+    try:
+        return True, ast.literal_eval(node)
+    except ValueError:
+        return False, None
+
+
 def test_every_option_has_a_caller():
     """Each defaulted positional parameter of a public library function
-    (methods included) is passed by some call in the library,
-    ``__spark_entry__.py``, ``bench.py``, ``tools/``, ``perfbench/`` or
-    ``tests/``: by keyword, by enough positional arguments, or through
-    ``*args`` / ``**kwargs``. A ``**kwargs`` splat passes the parameter
-    when a dict literal in the calling function has it as a string key;
-    when that function has no dict literal (pure forwarding), the splat
-    counts for every parameter. Calls match by function name only, so
-    the scan can over-count callers but never miss one."""
-    options = []  # (func, param, positional index not counting self/cls)
+    (methods included) is set by some program call: one in the library,
+    ``__spark_entry__.py``, ``bench.py``, ``tools/`` or ``perfbench/``
+    (tests do not count). A call sets it by passing, by keyword or by
+    position, a literal other than the default's literal value or any
+    non-literal expression, or through ``*args`` / ``**kwargs``. A
+    ``**kwargs`` splat sets the parameter when a dict literal in the
+    calling function has it as a string key; when that function has no
+    dict literal (pure forwarding), the splat counts for every
+    parameter. Calls match by function name only, so the scan can
+    over-count callers but never miss one."""
+    options = []  # (func, param, positional index not counting self/cls, default)
     for path in _py_files("entity_linking_spark"):
         for node in ast.walk(_parse(path)):
             if isinstance(node, ast.FunctionDef) and not node.name.startswith("_"):
@@ -115,24 +132,31 @@ def test_every_option_has_a_caller():
                 skip = 1 if args and args[0].arg in ("self", "cls") else 0
                 first = len(args) - len(node.args.defaults)
                 options += [
-                    (node.name, a.arg, i - skip)
+                    (node.name, a.arg, i - skip, node.args.defaults[i - first])
                     for i, a in enumerate(args) if i >= first
                 ]
     calls: dict[str, list[tuple[ast.Call, set[str] | None]]] = {}
     sources = ("entity_linking_spark", "__spark_entry__.py", "bench.py",
-               "tools", "perfbench", "tests")
+               "tools", "perfbench")
     for path in (p for part in sources for p in _py_files(part)):
         for node, keys in _calls(_parse(path)):
             f = node.func
             name = getattr(f, "id", None) or getattr(f, "attr", None)
             calls.setdefault(name, []).append((node, keys))
 
-    def passed(func, param, index):
+    def sets(value, default):
+        is_lit, v = _literal(value)
+        has_default, d = _literal(default)
+        return not (is_lit and has_default and type(v) is type(d) and v == d)
+
+    def passed(func, param, index, default):
         return any(
-            len(c.args) > index
-            or any(isinstance(a, ast.Starred) for a in c.args)
+            (len(c.args) > index and not isinstance(c.args[index], ast.Starred)
+             and sets(c.args[index], default))
+            or any(isinstance(a, ast.Starred) for a in c.args[: index + 1])
             or any(
-                k.arg == param or (k.arg is None and (keys is None or param in keys))
+                (k.arg == param and sets(k.value, default))
+                or (k.arg is None and (keys is None or param in keys))
                 for k in c.keywords
             )
             for c, keys in calls.get(func, ())
@@ -140,8 +164,10 @@ def test_every_option_has_a_caller():
 
     uncalled = sorted(
         f"{func}.{param}"
-        for func, param, index in options
-        if not passed(func, param, index)
-        and f"{func}.{param}" not in UNCALLED_OPTIONS_ALLOWED
+        for func, param, index, default in options
+        if not passed(func, param, index, default)
     )
-    assert not uncalled, f"{len(uncalled)} options no call passes: {uncalled}"
+    stale = sorted(set(UNCALLED_OPTIONS_ALLOWED) - set(uncalled))
+    assert not stale, f"allow-listed options a program call sets: {stale}"
+    unset = [o for o in uncalled if o not in UNCALLED_OPTIONS_ALLOWED]
+    assert not unset, f"{len(unset)} options no program call sets: {unset}"

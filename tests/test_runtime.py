@@ -242,3 +242,9 @@ def test_failed_warmup_is_tried_once_per_session():
     session._warm_python_workers(stub)
     session._warm_python_workers(stub)
     assert len(attempts) == 1
+
+
+def test_session_conf_overrides_shuffle_partitions(spark):
+    """The test session's extra_conf wins over get_spark's default of
+    max(DEFAULT_SHUFFLE_PARTITIONS, cores)."""
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"

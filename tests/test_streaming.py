@@ -11,6 +11,36 @@ from entity_linking_spark.streaming import jobs
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def run_stream_to_memory(
+    spark,
+    source_parquet,
+    schema,
+    transform,
+    table_name,
+    output_mode="complete",
+    max_files_per_trigger=4,
+):
+    """readStream(parquet) -> transform -> in-memory sink, availableNow:
+    a bounded run of the real streaming engine.
+    ``output_mode='append'`` + ``max_files_per_trigger=1`` turns each
+    source file into its own micro-batch, which is how the late-data /
+    watermark-drop semantics are exercised deterministically (the file
+    source orders batches by modification time)."""
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(source_parquet)
+    )
+    return (
+        transform(stream)
+        .writeStream.format("memory")
+        .queryName(table_name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def test_stream_windowed_counts_matches_batch(spark, tmp_path):
     import shutil
 
@@ -18,7 +48,7 @@ def test_stream_windowed_counts_matches_batch(spark, tmp_path):
     src_dir.mkdir()
     shutil.copy(f"{SF_DIR}/events.parquet", src_dir / "part-0.parquet")
     events_schema = spark.read.parquet(f"{SF_DIR}/events.parquet").schema
-    q = jobs.run_stream_to_memory(
+    q = run_stream_to_memory(
         spark,
         str(src_dir),
         events_schema,
@@ -197,7 +227,7 @@ def test_watermark_drops_late_data(spark, tmp_path):
     write("d.parquet", [ev("2024-01-01 23:59", "adv")], t0 + 300)
 
     schema = "ts timestamp, event_type string, value double"
-    q = jobs.run_stream_to_memory(
+    q = run_stream_to_memory(
         spark,
         str(src),
         schema,

@@ -64,7 +64,7 @@ def test_warc_plain_and_non_http_payloads(spark, tmp_path):
             "content_type": "application/octet-stream",
         }
     )
-    # a request record, filtered out by the default warc_types
+    # a request record: read_warc keeps response records only
     recs.append(
         {
             "url": "https://c.example/req",
@@ -76,12 +76,8 @@ def test_warc_plain_and_non_http_payloads(spark, tmp_path):
     )
     path = str(tmp_path / "plain.warc")
     warc.write_warc_file(path, recs, gzip_per_record=False)
-    out = warc.read_warc(
-        spark, [path], warc_types=("response", "resource")
-    ).collect()
-    assert {r.url for r in out} == {r["url"] for r in recs[:4]}
-    raw = next(r for r in out if r.url == "https://c.example/raw")
-    assert bytes(raw.html) == b"\x00\x01raw-bytes" and raw.http_status is None
+    out = warc.read_warc(spark, [path]).collect()
+    assert {r.url for r in out} == {r["url"] for r in recs[:3]}
 
 
 def test_warc_poison_file_channels_error(spark, tmp_path):

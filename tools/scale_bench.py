@@ -251,7 +251,7 @@ def run_classifier(spark, n_docs: int, args) -> dict:
 
     t0 = time.time()
     kept = dict(
-        pareto_keep(corpus, model, alpha=9.0, seed=1)
+        pareto_keep(corpus, model, seed=1)
         .groupBy("label")
         .agg(F.count("*").alias("n"))
         .collect()
@@ -528,7 +528,7 @@ def run_dupspan(spark, n_docs: int, args) -> dict:
     docs.count()  # materialize datagen outside the timed window
 
     t0 = time.time()
-    cleaned, dropped = dedup.dedup_repeated_substrings(docs, window=20, max_postings=256)
+    cleaned, dropped = dedup.dedup_repeated_substrings(docs)
     stats = cleaned.agg(
         F.count("*").alias("n"),
         F.sum("n_removed_tokens").alias("removed"),
