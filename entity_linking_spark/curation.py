@@ -12,7 +12,7 @@ probe and PII redaction last:
 3. Gopher quality rules (operators/quality.gopher_quality_signals — scan)
 4. Gopher repetition gate (operators/quality.repetition_signals —
    one Arrow pass + an id semi-join back to the surviving pages)
-5. exact dedup          (operators/dedup.exact_dedup — one shuffle)
+5. exact dedup          (md5 per page, min-id keeper — one shuffle)
 6. MinHash-LSH near-dup (operators/dedup.minhash_near_dup_pairs +
    dedup_clusters — banded candidate join + connected components)
 7. benchmark decontamination (operators/quality.decontaminate —
@@ -161,11 +161,10 @@ def curate_corpus(
     # previous keep-the-ok-set semi-join, where nulls never matched
     bad_ids = sig.where(~F.coalesce(ok, F.lit(False))).select(id_col)
     step("gopher_repetition", cur.join(bad_ids, id_col, "left_anti"))
-    # keep-first exact dedup, min(id) keeper per content hash (same
-    # semantics as operators/dedup.exact_dedup, whose metadata output
-    # the chain doesn't need): the row_number window runs over the
-    # narrow (id, md5) projection only — the round-5 full-row window
-    # shuffled every surviving document's text by content hash
+    # keep-first exact dedup, min(id) keeper per content hash: the
+    # row_number window runs over the narrow (id, md5) projection only
+    # — the round-5 full-row window shuffled every surviving
+    # document's text by content hash
     from pyspark.sql.window import Window
 
     w_exact = Window.partitionBy("_h").orderBy(id_col)
@@ -214,7 +213,8 @@ def curate_corpus(
         # semantic_dedup's output -> never victims -> kept): size
         # semantic_k so expected cluster size N/k sits well under the
         # cap, or a degenerate boilerplate cluster silently keeps its
-        # duplicates (exact_dedup upstream is the cheap guard).
+        # duplicates (the exact-dedup stage upstream is the cheap
+        # guard).
         from entity_linking_spark.functions.vectors import hash_embed_udf
         from entity_linking_spark.operators.dedup import semantic_dedup
 

@@ -1,35 +1,16 @@
-"""String similarity for pairwise scoring: Jaro-Winkler + Levenshtein.
+"""String similarity for pairwise scoring: Jaro-Winkler.
 
 The reference ranks mention/candidate pairs with a BERT pair classifier
 (entity_sort/el_models.py:52-95); the north rule specifies classic string
 similarities fused with embedding cosine as the batch scoring function.
-Both are standard public algorithms, implemented here pure-Python.
-Pair scoring uses Spark's JVM ``levenshtein`` builtin; Jaro-Winkler has
-no builtin and runs inside an Arrow-batched pandas UDF over short
-strings (mentions/aliases), so per-call cost is bounded by string
-length, not row-at-a-time serialization.
+Pair scoring takes edit distance from Spark's JVM ``levenshtein``
+builtin; Jaro-Winkler, a standard public algorithm, has no builtin and
+is implemented here pure-Python. It runs inside an Arrow-batched pandas
+UDF over short strings (mentions/aliases), so per-call cost is bounded
+by string length, not row-at-a-time serialization.
 """
 
 from __future__ import annotations
-
-
-def levenshtein(a: str, b: str) -> int:
-    """Classic two-row DP edit distance."""
-    if a == b:
-        return 0
-    if not a:
-        return len(b)
-    if not b:
-        return len(a)
-    if len(a) < len(b):
-        a, b = b, a
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
 
 
 def jaro(a: str, b: str) -> float:
@@ -79,9 +60,3 @@ def jaro_winkler(a: str, b: str) -> float:
         prefix += 1
     return j + prefix * 0.1 * (1.0 - j)
 
-
-def levenshtein_sim(a: str, b: str) -> float:
-    """Normalized to [0,1]: 1 - dist/max_len."""
-    if not a and not b:
-        return 1.0
-    return 1.0 - levenshtein(a, b) / max(len(a), len(b))

@@ -1,68 +1,18 @@
 """Text-analysis functions for corpus curation (training-data ops).
 
-All JVM-side Column expressions (whole-stage codegen) except the rolling
-fingerprint, which is a vectorized pandas UDF. These complement the
-SQL-expressible versions in plans/queries.py with reusable Column
-builders for pipelines.
+Language ID and PII scrubbing are JVM-side Column expressions
+(whole-stage codegen); the rolling fingerprint is a vectorized pandas
+UDF over the window-hash kernel that duplicated-span detection and the
+quality n-gram signals share.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
-
-STOPWORDS_EN = (
-    "the a an and or of to in on at is are was were be been with for as by "
-    "it its this that these those from"
-).split()
-
-
-def token_count(text: Column) -> Column:
-    """Whitespace token count (A11)."""
-    return F.size(F.split(text, r"\s+"))
-
-
-def word_token_count(text: Column) -> Column:
-    """BPE-ish pre-tokenizer count: alnum runs + standalone punct."""
-    return F.size(F.regexp_extract_all(text, F.lit(r"[a-zA-Z0-9]+|[^\sa-zA-Z0-9]"), 0))
-
-
-def stopword_ratio(text: Column) -> Column:
-    toks = F.split(F.lower(text), r"\s+")
-    stops = F.filter(toks, lambda t: t.isin(*STOPWORDS_EN))
-    return F.size(stops).cast("double") / F.greatest(F.size(toks), F.lit(1))
-
-
-def punct_ratio(text: Column) -> Column:
-    punct = F.size(F.regexp_extract_all(text, F.lit(r"[^\w\s]"), 0))
-    return punct.cast("double") / F.greatest(F.length(text), F.lit(1))
-
-
-def quality_score(text: Column) -> Column:
-    """Fused heuristic in [0,1]: penalize extreme length, punct soup,
-    stopword-free word salad (quality gates for corpus filtering)."""
-    toks = F.size(F.split(text, r"\s+"))
-    len_ok = F.when((toks >= 10) & (toks <= 10000), 1.0).otherwise(0.3)
-    punct_ok = F.when(punct_ratio(text) < 0.2, 1.0).otherwise(0.5)
-    stop_ok = F.when(stopword_ratio(text) > 0.01, 1.0).otherwise(0.6)
-    return F.round(len_ok * punct_ok * stop_ok, 4)
-
-
-def lang_guess(text: Column) -> Column:
-    """Script-ratio language family guess (CJK vs Latin vs other)."""
-    cjk = F.size(F.regexp_extract_all(text, F.lit(r"[一-鿿]"), 0))
-    latin = F.size(F.regexp_extract_all(text, F.lit(r"[a-zA-Z]"), 0))
-    return (
-        F.when(cjk * 2 > latin, F.lit("cjk"))
-        .when(latin > 0, F.lit("latin"))
-        .otherwise(F.lit("other"))
-    )
-
 
 # Distinctive function-word profiles per latin-script language (public
 # stopword lists, trimmed to words that rarely collide across the six):
@@ -90,8 +40,8 @@ def lang_id(text: Column) -> Column:
     """Stopword-profile language ID over latin-script text: count each
     language's marker-word hits, emit the argmax (ties -> the
     lexicographically later code via struct comparison — deterministic),
-    'und' when no marker hits at all (combine with lang_guess for the
-    script-level fallback). Pure Column expressions, whole-stage codegen."""
+    'und' when no marker hits at all. Pure Column expressions,
+    whole-stage codegen."""
     toks = F.split(F.lower(text), r"\s+")
 
     def _hits(markers):
@@ -108,36 +58,6 @@ def lang_id(text: Column) -> Column:
     ]
     best = F.array_max(F.array(*entries))
     return F.when(best["n"] > 0, best["lang"]).otherwise(F.lit("und"))
-
-
-def content_fingerprint(text: Column) -> Column:
-    """Order-insensitive content signature: md5 of sorted distinct tokens."""
-    return F.md5(
-        F.concat_ws(" ", F.array_sort(F.array_distinct(F.split(F.lower(text), r"\s+"))))
-    )
-
-
-# --- F15: deterministic sentence splitter --------------------------------
-
-# The reference splits descriptions into sentences with segtok/punkt
-# (entity_candidate/utils.py:26-28; candidate_retrieval/
-# process_intro_sents.py:46-64 keeps the first 10 as sent_desc_1..10).
-# Those models are non-deterministic across versions; our analog is a
-# frozen regex: a sentence ends at . ! ? 。 followed by whitespace (or
-# end of text). Deterministic, unicode-aware, golden-testable.
-_SENT_BOUNDARY = re.compile(r"(?<=[.!?。])\s+")
-
-
-def split_sentences(text: str) -> list[str]:
-    """Deterministic sentence split; strips each piece, drops empties."""
-    if not text:
-        return []
-    return [s.strip() for s in _SENT_BOUNDARY.split(text) if s.strip()]
-
-
-def first_sentences(text: str) -> list[str]:
-    """First 10 sentences — the sent_desc_1..10 column source (F15)."""
-    return split_sentences(text)[:10]
 
 
 _WINDOW = 8

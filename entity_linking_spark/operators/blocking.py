@@ -325,14 +325,11 @@ class AliasDictionary:
         self,
         docs: DataFrame,
         tokens_col: str | None = None,
-        cache_registry: runtime.CacheScope | None = None,
     ) -> DataFrame:
         """Mention rows of ``docs`` by the path this dictionary's size
         takes: the broadcast trie, or the join path beyond it."""
         if self.alias_list is None:
-            return detect_mentions_join(
-                docs, self, tokens_col=tokens_col, cache_registry=cache_registry
-            )
+            return detect_mentions_join(docs, self, tokens_col=tokens_col)
         return detect_mentions(docs, self.alias_list, tokens_col=tokens_col)
 
 
@@ -387,9 +384,9 @@ def detect_mentions_join(
     order differs — both are unordered DataFrames).
 
     ``cache_registry``: when given, the corpus-token table this call
-    persists is appended to it so a repeated caller (the streaming
-    micro-batch loop) can release it after its action instead of leaking
-    one storage entry per invocation. The alias side is the dictionary's
+    persists is appended to it so a repeated caller (a gate query run
+    per rep) can release it after its action instead of leaking one
+    storage entry per invocation. The alias side is the dictionary's
     own, pinned once for all calls.
 
     Alias-token prefilter: both corpus-token streams below (the df agg
@@ -426,10 +423,9 @@ def detect_mentions_join(
         toks = src.select(
             F.col("url").alias("url"), tokenize_udf(F.col("text")).alias("tokens")
         ).persist(StorageLevel.MEMORY_AND_DISK)
-        # a repeated caller (the streaming micro-batch loop) must be able
-        # to release this batch-scoped cache entry after its action —
-        # otherwise every foreachBatch invocation pins a new one until
-        # driver GC + ContextCleaner catch up
+        # a repeated caller must be able to release this call-scoped
+        # cache entry after its action — otherwise every invocation pins
+        # a new one until driver GC + ContextCleaner catch up
         if cache_registry is not None:
             cache_registry.append(toks)
     else:
@@ -439,7 +435,7 @@ def detect_mentions_join(
         toks = docs.select(F.col("url").alias("url"), F.col(tokens_col).alias("tokens"))
 
     # corpus gate first (footer metadata, no job). Unknown size counts as
-    # small: every unknown-size caller here (tests, micro-batches) IS small
+    # small: every unknown-size caller here (tests, in-memory frames) IS small
     n_docs_est = runtime.input_rows(docs) or 0
     alias_tok_set = None
     if n_docs_est >= PREFILTER_MIN_DOC_ROWS and dictionary.token_vocab_fits:
@@ -540,7 +536,7 @@ def candidate_entities(mentions: DataFrame, dictionary: AliasDictionary) -> Data
     The alias side is the dictionary's pinned, normalized alias table
     (the SAME frozen normalizer made the mention strings, so
     hyphen/punct variants join), which carries ``n_ids`` computed once
-    per dictionary, not once per call or micro-batch. Aliases shared by
+    per dictionary, not once per call. Aliases shared by
     more than ``MAX_CANDIDATE_AMBIGUITY`` entities are dropped at the
     source: their fan-out is quadratic cost with near-zero evidence
     weight (support 1/n_ids), and at corpus scale a stop-word-like alias

@@ -1,12 +1,14 @@
 """Deduplication operators for training-data pipelines.
 
-First-class corpus-dedup components (driver brief: exact, MinHash-LSH,
-SimHash, n-gram Jaccard, embedding-cosine near-dup). Each returns a
-DataFrame and composes with connected_components for cluster-level dedup.
+Corpus-dedup components: MinHash-LSH and SimHash near-dup pairs,
+duplicated-span removal and SemDeDup semantic dedup. Each returns a
+DataFrame; pair outputs compose with connected_components
+(dedup_clusters) for cluster-level dedup. Exact dedup is one md5
+window inside curation.curate_corpus.
 
-Scale profile: exact dedup is one hash aggregate; MinHash/SimHash are
-narrow maps + one banding-join shuffle; the verify/rescore step only ever
-touches candidate pairs, never the full cross product.
+Scale profile: MinHash/SimHash are narrow maps + one banding-join
+shuffle; the verify/rescore step only ever touches candidate pairs,
+never the full cross product.
 """
 
 from __future__ import annotations
@@ -24,48 +26,9 @@ from entity_linking_spark.functions.minhash import (
 )
 from entity_linking_spark.operators import blocking, cluster
 
-# exact_dedup lists at most this many member ids per content hash
-_EXACT_MAX_MEMBERS = 100
-# embedding_near_dup_pairs: pair threshold, hyperplanes per bucket key,
-# and the stop-key cap on bucket size
-_EMB_MIN_COSINE = 0.95
-_EMB_N_PLANES = 16
-_EMB_MAX_BUCKET_SIZE = 1024
 # semantic_dedup's centroid literals serve k up to this; beyond it the
 # Arrow matmul path runs
 _SEMDEDUP_LITERAL_MAX_K = 64
-
-
-def exact_dedup(df: DataFrame) -> DataFrame:
-    """Hash-groupBy exact dedup of ``df``'s ``text`` column:
-    (content_hash, keeper, n_copies, members).
-
-    Keeper = min(url). One shuffle (hash aggregate with map-side combine).
-
-    ``members`` is CAPPED at 100 ids per hash (viral duplicates — empty
-    pages, boilerplate — can have millions of copies; an unbounded
-    collect_list would materialize them all into one reducer row and OOM).
-    The cap is applied BEFORE aggregation via a row_number window on the
-    same key, so no task ever buffers more than 100 ids — and the
-    window's exchange is reused by the groupBy (one shuffle total).
-    ``n_copies`` always carries the true count; join back on
-    content_hash to enumerate every member as ordinary rows.
-    """
-    from pyspark.sql.window import Window
-
-    hashed = df.select(
-        F.md5(F.col("text")).alias("content_hash"), F.col("url").alias("_id")
-    )
-    w = Window.partitionBy("content_hash").orderBy("_id")
-    capped = hashed.withColumn(
-        "_member",
-        F.when(F.row_number().over(w) <= _EXACT_MAX_MEMBERS, F.col("_id")),
-    )
-    return capped.groupBy("content_hash").agg(
-        F.min("_id").alias("keeper"),
-        F.count("*").alias("n_copies"),
-        F.sort_array(F.collect_list("_member")).alias("members"),
-    )
 
 
 def simhash(tokens: list[str]) -> int:
@@ -244,50 +207,6 @@ def dedup_clusters(docs: DataFrame, pair_df: DataFrame) -> DataFrame:
     edges = pair_df.select("url_a", "url_b")
     comps = cluster.connected_components(edges, docs.select("url"))
     return comps.select("url", F.col("cluster_id").alias("keeper"))
-
-
-def embedding_near_dup_pairs(embeddings: DataFrame) -> DataFrame:
-    """Embedding-cosine near-dup pairs (id_a, id_b, cos >= 0.95) of
-    ``embeddings`` (vec_id, embedding) via random-hyperplane LSH
-    bucketing: sign-pattern of 16 fixed pseudo-random hyperplanes (2^16
-    buckets) -> bucket self-join -> exact cosine verify inside buckets
-    (never the full cross product).
-
-    Buckets larger than 1,024 rows are DROPPED before the
-    self-join (stop-key treatment, same policy as blocking.candidate_pairs):
-    a degenerate bucket holding 10^5 near-identical boilerplate vectors
-    would otherwise emit 10^10 pairs on one reducer. Dropped buckets are
-    boilerplate by definition; handle them with exact_dedup upstream.
-    """
-    from pyspark.sql.window import Window
-
-    from entity_linking_spark.functions.vectors import cosine_col
-    from entity_linking_spark.operators.ann import make_bucket_udf
-
-    bucket_udf = make_bucket_udf(_EMB_N_PLANES)
-    b = embeddings.select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").alias("vec"),
-        bucket_udf(F.col("embedding")).alias("bucket"),
-    )
-    size_w = Window.partitionBy("bucket")
-    b = b.withColumn("_bsize", F.count("*").over(size_w)).where(
-        F.col("_bsize") <= _EMB_MAX_BUCKET_SIZE
-    ).drop("_bsize")
-    lhs = b.select(
-        F.col("id").alias("id_a"), F.col("vec").alias("vec_a"), "bucket"
-    )
-    rhs = b.select(
-        F.col("id").alias("id_b"), F.col("vec").alias("vec_b"), "bucket"
-    )
-    return (
-        lhs.join(rhs, "bucket")
-        .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", cosine_col("vec_a", "vec_b"))
-        .where(F.col("cos") >= _EMB_MIN_COSINE)
-        .select("id_a", "id_b", F.round("cos", 4).alias("cos"))
-        .distinct()
-    )
 
 
 def window_hash_positions(
@@ -540,10 +459,10 @@ def semantic_dedup(
         structs, argmax with the sim-desc/cid-asc tie rule);
       - the cluster-size cap joins against a k-row aggregate
         (broadcast), and over-cap clusters are DROPPED before the pair
-        join (stop-key treatment, same policy as embedding_near_dup_
-        pairs: a degenerate boilerplate cluster would emit size^2/2
-        pairs onto one reducer; handle boilerplate with exact_dedup
-        upstream) — dropped docs leave the output, mirroring the
+        join (stop-key treatment, same policy as blocking.candidate_pairs:
+        a degenerate boilerplate cluster would emit size^2/2 pairs onto
+        one reducer; curate_corpus runs exact and MinHash dedup before
+        this step) — dropped docs leave the output, mirroring the
         bucketed operators;
       - the within-cluster self-join exchanges (id, cid, sim, vec)
         keyed by cid — pairs are bounded by k * max_cluster_size^2 / 2,

@@ -280,7 +280,7 @@ def perplexity(docs: DataFrame, lm: NgramLM) -> DataFrame:
     convention). The plan broadcasts all model tables; the single
     exchange is the per-doc aggregation, collapsed map-side to ~one
     row per document before it ships. Docs with NULL text are dropped
-    (score what exists; the filter wrapper keeps them out anyway).
+    (score what exists).
     """
     k, lam = F.lit(lm.k), F.lit(lm.lam)
     toks = (
@@ -377,19 +377,3 @@ def perplexity_buckets(
     )
     return ranked.withColumn("bucket", bucket).drop("_off")
 
-
-def perplexity_filter(docs: DataFrame, lm: NgramLM, max_ppl: float) -> DataFrame:
-    """The CCNet curation action: keep the documents of ``docs``
-    (doc_id, text) whose perplexity is at most ``max_ppl``, with their
-    ``ppl``. Documents with NULL text have no perplexity and are dropped.
-
-    A ceiling alone keeps one kind of junk: ppl is NOT monotone in
-    quality at the OOV extreme. A doc whose every token is OOV folds to
-    a pure <unk> run, and since (unk, unk) is then a high-count bigram
-    the doc scores artificially LOW (pinned by tests/test_lm.py::
-    test_all_oov_doc_scores_artificially_well). Corpora with heavy
-    foreign-vocabulary contamination should gate on unk fraction
-    upstream."""
-    ppl = perplexity(docs, lm).select(F.col("doc_id"), "ppl")
-    joined = docs.join(ppl, "doc_id", "left")
-    return joined.where(F.col("ppl").isNotNull() & (F.col("ppl") <= max_ppl))

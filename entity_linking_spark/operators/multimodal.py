@@ -1,8 +1,8 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
 Image/audio/video payloads ride as `binary` columns with a typed metadata
-struct; decode / feature-extract / resize / frame-sample run as
-mapInPandas stages with real schemas, partitioning, and Arrow batch
+struct; decode and feature extraction run as a
+mapInPandas stage with real schemas, partitioning, and Arrow batch
 shapes. Three decode kernels are REAL stdlib implementations —
 codec='wav' (RIFF/PCM audio via `wave`), codec='bmp' (24-bit
 uncompressed images via `struct`), and codec='png' (a COMPRESSED format:
@@ -28,11 +28,9 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     FloatType,
-    IntegerType,
     StringType,
     StructField,
     StructType,
@@ -417,52 +415,3 @@ def with_media_features(
 
     return df.mapInPandas(run, schema=out_schema)
 
-
-def sample_video_frames(df: DataFrame) -> DataFrame:
-    """Frame-sampling UDTF: one video row -> 4 feature rows.
-
-    Decodes ``payload`` with the fake codec, which derives per-frame
-    seeds deterministically (a real decoder would seek keyframes).
-    Output keeps (media_id, frame_idx, features).
-    """
-    out_schema = StructType(
-        [
-            StructField("media_id", StringType(), False),
-            StructField("frame_idx", IntegerType(), False),
-            StructField("features", ArrayType(FloatType()), True),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, feats = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                if payload is None:
-                    continue
-                for fi in range(4):
-                    frame_payload = payload[:12] + struct.pack("<I", fi)
-                    try:
-                        arr = decode_media(frame_payload + payload[16:], "video")
-                        feats.append([float(x) for x in arr])
-                    except Exception:  # noqa: BLE001
-                        feats.append(None)
-                    ids.append(mid)
-                    idxs.append(fi)
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="string"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "features": feats,
-                }
-            )
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """JVM-side payload stats (no decode): sizes per kind for planning."""
-    return df.groupBy("kind").agg(
-        F.count("*").alias("n"),
-        F.sum(F.length(F.col("payload"))).alias("total_bytes"),
-        F.round(F.avg(F.length(F.col("payload"))), 2).alias("avg_bytes"),
-    )

@@ -126,43 +126,3 @@ def pack_sequences(
     )
     return out
 
-
-def packed_sequence_text(
-    df: DataFrame,
-    packing: DataFrame,
-) -> DataFrame:
-    """Materialize packed sequences as text: join the slice map back to
-    the corpus (doc_id, text), slice each document's tokens, and stitch
-    per sequence.
-
-    Returns (seq_id, text, n_docs). One join + one aggregate — meant
-    for tests, samples, and small exports; a 100 TB training run feeds
-    the slice map to its data loader instead of materializing strings.
-    """
-    toks = df.select(
-        F.col("doc_id").alias("_jid"), F.split(F.col("text"), " ").alias("_t")
-    )
-    sliced = packing.join(
-        toks, packing["doc_id"].cast("string") == toks["_jid"].cast("string")
-    ).select(
-        "seq_id",
-        "seq_off",
-        F.concat_ws(
-            " ", F.slice(F.col("_t"), F.col("slice_start") + 1, F.col("slice_len"))
-        ).alias("_piece"),
-    )
-    return (
-        sliced.groupBy("seq_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("seq_off", "_piece"))
-                    ),
-                    lambda s: s["_piece"],
-                ),
-                " ",
-            ).alias("text"),
-            F.count("*").alias("n_docs"),
-        )
-    )

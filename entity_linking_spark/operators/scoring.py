@@ -133,9 +133,9 @@ def score_pairs(pairs: DataFrame, per_url: DataFrame) -> DataFrame:
     # join just to count keys
     feat = skew.adaptive_salted_join(
         skew.adaptive_salted_join(
-            pairs, fa, "url_a", ["url_b"], skew.hot_keys(pairs, "url_a"), how="left"
+            pairs, fa, "url_a", ["url_b"], skew.hot_keys(pairs, "url_a")
         ),
-        fb, "url_b", ["url_a"], skew.hot_keys(pairs, "url_b"), how="left",
+        fb, "url_b", ["url_a"], skew.hot_keys(pairs, "url_b"),
     )
 
     # ent_score = max over shared candidate entities of min(support_a,

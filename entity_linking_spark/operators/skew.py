@@ -27,26 +27,7 @@ N_SALTS = 8
 # partition is straggler territory while everything else finishes.
 HOT_THRESHOLD = 100_000
 
-# the salted-join construction is output-identical to the plain join
-# only when every BUILD-side replica a probe row can't hash to is
-# droppable: with how='right'/'full' a hot build key whose N_SALTS
-# replicas include salts no probe row lands on would emit one spurious
-# unmatched row per uncovered salt
-_SALTED_JOIN_MODES = ("inner", "left", "leftsemi", "leftanti", "semi", "anti")
-
-
-def _check_join_mode(how: str) -> None:
-    # normalize every Spark spelling ("left_semi" == "leftsemi" ==
-    # "semi", "left" == "leftouter") before checking
-    if how.lower().replace("outer", "").replace("_", "") not in _SALTED_JOIN_MODES:
-        raise ValueError(
-            f"salted joins support how in {_SALTED_JOIN_MODES}, got {how!r}: "
-            "right/full joins would emit spurious unmatched build-side "
-            "rows for uncovered salt replicas"
-        )
-
-
-def hot_keys(df: DataFrame, key: str | list[str]) -> DataFrame:
+def hot_keys(df: DataFrame, key: str) -> DataFrame:
     """Keys owning more than ``HOT_THRESHOLD`` rows of ``df``.
 
     Exact per-key frequency via two-phase groupBy().count(): map-side
@@ -56,28 +37,26 @@ def hot_keys(df: DataFrame, key: str | list[str]) -> DataFrame:
     Chosen over a count-min/sample sketch: exact AND deterministic
     (FIXTURES.md seeding rules forbid rand()-dependent plans), at the
     same asymptotic cost."""
-    keys = [key] if isinstance(key, str) else list(key)
     return (
-        df.groupBy(*keys)
+        df.groupBy(key)
         .agg(F.count("*").alias("_cnt"))
         .where(F.col("_cnt") > HOT_THRESHOLD)
-        .select(*keys)
+        .select(key)
     )
 
 
 def adaptive_salted_join(
     large: DataFrame,
     small: DataFrame,
-    key: str | list[str],
+    key: str,
     salt_cols: list[str],
     hot: DataFrame,
-    how: str = "inner",
 ) -> DataFrame:
-    """Equi join of ``large`` (probe) and ``small`` (build) on ``key``
-    that salts ONLY the keys in ``hot`` — uniform workloads pay no
-    replication and skewed ones get no straggler.
+    """Left equi join of ``large`` (probe) and ``small`` (build) on
+    ``key`` that salts ONLY the keys in ``hot`` — uniform workloads pay
+    no replication and skewed ones get no straggler.
 
-    ``hot`` is the hot-key set (columns = the join keys), normally
+    ``hot`` is the hot-key set (one column, the join key), normally
     ``hot_keys`` of the probe side. The caller builds it so it can count
     a cheaper table with the same key multiplicities (e.g. the raw pair
     table instead of the pair table after a 1:1 feature join, which the
@@ -89,15 +68,15 @@ def adaptive_salted_join(
     (columns NOT in the key, e.g. the other id of a pair); cold rows get
     salt 0. The build side is replicated N_SALTS x for hot keys ONLY
     (explode of a conditional salt array) and kept single for cold keys.
-    One equi join on (key..., salt) then serves both populations —
-    identical output to the unsalted join (pytest-pinned), one plan, no
-    union of split branches, and the hot key's rows land in N_SALTS
-    reduce partitions instead of one."""
-    _check_join_mode(how)
-    keys = [key] if isinstance(key, str) else list(key)
+    One equi join on (key, salt) then serves both populations —
+    identical output to the unsalted left join (pytest-pinned), one
+    plan, no union of split branches, and the hot key's rows land in
+    N_SALTS reduce partitions instead of one. The join keeps the probe
+    side, so a build replica on a salt no probe row hashes to is simply
+    unmatched; a right or full join would emit it as a spurious row."""
     flag = F.broadcast(hot.withColumn("_hot", F.lit(True)))
     lg = (
-        large.join(flag, keys, "left")
+        large.join(flag, [key], "left")
         .withColumn(
             "_salt",
             F.when(
@@ -109,10 +88,10 @@ def adaptive_salted_join(
     )
     salts = F.array(*[F.lit(i) for i in range(N_SALTS)])
     sm = (
-        small.join(flag, keys, "left")
+        small.join(flag, [key], "left")
         .withColumn(
             "_salt", F.explode(F.when(F.col("_hot"), salts).otherwise(F.array(F.lit(0))))
         )
         .drop("_hot")
     )
-    return lg.join(sm.hint("shuffle_hash"), [*keys, "_salt"], how).drop("_salt")
+    return lg.join(sm.hint("shuffle_hash"), [key, "_salt"], "left").drop("_salt")

@@ -1784,8 +1784,8 @@ def j11_coref_containment_selfjoin(spark, sf_dir):
        FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""",
 )
 def stream_windowed_counts(spark, sf_dir):
-    """Windowed aggregation — the batch-equivalent of the Structured
-    Streaming job in streaming/jobs.py (same window semantics)."""
+    """Windowed aggregation: event counts per type in tumbling 1-hour
+    windows of ``ts``, a batch query."""
     e = _t(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
@@ -2078,9 +2078,9 @@ def f15_sentence_split(spark, sf_dir):
     sent_desc_1..10 column source (entity_candidate/utils.py:26-28,
     process_intro_sents.py:46-64). The corpus has no punctuation, so a
     deterministic boundary is injected first ('the/a' -> '. '), then the
-    split + first-3 projection runs in both engines. The general
-    punctuation splitter is functions/text.py:split_sentences (golden-
-    tested; same first-N semantics)."""
+    split + first-3 projection runs in both engines. The reference's
+    segtok/punkt models vary across versions; a frozen regex split is
+    the deterministic analog."""
     d = _t(spark, sf_dir, "documents")
     pt = F.regexp_replace(F.col("text"), " (the|a) ", ". ")
     sents = F.split(pt, r"\. ")

@@ -124,9 +124,9 @@ def input_rows(df: DataFrame) -> int | None:
 
 
 class CacheScope:
-    """Frames pinned (persisted) within one scope — a query, a pipeline
-    stage, a streaming micro-batch — and released together once the
-    scope's action has run.
+    """Frames pinned (persisted) within one scope — a query or a
+    pipeline stage — and released together once the scope's action
+    has run.
 
     Operators take the scope as their ``cache_registry`` argument and
     only ``append`` to it; the owner of the scope calls ``release``. A

@@ -28,16 +28,6 @@ def corpus(spark):
     return spark.createDataFrame(rows)
 
 
-def test_exact_dedup(spark):
-    df = spark.createDataFrame(
-        [Row(url="a", text="same text"), Row(url="b", text="same text"),
-         Row(url="c", text="other")]
-    )
-    out = {r.keeper: (r.n_copies, r.members) for r in dedup.exact_dedup(df).collect()}
-    assert out["a"] == (2, ["a", "b"])
-    assert out["c"] == (1, ["c"])
-
-
 def test_simhash_near_dup(spark):
     # simhash stability needs doc-length token streams: 1 change in 120
     # tokens flips only a few fingerprint bits
@@ -71,14 +61,6 @@ def test_minhash_near_dup_and_clusters(spark):
     ks = {r.url: r.keeper for r in clusters.collect()}
     assert ks["a"] == ks["b"] == "a"
     assert ks["c"] == "c"
-
-
-def test_embedding_near_dup(corpus):
-    pairs = dedup.embedding_near_dup_pairs(corpus)
-    got = {(r.id_a, r.id_b) for r in pairs.collect()}
-    assert (0, 100) in got and (0, 101) in got and (100, 101) in got
-    assert (1, 102) in got
-    assert all(a in (0, 1, 100, 101, 102) and b in (0, 1, 100, 101, 102) for a, b in got)
 
 
 def test_brute_force_topk_exact(spark, corpus):
@@ -136,20 +118,17 @@ def test_ivf_topk_coarse_sample_mod_falls_back(spark, corpus, monkeypatch):
 @pytest.mark.parametrize(
     "op, key_udf",
     [
-        (lambda c, q: dedup.embedding_near_dup_pairs(c), "bucket_udf"),
         (lambda c, q: ann.lsh_topk(c, q, k=4, n_planes=4), "bucket_udf"),
         (lambda c, q: ann.ivf_topk(c, q, k=4), "cell_udf"),
     ],
-    ids=["embedding_near_dup_pairs", "lsh_topk", "ivf_topk"],
+    ids=["lsh_topk", "ivf_topk"],
 )
 def test_key_udf_runs_once_per_join_side(spark, corpus, op, key_udf, monkeypatch):
     """A join on a UDF-made key evaluates the UDF once per row of its
     side: a deterministic key UDF is copied into the join's inferred
     isnotnull filter, a second ArrowEvalPython over the same rows. The
-    near-dup self-join's two sides share one exchange, and the ANN joins
-    compute the key on the corpus side only, so each executed plan has
-    exactly one ArrowEvalPython node of the key UDF."""
-    monkeypatch.setattr(dedup, "_EMB_N_PLANES", 4)
+    ANN joins compute the key on the corpus side only, so each executed
+    plan has exactly one ArrowEvalPython node of the key UDF."""
     _small_ivf(monkeypatch)
     queries = corpus.select(F.col("vec_id").alias("query_id"), "embedding")
     df = op(corpus, queries)
@@ -190,20 +169,6 @@ def test_lsh_recall_vs_bruteforce(spark):
     assert sum(recalls) / len(recalls) >= 0.8, recalls
 
 
-def test_exact_dedup_members_capped(spark, monkeypatch):
-    monkeypatch.setattr(dedup, "_EXACT_MAX_MEMBERS", 3)
-    rows = [Row(url=f"u{i:02d}", text="viral page") for i in range(10)]
-    rows.append(Row(url="zz", text="unique"))
-    df = spark.createDataFrame(rows)
-    out = {
-        r.keeper: (r.n_copies, r.members)
-        for r in dedup.exact_dedup(df).collect()
-    }
-    # true count preserved, members bounded at 3
-    assert out["u00"] == (10, ["u00", "u01", "u02"])
-    assert out["zz"] == (1, ["zz"])
-
-
 def test_minhash_exact_verify(spark):
     base = [f"tok{i}" for i in range(60)]
     var = list(base)
@@ -220,21 +185,6 @@ def test_minhash_exact_verify(spark):
     # exact 3-shingle jaccard: 58 shingles each, the changed token
     # perturbs 3 -> 55 shared / 61 union
     assert got[("a", "b")] == pytest.approx(55 / 61, abs=1e-4)
-
-
-def test_embedding_near_dup_bucket_cap(spark, corpus, monkeypatch):
-    monkeypatch.setattr(dedup, "_EMB_MIN_COSINE", 0.98)
-    # with a tiny cap every bucket holding the near-dup family is dropped
-    monkeypatch.setattr(dedup, "_EMB_N_PLANES", 2)
-    monkeypatch.setattr(dedup, "_EMB_MAX_BUCKET_SIZE", 1)
-    pairs = dedup.embedding_near_dup_pairs(corpus)
-    assert pairs.count() == 0
-    # with a sane cap the planted near-dups surface
-    monkeypatch.setattr(dedup, "_EMB_N_PLANES", 4)
-    monkeypatch.setattr(dedup, "_EMB_MAX_BUCKET_SIZE", 64)
-    pairs = dedup.embedding_near_dup_pairs(corpus).collect()
-    got = {(r.id_a, r.id_b) for r in pairs}
-    assert (0, 100) in got or (0, 101) in got
 
 
 def test_ann_recall_sf01_planted_neardups(spark):

@@ -1,4 +1,4 @@
-"""Tests for F4/F5 feature building, F15 sentence split, J10 prior join.
+"""Tests for F4/F5 feature building and the J10 prior join.
 
 Goldens mirror the reference arithmetic (biencoder/data_process_.py:44-119
 quota math; candidate_retrieval/dataset.py:300-347 probe cascade).
@@ -11,7 +11,6 @@ from entity_linking_spark.functions.features import (
     get_context_representation,
     split_context_quota,
 )
-from entity_linking_spark.functions.text import first_sentences, split_sentences
 
 
 # ---------------------------------------------------------------- F4 quotas
@@ -70,26 +69,6 @@ def test_candidate_representation_golden():
 def test_candidate_representation_no_title():
     out = get_candidate_representation(None, "plain words", 10)
     assert out == ["[CLS]", "plain", "words", "[SEP]"]
-
-
-# ---------------------------------------------------------------- F15 split
-
-
-def test_split_sentences_basic():
-    assert split_sentences("One two. Three four! Five? Six。 Seven") == [
-        "One two.", "Three four!", "Five?", "Six。", "Seven",
-    ]
-
-
-def test_split_sentences_no_boundary_and_empty():
-    assert split_sentences("no punctuation at all") == ["no punctuation at all"]
-    assert split_sentences("") == []
-    assert split_sentences(None) == []
-
-
-def test_first_sentences_caps():
-    text = " ".join(f"s{i}." for i in range(20))
-    assert first_sentences(text) == [f"s{i}." for i in range(10)]
 
 
 # ---------------------------------------------------------------- J10 cascade

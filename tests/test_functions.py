@@ -9,12 +9,7 @@ from entity_linking_spark.functions.minhash import (
     est_jaccard,
     minhash_signature,
 )
-from entity_linking_spark.functions.strings import (
-    jaro,
-    jaro_winkler,
-    levenshtein,
-    levenshtein_sim,
-)
+from entity_linking_spark.functions.strings import jaro, jaro_winkler
 from entity_linking_spark.functions.vectors import hash_embed_matrix
 
 
@@ -36,14 +31,6 @@ def test_minhash_identical_and_disjoint():
     assert est_jaccard(minhash_signature(a), minhash_signature(a)) == 1.0
     b = "p q r m n o k l".split()
     assert est_jaccard(minhash_signature(a), minhash_signature(b)) < 0.2
-
-
-def test_levenshtein():
-    assert levenshtein("kitten", "sitting") == 3
-    assert levenshtein("", "abc") == 3
-    assert levenshtein("abc", "abc") == 0
-    assert levenshtein_sim("abc", "abc") == 1.0
-    assert levenshtein_sim("", "") == 1.0
 
 
 def test_jaro_winkler_known_values():

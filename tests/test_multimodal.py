@@ -44,23 +44,6 @@ def test_real_codec_is_stubbed(spark):
         mm.decode_media(b"anything", "image", codec="pil")
 
 
-def test_frame_sampling_udtf(spark):
-    vids = spark.createDataFrame(
-        [Row(media_id="v1", kind="video", payload=mm.encode_fake_media("video", 8, 8, 9))]
-    )
-    frames = mm.sample_video_frames(vids).collect()
-    assert [r.frame_idx for r in sorted(frames, key=lambda r: r.frame_idx)] == [0, 1, 2, 3]
-    feats = {r.frame_idx: tuple(r.features) for r in frames}
-    assert feats[0] != feats[1]  # per-frame seeds differ
-
-
-def test_media_stats_jvm_side(spark):
-    stats = {r.kind: r for r in mm.media_stats(_media_df(spark)).collect()}
-    assert stats["image"].n == 4
-    assert stats["audio"].n == 1
-    assert stats["image"].total_bytes > 0
-
-
 def test_wav_codec_real_decode(spark):
     """codec='wav' is a REAL decode path: stdlib wave parses RIFF/PCM and
     the features are the normalized waveform, not a seeded fake."""

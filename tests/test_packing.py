@@ -5,10 +5,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from entity_linking_spark.operators.packing import (
-    pack_sequences,
-    packed_sequence_text,
-)
+from entity_linking_spark.operators.packing import pack_sequences
 
 
 def _mk(spark, docs):
@@ -143,28 +140,6 @@ def test_packing_doc_spanning_many_sequences(spark):
         assert (r.seq_id, r.doc_id, r.slice_start, r.slice_len, r.seq_off) == (
             i, 1, i * 16, 16, 0
         )
-
-
-def test_packed_sequence_text_matches_stream(spark):
-    rng = random.Random(3)
-    docs = [
-        (i, " ".join(f"d{i}w{j}" for j in range(rng.randint(1, 30))))
-        for i in range(25)
-    ]
-    df = _mk(spark, docs)
-    L = 20
-    order = _hash_order(spark, df)
-    stream = [t for did in order for t in dict(docs)[did].split(" ")]
-    expect = {
-        s: " ".join(stream[s * L : (s + 1) * L])
-        for s in range(len(stream) // L)
-    }
-    packing = pack_sequences(df, L)
-    got = {
-        r.seq_id: r.text
-        for r in packed_sequence_text(df, packing).collect()
-    }
-    assert got == expect
 
 
 def test_packing_validates_and_handles_edges(spark):

@@ -6,9 +6,10 @@ query registered BEFORE the rows-only custom vectorized operators —
 otherwise an oracle-backed query could fall outside the gated window
 and silently lose its hash check.
 
-The library's option surface is held to a rule too: every defaulted
-parameter of a public function is set by some program call, tests not
-counted, or is allow-listed with its reason.
+The library's surface is held to the same rule twice, tests not
+counted as callers: every public function or class is reached by some
+program code, and every defaulted parameter of a public function is set
+by some program call, or the name is allow-listed with its reason.
 """
 
 import ast
@@ -62,6 +63,21 @@ UNCALLED_OPTIONS_ALLOWED = {
     "write_warc_file.gzip_per_record":
         "writes the plain .warc input that read_warc must accept",
 }
+
+
+# public functions no program code reaches, each with the reason it stays
+UNCALLED_FUNCTIONS_ALLOWED = {
+    "minhash_signature":
+        "scalar reference the batch signature kernel is tested against",
+    "band_hashes":
+        "scalar reference the batch band-key kernel is tested against",
+    "est_jaccard": "scalar reference minhash_near_dup_pairs(verify='est') "
+        "equals bit for bit",
+}
+
+# program code: what counts as a caller (tests do not)
+_PROGRAM = ("entity_linking_spark", "__spark_entry__.py", "bench.py",
+            "tools", "perfbench")
 
 
 def _py_files(*parts):
@@ -136,9 +152,7 @@ def test_every_option_has_a_caller():
                     for i, a in enumerate(args) if i >= first
                 ]
     calls: dict[str, list[tuple[ast.Call, set[str] | None]]] = {}
-    sources = ("entity_linking_spark", "__spark_entry__.py", "bench.py",
-               "tools", "perfbench")
-    for path in (p for part in sources for p in _py_files(part)):
+    for path in (p for part in _PROGRAM for p in _py_files(part)):
         for node, keys in _calls(_parse(path)):
             f = node.func
             name = getattr(f, "id", None) or getattr(f, "attr", None)
@@ -171,3 +185,59 @@ def test_every_option_has_a_caller():
     assert not stale, f"allow-listed options a program call sets: {stale}"
     unset = [o for o in uncalled if o not in UNCALLED_OPTIONS_ALLOWED]
     assert not unset, f"{len(unset)} options no program call sets: {unset}"
+
+
+def _decorator_names(node):
+    return {
+        getattr(d, "id", None) or getattr(getattr(d, "func", None), "id", None)
+        for d in node.decorator_list
+    }
+
+
+def test_every_public_function_has_a_program_caller():
+    """Each public top-level function or class of the library is reached
+    by program code (the library, ``__spark_entry__.py``, ``bench.py``,
+    ``tools/``, ``perfbench/``; tests do not count) outside its own
+    body: its name appears there as a ``Name``, an ``Attribute`` or an
+    imported name or alias. ``@query``-registered functions and
+    ``main`` count as called (the registry and the command line call
+    them). Names match only, like the option test, so the scan can
+    over-count callers but never miss one."""
+    defs = []  # (path, node)
+    for path in _py_files("entity_linking_spark"):
+        defs += [
+            (path, node)
+            for node in _parse(path).body
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef))
+            and not node.name.startswith("_")
+            and node.name != "main"
+            and "query" not in _decorator_names(node)
+        ]
+    # name -> {(path, line of the enclosing top-level def or class)}
+    used: dict[str, set[tuple[str, int | None]]] = {}
+    for path in (p for part in _PROGRAM for p in _py_files(part)):
+        for top in _parse(path).body:
+            owner = top.lineno if isinstance(top, (ast.FunctionDef, ast.ClassDef)) else None
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    names = [node.id]
+                elif isinstance(node, ast.Attribute):
+                    names = [node.attr]
+                elif isinstance(node, ast.alias):
+                    names = [node.name.rsplit(".", 1)[-1], node.asname]
+                else:
+                    continue
+                for name in filter(None, names):
+                    used.setdefault(name, set()).add((path, owner))
+
+    uncalled = sorted(
+        node.name
+        for path, node in defs
+        if not used.get(node.name, set()) - {(path, node.lineno)}
+    )
+    stale = sorted(set(UNCALLED_FUNCTIONS_ALLOWED) - set(uncalled))
+    assert not stale, f"allow-listed functions program code calls: {stale}"
+    unreached = [f for f in uncalled if f not in UNCALLED_FUNCTIONS_ALLOWED]
+    assert not unreached, (
+        f"{len(unreached)} public functions only tests call: {unreached}"
+    )

@@ -69,25 +69,9 @@ def test_deterministic_salted_repartition_spreads(spark, hot_over_100, static_sh
     assert _hot_rows_per_partition(spark) == first
 
 
-def test_salted_joins_reject_right_and_full(spark):
-    """how='right'/'full' would emit spurious unmatched build-side rows
-    for uncovered salt replicas (round-4 advice): the join refuses."""
-    large, small = _skewed(spark)
-    hot = skew.hot_keys(large, "key")
-    for how in ("right", "full", "full_outer", "rightouter"):
-        with pytest.raises(ValueError, match="salted joins support"):
-            skew.adaptive_salted_join(large, small, "key", ["other"], hot, how=how)
-    # every safe Spark spelling passes the guard (incl. the
-    # no-underscore aliases PySpark accepts everywhere)
-    for how in ("inner", "left", "leftouter", "left_outer",
-                "semi", "left_semi", "leftsemi",
-                "anti", "left_anti", "leftanti"):
-        skew._check_join_mode(how)
-
-
 def test_adaptive_salted_join_equals_plain(spark, hot_over_100):
     large, small = _skewed(spark)
-    plain = large.join(small, "key").select("key", "other", "v", "label")
+    plain = large.join(small, "key", "left").select("key", "other", "v", "label")
     adaptive = skew.adaptive_salted_join(
         large, small, "key", ["other"], skew.hot_keys(large, "key")
     ).select("key", "other", "v", "label")
@@ -99,7 +83,7 @@ def test_adaptive_salted_join_left_semantics(spark, hot_over_100):
     large, small = _skewed(spark)
     some = small.where("key <> 'hot'")
     out = skew.adaptive_salted_join(
-        large, some, "key", ["other"], skew.hot_keys(large, "key"), how="left"
+        large, some, "key", ["other"], skew.hot_keys(large, "key")
     )
     assert out.count() == large.count()
     assert out.where("label IS NULL").count() == 900

@@ -7,57 +7,6 @@ from pyspark.sql import Row, functions as F
 from entity_linking_spark.functions import text as T
 
 
-def _df(spark):
-    return spark.createDataFrame(
-        [
-            Row(id=1, text="the quick brown fox jumps over the lazy dog"),
-            Row(id=2, text="x!!! ??? ### $$$ %%%"),
-            Row(id=3, text="南京南站 是 一个 车站"),
-            Row(id=4, text="word " * 20),
-        ]
-    )
-
-
-def test_token_counts(spark):
-    out = {r.id: r for r in _df(spark).select(
-        "id",
-        T.token_count(F.col("text")).alias("n"),
-        T.word_token_count(F.col("text")).alias("w"),
-    ).collect()}
-    assert out[1].n == 9
-    assert out[2].w > out[2].n  # punct runs split into units
-
-
-def test_ratios_and_quality(spark):
-    out = {r.id: r for r in _df(spark).select(
-        "id",
-        T.stopword_ratio(F.col("text")).alias("stop"),
-        T.punct_ratio(F.col("text")).alias("punct"),
-        T.quality_score(F.col("text")).alias("q"),
-    ).collect()}
-    assert out[1].stop > 0.2          # 'the' x2 + 'over'
-    assert out[2].punct > 0.5
-    assert out[1].q > out[2].q        # clean prose beats punct soup
-
-
-def test_lang_guess(spark):
-    out = {r.id: r.g for r in _df(spark).select(
-        "id", T.lang_guess(F.col("text")).alias("g")).collect()}
-    assert out[1] == "latin"
-    assert out[3] == "cjk"
-
-
-def test_fingerprints(spark):
-    df = spark.createDataFrame(
-        [Row(id=1, text="alpha beta gamma"), Row(id=2, text="gamma beta alpha"),
-         Row(id=3, text="totally different words")]
-    )
-    out = {r.id: r.fp for r in df.select(
-        "id", T.content_fingerprint(F.col("text")).alias("fp")).collect()}
-    assert out[1] == out[2]           # order-insensitive
-    assert out[1] != out[3]
-
-
 def test_rolling_hash(spark):
     long_a = " ".join(f"tok{i}" for i in range(50))
     long_b = " ".join(f"tok{i}" for i in range(50)) + " extra tail words here"
